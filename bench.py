@@ -30,7 +30,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from game_data_etl_pipeline_spark import registry  # noqa: E402
-from game_data_etl_pipeline_spark.session import get_spark  # noqa: E402
+from game_data_etl_pipeline_spark.session import get_spark, resolve_cpus  # noqa: E402
 
 # v2 suite (round 6): the r4-frozen 23-query suite stays untouched for
 # cross-round continuity (its total remains the headline "value"); v2
@@ -209,8 +209,7 @@ def main() -> None:
     # The bench is always a local-mode measurement session, so an
     # explicit local[cpus] master is correct by contract; cluster
     # deployments run the package, not bench.py.
-    cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
-    cpus = max(1, int(cpus_env)) if cpus_env else (os.cpu_count() or 4)
+    cpus = resolve_cpus()
     spark = get_spark(
         "bench",
         extra_conf={
@@ -218,6 +217,9 @@ def main() -> None:
             "spark.sql.shuffle.partitions": str(cpus),
         },
     )
+    # an already-active session keeps its own master and ignores the pin
+    if spark.sparkContext.master != f"local[{cpus}]":
+        raise RuntimeError(f"bench session runs on {spark.sparkContext.master}, not local[{cpus}]")
     specs = registry.headline_specs()
 
     # warm-up: session init, codegen, parquet footer reads

@@ -2,9 +2,13 @@
 
 Reference semantics preserved (reference etl/pipeline.py:252-310):
 
-- full-refresh write per table (``if_exists='replace'`` ->
-  ``mode('overwrite')``);
-- empty tables are skipped with a warning, and the run still succeeds;
+- full refresh per table (``if_exists='replace'``) in one Spark job:
+  the write goes to a staging dir (``staging_tree``) with the row
+  count observed on it (``df.observe``), then is swapped in for the
+  previous table, which a failed write leaves intact;
+- empty tables are skipped with a warning, and the run still succeeds:
+  a count of 0 discards the staging dir, so the previous table (or,
+  on a first run, no table) remains;
 - every row gets ``_etl_run_id`` and ``_etl_loaded_at`` (ISO-8601 UTC);
 - an ``etl_runs`` record per run — keyed upsert on run_id, written on
   success AND on failure (status ``Failed: {err}``, zeroed counts),
@@ -16,7 +20,10 @@ Reference semantics preserved (reference etl/pipeline.py:252-310):
 Sink is a parquet warehouse dir (the scale path: at 100 TB each table
 write is a distributed parquet job). ``etl_runs`` upsert is emulated
 append-plus-latest-wins (row_number over completed_at per run_id),
-since plain parquet has no MERGE; read it via ``read_etl_runs``.
+since plain parquet has no MERGE; read it via ``read_etl_runs``. The
+one-row record is built from an Arrow-backed pandas frame, which needs
+no Python worker and, unlike literal columns over ``range(1)``, no
+per-run codegen.
 An optional SQLite mirror reproduces the reference's exact sink for
 the tiny curated tables (driver-side, gated off by default).
 """
@@ -26,10 +33,14 @@ from __future__ import annotations
 import datetime as dt
 import logging
 import os
+import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+
+from game_data_etl_pipeline_spark.llmdata.artifacts import staging_tree
 
 logger = logging.getLogger("game_data_etl_pipeline_spark.load")
 
@@ -38,6 +49,22 @@ ETL_RUNS_COLUMNS = "run_id string, started_at string, completed_at string, statu
 
 def _utcnow_iso() -> str:
     return dt.datetime.now(dt.timezone.utc).isoformat()
+
+
+def _swap_in(staging: str, final: str) -> None:
+    """Replace ``final`` with ``staging``; the previous table is renamed
+    aside first and restored if the swap fails."""
+    trash = f"{staging}.trash"
+    had_old = os.path.isdir(final)
+    if had_old:
+        os.rename(final, trash)
+    try:
+        os.rename(staging, final)
+    except OSError:
+        if had_old:
+            os.rename(trash, final)
+        raise
+    shutil.rmtree(trash, ignore_errors=True)
 
 
 class Loader:
@@ -57,14 +84,10 @@ class Loader:
         counts: dict[str, int] = {}
         try:
             for name, df in transformed.items():
-                n = df.count()
+                n = self._write_table(df, name, run_id)
                 if n == 0:  # reference :273-275 — skip, warn, run still succeeds
                     logger.warning("skipping empty table: %s", name)
                     continue
-                stamped = df.withColumn("_etl_run_id", F.lit(run_id)).withColumn(
-                    "_etl_loaded_at", F.lit(_utcnow_iso())
-                )
-                stamped.write.mode("overwrite").parquet(self._table_dir(name))
                 counts[name] = n
             total_rows = sum(counts.values())
             self._write_run_record(
@@ -86,6 +109,25 @@ class Loader:
             )
             raise
 
+    def _write_table(self, df: DataFrame, name: str, run_id: str) -> int:
+        """One write job: stage the stamped table with its row count
+        observed, then swap it in, or discard it when empty."""
+        obs = Observation()
+        stamped = (
+            df.withColumn("_etl_run_id", F.lit(run_id))
+            .withColumn("_etl_loaded_at", F.lit(_utcnow_iso()))
+            .observe(obs, F.count(F.lit(1)).alias("rows"))
+        )
+        final = self._table_dir(name)
+        with staging_tree(final) as staging:
+            stamped.write.mode("overwrite").parquet(staging)
+            n = obs.get["rows"]
+            if n:
+                _swap_in(staging, final)
+            else:
+                shutil.rmtree(staging)
+        return n
+
     def _write_run_record(
         self,
         spark: SparkSession,
@@ -97,10 +139,8 @@ class Loader:
         total_rows: int,
         duration: float,
     ) -> None:
-        rec = spark.createDataFrame(
-            [(run_id, started_at, _utcnow_iso(), status, tables_loaded, total_rows, duration)],
-            ETL_RUNS_COLUMNS,
-        )
+        row = (run_id, started_at, _utcnow_iso(), status, tables_loaded, total_rows, duration)
+        rec = spark.createDataFrame(pd.DataFrame([row]), ETL_RUNS_COLUMNS)
         rec.write.mode("append").parquet(self._table_dir("etl_runs"))
 
     def read_etl_runs(self, spark: SparkSession) -> DataFrame:

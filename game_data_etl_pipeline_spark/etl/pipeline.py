@@ -6,6 +6,9 @@ Reference parity (reference etl/pipeline.py:317-392):
 - extract degrades per-endpoint to [] — the run proceeds and records
   Success (fidelity note 1, SURVEY.md §2.A);
 - load failure writes a Failed run record and re-raises (:302-308);
+- an endpoint frame feeding several tables (per ``TRANSFORMS``) is
+  persisted, so its envelope is parsed once per cycle, and unpersisted
+  after the load;
 - ``--once`` runs a single cycle; otherwise run-on-start then an
   in-process every-N-hours loop polling every 60 s (:370-384).
   (Implemented with plain time arithmetic — the reference's
@@ -79,8 +82,12 @@ class ETLPipeline:
         landed = self.extractor.land(endpoints, os.path.join(self.landing_dir, run_id))
 
         raw = {ep: parse_envelope(self.spark, path, ep) for ep, path in landed.items()}
-        transformed = transform_all(raw)
-        counts = self.loader.load_all(self.spark, transformed, run_id)
+        shared = [raw[ep].persist() for ep in raw if len(TRANSFORMS[ep]) > 1]
+        try:
+            counts = self.loader.load_all(self.spark, transform_all(raw), run_id)
+        finally:
+            for df in shared:
+                df.unpersist()
 
         duration = time.time() - start
         logger.info("ETL run %s complete: %s rows in %.2fs", run_id, sum(counts.values()), duration)

@@ -24,11 +24,15 @@ from pyspark.sql import SparkSession
 DEFAULT_APP_NAME = "game_data_etl_pipeline_spark"
 
 
-def _cpus() -> int:
+def resolve_cpus() -> int:
+    """Local core count: ``$SPARK_GRAFT_CPUS`` if set, else all cores.
+    A malformed or non-positive value is rejected rather than coerced."""
     env = os.environ.get("SPARK_GRAFT_CPUS")
-    if env:
-        return max(1, int(env))
-    return os.cpu_count() or 4
+    if not env:
+        return os.cpu_count() or 4
+    if not env.strip().isdigit() or int(env) < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {env!r}")
+    return int(env)
 
 
 def get_spark(app_name: str = DEFAULT_APP_NAME, *, extra_conf: dict | None = None) -> SparkSession:
@@ -38,7 +42,7 @@ def get_spark(app_name: str = DEFAULT_APP_NAME, *, extra_conf: dict | None = Non
     master is taken from the environment (spark-submit), so we only set
     master when none is configured.
     """
-    cpus = _cpus()
+    cpus = resolve_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))

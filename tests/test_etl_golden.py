@@ -154,3 +154,75 @@ def test_transform_never_throws_on_adversarial_payloads(spark):
         for _table, fn in frames:
             rows = fn(raw).collect()
             assert rows is not None
+
+
+def _rows(spark, pipe, table):
+    return sorted(pipe.loader.read_table(spark, table).collect())
+
+
+def _assert_no_staging_leftovers(pipe):
+    assert [t for t in pipe.loader.list_tables() if "staging" in t or "trash" in t] == []
+
+
+def test_load_runs_one_job_per_table(spark, tmp_path):
+    """Job-count guard: a warm cycle runs one Spark job per output
+    table (row count observed on the write, shared endpoint frames
+    parsed once) plus one for the etl_runs record. Job counts do not
+    depend on host speed."""
+    pipe = _pipeline(spark, tmp_path)
+    pipe.run()  # warm
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = sched.nextJobId()
+    result = pipe.run()
+    jobs = sched.nextJobId() - j0
+    assert len(result["counts"]) == 6
+    assert jobs <= 7, f"ETL cycle ran {jobs} Spark jobs, want <= 7 (6 tables + run record)"
+
+
+def test_skip_empty_keeps_previous_table(spark, tmp_path):
+    """A table that comes back empty is skipped without touching the
+    previous run's table: its staging dir is discarded, not swapped in."""
+    pipe = _pipeline(spark, tmp_path)
+    r1 = pipe.run()
+    before = {t: _rows(spark, pipe, t) for t in ("weapons", "weapon_damage")}
+
+    broken = _pipeline(spark, tmp_path / "second", broken={"weapons"})
+    broken.loader.warehouse_dir = pipe.loader.warehouse_dir
+    r2 = broken.run()
+
+    assert "weapons" not in r2["counts"] and "weapon_damage" not in r2["counts"]
+    for table, rows in before.items():
+        assert _rows(spark, pipe, table) == rows
+        assert {r._etl_run_id for r in rows} == {r1["run_id"]}
+    _assert_no_staging_leftovers(pipe)
+
+
+def test_failed_write_keeps_previous_table(spark, tmp_path, monkeypatch):
+    """A table write that raises leaves the previous table readable,
+    records a Failed run and re-raises (reference :302-308)."""
+    from pyspark.sql import functions as F
+
+    from game_data_etl_pipeline_spark.etl import transform
+
+    pipe = _pipeline(spark, tmp_path)
+    pipe.run()
+    before = _rows(spark, pipe, "weapons")
+
+    def failing_weapons(raw):
+        df = transform.transform_weapons(raw)
+        return df.withColumn("name", F.when(F.col("cost") >= 0, F.raise_error(F.lit("boom"))).otherwise(df.name))
+
+    monkeypatch.setitem(
+        transform.TRANSFORMS,
+        "weapons",
+        [("weapons", failing_weapons), ("weapon_damage", transform.transform_damage_ranges)],
+    )
+    with pytest.raises(Exception, match="boom"):
+        pipe.run()
+
+    assert _rows(spark, pipe, "weapons") == before
+    runs = pipe.loader.read_table(spark, "etl_runs").collect()
+    failed = [r for r in runs if r.status.startswith("Failed: ")]
+    assert len(failed) == 1 and "boom" in failed[0].status
+    assert failed[0].tables_loaded == 0 and failed[0].total_rows == 0
+    _assert_no_staging_leftovers(pipe)
