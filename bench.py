@@ -226,107 +226,18 @@ def main() -> None:
     warm = specs.get("q_revenue_by_region") or next(iter(specs.values()))
     warm.fn(spark, sf_dir).count()
     calibration = _calibration(spark)
-    # materialize the bucketed sink layout outside the timed region:
-    # bucketing pays its shuffle at WRITE time by design, and the
-    # benched number should measure the repeated co-located join,
-    # not the one-time layout cost it amortizes
-    if "op_join_bucketed" in specs:
-        from game_data_etl_pipeline_spark.operators.scale import _bucketed_tables
-
-        _bucketed_tables(spark, sf_dir)
-    # same precedent for the ANN index: the serve ops' benched number
-    # should measure query-time against the persisted artifact, not
-    # the one-time build it amortizes (op_sim_ivfpq still times the
-    # train-inline form each rep, so both costs stay visible)
-    if any(n in V2_EXTRA for n in ("op_sim_ivfpq_serve", "q_retrieval_pipeline_ann")):
-        from game_data_etl_pipeline_spark.llmdata.ann_index import build_ann_index
-
-        build_ann_index(spark, sf_dir)
-    if "op_text_bm25_serve" in V2_EXTRA:
-        from game_data_etl_pipeline_spark.llmdata.lex_index import build_lex_index
-
-        build_lex_index(spark, sf_dir)
-    # r9: the upsert demo trees are the INPUTS of the upsert-serve and
-    # compaction entries — build them outside the timed region so the
-    # benched numbers measure serving / compacting, not input setup
-    if "op_lex_index_upsert" in V2_EXTRA:
-        from game_data_etl_pipeline_spark.llmdata.lex_index import (
-            ensure_lex_upsert_tree,
-        )
-
-        ensure_lex_upsert_tree(spark, sf_dir)
-    if "op_sim_index_compact" in V2_EXTRA:
-        from game_data_etl_pipeline_spark.llmdata.ann_index import ensure_upsert_tree
-
-        ensure_upsert_tree(spark, sf_dir)
-    # r11: the bloom serve/upsert entries read persisted filter trees —
-    # built outside the timed region for the same reason (the entries
-    # measure query-time screening, not the one-time builds; the
-    # builds are idempotent so later reps serve either way)
-    if "op_bloom_index_upsert" in V2_EXTRA:
-        from game_data_etl_pipeline_spark.llmdata.dedup import (
-            build_bloom_index,
-            ensure_bloom_upsert_tree,
-        )
-
-        build_bloom_index(spark, sf_dir)
-        ensure_bloom_upsert_tree(spark, sf_dir)
-    # r12: the lifecycle-e2e and registry entries serve from persisted
-    # end-state trees — same precedent: the benched number measures
-    # serving (and its in-query referees), not the one-time lineage.
-    # Each prewarm gates on ITS OWN entry so dropping one name never
-    # silently un-warms another's input tree.
-    if "op_sim_lifecycle_e2e" in V2_EXTRA:
-        from game_data_etl_pipeline_spark.llmdata.ann_index import ensure_ann_e2e_tree
-
-        ensure_ann_e2e_tree(spark, sf_dir)
-    if "op_lex_lifecycle_e2e" in V2_EXTRA:
-        from game_data_etl_pipeline_spark.llmdata.lex_index import ensure_lex_e2e_tree
-
-        ensure_lex_e2e_tree(spark, sf_dir)
-    if "op_bloom_registry_screen" in V2_EXTRA:
-        from game_data_etl_pipeline_spark.llmdata.dedup import ensure_bloom_registry
-
-        ensure_bloom_registry(spark, sf_dir)
-    if "op_bloom_registry_refresh" in V2_EXTRA:
-        from game_data_etl_pipeline_spark.llmdata.dedup import (
-            ensure_bloom_refresh_demo,
-        )
-
-        ensure_bloom_refresh_demo(spark, sf_dir)
-    if "op_bloom_registry_retire" in V2_EXTRA:
-        from game_data_etl_pipeline_spark.llmdata.dedup import (
-            ensure_bloom_retire_demo,
-        )
-
-        ensure_bloom_retire_demo(spark, sf_dir)
-    if "op_bloom_registry_lifecycle_e2e" in V2_EXTRA:
-        from game_data_etl_pipeline_spark.llmdata.dedup import (
-            ensure_bloom_lifecycle_demo,
-        )
-
-        ensure_bloom_lifecycle_demo(spark, sf_dir)
-    # r15: the merge-policy entry reads the persisted 4-segment base
-    # tree and the merged tree — built outside the timed region so the
-    # benched number measures the policy pass + referees, not the
-    # one-time base layout (idempotent; later reps serve either way)
-    if "op_sim_index_merge_policy" in V2_EXTRA:
-        from game_data_etl_pipeline_spark.llmdata.ann_index import (
-            ensure_merge_policy_tree,
-        )
-
-        ensure_merge_policy_tree(spark, sf_dir)
-    # r15: the served late-interaction entry reads the persisted token
-    # index — built outside the timed region (the build_ann_index
-    # precedent: serving amortizes the build; op_sim_late_interaction
-    # still times the tokenize-inline form so both costs stay visible)
-    if "op_sim_late_interaction_served" in V2_EXTRA:
-        from game_data_etl_pipeline_spark.llmdata.retrieval import build_late_index
-
-        build_late_index(spark, sf_dir)
-
     all_specs = registry.all_specs()
-    v2_specs = {name: all_specs[name] for name in V2_EXTRA if name in all_specs}
+    missing = [name for name in V2_EXTRA if name not in all_specs]
+    if missing:
+        raise RuntimeError(f"V2_EXTRA names unregistered ops: {missing}")
+    v2_specs = {name: all_specs[name] for name in V2_EXTRA}
+    # build every persisted input a benched query reads (index trees,
+    # bucketed tables) outside the timed region: the benched number
+    # measures the query against its input, not the one-time build the
+    # input amortizes. Setup steps are idempotent.
+    for spec in {**specs, **v2_specs}.values():
+        for step in spec.setup:
+            step(spark, sf_dir)
 
     samples: dict[str, list[float]] = {name: [] for name in {**specs, **v2_specs}}
     # TWO sequential passes, frozen suite first: the first r6 run timed

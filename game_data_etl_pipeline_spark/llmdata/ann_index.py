@@ -28,15 +28,11 @@ precedent (operators/scale.py):
   stage — no Lloyd loop, no localCheckpoint scan, no driver numpy —
   pinned by tests/test_plans.py::test_ivfpq_serve_plan_contract
   (plan has no ExistingRDD operator and reads the ann_index path) and
-  by the _BUILD_COUNT no-rebuild assertion in tests/test_llmdata.py.
+  by the artifacts.BUILD_COUNT no-rebuild assertion in
+  tests/test_plans.py.
 
-Staleness & concurrency: the artifact dir is keyed by the embeddings
-parquet's (size, mtime_ns) fingerprint plus the index format version,
-so a regenerated fixture can never be served by a stale index. Builds
-stage into a unique temp dir and atomically rename into place;
-concurrent builders race benignly (the loser discards its staging dir
-and reads the winner's — both trained deterministically, so the
-artifacts are bit-identical anyway).
+Every tree here is built through ``artifacts.ensure_tree``; its key
+fingerprints the embeddings parquet.
 
 Reference scope note: the reference pipeline
 (/root/reference/etl/pipeline.py) has no vector search at all; this
@@ -48,17 +44,26 @@ from __future__ import annotations
 
 import json
 import os
-from pathlib import Path
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from game_data_etl_pipeline_spark.catalog import load_table
 from game_data_etl_pipeline_spark.llmdata.artifacts import (
-    fingerprint_key,
-    prune_stale_keys,
-    publish_staging,
-    staging_tree,
+    TOMB_IDS,
+    TOMB_IDS_SQL,
+    TOMB_MOD,
+    TOMB_RESIDUE,
+    TreeFamily,
+    count_parquet_files as _count_parquet_files,
+    ensure_tree,
+    purge_ids_digest,
+    purge_ledger_current,
+    read_purge_ledger,
+    tomb_ids_current,
+    tombstone_ids_df,
+    write_purge_ledger,
 )
 from game_data_etl_pipeline_spark.llmdata.similarity import (
     IVFPQ_PROBES,
@@ -73,40 +78,17 @@ from game_data_etl_pipeline_spark.llmdata.similarity import (
 )
 from game_data_etl_pipeline_spark.registry import register
 
-# v1 STABLE SINCE ROUND 8: the round-9 atomic-publish refactor moved
-# key construction into artifacts.fingerprint_key, which reproduces the
-# r8 inline format byte-for-byte (`<flattened sf_dir>_<size>_<mtime_ns>`,
-# verified against the r8 tree's code in git), and the cent_id partition
-# layout is unchanged — no layout byte moved, so no version bump (the
-# lexical side's pmod re-key is what a bump looks like: LEX_INDEX_VERSION
-# 1 -> 2 in lex_index.py).
+# layout version of every ANN tree: bump on any layout change
 INDEX_VERSION = 1
 
-# test hook: op_sim_ivfpq_serve twice in one process must hit the
-# persisted artifact, never retrain (tests/test_llmdata.py)
-_BUILD_COUNT = 0
+ANN = TreeFamily("SPARK_GRAFT_INDEX_DIR", "ann_index", "embeddings.parquet", INDEX_VERSION)
+_index_root = ANN.root
+ann_index_dir = ANN.dir
 
 
-def _index_root() -> str:
-    return os.environ.get(
-        "SPARK_GRAFT_INDEX_DIR",
-        str(Path(__file__).resolve().parents[2] / "spark-warehouse" / "ann_index"),
-    )
-
-
-def ann_index_dir(sf_dir: str) -> str:
-    """Artifact dir for one fixture: keyed by the embeddings file's
-    (size, mtime_ns) fingerprint so a regenerated fixture at the same
-    path gets a FRESH index — the stale-index failure mode of
-    path-only keying (pinned by
-    tests/test_llmdata.py::test_index_fingerprint_staleness)."""
-    key = fingerprint_key(sf_dir, "embeddings.parquet")
-    return os.path.join(_index_root(), f"v{INDEX_VERSION}", key)
-
-
-def build_ann_index(spark: SparkSession, sf_dir: str, *, force: bool = False) -> str:
+def build_ann_index(spark: SparkSession, sf_dir: str) -> str:
     """Train + persist the IVF-PQ index for ``sf_dir``'s embeddings
-    (idempotent; see module docstring). Returns the artifact dir.
+    (idempotent). Returns the tree dir.
 
     Cost shape: one distributed Lloyd over the full corpus (the
     deliberate full-data coarse training documented in
@@ -115,18 +97,13 @@ def build_ann_index(spark: SparkSession, sf_dir: str, *, force: bool = False) ->
     assignment, one bounded groupBy(vec_id) encode, and one shuffle
     on cent_id to lay the postings out as the inverted file. All paid
     ONCE per corpus snapshot."""
-    global _BUILD_COUNT
-    final = ann_index_dir(sf_dir)
-    if os.path.isfile(os.path.join(final, "meta.json")) and not force:
-        return final
-    _BUILD_COUNT += 1
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    coarse = ivf_trained_centroids(spark, sf_dir)
-    pq = pq_train(emb)
-    cells = ivf_assign(emb, cents=coarse, form="argmax").select("vec_id", "cent_id")
-    postings = pq_encode(emb, pq).join(cells, "vec_id")
 
-    with staging_tree(final) as staging:
+    def build(staging: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        coarse = ivf_trained_centroids(spark, sf_dir)
+        pq = pq_train(emb)
+        cells = ivf_assign(emb, cents=coarse, form="argmax").select("vec_id", "cent_id")
+        postings = pq_encode(emb, pq).join(cells, "vec_id")
         coarse.coalesce(1).write.mode("overwrite").parquet(os.path.join(staging, "coarse"))
         pq.coalesce(1).write.mode("overwrite").parquet(os.path.join(staging, "codebooks"))
         (
@@ -135,21 +112,9 @@ def build_ann_index(spark: SparkSession, sf_dir: str, *, force: bool = False) ->
             .partitionBy("cent_id")
             .parquet(os.path.join(staging, "postings"))
         )
-        with open(os.path.join(staging, "meta.json"), "w") as f:
-            json.dump(
-                {
-                    "version": INDEX_VERSION,
-                    "pq_m": PQ_M,
-                    "pq_ksub": PQ_KSUB,
-                    "source": sf_dir,
-                },
-                f,
-            )
-        # atomic publish (force renames the live tree aside, never rmtree
-        # in place) + GC of superseded fingerprints for this fixture
-        publish_staging(staging, final, marker="meta.json", force=force)
-    prune_stale_keys(final, sf_dir)
-    return final
+
+    meta = {"version": INDEX_VERSION, "pq_m": PQ_M, "pq_ksub": PQ_KSUB, "source": sf_dir}
+    return ensure_tree(ann_index_dir(sf_dir), sf_dir, "meta.json", meta, build)
 
 
 def read_ann_index(
@@ -298,6 +263,7 @@ def op_sim_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "op_sim_ivfpq_serve",
     tags=("llm", "similarity", "index"),
+    setup=(build_ann_index,),
     oracle="""
         WITH q AS (
             SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
@@ -348,30 +314,20 @@ def ensure_upsert_tree(spark: SparkSession, sf_dir: str) -> str:
     """Build (idempotently) the upsert demo tree: base postings
     (vec_id < floor(0.8 * max)) seeded from the main artifact, then
     the delta encoded against the PERSISTED trained structure — no
-    Lloyd, no pq_train, O(delta) only — appended partition-aligned.
-    The WHOLE tree (base seed + delta append + marker) is built in a
-    staging dir and atomically renamed into place: the r8 in-place
-    form let two concurrent sessions interleave overwrite/append on
-    the same directory, and a crash between the append and the marker
-    left stale delta files a rerun under dynamic
-    partitionOverwriteMode would double-count. The published tree has
-    exactly TWO segments per non-empty cell (one per write) — the
-    segment shape op_sim_index_compact merges."""
-    demo = os.path.join(
-        _index_root(),
-        f"upsert_v{INDEX_VERSION}",
-        fingerprint_key(sf_dir, "embeddings.parquet"),
-    )
-    if os.path.isfile(os.path.join(demo, "upsert_done.json")):
-        return demo
-    main_path = build_ann_index(spark, sf_dir)
-    coarse = spark.read.parquet(os.path.join(main_path, "coarse"))
-    books = spark.read.parquet(os.path.join(main_path, "codebooks"))
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    split = emb.agg(
-        F.expr("max(vec_id) * 4 div 5").cast("long").alias("split")
-    ).localCheckpoint(eager=True)
-    with staging_tree(demo) as staging:
+    Lloyd, no pq_train, O(delta) only — appended partition-aligned
+    inside the same staged tree, so a crash between the two writes
+    publishes nothing. The published tree has exactly TWO segments per
+    non-empty cell (one per write) — the segment shape
+    op_sim_index_compact merges."""
+
+    def build(staging: str) -> None:
+        main_path = build_ann_index(spark, sf_dir)
+        coarse = spark.read.parquet(os.path.join(main_path, "coarse"))
+        books = spark.read.parquet(os.path.join(main_path, "codebooks"))
+        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        split = emb.agg(
+            F.expr("max(vec_id) * 4 div 5").cast("long").alias("split")
+        ).localCheckpoint(eager=True)
         main_postings = spark.read.parquet(os.path.join(main_path, "postings")).select(
             "vec_id", "codes", F.col("cent_id").cast("long").alias("cent_id")
         )
@@ -400,11 +356,10 @@ def ensure_upsert_tree(spark: SparkSession, sf_dir: str) -> str:
             .partitionBy("cent_id")
             .parquet(os.path.join(staging, "postings"))
         )
-        with open(os.path.join(staging, "upsert_done.json"), "w") as f:
-            json.dump({"version": INDEX_VERSION}, f)
-        publish_staging(staging, demo, marker="upsert_done.json")
-    prune_stale_keys(demo, sf_dir)
-    return demo
+
+    return ensure_tree(
+        ANN.dir(sf_dir, "upsert"), sf_dir, "upsert_done.json", {"version": INDEX_VERSION}, build
+    )
 
 
 @register(
@@ -535,243 +490,6 @@ def op_sim_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-# deterministic tombstone predicate for the compaction demo: ~6% of
-# vectors (pmod keeps the expression total; vec_id is nonnegative so
-# DuckDB's % replays it exactly)
-TOMB_MOD, TOMB_RESIDUE = 17, 3
-
-# Id-LIST tombstone fixture (round-11 verdict task 3): a real purge —
-# a GDPR request, a takedown set — arrives as an explicit id list, not
-# a residue predicate, so the compactors take a tombstone DataFrame
-# and this literal list is the driver-verified instance. Ids are
-# chosen inside the smallest fixture's id range (0..499), outside the
-# query slot (>= 4), and straddling the upsert split (4/5 * max = 399
-# at sf0.01), so both the base segment and the delta segment lose
-# rows. DuckDB replays the same list as NOT IN.
-TOMB_IDS = (7, 23, 118, 233, 301, 404, 441, 468, 490, 497)
-TOMB_IDS_SQL = f"({', '.join(map(str, TOMB_IDS))})"
-
-
-def check_tomb_meta(path: str, marker: str) -> None:
-    """Serving-time purge-list handshake for the compacted trees: a
-    tree compacted with a DIFFERENT id list than the session constant
-    would serve under referees and oracles derived from the NEW list
-    — the stale-artifact class check_bloom_meta closes for Bloom
-    geometry. Raises loudly on mismatch or a missing marker.
-
-    Two marker shapes (round-13 verdict task 3 consolidated the
-    streamed gates' duplicate ``stream_compact_done.json`` into the
-    purge LEDGER, so the handshake and the deletion evidence are ONE
-    artifact): the e2e lineage markers record the raw list under
-    ``tomb_ids``; the ledger records ``purge.kind == id_list`` plus a
-    digest, compared through the same ``purge_ids_digest`` derivation
-    the writer used, so the two sides cannot drift. A predicate-kind
-    ledger (the residue unit fixture) fails the id-list handshake by
-    construction."""
-    mpath = os.path.join(path, marker)
-    with open(mpath) as f:
-        meta = json.load(f)
-    if "purge" in meta:  # the consolidated purge-LEDGER shape
-        purge = meta["purge"]
-        ok = purge.get("kind") == "id_list" and purge.get(
-            "digest"
-        ) == purge_ids_digest(TOMB_IDS)
-        recorded = purge.get("ids", purge.get("predicate"))
-    else:  # the e2e lineage marker shape (raw id list)
-        ok = list(meta.get("tomb_ids", [])) == list(TOMB_IDS)
-        recorded = meta.get("tomb_ids")
-    if not ok:
-        raise ValueError(
-            f"compacted tree {path} was compacted with tomb_ids="
-            f"{recorded} but this session's TOMB_IDS is "
-            f"{list(TOMB_IDS)} — the end state no longer matches the "
-            f"code; rebuild the lineage"
-        )
-
-
-def tomb_ids_current(path: str, marker: str) -> bool:
-    """Cache-validity test for the e2e lineage builders: True iff the
-    persisted tree's recorded purge list matches the session TOMB_IDS.
-    A stale list is a CACHE MISS — the builder displaces the old tree
-    through the trash-grace window and rebuilds, so editing TOMB_IDS
-    self-heals instead of serving a lineage compacted with the old
-    list (the _geometry_current discipline applied to the purge
-    fixture)."""
-    import time as _time
-
-    try:
-        check_tomb_meta(path, marker)
-        return True
-    except (OSError, json.JSONDecodeError, ValueError):
-        trash = f"{path}.trash.tomb{os.getpid()}_{int(_time.time() * 1000)}"
-        try:
-            os.rename(path, trash)
-            os.utime(trash, None)  # grace clock starts at displacement
-        except OSError:
-            pass  # a concurrent builder already displaced it
-        return False
-
-
-def tombstone_ids_df(spark: SparkSession, id_col: str) -> DataFrame:
-    """The TOMB_IDS purge list as a one-column DataFrame (``id_col``:
-    doc_id / vec_id) — the shape a real deletion request has. Bounded
-    by construction (a purge list, not a corpus), so compactors
-    broadcast it into an anti-join: survivors never shuffle. Built as
-    a JVM-side literal explode, not createDataFrame — a Python local
-    table lands as Scan ExistingRDD and would trip the serve plans'
-    no-ExistingRDD training-frame contracts."""
-    return spark.range(1).select(
-        F.explode(
-            F.array(*[F.lit(i).cast("long") for i in TOMB_IDS])
-        ).alias(id_col)
-    )
-
-
-# The purge AUDIT LEDGER (round-12 verdict task 5): compactions
-# delete user data; a real GDPR/takedown workflow needs persisted
-# EVIDENCE of what was purged — which ids (or predicate), and the
-# count arithmetic — written in the SAME transaction as the compact,
-# so a compacted tree without its evidence cannot exist. The name is
-# underscore-prefixed because for the ANN family it lives INSIDE the
-# postings directory and Spark's parquet listing must skip it.
-PURGE_LEDGER = "_purge_ledger.json"
-
-
-def purge_ids_digest(ids) -> str:
-    """Canonical digest of an id-list purge request — the writer
-    (compactor ledger) and the checkers (lifecycle gates) derive it
-    through this one function so they cannot drift."""
-    import hashlib
-
-    return hashlib.sha256(
-        ",".join(str(i) for i in sorted(int(i) for i in ids)).encode()
-    ).hexdigest()
-
-
-def write_purge_ledger(
-    dest: str,
-    *,
-    n_before: int,
-    n_after: int,
-    purge_ids=None,
-    predicate: str | None = None,
-) -> None:
-    """Persist the compaction's purge evidence next to its output —
-    called by the shared compactors BEFORE the caller's atomic
-    publish, so the ledger rides the same staging transaction as the
-    survivors (a crash between the rewrite and the ledger publishes
-    NOTHING — pinned by the torn-write pytest). Deterministic and
-    timestamp-free: a republished identical compaction produces an
-    identical ledger, so tree digests stay stable."""
-    if purge_ids is not None:
-        ids = sorted(int(i) for i in purge_ids)
-        purge = {"kind": "id_list", "ids": ids, "digest": purge_ids_digest(ids)}
-    else:
-        import hashlib
-
-        purge = {
-            "kind": "predicate",
-            "predicate": predicate,
-            "digest": hashlib.sha256(str(predicate).encode()).hexdigest(),
-        }
-    with open(os.path.join(dest, PURGE_LEDGER), "w") as f:
-        json.dump(
-            {
-                "version": 1,
-                "purge": purge,
-                "n_before": int(n_before),
-                "n_after": int(n_after),
-                "n_purged": int(n_before) - int(n_after),
-            },
-            f,
-        )
-
-
-def purge_ledger_current(tree: str, ledger_dir: str) -> bool:
-    """Cache-validity test for the compacted-tree builders: True iff
-    ``ledger_dir`` holds the purge ledger. A ledger-less compacted
-    tree (it predates the purge-ledger artifact, or torn external
-    cleanup removed the evidence) is a CACHE MISS — ``tree`` is
-    displaced through the trash-grace window and rebuilt, the
-    tomb_ids_current discipline applied to the deletion evidence."""
-    import time as _time
-
-    if os.path.isfile(os.path.join(ledger_dir, PURGE_LEDGER)):
-        return True
-    trash = f"{tree}.trash.ledger{os.getpid()}_{int(_time.time() * 1000)}"
-    try:
-        os.rename(tree, trash)
-        os.utime(trash, None)  # grace clock starts at displacement
-    except OSError:
-        pass  # a concurrent builder already displaced it
-    return False
-
-
-def read_purge_ledger(dest: str) -> dict:
-    """Load a compacted tree's purge evidence; a MISSING ledger is a
-    loud error, not a default — a compaction that deleted rows without
-    recording what it deleted is exactly the failure mode the artifact
-    exists to rule out."""
-    path = os.path.join(dest, PURGE_LEDGER)
-    if not os.path.isfile(path):
-        raise ValueError(
-            f"compacted tree {dest} has no purge ledger ({PURGE_LEDGER}) — "
-            f"the compaction's deletion evidence is missing; rebuild the tree"
-        )
-    with open(path) as f:
-        return json.load(f)
-
-
-def purge_ledger_referee(
-    spark: SparkSession, ledger_dir: str, before: DataFrame, after: DataFrame,
-    id_col: str,
-) -> DataFrame:
-    """One-row BOOLEAN audit frame (`purge_ledger_consistent`) holding
-    a compaction's persisted purge LEDGER to the purge actually
-    MEASURED on the persisted trees — the op_lex_lifecycle_e2e /
-    op_sim_lifecycle_e2e referee discipline factored out so the
-    STREAMED compact-serve gates carry the identical check (round-13
-    verdict task 2: the streamed rows wrote the ledger via the shared
-    compactors but never read it back). True iff ALL of:
-
-    - the ledger records an id-LIST purge whose digest is the session
-      TOMB_IDS digest (one ``purge_ids_digest`` derivation on both
-      the writer and this checker, so they cannot drift), with
-      internally consistent arithmetic (n_purged == n_before −
-      n_after);
-    - the recorded n_before / n_after equal the row counts of the
-      PERSISTED source and compacted trees (``before`` / ``after`` —
-      posting rows, read back from disk, not a plan);
-    - the purge-list hits counted in the source (broadcast left-semi
-      on ``id_col`` — map-side, the list is bounded by construction)
-      equal the ledger's n_purged, i.e. the evidence attests to
-      exactly the rows that disappeared.
-
-    A MISSING ledger raises loudly in ``read_purge_ledger``; a
-    tampered one serves False into the driver's value hash against
-    the oracle's TRUE literal."""
-    led = read_purge_ledger(ledger_dir)
-    led_ok = (
-        led["purge"].get("kind") == "id_list"
-        and led["purge"].get("digest") == purge_ids_digest(TOMB_IDS)
-        and led["n_purged"] == led["n_before"] - led["n_after"]
-    )
-    b_stats = before.join(
-        F.broadcast(tombstone_ids_df(spark, id_col)), id_col, "left_semi"
-    ).agg(F.count(F.lit(1)).alias("n_purge_hits")).crossJoin(
-        before.agg(F.count(F.lit(1)).alias("n_before"))
-    )
-    a_stats = after.agg(F.count(F.lit(1)).alias("n_after"))
-    return b_stats.crossJoin(F.broadcast(a_stats)).select(
-        (
-            F.lit(bool(led_ok))
-            & (F.col("n_before") == F.lit(int(led["n_before"])))
-            & (F.col("n_after") == F.lit(int(led["n_after"])))
-            & (F.col("n_purge_hits") == F.lit(int(led["n_purged"])))
-        ).alias("purge_ledger_consistent")
-    )
-
-
 def compact_ann_postings(
     spark: SparkSession,
     src_postings: str,
@@ -834,46 +552,36 @@ def compact_ann_postings(
     )
 
 
-def _count_parquet_files(postings_dir: str) -> int:
-    n = 0
-    for root, _dirs, files in os.walk(postings_dir):
-        n += sum(1 for f in files if f.endswith(".parquet"))
-    return n
-
-
 def ensure_compact_tree(spark: SparkSession, sf_dir: str) -> str:
     """Build (idempotently) the compacted tree: the upsert demo tree's
     2-segments-per-cell postings with the pmod(vec_id, TOMB_MOD) ==
     TOMB_RESIDUE tombstones dropped, rewritten ONE segment per cell
-    into a fresh staged tree (atomic publish + superseded-key GC) —
-    the input tree is never mutated, so a crash mid-compaction leaves
-    the old index serving. Shared by op_sim_index_compact (which
+    into a fresh tree — the input tree is never mutated, so a crash
+    mid-compaction leaves the old index serving. A tree without its
+    purge ledger is rebuilt. Shared by op_sim_index_compact (which
     audits the rewrite) and op_sim_ivfpq_serve_compacted (which
     SERVES from it under a value-level oracle)."""
     demo = ensure_upsert_tree(spark, sf_dir)
-    comp = os.path.join(
-        _index_root(),
-        f"compact_v{INDEX_VERSION}",
-        fingerprint_key(sf_dir, "embeddings.parquet"),
-    )
-    if os.path.isfile(
-        os.path.join(comp, "compact_done.json")
-    ) and purge_ledger_current(comp, os.path.join(comp, "postings")):
-        return comp
-    with staging_tree(comp) as staging:
+
+    def build(staging: str) -> None:
         compact_ann_postings(
             spark, os.path.join(demo, "postings"), os.path.join(staging, "postings")
         )
-        with open(os.path.join(staging, "compact_done.json"), "w") as f:
-            json.dump({"version": INDEX_VERSION, "tomb_mod": TOMB_MOD}, f)
-        publish_staging(staging, comp, marker="compact_done.json")
-    prune_stale_keys(comp, sf_dir)
-    return comp
+
+    return ensure_tree(
+        ANN.dir(sf_dir, "compact"),
+        sf_dir,
+        "compact_done.json",
+        {"version": INDEX_VERSION, "tomb_mod": TOMB_MOD},
+        build,
+        valid=(lambda p: purge_ledger_current(p, os.path.join(p, "postings")),),
+    )
 
 
 @register(
     "op_sim_index_compact",
     tags=("llm", "similarity", "index"),
+    setup=(ensure_upsert_tree,),
     oracle="""
         SELECT CAST(COUNT(*) AS BIGINT) AS n_before,
                CAST(COUNT(*) FILTER (WHERE vec_id % 17 = 3) AS BIGINT) AS n_tombstoned,
@@ -894,10 +602,9 @@ def op_sim_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     segments per non-empty cell (base write + delta append); the
     tombstone set is the deterministic pmod(vec_id,17)==3 slice (~6%).
     Compaction reads the postings once, drops tombstoned rows, and
-    rewrites ONE segment per cell into a fresh staged tree (atomic
-    publish + superseded-key GC, the build_ann_index discipline) —
-    never mutating the input tree, so a crash mid-compaction leaves
-    the old index serving.
+    rewrites ONE segment per cell into a fresh tree — never mutating
+    the input tree, so a crash mid-compaction leaves the old index
+    serving.
 
     Audited on the PERSISTED trees (counts hash-compare vs DuckDB):
     - ``n_before`` / ``n_tombstoned`` / ``n_after``: postings rows in
@@ -1061,38 +768,36 @@ def ensure_ann_e2e_tree(spark: SparkSession, sf_dir: str) -> str:
     ensure_upsert_tree end state: full coverage, two segments per
     cell) -> id-LIST tombstone (TOMB_IDS, the purge-request shape) ->
     compact through the shared ``compact_ann_postings`` algebra into
-    ONE segment per cell. Staged + atomically published + superseded
-    keys pruned; the upsert tree stays live throughout."""
+    ONE segment per cell. A tree purged with another list, or without
+    its purge ledger, is rebuilt; the upsert tree stays live
+    throughout."""
     demo = ensure_upsert_tree(spark, sf_dir)
-    e2e = os.path.join(
-        _index_root(),
-        f"e2e_v{INDEX_VERSION}",
-        fingerprint_key(sf_dir, "embeddings.parquet"),
-    )
-    if (
-        os.path.isfile(os.path.join(e2e, "e2e_done.json"))
-        and tomb_ids_current(e2e, "e2e_done.json")
-        and purge_ledger_current(e2e, os.path.join(e2e, "postings"))
-    ):
-        return e2e
-    with staging_tree(e2e) as staging:
+
+    def build(staging: str) -> None:
         compact_ann_postings(
             spark,
             os.path.join(demo, "postings"),
             os.path.join(staging, "postings"),
             tombstones=tombstone_ids_df(spark, "vec_id"),
         )
-        with open(os.path.join(staging, "e2e_done.json"), "w") as f:
-            json.dump({"version": INDEX_VERSION, "tomb_ids": list(TOMB_IDS)}, f)
-        publish_staging(staging, e2e, marker="e2e_done.json")
-    prune_stale_keys(e2e, sf_dir)
-    check_tomb_meta(e2e, "e2e_done.json")  # post-publish invariant
-    return e2e
+
+    return ensure_tree(
+        ANN.dir(sf_dir, "e2e"),
+        sf_dir,
+        "e2e_done.json",
+        {"version": INDEX_VERSION, "tomb_ids": list(TOMB_IDS)},
+        build,
+        valid=(
+            lambda p: tomb_ids_current(p, "e2e_done.json"),
+            lambda p: purge_ledger_current(p, os.path.join(p, "postings")),
+        ),
+    )
 
 
 @register(
     "op_sim_lifecycle_e2e",
     tags=("llm", "similarity", "index"),
+    setup=(ensure_ann_e2e_tree,),
     # op_sim_ivfpq_serve's oracle re-derived over the NET corpus of the
     # composed lifecycle — every corpus vector upserted, the TOMB_IDS
     # purge list removed — plus the three audit literals. The id list
@@ -1329,20 +1034,14 @@ def ensure_merge_base_tree(spark: SparkSession, sf_dir: str) -> str:
     policy, the referees, and the DuckDB oracle all read the same
     fact. One file per (seg, cell): the repartition matches the
     partitionBy, so file counts are the segment counts."""
-    base = os.path.join(
-        _index_root(),
-        f"mergebase_v{INDEX_VERSION}",
-        fingerprint_key(sf_dir, "embeddings.parquet"),
-    )
-    if os.path.isfile(os.path.join(base, "merge_base_done.json")):
-        return base
-    main_path = build_ann_index(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id")
-    bounds = _merge_bounds(emb)
-    postings = spark.read.parquet(os.path.join(main_path, "postings")).select(
-        "vec_id", "codes", F.col("cent_id").cast("long").alias("cent_id")
-    )
-    with staging_tree(base) as staging:
+
+    def build(staging: str) -> None:
+        main_path = build_ann_index(spark, sf_dir)
+        emb = load_table(spark, sf_dir, "embeddings").select("vec_id")
+        bounds = _merge_bounds(emb)
+        postings = spark.read.parquet(os.path.join(main_path, "postings")).select(
+            "vec_id", "codes", F.col("cent_id").cast("long").alias("cent_id")
+        )
         (
             postings.join(F.broadcast(bounds))
             .withColumn("seg", _merge_seg_expr())
@@ -1352,11 +1051,14 @@ def ensure_merge_base_tree(spark: SparkSession, sf_dir: str) -> str:
             .partitionBy("seg", "cent_id")
             .parquet(os.path.join(staging, "postings"))
         )
-        with open(os.path.join(staging, "merge_base_done.json"), "w") as f:
-            json.dump({"version": INDEX_VERSION, "n_segments": 4}, f)
-        publish_staging(staging, base, marker="merge_base_done.json")
-    prune_stale_keys(base, sf_dir)
-    return base
+
+    return ensure_tree(
+        ANN.dir(sf_dir, "mergebase"),
+        sf_dir,
+        "merge_base_done.json",
+        {"version": INDEX_VERSION, "n_segments": 4},
+        build,
+    )
 
 
 def _seg_dir_digests(postings_dir: str, segs) -> dict[str, str]:
@@ -1394,31 +1096,22 @@ def ensure_merge_policy_tree(spark: SparkSession, sf_dir: str) -> str:
     arithmetic, untouched-file digests) is written in the same
     staging transaction — the purge-ledger evidence discipline for a
     merge that deletes nothing but must prove it moved (and only
-    moved) what the policy chose."""
+    moved) what the policy chose. A tree without its manifest is
+    rebuilt."""
     base = ensure_merge_base_tree(spark, sf_dir)
-    dest = os.path.join(
-        _index_root(),
-        f"mergepolicy_v{INDEX_VERSION}",
-        fingerprint_key(sf_dir, "embeddings.parquet"),
-    )
-    if os.path.isfile(os.path.join(dest, "merge_done.json")) and os.path.isfile(
-        os.path.join(dest, "postings", MERGE_MANIFEST)
-    ):
-        return dest
-    src_postings = os.path.join(base, "postings")
-    src = spark.read.parquet(src_postings).select(
-        "vec_id", "codes", "cent_id", F.col("seg").cast("int").alias("seg")
-    )
-    seg_rows = {
-        int(r["seg"]): int(r["n"])
-        for r in src.groupBy("seg").agg(F.count(F.lit(1)).alias("n")).collect()
-    }  # bounded collect: one row per segment (4 here), never data
-    picked = pick_size_tiered(seg_rows, MERGE_POLICY_K)
-    untouched = sorted(s for s in seg_rows if s not in picked)
-    new_seg = max(seg_rows) + 1
-    import shutil as _sh
 
-    with staging_tree(dest) as staging:
+    def build(staging: str) -> None:
+        src_postings = os.path.join(base, "postings")
+        src = spark.read.parquet(src_postings).select(
+            "vec_id", "codes", "cent_id", F.col("seg").cast("int").alias("seg")
+        )
+        seg_rows = {
+            int(r["seg"]): int(r["n"])
+            for r in src.groupBy("seg").agg(F.count(F.lit(1)).alias("n")).collect()
+        }  # bounded collect: one row per segment (4 here), never data
+        picked = pick_size_tiered(seg_rows, MERGE_POLICY_K)
+        untouched = sorted(s for s in seg_rows if s not in picked)
+        new_seg = max(seg_rows) + 1
         stage_post = os.path.join(staging, "postings")
         (
             src.filter(F.col("seg").isin(*[int(s) for s in picked]))
@@ -1432,7 +1125,7 @@ def ensure_merge_policy_tree(spark: SparkSession, sf_dir: str) -> str:
         # through Spark (a rewrite would re-encode row groups and
         # break the byte-identity contract)
         for seg in untouched:
-            _sh.copytree(
+            shutil.copytree(
                 os.path.join(src_postings, f"seg={seg}"),
                 os.path.join(stage_post, f"seg={seg}"),
             )
@@ -1453,16 +1146,21 @@ def ensure_merge_policy_tree(spark: SparkSession, sf_dir: str) -> str:
                 },
                 f,
             )
-        with open(os.path.join(staging, "merge_done.json"), "w") as f:
-            json.dump({"version": INDEX_VERSION}, f)
-        publish_staging(staging, dest, marker="merge_done.json")
-    prune_stale_keys(dest, sf_dir)
-    return dest
+
+    return ensure_tree(
+        ANN.dir(sf_dir, "mergepolicy"),
+        sf_dir,
+        "merge_done.json",
+        {"version": INDEX_VERSION},
+        build,
+        valid=(lambda p: os.path.isfile(os.path.join(p, "postings", MERGE_MANIFEST)),),
+    )
 
 
 @register(
     "op_sim_index_merge_policy",
     tags=("llm", "similarity", "index"),
+    setup=(ensure_merge_policy_tree,),
     # counts replay from the embeddings table through the shared seg
     # CTE (the base tree covers every corpus vector exactly once, the
     # op_sim_index_upsert coverage precedent); the demo's size

@@ -26,18 +26,16 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import time
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from game_data_etl_pipeline_spark.catalog import load_table
 from game_data_etl_pipeline_spark.llmdata.artifacts import (
-    fingerprint_key,
-    prune_stale_keys,
-    publish_staging,
-    staging_tree,
+    TreeFamily,
+    displace,
+    ensure_tree,
+    publish_tree,
 )
 from game_data_etl_pipeline_spark.registry import register
 
@@ -1656,16 +1654,11 @@ def op_corpus_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame
 # distinct benchmark (b_id, g) rescreen side) + meta.json marker.
 BLOOM_INDEX_VERSION = 1
 
-# test hook: serving twice in one process must hit the persisted
-# artifact, never rebuild (the ann/lex build-count discipline)
-_BLOOM_BUILD_COUNT = 0
-
-
-def _bloom_root() -> str:
-    return os.environ.get(
-        "SPARK_GRAFT_INDEX_DIR_BLOOM",
-        str(Path(__file__).resolve().parents[2] / "spark-warehouse" / "bloom_index"),
-    )
+BLOOM = TreeFamily(
+    "SPARK_GRAFT_INDEX_DIR_BLOOM", "bloom_index", "documents.parquet", BLOOM_INDEX_VERSION
+)
+_bloom_root = BLOOM.root
+bloom_index_dir = BLOOM.dir
 
 
 def check_bloom_meta(path: str) -> None:
@@ -1712,12 +1705,7 @@ def _geometry_current(path: str) -> bool:
         check_bloom_meta(path)
         return True
     except ValueError:
-        trash = f"{path}.trash.geom{os.getpid()}_{int(time.time() * 1000)}"
-        try:
-            os.rename(path, trash)
-            os.utime(trash, None)  # grace clock starts at displacement
-        except OSError:
-            pass  # a concurrent builder already displaced it
+        displace(path, "geom")
         return False
 
 
@@ -1734,39 +1722,25 @@ def words_bitmatch_audit(
     return bitmatch_audit(words_a, words_b, ["widx"], "bits", out)
 
 
-def bloom_index_dir(sf_dir: str) -> str:
-    """Artifact dir for one fixture's benchmark filter: keyed by the
-    documents file's (size, mtime_ns) fingerprint — a regenerated
-    corpus mints a fresh filter and GC prunes the stale key (the
-    shared artifacts.py discipline)."""
-    key = fingerprint_key(sf_dir, "documents.parquet")
-    return os.path.join(_bloom_root(), f"v{BLOOM_INDEX_VERSION}", key)
-
-
 def build_bloom_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build (idempotently) and atomically publish the benchmark
-    contamination filter: the fixed-size bitmap words table (the
-    ~0.5 MB object every screening site ships) and the distinct
-    benchmark (b_id, g) pair set (the bounded exact-rescreen side,
-    shipped only to the rescreen stage). Both derive from ONE
-    benchmark-side shingle pass; the benchmark corpus is never read
-    again by any screen that serves from this tree. Staged build +
-    atomic rename + superseded-key GC — the artifacts.py lifecycle
-    shared with the ANN and lexical indexes."""
-    global _BLOOM_BUILD_COUNT
+    """Build (idempotently) the benchmark contamination filter: the
+    fixed-size bitmap words table (the ~0.5 MB object every screening
+    site ships) and the distinct benchmark (b_id, g) pair set (the
+    bounded exact-rescreen side, shipped only to the rescreen stage).
+    Both derive from ONE benchmark-side shingle pass; the benchmark
+    corpus is never read again by any screen that serves from this
+    tree. A tree built at another geometry is rebuilt."""
     final = bloom_index_dir(sf_dir)
-    if os.path.isfile(os.path.join(final, "meta.json")) and _geometry_current(final):
-        return final
-    _BLOOM_BUILD_COUNT += 1
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    is_bench = F.pmod(F.col("doc_id"), F.lit(3)) == 0
-    pairs = (
-        _shingles(docs.filter(is_bench))
-        .select(F.col("doc_id").alias("b_id"), "g")
-        .distinct()
-        .localCheckpoint()  # one bench shingle pass feeds pairs + words
-    )
-    with staging_tree(final) as staging:
+
+    def build(staging: str) -> dict:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        is_bench = F.pmod(F.col("doc_id"), F.lit(3)) == 0
+        pairs = (
+            _shingles(docs.filter(is_bench))
+            .select(F.col("doc_id").alias("b_id"), "g")
+            .distinct()
+            .localCheckpoint()  # one bench shingle pass feeds pairs + words
+        )
         pairs.coalesce(4).write.mode("overwrite").parquet(
             os.path.join(staging, "pairs")
         )
@@ -1778,25 +1752,10 @@ def build_bloom_index(spark: SparkSession, sf_dir: str) -> str:
         words.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(staging, "words")
         )
-        with open(os.path.join(staging, "meta.json"), "w") as f:
-            json.dump(
-                {
-                    "version": BLOOM_INDEX_VERSION,
-                    "bits": BLOOM_BITS,
-                    "seeds": list(BLOOM_SEEDS),
-                    "fill_ratio": fill,
-                },
-                f,
-            )
-        publish_staging(staging, final, marker="meta.json")
-    prune_stale_keys(final, sf_dir)
-    # post-publish invariant: if the stale tree could not be displaced
-    # (_geometry_current swallows non-ENOENT OSErrors too) the publish
-    # rename fails and its race fallback would accept the STALE tree's
-    # marker — re-validate so build_bloom_index can never return a
-    # tree whose geometry mismatches the session (round-11 advice)
-    check_bloom_meta(final)
-    return final
+        return {"fill_ratio": fill}
+
+    meta = {"version": BLOOM_INDEX_VERSION, "bits": BLOOM_BITS, "seeds": list(BLOOM_SEEDS)}
+    return ensure_tree(final, sf_dir, "meta.json", meta, build, valid=(_geometry_current,))
 
 
 @register(
@@ -1813,10 +1772,8 @@ def op_corpus_decontaminate_bloom_served(spark: SparkSession, sf_dir: str) -> Da
     benchmark bitmap inside every screen; at 100 TB the benchmark set
     is static across thousands of screening jobs, so the filter is an
     ARTIFACT — built once per benchmark snapshot
-    (``build_bloom_index``: staged, atomically published,
-    fingerprint-keyed with superseded-key GC, the shared artifacts.py
-    lifecycle), then every screen reads the 0.5 MB words table and
-    the bounded pair set from the warehouse. At SCREEN time the
+    (``build_bloom_index``), then every screen reads the 0.5 MB words
+    table and the bounded pair set from the warehouse. At SCREEN time the
     benchmark corpus is not read at all and the training corpus is
     read exactly ONCE — its deduped shingle projection materializes
     one time and feeds both the shared ``bloom_candidates`` probe
@@ -1944,47 +1901,39 @@ def ensure_bloom_upsert_tree(spark: SparkSession, sf_dir: str) -> str:
     shingle is ever re-read. Tree layout: ``base_words/`` (the
     pre-upsert filter, kept for the monotonicity referee),
     ``words/`` (the merged filter every screen serves from),
-    ``pairs/`` (the full benchmark rescreen side). Staged build +
-    atomic publish + superseded-key GC — the shared artifacts.py
-    lifecycle — and the saturation guard runs on the MERGED filter
-    (an upsert is exactly when a filter outgrows its geometry)."""
-    final = os.path.join(
-        _bloom_root(),
-        f"upsert_v{BLOOM_INDEX_VERSION}",
-        fingerprint_key(sf_dir, "documents.parquet"),
-    )
-    if os.path.isfile(os.path.join(final, "upsert_done.json")) and _geometry_current(
-        final
-    ):
-        return final
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base_pairs = (
-        _shingles(docs.filter(F.pmod(F.col("doc_id"), F.lit(6)) == 0))
-        .select(F.col("doc_id").alias("b_id"), "g")
-        .distinct()
-        .localCheckpoint()
-    )
-    delta_pairs = (
-        _shingles(docs.filter(F.pmod(F.col("doc_id"), F.lit(6)) == 3))
-        .select(F.col("doc_id").alias("b_id"), "g")
-        .distinct()
-        .localCheckpoint()
-    )
-    # degenerate-slice guard: an empty base or delta slice would make
-    # every merge referee pass VACUOUSLY (merged == base == rebuilt) —
-    # the silent-degeneration mode the streaming ops' residue assert
-    # exists to catch (round-11 review finding)
-    for slice_name, frame in (
-        ("base (doc_id % 6 == 0)", base_pairs),
-        ("delta (doc_id % 6 == 3)", delta_pairs),
-    ):
-        if not frame.head(1):
-            raise ValueError(
-                f"ensure_bloom_upsert_tree: degenerate fixture — the "
-                f"{slice_name} benchmark slice holds no shingles, so the "
-                f"upsert referees would pass without merging anything"
-            )
-    with staging_tree(final) as staging:
+    ``pairs/`` (the full benchmark rescreen side). The saturation
+    guard runs on the MERGED filter (an upsert is exactly when a
+    filter outgrows its geometry)."""
+    final = BLOOM.dir(sf_dir, "upsert")
+
+    def build(staging: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        base_pairs = (
+            _shingles(docs.filter(F.pmod(F.col("doc_id"), F.lit(6)) == 0))
+            .select(F.col("doc_id").alias("b_id"), "g")
+            .distinct()
+            .localCheckpoint()
+        )
+        delta_pairs = (
+            _shingles(docs.filter(F.pmod(F.col("doc_id"), F.lit(6)) == 3))
+            .select(F.col("doc_id").alias("b_id"), "g")
+            .distinct()
+            .localCheckpoint()
+        )
+        # degenerate-slice guard: an empty base or delta slice would make
+        # every merge referee pass VACUOUSLY (merged == base == rebuilt) —
+        # the silent-degeneration mode the streaming ops' residue assert
+        # exists to catch (round-11 review finding)
+        for slice_name, frame in (
+            ("base (doc_id % 6 == 0)", base_pairs),
+            ("delta (doc_id % 6 == 3)", delta_pairs),
+        ):
+            if not frame.head(1):
+                raise ValueError(
+                    f"ensure_bloom_upsert_tree: degenerate fixture — the "
+                    f"{slice_name} benchmark slice holds no shingles, so the "
+                    f"upsert referees would pass without merging anything"
+                )
         bloom_words(base_pairs.select("g").distinct()).coalesce(1).write.parquet(
             os.path.join(staging, "base_words")
         )
@@ -2003,26 +1952,21 @@ def ensure_bloom_upsert_tree(spark: SparkSession, sf_dir: str) -> str:
         base_pairs.unionByName(delta_pairs).coalesce(4).write.parquet(
             os.path.join(staging, "pairs")
         )
-        with open(os.path.join(staging, "upsert_done.json"), "w") as f:
-            json.dump(
-                {
-                    "version": BLOOM_INDEX_VERSION,
-                    "bits": BLOOM_BITS,
-                    "seeds": list(BLOOM_SEEDS),
-                    "base_slice": "doc_id % 6 == 0",
-                    "delta_slice": "doc_id % 6 == 3",
-                },
-                f,
-            )
-        publish_staging(staging, final, marker="upsert_done.json")
-    prune_stale_keys(final, sf_dir)
-    check_bloom_meta(final)  # same post-publish invariant as the build
-    return final
+
+    meta = {
+        "version": BLOOM_INDEX_VERSION,
+        "bits": BLOOM_BITS,
+        "seeds": list(BLOOM_SEEDS),
+        "base_slice": "doc_id % 6 == 0",
+        "delta_slice": "doc_id % 6 == 3",
+    }
+    return ensure_tree(final, sf_dir, "upsert_done.json", meta, build, valid=(_geometry_current,))
 
 
 @register(
     "op_bloom_index_upsert",
     tags=("llm", "dedup", "curation", "index"),
+    setup=(build_bloom_index, ensure_bloom_upsert_tree),
     # the exact screen's ledger VERBATIM (screening from the upserted
     # filter changes where the filter came from, not one ledger value)
     # plus the three audit literals
@@ -2041,8 +1985,7 @@ def op_bloom_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     a base filter over half the benchmark (doc_id % 6 == 0), then
     merges the other half (% 6 == 3) into the base words READ BACK
     from the artifact — one union + bit_or aggregate over <=65k-row
-    frames, no base shingle re-read, staged/atomic/GC'd like every
-    index tree.
+    frames, no base shingle re-read.
 
     Three referees: ``merged_equals_rebuilt`` — the upserted words
     table is word-for-word IDENTICAL (count equality both directions,
@@ -2147,16 +2090,12 @@ def ensure_bloom_registry(
     new suite is ever re-read, and the staged copies are one
     consistent snapshot, so the fold cannot pair old family bytes
     with a concurrent publisher's newer union), and
-    atomically republishes. Earlier families' bytes surviving a later
+    republishes. Earlier families' bytes surviving a later
     registration untouched is therefore a construction invariant, and
     tests/test_llmdata.py digests a family's artifacts between two
     registrations to pin it. Saturation guards the union at every
     registration (the geometry must hold the SUM of the families)."""
-    final = os.path.join(
-        _bloom_root(),
-        f"registry_v{BLOOM_INDEX_VERSION}",
-        fingerprint_key(sf_dir, "documents.parquet"),
-    )
+    final = BLOOM.dir(sf_dir, "registry")
     for fam, residue in families:
         _register_bloom_family(spark, sf_dir, final, fam, residue)
     check_bloom_meta(final)  # the shared post-publish geometry invariant
@@ -2214,7 +2153,8 @@ def _register_bloom_family(
             refresh_bloom_family(spark, sf_dir, final, fam, residue, mod=mod)
             return
     pairs = _family_pairs(spark, sf_dir, fam, mod, residue)
-    with staging_tree(final) as staging:
+
+    def build(staging: str) -> None:
         if registered:
             # copy every already-registered family forward byte-for-byte
             shutil.copytree(
@@ -2226,19 +2166,16 @@ def _register_bloom_family(
         bloom_words(pairs.select("g").distinct()).coalesce(1).write.parquet(
             os.path.join(fdir, "words")
         )
-        delta = spark.read.parquet(os.path.join(fdir, "words"))
+        union = spark.read.parquet(os.path.join(fdir, "words"))
         if registered:
             # incremental union: fold the STAGED family copies plus
             # this family's delta — O(families x geometry), still no
             # benchmark re-read outside the new suite. Reading the
             # live tree's union_words here instead would be a SECOND
             # read of `final` at a later time than the copytree above:
-            # a concurrent force-publish between the two reads could
-            # pair old family bytes with a new union (the torn-read
-            # race the round-12 third review pass fixed in
-            # refresh_bloom_family; round-12 advice flagged this path
-            # still had it). The staged copies ARE the one snapshot.
-            union = delta
+            # a concurrent republish between the two reads could pair
+            # old family bytes with a new union. The staged copies ARE
+            # the one snapshot.
             for other in registered:
                 union = union.unionByName(
                     spark.read.parquet(
@@ -2246,25 +2183,17 @@ def _register_bloom_family(
                     )
                 )
             union = union.groupBy("widx").agg(F.bit_or("bits").alias("bits"))
-        else:
-            union = delta
         union = union.localCheckpoint()
         assert_bloom_fill(union, what=f"bloom_registry[{final}]/{fam}")
         union.coalesce(1).write.parquet(os.path.join(staging, "union_words"))
-        with open(os.path.join(staging, "registry_done.json"), "w") as f:
-            json.dump(
-                {
-                    "version": BLOOM_INDEX_VERSION,
-                    "bits": BLOOM_BITS,
-                    "seeds": list(BLOOM_SEEDS),
-                    "families": {**registered, fam: f"doc_id % {mod} == {residue}"},
-                },
-                f,
-            )
-        publish_staging(
-            staging, final, marker="registry_done.json", force=bool(registered)
-        )
-    prune_stale_keys(final, sf_dir)
+
+    meta = {
+        "version": BLOOM_INDEX_VERSION,
+        "bits": BLOOM_BITS,
+        "seeds": list(BLOOM_SEEDS),
+        "families": {**registered, fam: f"doc_id % {mod} == {residue}"},
+    }
+    publish_tree(final, sf_dir, "registry_done.json", meta, build, replace=bool(registered))
 
 
 def _registry_screen_frames(
@@ -2347,6 +2276,7 @@ def _registry_screen_frames(
 @register(
     "op_bloom_registry_screen",
     tags=("llm", "dedup", "curation", "index"),
+    setup=(ensure_bloom_registry,),
     # the exact screen's ledger ATTRIBUTED per benchmark family: the
     # %6 residues partition the %3==0 benchmark, so DuckDB replays the
     # per-family hit counts exactly; the three referees ride as TRUE
@@ -2437,8 +2367,7 @@ def refresh_bloom_family(
     refreshed suite. The pre-refresh union is preserved in the tree
     as ``union_prev_words`` so the serving gate can prove the refresh
     changed the filter. Every other family's artifacts are copied
-    forward byte-for-byte (the registration discipline); staged +
-    atomically republished."""
+    forward byte-for-byte (the registration discipline)."""
     # geometry handshake FIRST (the registration path's discipline):
     # refreshing a stale-geometry tree would bit_or old-geometry family
     # words with a new-geometry rebuild into one incoherent union
@@ -2453,7 +2382,8 @@ def refresh_bloom_family(
     if registered.get(fam) == target_pred:
         return  # already at this snapshot
     pairs = _family_pairs(spark, sf_dir, fam, mod, residue)
-    with staging_tree(final) as staging:
+
+    def build(staging: str) -> None:
         shutil.copytree(
             os.path.join(final, "families"), os.path.join(staging, "families")
         )
@@ -2495,10 +2425,9 @@ def refresh_bloom_family(
         )
         assert_bloom_fill(union, what=f"bloom_registry_refresh[{final}]/{fam}")
         union.coalesce(1).write.parquet(os.path.join(staging, "union_words"))
-        with open(os.path.join(staging, "registry_done.json"), "w") as f:
-            json.dump({**meta, "families": {**registered, fam: target_pred}}, f)
-        publish_staging(staging, final, marker="registry_done.json", force=True)
-    prune_stale_keys(final, sf_dir)
+
+    meta = {**meta, "families": {**registered, fam: target_pred}}
+    publish_tree(final, sf_dir, "registry_done.json", meta, build, replace=True)
 
 
 def ensure_bloom_refresh_demo(spark: SparkSession, sf_dir: str) -> str:
@@ -2510,13 +2439,7 @@ def ensure_bloom_refresh_demo(spark: SparkSession, sf_dir: str) -> str:
     same family content as ensure_bloom_registry, reached through a
     refresh instead of a registration, plus the preserved pre-refresh
     union for the did-work referee."""
-    final = os.path.join(
-        _bloom_root(),
-        f"refresh_v{BLOOM_INDEX_VERSION}",
-        fingerprint_key(sf_dir, "documents.parquet"),
-    )
-    import time as _time
-
+    final = BLOOM.dir(sf_dir, "refresh")
     def _assert_refresh_did_work() -> None:
         # the refresh must CHANGE the filter or the did-work referee
         # (and its TRUE oracle literal) fails on valid data: the guard
@@ -2552,12 +2475,7 @@ def ensure_bloom_refresh_demo(spark: SparkSession, sf_dir: str) -> str:
             # external cleanup): every lineage step below would no-op
             # and hand back the same broken tree — displace and rebuild
             # (the _geometry_current cache-miss discipline)
-            trash = f"{final}.trash.deadend{os.getpid()}_{int(_time.time() * 1000)}"
-            try:
-                os.rename(final, trash)
-                os.utime(trash, None)
-            except OSError:
-                pass  # a concurrent builder already displaced it
+            displace(final, "deadend")
     _register_bloom_family(spark, sf_dir, final, "suite_a", 0, mod=6)
     _register_bloom_family(spark, sf_dir, final, "suite_b", 3, mod=12)
     refresh_bloom_family(spark, sf_dir, final, "suite_b", 3, mod=6)
@@ -2569,6 +2487,7 @@ def ensure_bloom_refresh_demo(spark: SparkSession, sf_dir: str) -> str:
 @register(
     "op_bloom_registry_refresh",
     tags=("llm", "dedup", "curation", "index"),
+    setup=(ensure_bloom_refresh_demo,),
     # the end state is content-identical to the registry screen's
     # (suite_a = %6==0, suite_b = %6==3), so the per-family ledger
     # oracle is the same; the refresh-specific referees ride as TRUE
@@ -2654,8 +2573,8 @@ def retire_bloom_family(
     a benchmark re-read). The pre-retire union is preserved as
     ``union_prev_words`` so the serving gate can prove the retirement
     shrank the filter. Every surviving family's artifacts are copied
-    forward byte-for-byte; staged + atomically republished, so a
-    crash mid-retire leaves the old registry serving. Idempotent: a
+    forward byte-for-byte; a crash mid-retire leaves the old registry
+    serving. Idempotent: a
     family absent from the marker is already retired."""
     check_bloom_meta(final)
     marker_path = os.path.join(final, "registry_done.json")
@@ -2671,7 +2590,8 @@ def retire_bloom_family(
             f"EMPTY registry — a screen probing an all-zero union flags "
             f"nothing and looks healthy; drop the registry tree instead"
         )
-    with staging_tree(final) as staging:
+
+    def build(staging: str) -> None:
         shutil.copytree(
             os.path.join(final, "families"), os.path.join(staging, "families")
         )
@@ -2704,16 +2624,9 @@ def retire_bloom_family(
         )
         assert_bloom_fill(union, what=f"bloom_registry_retire[{final}]/{fam}")
         union.coalesce(1).write.parquet(os.path.join(staging, "union_words"))
-        with open(os.path.join(staging, "registry_done.json"), "w") as f:
-            json.dump(
-                {
-                    **meta,
-                    "families": {o: registered[o] for o in survivors},
-                },
-                f,
-            )
-        publish_staging(staging, final, marker="registry_done.json", force=True)
-    prune_stale_keys(final, sf_dir)
+
+    meta = {**meta, "families": {o: registered[o] for o in survivors}}
+    publish_tree(final, sf_dir, "registry_done.json", meta, build, replace=True)
 
 
 def ensure_bloom_retire_demo(spark: SparkSession, sf_dir: str) -> str:
@@ -2723,13 +2636,7 @@ def ensure_bloom_retire_demo(spark: SparkSession, sf_dir: str) -> str:
     registry), then suite_b is RETIRED. End state: a one-family
     registry whose union is suite_a's filter alone, plus the
     preserved pre-retire union for the shrunk-filter referee."""
-    final = os.path.join(
-        _bloom_root(),
-        f"retire_v{BLOOM_INDEX_VERSION}",
-        fingerprint_key(sf_dir, "documents.parquet"),
-    )
-    import time as _time
-
+    final = BLOOM.dir(sf_dir, "retire")
     def _assert_retire_did_work() -> None:
         # the retirement must SHRINK the filter or the did-work
         # referee (and its TRUE oracle literal) fails on valid data:
@@ -2763,12 +2670,7 @@ def ensure_bloom_retire_demo(spark: SparkSession, sf_dir: str) -> str:
             # external cleanup): re-running the lineage below would
             # re-REGISTER suite_b into the retired tree — displace and
             # rebuild instead (the refresh demo's deadend discipline)
-            trash = f"{final}.trash.deadend{os.getpid()}_{int(_time.time() * 1000)}"
-            try:
-                os.rename(final, trash)
-                os.utime(trash, None)
-            except OSError:
-                pass  # a concurrent builder already displaced it
+            displace(final, "deadend")
     for fam, residue in BLOOM_FAMILIES:
         _register_bloom_family(spark, sf_dir, final, fam, residue)
     retire_bloom_family(spark, sf_dir, final, "suite_b")
@@ -2780,6 +2682,7 @@ def ensure_bloom_retire_demo(spark: SparkSession, sf_dir: str) -> str:
 @register(
     "op_bloom_registry_retire",
     tags=("llm", "dedup", "curation", "index"),
+    setup=(ensure_bloom_retire_demo,),
     # the post-retire ledger holds ONLY the surviving family's
     # attributions — DuckDB replays the screen against suite_a alone,
     # so any lingering suite_b attribution (or a hit admitted only by
@@ -2887,11 +2790,7 @@ def ensure_bloom_lifecycle_demo(spark: SparkSession, sf_dir: str) -> str:
     nor a safe prefix is displaced through the trash-grace window
     and the lineage rebuilds from scratch (the refresh demo's
     deadend discipline, scoped to exactly the unresumable states)."""
-    final = os.path.join(
-        _bloom_root(),
-        f"lifecycle_v{BLOOM_INDEX_VERSION}",
-        fingerprint_key(sf_dir, "documents.parquet"),
-    )
+    final = BLOOM.dir(sf_dir, "lifecycle")
     end = {"suite_a": "doc_id % 6 == 0", "suite_b": "doc_id % 6 == 3"}
 
     def _retire_did_work() -> bool:
@@ -2921,12 +2820,7 @@ def ensure_bloom_lifecycle_demo(spark: SparkSession, sf_dir: str) -> str:
         ):
             return final
         if not all(safe_prefix.get(f) == pred for f, pred in fams.items()):
-            trash = f"{final}.trash.deadend{os.getpid()}_{int(time.time() * 1000)}"
-            try:
-                os.rename(final, trash)
-                os.utime(trash, None)  # grace clock starts at displacement
-            except OSError:
-                pass  # a concurrent builder already displaced it
+            displace(final, "deadend")
     _register_bloom_family(spark, sf_dir, final, "suite_a", 0, mod=6)
     _register_bloom_family(spark, sf_dir, final, "suite_b", 3, mod=12)
     refresh_bloom_family(spark, sf_dir, final, "suite_b", 3, mod=6)
@@ -2945,6 +2839,7 @@ def ensure_bloom_lifecycle_demo(spark: SparkSession, sf_dir: str) -> str:
 @register(
     "op_bloom_registry_lifecycle_e2e",
     tags=("llm", "dedup", "curation", "index"),
+    setup=(ensure_bloom_lifecycle_demo,),
     # the end state is content-identical to the standard two-family
     # registry (the lineage's detours — suite_b's stale half snapshot,
     # suite_c's registration — are all superseded or retired), so the

@@ -32,19 +32,25 @@ share the original DuckDB oracle verbatim.
 
 from __future__ import annotations
 
-import json
 import os
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from game_data_etl_pipeline_spark.catalog import load_table
 from game_data_etl_pipeline_spark.llmdata.artifacts import (
-    fingerprint_key,
-    prune_stale_keys,
-    publish_staging,
-    staging_tree,
+    TOMB_IDS,
+    TOMB_IDS_SQL,
+    TOMB_MOD,
+    TOMB_RESIDUE,
+    TreeFamily,
+    count_parquet_files,
+    ensure_tree,
+    purge_ledger_current,
+    purge_ledger_referee,
+    tomb_ids_current,
+    tombstone_ids_df,
+    write_purge_ledger,
 )
 from game_data_etl_pipeline_spark.llmdata.text import BM25_CTES, _terms
 from game_data_etl_pipeline_spark.registry import register
@@ -56,9 +62,6 @@ from game_data_etl_pipeline_spark.registry import register
 LEX_INDEX_VERSION = 2
 LEX_BUCKETS = 16
 
-# test hook: serving twice in one process must not rebuild
-_LEX_BUILD_COUNT = 0
-
 # term-tuple -> bucket list, memoized per process: xxhash64 lives
 # JVM-side, so resolving a query's buckets costs one bounded 3-row
 # job — pay it once per distinct query-term set, not per execution
@@ -69,52 +72,40 @@ def _bucket(term_col):
     return F.pmod(F.xxhash64(term_col), F.lit(LEX_BUCKETS)).cast("int")
 
 
-def _lex_root() -> str:
-    return os.environ.get(
-        "SPARK_GRAFT_LEX_INDEX_DIR",
-        str(Path(__file__).resolve().parents[2] / "spark-warehouse" / "lex_index"),
-    )
-
-
-def lex_index_dir(sf_dir: str) -> str:
-    key = fingerprint_key(sf_dir, "documents.parquet")
-    return os.path.join(_lex_root(), f"v{LEX_INDEX_VERSION}", key)
+LEX = TreeFamily(
+    "SPARK_GRAFT_LEX_INDEX_DIR", "lex_index", "documents.parquet", LEX_INDEX_VERSION
+)
 
 
 def build_lex_index(spark: SparkSession, sf_dir: str) -> str:
     """Tokenize the corpus ONCE and persist the inverted index
-    (idempotent per corpus fingerprint; staged + atomically renamed
-    like build_ann_index). Cost shape: one corpus scan collapsing to
-    (doc_id, dl, term) triples, one groupBy for tf, one for df, one
-    tiny stats aggregate, and a shuffle on term_bucket to lay the
-    postings out as the term-sharded inverted file — all paid once
-    per corpus snapshot."""
-    global _LEX_BUILD_COUNT
-    final = lex_index_dir(sf_dir)
-    if os.path.isfile(os.path.join(final, "meta.json")):
-        return final
-    _LEX_BUILD_COUNT += 1
-    docs = load_table(spark, sf_dir, "documents")
-    # split projected once below the Generate: size(split)+explode(split)
-    # in one select re-splits the text per exploded row (guide §2.3)
-    t = docs.withColumn("terms", _terms()).select(
-        "doc_id", F.size("terms").alias("dl"), F.explode("terms").alias("term")
-    )
-    postings = (
-        t.groupBy("term", "doc_id", "dl")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .withColumn("term_bucket", _bucket(F.col("term")))
-    )
-    dfq = (
-        postings.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .withColumn("term_bucket", _bucket(F.col("term")))
-    )
-    stats = docs.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(_terms())).alias("tot_dl"),
-    )
-    with staging_tree(final) as staging:
+    (idempotent per corpus fingerprint). Cost shape: one corpus scan
+    collapsing to (doc_id, dl, term) triples, one groupBy for tf, one
+    for df, one tiny stats aggregate, and a shuffle on term_bucket to
+    lay the postings out as the term-sharded inverted file — all paid
+    once per corpus snapshot."""
+
+    def build(staging: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        # split projected once below the Generate: size(split)+explode(split)
+        # in one select re-splits the text per exploded row (guide §2.3)
+        t = docs.withColumn("terms", _terms()).select(
+            "doc_id", F.size("terms").alias("dl"), F.explode("terms").alias("term")
+        )
+        postings = (
+            t.groupBy("term", "doc_id", "dl")
+            .agg(F.count(F.lit(1)).alias("tf"))
+            .withColumn("term_bucket", _bucket(F.col("term")))
+        )
+        dfq = (
+            postings.groupBy("term")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .withColumn("term_bucket", _bucket(F.col("term")))
+        )
+        stats = docs.agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(F.size(_terms())).alias("tot_dl"),
+        )
         (
             postings.repartition("term_bucket")
             .write.mode("overwrite")
@@ -130,16 +121,15 @@ def build_lex_index(spark: SparkSession, sf_dir: str) -> str:
         stats.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(staging, "stats")
         )
-        with open(os.path.join(staging, "meta.json"), "w") as f:
-            json.dump({"version": LEX_INDEX_VERSION, "buckets": LEX_BUCKETS}, f)
-        publish_staging(staging, final, marker="meta.json")
-    prune_stale_keys(final, sf_dir)
-    return final
+
+    meta = {"version": LEX_INDEX_VERSION, "buckets": LEX_BUCKETS}
+    return ensure_tree(LEX.dir(sf_dir), sf_dir, "meta.json", meta, build)
 
 
 @register(
     "op_text_bm25_serve",
     tags=("llm", "text", "index"),
+    setup=(build_lex_index,),
     # the EXACT oracle op_text_bm25 uses: the persisted-index path must
     # reproduce the corpus-scan path value for value
     oracle=BM25_CTES
@@ -239,18 +229,11 @@ def ensure_lex_upsert_tree(spark: SparkSession, sf_dir: str) -> str:
     are per-doc facts, df/n_docs/tot_dl are sums over disjoint doc
     sets), so the merge is exact: the upserted index is
     value-identical to a full rebuild, which is what lets
-    op_lex_index_upsert keep op_text_bm25's verbatim oracle. The
-    whole tree stages + atomically renames (the ann upsert
-    discipline); df_base/stats_base stay in the tree as provenance
-    that the merge read persisted artifacts, not in-memory frames."""
-    demo = os.path.join(
-        _lex_root(),
-        f"upsert_v{LEX_INDEX_VERSION}",
-        fingerprint_key(sf_dir, "documents.parquet"),
-    )
-    if os.path.isfile(os.path.join(demo, "upsert_done.json")):
-        return demo
-    with staging_tree(demo) as staging:
+    op_lex_index_upsert keep op_text_bm25's verbatim oracle.
+    df_base/stats_base stay in the tree as provenance that the merge
+    read persisted artifacts, not in-memory frames."""
+
+    def build(staging: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
         split = docs.agg(
             F.expr("max(doc_id) * 4 div 5").cast("long").alias("split")
@@ -313,16 +296,15 @@ def ensure_lex_upsert_tree(spark: SparkSession, sf_dir: str) -> str:
             .agg(F.sum("n_docs").alias("n_docs"), F.sum("tot_dl").alias("tot_dl"))
         )
         merged_st.coalesce(1).write.mode("overwrite").parquet(os.path.join(staging, "stats"))
-        with open(os.path.join(staging, "upsert_done.json"), "w") as f:
-            json.dump({"version": LEX_INDEX_VERSION, "buckets": LEX_BUCKETS}, f)
-        publish_staging(staging, demo, marker="upsert_done.json")
-    prune_stale_keys(demo, sf_dir)
-    return demo
+
+    meta = {"version": LEX_INDEX_VERSION, "buckets": LEX_BUCKETS}
+    return ensure_tree(LEX.dir(sf_dir, "upsert"), sf_dir, "upsert_done.json", meta, build)
 
 
 @register(
     "op_lex_index_upsert",
     tags=("llm", "text", "index"),
+    setup=(ensure_lex_upsert_tree,),
     # op_text_bm25's verbatim oracle, same as op_text_bm25_serve: the
     # POST-UPSERT index must reproduce the full-corpus scorer
     # bit-for-bit — incremental maintenance held to exact equality
@@ -388,37 +370,22 @@ def op_lex_index_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     is why the output can be held to BIT-EQUALITY with DuckDB's BM25
     recomputed over `documents WHERE doc_id % 17 != 3`: serving from
     the compacted tree IS the full-rebuild scorer for the surviving
-    corpus, IDF shifts and all. Staged + atomically published +
-    superseded keys pruned; the input tree stays live throughout.
+    corpus, IDF shifts and all. The input tree stays live throughout.
 
     At 100 TB this is Lucene forceMerge with segment-local stats
     re-derivation: the merge streams each bucket's surviving postings
     once (partition pruning scopes per-bucket schedules), and the df
     recompute is the same pass — no extra corpus touch, document text
     never read."""
-    from game_data_etl_pipeline_spark.llmdata.ann_index import (
-        TOMB_MOD,
-        purge_ledger_current,
-    )
-
     demo = ensure_lex_upsert_tree(spark, sf_dir)
-    comp = os.path.join(
-        _lex_root(),
-        f"compact_v{LEX_INDEX_VERSION}",
-        fingerprint_key(sf_dir, "documents.parquet"),
+    comp = ensure_tree(
+        LEX.dir(sf_dir, "compact"),
+        sf_dir,
+        "compact_done.json",
+        {"version": LEX_INDEX_VERSION, "tomb_mod": TOMB_MOD},
+        lambda staging: compact_lex_postings(spark, os.path.join(demo, "postings"), staging),
+        valid=(lambda p: purge_ledger_current(p, p),),
     )
-    if not (
-        os.path.isfile(os.path.join(comp, "compact_done.json"))
-        and purge_ledger_current(comp, comp)
-    ):
-        with staging_tree(comp) as staging:
-            compact_lex_postings(spark, os.path.join(demo, "postings"), staging)
-            with open(os.path.join(staging, "compact_done.json"), "w") as f:
-                json.dump(
-                    {"version": LEX_INDEX_VERSION, "tomb_mod": TOMB_MOD}, f
-                )
-            publish_staging(staging, comp, marker="compact_done.json")
-        prune_stale_keys(comp, sf_dir)
     return bm25_from_index(spark, comp)
 
 
@@ -439,13 +406,11 @@ def compact_lex_postings(
     bounded by construction, so survivors never shuffle on doc_id);
     ``None`` keeps the deterministic pmod(doc_id, TOMB_MOD) ==
     TOMB_RESIDUE residue fixture. Shared by
-    op_lex_index_delete_compact (offline upsert tree, via staging +
-    atomic publish), op_stream_lex_compact_serve (streamed store),
+    op_lex_index_delete_compact (offline upsert tree),
+    op_stream_lex_compact_serve (streamed store),
     and op_lex_lifecycle_e2e (the composed lineage), so no two
     compaction paths can drift (round-11 review finding)."""
     from pyspark.sql import Observation
-
-    from game_data_etl_pipeline_spark.llmdata.ann_index import TOMB_MOD, TOMB_RESIDUE
 
     src = spark.read.parquet(src_postings)
     # n_before / n_after measured by observe() metrics riding the
@@ -495,8 +460,6 @@ def compact_lex_postings(
     # same dest tree and therefore the caller's staging transaction;
     # counts are POSTING rows, measured before from the source and
     # after from the PERSISTED survivors
-    from game_data_etl_pipeline_spark.llmdata.ann_index import write_purge_ledger
-
     write_purge_ledger(
         dest,
         n_before=obs_before.get["n"],
@@ -521,48 +484,30 @@ def ensure_lex_e2e_tree(spark: SparkSession, sf_dir: str) -> str:
     segments per bucket) -> id-LIST tombstone (TOMB_IDS, the
     purge-request shape) -> compact through the shared
     ``compact_lex_postings`` algebra (one segment per bucket, df and
-    corpus stats re-derived from the survivors). Staged + atomically
-    published + superseded keys pruned; the upsert tree stays live."""
-    from game_data_etl_pipeline_spark.llmdata.ann_index import (
-        TOMB_IDS,
-        check_tomb_meta,
-        purge_ledger_current,
-        tomb_ids_current,
-        tombstone_ids_df,
-    )
-
+    corpus stats re-derived from the survivors). A tree purged with
+    another list, or without its purge ledger, is rebuilt; the upsert
+    tree stays live."""
     demo = ensure_lex_upsert_tree(spark, sf_dir)
-    e2e = os.path.join(
-        _lex_root(),
-        f"e2e_v{LEX_INDEX_VERSION}",
-        fingerprint_key(sf_dir, "documents.parquet"),
-    )
-    if (
-        os.path.isfile(os.path.join(e2e, "e2e_done.json"))
-        and tomb_ids_current(e2e, "e2e_done.json")
-        and purge_ledger_current(e2e, e2e)
-    ):
-        return e2e
-    with staging_tree(e2e) as staging:
+
+    def build(staging: str) -> None:
         compact_lex_postings(
             spark,
             os.path.join(demo, "postings"),
             staging,
             tombstones=tombstone_ids_df(spark, "doc_id"),
         )
-        with open(os.path.join(staging, "e2e_done.json"), "w") as f:
-            json.dump(
-                {
-                    "version": LEX_INDEX_VERSION,
-                    "buckets": LEX_BUCKETS,
-                    "tomb_ids": list(TOMB_IDS),
-                },
-                f,
-            )
-        publish_staging(staging, e2e, marker="e2e_done.json")
-    prune_stale_keys(e2e, sf_dir)
-    check_tomb_meta(e2e, "e2e_done.json")  # post-publish invariant
-    return e2e
+
+    return ensure_tree(
+        LEX.dir(sf_dir, "e2e"),
+        sf_dir,
+        "e2e_done.json",
+        {"version": LEX_INDEX_VERSION, "buckets": LEX_BUCKETS, "tomb_ids": list(TOMB_IDS)},
+        build,
+        valid=(
+            lambda p: tomb_ids_current(p, "e2e_done.json"),
+            lambda p: purge_ledger_current(p, p),
+        ),
+    )
 
 
 def _e2e_survivor_oracle() -> str:
@@ -570,8 +515,6 @@ def _e2e_survivor_oracle() -> str:
     corpus (documents minus the TOMB_IDS purge list) — the id list is
     generated from the same constant the compactor anti-joins, so the
     Spark side and the oracle cannot drift."""
-    from game_data_etl_pipeline_spark.llmdata.ann_index import TOMB_IDS_SQL
-
     return BM25_CTES.replace(
         "FROM documents",
         f"FROM (SELECT * FROM documents WHERE doc_id NOT IN {TOMB_IDS_SQL})"
@@ -586,6 +529,7 @@ def _e2e_survivor_oracle() -> str:
 @register(
     "op_lex_lifecycle_e2e",
     tags=("llm", "text", "index"),
+    setup=(ensure_lex_e2e_tree,),
     oracle=_e2e_survivor_oracle(),
 )
 def op_lex_lifecycle_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -622,15 +566,10 @@ def op_lex_lifecycle_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     list broadcasts into a map-side anti-join, the merge re-derives
     df/stats in the same per-bucket pass that rewrites the segments,
     and the morning's scores are the scores a fresh index would give."""
-    from game_data_etl_pipeline_spark.llmdata.ann_index import (
-        _count_parquet_files,
-        purge_ledger_referee,
-    )
-
     demo = ensure_lex_upsert_tree(spark, sf_dir)
     e2e = ensure_lex_e2e_tree(spark, sf_dir)
-    files_before = _count_parquet_files(os.path.join(demo, "postings"))
-    files_after = _count_parquet_files(os.path.join(e2e, "postings"))
+    files_before = count_parquet_files(os.path.join(demo, "postings"))
+    files_after = count_parquet_files(os.path.join(e2e, "postings"))
     if not 0 < files_after < files_before:
         raise ValueError(
             f"op_lex_lifecycle_e2e: compaction did not merge segments "

@@ -58,7 +58,8 @@ from pyspark.sql import functions as F
 
 from game_data_etl_pipeline_spark.catalog import load_table, widen_narrow_scan
 from game_data_etl_pipeline_spark.llmdata import text as _text
-from game_data_etl_pipeline_spark.llmdata.ann_index import read_ann_index
+from game_data_etl_pipeline_spark.llmdata.ann_index import build_ann_index, read_ann_index
+from game_data_etl_pipeline_spark.llmdata.artifacts import TreeFamily, ensure_tree
 from game_data_etl_pipeline_spark.llmdata.similarity import (
     IVFPQ_PROBES,
     IVFPQ_SHORTLIST,
@@ -335,6 +336,7 @@ def ann_sem_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_retrieval_pipeline_ann",
     tags=("llm", "retrieval", "pipeline", "index"),
+    setup=(build_ann_index,),
     oracle=_text.BM25_CTES
     + """,
         lex AS (
@@ -1782,34 +1784,15 @@ LATE_INDEX_VERSION = 1
 # prunes to n_query_term_buckets/LATE_BUCKETS of the posting files
 LATE_BUCKETS = 32
 
-# test hook: a second serve in one process must reuse the persisted
-# artifact, never rebuild (the lex_index._LEX_BUILD_COUNT discipline)
-_LATE_BUILD_COUNT = 0
-
 # query-term -> bucket ids, memoized per process (the lex_index
 # _BUCKET_CACHE discipline: xxhash64 lives JVM-side, so resolving the
 # registered query set's buckets costs one bounded 9-row job, once)
 _LATE_BUCKET_CACHE: dict[tuple[str, ...], list[int]] = {}
 
 
-def _late_root() -> str:
-    import pathlib
-
-    return os.environ.get(
-        "SPARK_GRAFT_LATE_INDEX_DIR",
-        str(
-            pathlib.Path(__file__).resolve().parents[2]
-            / "spark-warehouse"
-            / "late_index"
-        ),
-    )
-
-
-def late_index_dir(sf_dir: str) -> str:
-    from game_data_etl_pipeline_spark.llmdata.artifacts import fingerprint_key
-
-    key = fingerprint_key(sf_dir, "documents.parquet")
-    return os.path.join(_late_root(), f"v{LATE_INDEX_VERSION}", key)
+LATE = TreeFamily(
+    "SPARK_GRAFT_LATE_INDEX_DIR", "late_index", "documents.parquet", LATE_INDEX_VERSION
+)
 
 
 def _late_bucket(term_col):
@@ -1818,8 +1801,7 @@ def _late_bucket(term_col):
 
 def build_late_index(spark: SparkSession, sf_dir: str) -> str:
     """Tokenize the corpus ONCE and persist the late-interaction token
-    index (idempotent per corpus fingerprint; staged + atomically
-    renamed, the build_ann_index discipline). Three artifacts:
+    index (idempotent per corpus fingerprint). Three artifacts:
 
     - ``unigrams/`` (doc_id, dterm), PARTITIONED BY term-hash bucket —
       the candidate stage's inverted file: a query's scan prunes to
@@ -1835,27 +1817,14 @@ def build_late_index(spark: SparkSession, sf_dir: str) -> str:
     Cost shape: one corpus scan feeds all three writes; everything
     downstream of the scan is (doc_id, token)-narrow — document
     bodies are read once per corpus snapshot and never again."""
-    global _LATE_BUILD_COUNT
-    from game_data_etl_pipeline_spark.catalog import load_table as _load
-    from game_data_etl_pipeline_spark.llmdata.artifacts import (
-        prune_stale_keys,
-        publish_staging,
-        staging_tree,
-    )
     from game_data_etl_pipeline_spark.llmdata.similarity import (
         _ctx_keys_expr,
         norm_expr as _norm,
         token_vec_expr,
     )
 
-    final = late_index_dir(sf_dir)
-    if os.path.isfile(os.path.join(final, "meta.json")):
-        return final
-    _LATE_BUILD_COUNT += 1
-    import json as _json
-
-    docs = _load(spark, sf_dir, "documents")
-    with staging_tree(final) as staging:
+    def build(staging: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
         du = docs.select(
             "doc_id", F.explode(F.split("text", " ")).alias("dterm")
         ).distinct()
@@ -1879,13 +1848,9 @@ def build_late_index(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(os.path.join(staging, "vocab"))
         )
-        with open(os.path.join(staging, "meta.json"), "w") as f:
-            _json.dump(
-                {"version": LATE_INDEX_VERSION, "buckets": LATE_BUCKETS}, f
-            )
-        publish_staging(staging, final, marker="meta.json")
-    prune_stale_keys(final, sf_dir)
-    return final
+
+    meta = {"version": LATE_INDEX_VERSION, "buckets": LATE_BUCKETS}
+    return ensure_tree(LATE.dir(sf_dir), sf_dir, "meta.json", meta, build)
 
 
 def _late_query_buckets(spark: SparkSession) -> list[int]:
@@ -1912,6 +1877,7 @@ def _late_query_buckets(spark: SparkSession) -> list[int]:
 @register(
     "op_sim_late_interaction_served",
     tags=("llm", "similarity", "retrieval", "index"),
+    setup=(build_late_index,),
     # op_sim_late_interaction's oracle VERBATIM (one shared string):
     # serving from the persisted token index must reproduce the
     # from-scratch values exactly — a stale vocab row, a lost posting,

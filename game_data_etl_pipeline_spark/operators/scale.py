@@ -289,6 +289,7 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 @register(
     "op_join_bucketed",
     tags=("join", "scale"),
+    setup=(_bucketed_tables,),
     headline=True,
     oracle="""
         SELECT o_orderpriority,

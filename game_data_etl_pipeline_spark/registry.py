@@ -52,6 +52,9 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
+# builds an input the query reads (an index tree, a bucketed table);
+# idempotent, so a second call is a cache hit
+SetupStep = Callable[[SparkSession, str], object]
 
 # Modules whose import populates the registry (each calls @register at
 # module scope). Extend as operator families land.
@@ -99,6 +102,7 @@ class QuerySpec:
     doc: str = ""
     headline: bool = False  # included in bench.py's timed suite
     tags: tuple[str, ...] = field(default_factory=tuple)
+    setup: tuple[SetupStep, ...] = ()  # run by bench.py before timing
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
@@ -111,13 +115,24 @@ def register(
     doc: str = "",
     headline: bool = False,
     tags: tuple[str, ...] = (),
+    setup: tuple[SetupStep, ...] = (),
 ) -> Callable[[SparkQuery], SparkQuery]:
-    """Decorator: add a query implementation (and its oracle) to the registry."""
+    """Decorator: add a query implementation (and its oracle) to the
+    registry. ``setup`` lists the steps that build the persisted inputs
+    the query reads, so a benchmark can run them outside its timing."""
 
     def deco(fn: SparkQuery) -> SparkQuery:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query registration: {name}")
-        _REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""), headline=headline, tags=tags)
+        _REGISTRY[name] = QuerySpec(
+            name=name,
+            fn=fn,
+            oracle=oracle,
+            doc=doc or (fn.__doc__ or ""),
+            headline=headline,
+            tags=tags,
+            setup=setup,
+        )
         return fn
 
     return deco

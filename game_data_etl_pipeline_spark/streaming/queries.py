@@ -29,7 +29,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from game_data_etl_pipeline_spark.catalog import load_table
-from game_data_etl_pipeline_spark.llmdata.ann_index import TOMB_IDS_SQL
+from game_data_etl_pipeline_spark.llmdata.artifacts import (
+    PURGE_LEDGER,
+    TOMB_IDS,
+    TOMB_IDS_SQL,
+    check_tomb_meta,
+    count_parquet_files,
+    publish_staging,
+    purge_ledger_referee,
+    staging_tree,
+    tombstone_ids_df,
+)
 from game_data_etl_pipeline_spark.llmdata.dedup import decontam_ledger_oracle
 from game_data_etl_pipeline_spark.llmdata.text import BM25_CTES
 from game_data_etl_pipeline_spark.registry import register
@@ -1652,20 +1662,9 @@ def op_stream_lex_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     schedules) and carries the stats re-derivation in the same pass,
     and next morning's queries read one segment per bucket with
     exactly the scores a from-scratch rebuild would give."""
-    from game_data_etl_pipeline_spark.llmdata.ann_index import (
-        PURGE_LEDGER,
-        _count_parquet_files,
-        check_tomb_meta,
-        purge_ledger_referee,
-        tombstone_ids_df,
-    )
     from game_data_etl_pipeline_spark.llmdata.lex_index import (
         bm25_from_index,
         compact_lex_postings,
-    )
-    from game_data_etl_pipeline_spark.llmdata.artifacts import (
-        publish_staging,
-        staging_tree,
     )
 
     work = stream_lex_store(
@@ -1689,8 +1688,8 @@ def op_stream_lex_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             tombstones=tombstone_ids_df(spark, "doc_id"),
         )
         publish_staging(staging, comp, marker=PURGE_LEDGER)
-    files_before = _count_parquet_files(os.path.join(work, "postings"))
-    files_after = _count_parquet_files(os.path.join(comp, "postings"))
+    files_before = count_parquet_files(os.path.join(work, "postings"))
+    files_after = count_parquet_files(os.path.join(comp, "postings"))
     if not 0 < files_after < files_before:
         raise ValueError(
             f"op_stream_lex_compact_serve: compaction did not merge "
@@ -1873,19 +1872,9 @@ def op_stream_ann_serve_compacted(spark: SparkSession, sf_dir: str) -> DataFrame
     scores — freshness, deletes, and compaction proven mutually
     score-neutral."""
     from game_data_etl_pipeline_spark.llmdata.ann_index import (
-        PURGE_LEDGER,
-        TOMB_IDS,
-        _count_parquet_files,
-        check_tomb_meta,
         compact_ann_postings,
-        purge_ledger_referee,
         read_ann_index,
         serve_with_adc_referee,
-        tombstone_ids_df,
-    )
-    from game_data_etl_pipeline_spark.llmdata.artifacts import (
-        publish_staging,
-        staging_tree,
     )
 
     store = stream_ann_store(
@@ -1912,8 +1901,8 @@ def op_stream_ann_serve_compacted(spark: SparkSession, sf_dir: str) -> DataFrame
             spark, store, staging, tombstones=tombstone_ids_df(spark, "vec_id")
         )
         publish_staging(staging, compacted_dir, marker=PURGE_LEDGER)
-    files_before = _count_parquet_files(store)
-    files_after = _count_parquet_files(compacted_dir)
+    files_before = count_parquet_files(store)
+    files_after = count_parquet_files(compacted_dir)
     # purge-list handshake against the purge LEDGER itself (round-13
     # verdict task 3: the duplicate _stream_compact_done.json marker is
     # gone — handshake and deletion evidence are ONE underscore-
@@ -2033,9 +2022,12 @@ def op_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pushdown, so n_probed counts exactly the distinct batch shingles
     # and n_cand exactly the Bloom-positive survivors — the same rows
     # the old standalone count jobs measured.
+    # A retried epoch must leave the end state of one run: each epoch
+    # overwrites its own ledger segment, and its counters are keyed by
+    # epoch_id (last write wins) and persisted next to the ledger.
     from pyspark.sql import Observation
 
-    batch_counters: list[tuple[int, int]] = []
+    batch_counters: dict[int, tuple[int, int]] = {}
 
     def screen(batch_df: DataFrame, epoch_id: int) -> None:
         obs_probed = Observation()
@@ -2055,10 +2047,10 @@ def op_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.countDistinct("g").alias("n_hit_shingles"),
                 F.countDistinct("b_id").alias("n_bench_docs"),
             )
-            .write.mode("append")
-            .parquet(ledger_store)
+            .write.mode("overwrite")
+            .parquet(os.path.join(ledger_store, f"seg{epoch_id}"))
         )
-        batch_counters.append((obs_probed.get["n"], obs_cand.get["n"]))
+        batch_counters[epoch_id] = (obs_probed.get["n"], obs_cand.get["n"])
 
     stream = (
         spark.readStream.schema("doc_id long, text string, batch_id int")
@@ -2068,9 +2060,11 @@ def op_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = stream.writeStream.foreachBatch(screen).trigger(availableNow=True).start()
     q.awaitTermination()
 
-    ledger = spark.read.parquet(ledger_store)
-    n_probed = sum(p for p, _c in batch_counters)
-    n_cand = sum(c for _p, c in batch_counters)
+    with open(os.path.join(work, "counters.json"), "w") as f:
+        json.dump({str(e): list(pc) for e, pc in sorted(batch_counters.items())}, f)
+    ledger = spark.read.parquet(os.path.join(ledger_store, "seg*"))
+    n_probed = sum(p for p, _c in batch_counters.values())
+    n_cand = sum(c for _p, c in batch_counters.values())
     audit = spark.range(1).select(
         F.lit(bool(n_cand < n_probed)).alias("bloom_pruned")
     )
@@ -2151,12 +2145,16 @@ def op_stream_bloom_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the checkpoint, and makes the delta provably a function of
         # the durable artifact, the evidence discipline the compactors
         # use)
+        # A retried epoch overwrites its own segment. Its words delta is
+        # appended again, which only duplicates rows that the bit_or
+        # fold below absorbs (x | x == x), so the filter is unchanged.
         seg = os.path.join(pair_store, f"seg{epoch_id}")
         (
             _shingles(batch_df.select("doc_id", "text"))
             .select(F.col("doc_id").alias("b_id"), "g")
             .distinct()
-            .write.parquet(seg)
+            .write.mode("overwrite")
+            .parquet(seg)
         )
         bloom_words(
             spark.read.parquet(seg).select("g").distinct()

@@ -800,9 +800,9 @@ def test_compact_serve_equality_and_fewer_segments(spark, sf_dir):
         _count_parquet_files,
         _index_root,
         ensure_upsert_tree,
-        fingerprint_key,
         read_ann_index,
     )
+    from game_data_etl_pipeline_spark.llmdata.artifacts import fingerprint_key
     from pyspark.sql import functions as F
 
     # run the registered op once: builds both trees, all audits true
@@ -1410,7 +1410,7 @@ def test_purge_ledger_evidence_and_torn_write(spark, sf_dir, tmp_path, monkeypat
     import pytest
 
     from game_data_etl_pipeline_spark.llmdata import ann_index as ai
-    from game_data_etl_pipeline_spark.llmdata.artifacts import fingerprint_key
+    from game_data_etl_pipeline_spark.llmdata.artifacts import PURGE_LEDGER, fingerprint_key
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "ann"))
     monkeypatch.setenv("SPARK_GRAFT_LEX_INDEX_DIR", str(tmp_path / "lex"))
@@ -1445,7 +1445,7 @@ def test_purge_ledger_evidence_and_torn_write(spark, sf_dir, tmp_path, monkeypat
     assert led["n_purged"] == n_before - n_after > 0
 
     # (c) evidence removed later: loud at read, cache miss at build
-    _os.remove(_os.path.join(e2e, "postings", ai.PURGE_LEDGER))
+    _os.remove(_os.path.join(e2e, "postings", PURGE_LEDGER))
     with pytest.raises(ValueError, match="purge ledger"):
         ai.read_purge_ledger(_os.path.join(e2e, "postings"))
     assert not ai.purge_ledger_current(e2e, _os.path.join(e2e, "postings"))
@@ -1546,7 +1546,7 @@ def test_tomb_meta_handshake(tmp_path):
 
     import pytest
 
-    from game_data_etl_pipeline_spark.llmdata.ann_index import (
+    from game_data_etl_pipeline_spark.llmdata.artifacts import (
         TOMB_IDS,
         check_tomb_meta,
         tomb_ids_current,
@@ -1610,6 +1610,7 @@ def test_bloom_upsert_tree_idempotent_and_build_count(spark, sf_dir, tmp_path, m
     discipline)."""
     import os as _os
 
+    from game_data_etl_pipeline_spark.llmdata import artifacts
     from game_data_etl_pipeline_spark.llmdata import dedup as dd
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR_BLOOM", str(tmp_path / "bloom"))
@@ -1619,9 +1620,9 @@ def test_bloom_upsert_tree_idempotent_and_build_count(spark, sf_dir, tmp_path, m
     p2 = dd.ensure_bloom_upsert_tree(spark, sf_dir)
     assert p1 == p2 and _os.path.getmtime(marker) == m1
     dd.build_bloom_index(spark, sf_dir)
-    before = dd._BLOOM_BUILD_COUNT
+    before = artifacts.BUILD_COUNT
     SPECS["op_bloom_index_upsert"].fn(spark, sf_dir).collect()
-    assert dd._BLOOM_BUILD_COUNT == before, "upsert op rebuilt the full filter"
+    assert artifacts.BUILD_COUNT == before, "upsert op rebuilt the full filter"
 
 
 # (property-based tests live in test_llmdata_properties.py, guarded by

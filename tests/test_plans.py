@@ -823,17 +823,17 @@ def test_ivfpq_serve_plan_contract(spark):
     (Lloyd centroids, driver-trained codebooks) enters a plan. The
     postings read must target the ann_index warehouse path, and the
     build must not re-run for a second serve in the same process."""
-    from game_data_etl_pipeline_spark.llmdata import ann_index as ai
+    from game_data_etl_pipeline_spark.llmdata import artifacts
 
-    before = ai._BUILD_COUNT
+    before = artifacts.BUILD_COUNT
     plan = I.explain_str(SPECS["op_sim_ivfpq_serve"].fn(spark, SF), "simple")
     assert "ExistingRDD" not in plan, "training frame leaked into the serve plan"
     assert "ann_index" in plan, "serve plan does not read the persisted index"
     SPECS["op_sim_ivfpq_serve"].fn(spark, SF)
-    assert ai._BUILD_COUNT == before or ai._BUILD_COUNT == before + 1
+    assert artifacts.BUILD_COUNT == before or artifacts.BUILD_COUNT == before + 1
     SPECS["op_sim_ivfpq_serve"].fn(spark, SF)
     # at most one build per fixture per process, however many serves
-    assert ai._BUILD_COUNT <= before + 1
+    assert artifacts.BUILD_COUNT <= before + 1
 
 
 def test_decontaminate_bloom_plan_contract(spark):
@@ -913,15 +913,15 @@ def test_bm25_serve_plan_contract(spark):
     the equality is achieved the cheap way."""
     import re
 
-    from game_data_etl_pipeline_spark.llmdata import lex_index as lx
+    from game_data_etl_pipeline_spark.llmdata import artifacts
 
-    before = lx._LEX_BUILD_COUNT
+    before = artifacts.BUILD_COUNT
     plan = I.explain_str(SPECS["op_text_bm25_serve"].fn(spark, SF), "formatted")
     assert not re.findall(r"Scan parquet[^\n]*documents", plan), "corpus scan at serve time"
     assert "lex_index" in plan
     assert re.search(r"PartitionFilters: \[[^\]]*term_bucket", plan), "no bucket pruning"
     SPECS["op_text_bm25_serve"].fn(spark, SF)
-    assert lx._LEX_BUILD_COUNT <= before + 1, "rebuilt per serve"
+    assert artifacts.BUILD_COUNT <= before + 1, "rebuilt per serve"
 
 
 def test_batch_pipeline_plan_contract(spark):
@@ -1020,16 +1020,16 @@ def test_bloom_served_plan_contract(spark):
     rebuild the artifact (the ann/lex build-count discipline)."""
     import re
 
-    from game_data_etl_pipeline_spark.llmdata import dedup as dd
+    from game_data_etl_pipeline_spark.llmdata import artifacts
 
     df = SPECS["op_corpus_decontaminate_bloom_served"].fn(spark, SF)
     plan = I.explain_str(df, "simple")
     assert "bloom_index" in plan, "served screen does not read the persisted filter"
     n_doc_scans = len(re.findall(r"FileScan parquet[^\n]*documents", plan))
     assert n_doc_scans == 0, f"corpus re-scan leaked into the served plan: {n_doc_scans}"
-    before = dd._BLOOM_BUILD_COUNT
+    before = artifacts.BUILD_COUNT
     SPECS["op_corpus_decontaminate_bloom_served"].fn(spark, SF)
-    assert dd._BLOOM_BUILD_COUNT == before, "rebuilt the filter per screen"
+    assert artifacts.BUILD_COUNT == before, "rebuilt the filter per screen"
 
 
 def test_batch_ann_plan_contract(spark):
@@ -1118,7 +1118,7 @@ def test_bloom_upsert_plan_contract(spark):
     neither tree."""
     import re
 
-    from game_data_etl_pipeline_spark.llmdata import dedup as dd
+    from game_data_etl_pipeline_spark.llmdata import artifacts
 
     df = SPECS["op_bloom_index_upsert"].fn(spark, SF)
     plan = I.explain_str(df, "simple")
@@ -1128,9 +1128,9 @@ def test_bloom_upsert_plan_contract(spark):
         f"expected exactly one training-corpus scan, found {n_doc_scans}"
     )
     assert "SortMergeJoin" not in plan
-    before = dd._BLOOM_BUILD_COUNT
+    before = artifacts.BUILD_COUNT
     SPECS["op_bloom_index_upsert"].fn(spark, SF)
-    assert dd._BLOOM_BUILD_COUNT == before, "re-serving rebuilt the full filter"
+    assert artifacts.BUILD_COUNT == before, "re-serving rebuilt the full filter"
 
 
 def test_lifecycle_e2e_plan_contracts(spark):
@@ -1168,7 +1168,7 @@ def test_bloom_registry_plan_contract(spark):
     <=65k-row words folds). Screening twice must not rebuild."""
     import re
 
-    from game_data_etl_pipeline_spark.llmdata import dedup as dd
+    from game_data_etl_pipeline_spark.llmdata import artifacts
 
     df = SPECS["op_bloom_registry_screen"].fn(spark, SF)
     plan = I.explain_str(df, "simple")
@@ -1178,9 +1178,9 @@ def test_bloom_registry_plan_contract(spark):
         f"expected exactly one training-corpus scan, found {n_doc_scans}"
     )
     assert "SortMergeJoin" not in plan
-    before = dd._BLOOM_BUILD_COUNT
+    before = artifacts.BUILD_COUNT
     SPECS["op_bloom_registry_screen"].fn(spark, SF)
-    assert dd._BLOOM_BUILD_COUNT == before, "re-screening rebuilt the full filter"
+    assert artifacts.BUILD_COUNT == before, "re-screening rebuilt the full filter"
 
 
 def test_bloom_registry_refresh_plan_contract(spark):
@@ -1192,7 +1192,7 @@ def test_bloom_registry_refresh_plan_contract(spark):
     persisted)."""
     import re
 
-    from game_data_etl_pipeline_spark.llmdata import dedup as dd
+    from game_data_etl_pipeline_spark.llmdata import artifacts
 
     df = SPECS["op_bloom_registry_refresh"].fn(spark, SF)
     plan = I.explain_str(df, "simple")
@@ -1202,9 +1202,9 @@ def test_bloom_registry_refresh_plan_contract(spark):
         f"expected exactly one training-corpus scan, found {n_doc_scans}"
     )
     assert "SortMergeJoin" not in plan
-    before = dd._BLOOM_BUILD_COUNT
+    before = artifacts.BUILD_COUNT
     SPECS["op_bloom_registry_refresh"].fn(spark, SF)
-    assert dd._BLOOM_BUILD_COUNT == before, "re-screening rebuilt the full filter"
+    assert artifacts.BUILD_COUNT == before, "re-screening rebuilt the full filter"
 
 
 def test_bloom_registry_retire_plan_contract(spark):
@@ -1219,9 +1219,9 @@ def test_bloom_registry_retire_plan_contract(spark):
     by construction)."""
     import re
 
-    from game_data_etl_pipeline_spark.llmdata import dedup as dd
+    from game_data_etl_pipeline_spark.llmdata import artifacts
 
-    before = dd._BLOOM_BUILD_COUNT
+    before = artifacts.BUILD_COUNT
     df = SPECS["op_bloom_registry_retire"].fn(spark, SF)
     plan = I.explain_str(df, "simple")
     assert "retire_v" in plan, "screen does not read the retire-demo tree"
@@ -1231,7 +1231,7 @@ def test_bloom_registry_retire_plan_contract(spark):
     )
     assert "SortMergeJoin" not in plan
     SPECS["op_bloom_registry_retire"].fn(spark, SF)
-    assert dd._BLOOM_BUILD_COUNT == before, (
+    assert artifacts.BUILD_COUNT == before, (
         "the retire screen built the full-benchmark filter"
     )
 
@@ -1247,7 +1247,7 @@ def test_bloom_registry_lifecycle_plan_contract(spark):
     history."""
     import re
 
-    from game_data_etl_pipeline_spark.llmdata import dedup as dd
+    from game_data_etl_pipeline_spark.llmdata import artifacts
 
     df = SPECS["op_bloom_registry_lifecycle_e2e"].fn(spark, SF)
     plan = I.explain_str(df, "simple")
@@ -1257,9 +1257,9 @@ def test_bloom_registry_lifecycle_plan_contract(spark):
         f"expected exactly one training-corpus scan, found {n_doc_scans}"
     )
     assert "SortMergeJoin" not in plan
-    before = dd._BLOOM_BUILD_COUNT
+    before = artifacts.BUILD_COUNT
     SPECS["op_bloom_registry_lifecycle_e2e"].fn(spark, SF)
-    assert dd._BLOOM_BUILD_COUNT == before, "re-screening rebuilt the full filter"
+    assert artifacts.BUILD_COUNT == before, "re-screening rebuilt the full filter"
 
 
 def test_late_interaction_no_cartesian(spark):
@@ -1283,7 +1283,7 @@ def test_late_interaction_served_plan_contract(spark):
     documents scan means the serve path re-tokenized the corpus. No
     ExistingRDD (query literals are JVM-side explodes), and a second
     serve in-process must not rebuild the index."""
-    from game_data_etl_pipeline_spark.llmdata import retrieval as rt
+    from game_data_etl_pipeline_spark.llmdata import artifacts
 
     plan = I.explain_str(
         SPECS["op_sim_late_interaction_served"].fn(spark, SF), "simple"
@@ -1291,6 +1291,6 @@ def test_late_interaction_served_plan_contract(spark):
     assert "late_index" in plan, "serve plan does not read the persisted index"
     assert "documents.parquet" not in plan, "serve plan re-tokenizes the corpus"
     assert "ExistingRDD" not in plan, "local-relation frame leaked into the plan"
-    before = rt._LATE_BUILD_COUNT
+    before = artifacts.BUILD_COUNT
     SPECS["op_sim_late_interaction_served"].fn(spark, SF)
-    assert rt._LATE_BUILD_COUNT == before, "second serve rebuilt the index"
+    assert artifacts.BUILD_COUNT == before, "second serve rebuilt the index"

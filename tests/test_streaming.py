@@ -167,7 +167,7 @@ def test_streamed_compact_tomb_meta_handshake(spark, sf_dir):
 
     import pytest
 
-    from game_data_etl_pipeline_spark.llmdata.ann_index import (
+    from game_data_etl_pipeline_spark.llmdata.artifacts import (
         PURGE_LEDGER,
         TOMB_IDS,
         check_tomb_meta,
@@ -251,7 +251,7 @@ def test_streamed_purge_ledger_referee_tamper(spark, sf_dir):
 
     import pytest
 
-    from game_data_etl_pipeline_spark.llmdata.ann_index import (
+    from game_data_etl_pipeline_spark.llmdata.artifacts import (
         PURGE_LEDGER,
         purge_ledger_referee,
         read_purge_ledger,
@@ -307,16 +307,18 @@ def test_streamed_compact_publish_is_atomic(spark, sf_dir, monkeypatch):
 
     import pytest
 
-    from game_data_etl_pipeline_spark.llmdata import ann_index
+    from game_data_etl_pipeline_spark.llmdata import ann_index, lex_index
+    from game_data_etl_pipeline_spark.llmdata.artifacts import PURGE_LEDGER
     from game_data_etl_pipeline_spark.streaming.queries import _session_workdir
 
     def boom(*a, **k):
         raise OSError("injected crash before the purge-ledger write")
 
     monkeypatch.setattr(ann_index, "write_purge_ledger", boom)
+    monkeypatch.setattr(lex_index, "write_purge_ledger", boom)
 
     # lexical: compact_lex_postings resolves write_purge_ledger from
-    # ann_index at call time, so the injection hits after the segment
+    # lex_index at call time, so the injection hits after the segment
     # rewrite and before the evidence lands
     with pytest.raises(OSError, match="injected crash"):
         SPECS["op_stream_lex_compact_serve"].fn(spark, sf_dir).count()
@@ -337,5 +339,43 @@ def test_streamed_compact_publish_is_atomic(spark, sf_dir, monkeypatch):
     out = SPECS["op_stream_lex_compact_serve"].fn(spark, sf_dir)
     assert out.count() > 0
     assert os.path.isfile(
-        os.path.join(lex_work, "compacted", ann_index.PURGE_LEDGER)
+        os.path.join(lex_work, "compacted", PURGE_LEDGER)
     )
+
+
+def test_replayed_epoch_leaves_single_run_end_state(spark, sf_dir, monkeypatch):
+    """A retried micro-batch (the foreachBatch body run again with the
+    same epoch_id) must leave the end state of one clean run: the
+    streamed Bloom upsert's per-epoch pair segments, and the streamed
+    decontamination screen's per-epoch ledger and counters."""
+    import json
+
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from game_data_etl_pipeline_spark.streaming.queries import _session_workdir
+
+    ops = (("op_stream_bloom_upsert", "bloomupsert"), ("op_stream_decontaminate", "decontam"))
+
+    def end_state(op: str, tag: str):
+        rows = sorted(tuple(r) for r in SPECS[op].fn(spark, sf_dir).collect())
+        counters = os.path.join(_session_workdir(spark, tag, sf_dir), "counters.json")
+        if not os.path.exists(counters):
+            return rows, None
+        with open(counters) as f:
+            return rows, json.load(f)
+
+    clean = {op: end_state(op, tag) for op, tag in ops}
+    assert clean["op_stream_decontaminate"][1] is not None, "counters not persisted"
+
+    run_batch = DataStreamWriter.foreachBatch
+
+    def replaying(self, func):
+        def twice(batch_df, epoch_id):
+            func(batch_df, epoch_id)
+            func(batch_df, epoch_id)
+
+        return run_batch(self, twice)
+
+    monkeypatch.setattr(DataStreamWriter, "foreachBatch", replaying)
+    for op, tag in ops:
+        assert end_state(op, tag) == clean[op], f"{op}: replayed epochs changed the end state"
