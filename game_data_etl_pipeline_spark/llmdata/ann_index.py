@@ -86,6 +86,21 @@ _index_root = ANN.root
 ann_index_dir = ANN.dir
 
 
+def ann_postings(
+    emb: DataFrame, coarse: DataFrame, books: DataFrame, *keep: str
+) -> DataFrame:
+    """(vec_id, *keep, cent_id, codes): every vector of ``emb``
+    (vec_id, embedding, *keep) assigned to its nearest ``coarse``
+    centroid and PQ-encoded against ``books``. Both are per-row
+    expressions against one broadcast row, so the encode is one narrow
+    pass with no join on vec_id. The one encode of the offline builds,
+    the streamed store and the lifecycle referee."""
+    cells = ivf_assign(
+        emb.select("vec_id", "embedding", *keep), cents=coarse, form="argmax", extra_cols=keep
+    )
+    return pq_encode(cells, books, keep=(*keep, "cent_id"))
+
+
 def build_ann_index(spark: SparkSession, sf_dir: str) -> str:
     """Train + persist the IVF-PQ index for ``sf_dir``'s embeddings
     (idempotent). Returns the tree dir.
@@ -102,8 +117,7 @@ def build_ann_index(spark: SparkSession, sf_dir: str) -> str:
         emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
         coarse = ivf_trained_centroids(spark, sf_dir)
         pq = pq_train(emb)
-        cells = ivf_assign(emb, cents=coarse, form="argmax").select("vec_id", "cent_id")
-        postings = pq_encode(emb, pq).join(cells, "vec_id")
+        postings = ann_postings(emb, coarse, pq)
         coarse.coalesce(1).write.mode("overwrite").parquet(os.path.join(staging, "coarse"))
         pq.coalesce(1).write.mode("overwrite").parquet(os.path.join(staging, "codebooks"))
         (
@@ -346,12 +360,9 @@ def ensure_upsert_tree(spark: SparkSession, sf_dir: str) -> str:
             .filter(F.col("vec_id") >= F.col("split"))
             .select("vec_id", "embedding")
         )
-        delta_cells = ivf_assign(delta, cents=coarse, form="argmax").select(
-            "vec_id", "cent_id"
-        )
-        delta_post = pq_encode(delta, books).join(delta_cells, "vec_id")
         (
-            delta_post.repartition("cent_id")
+            ann_postings(delta, coarse, books)
+            .repartition("cent_id")
             .write.mode("append")
             .partitionBy("cent_id")
             .parquet(os.path.join(staging, "postings"))
@@ -848,7 +859,7 @@ def op_sim_lifecycle_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
       from the e2e tree is IEEE-bit-equal, pair-for-pair with count
       equality both directions, to the score of the SAME survivor
       RE-ENCODED FROM ITS RAW EMBEDDING through the frozen trained
-      structure (pq_encode + ivf_assign against the persisted
+      structure (``ann_postings`` against the persisted
       codebooks/centroids) — "end state == fresh build over net
       survivors" stated as strongly as ANN semantics allow (a true
       from-scratch build would retrain the router on the survivor
@@ -895,17 +906,11 @@ def op_sim_lifecycle_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the lineage's bytes — via the shared serve_with_adc_referee body.
     not_purged = ~F.col("vec_id").isin(*TOMB_IDS)
     surv_emb = emb.filter((F.col("vec_id") >= 4) & not_purged)
-    fresh_post = pq_encode(surv_emb, books).join(
-        ivf_assign(surv_emb, cents=coarse, form="argmax").select(
-            "vec_id", "cent_id"
-        ),
-        "vec_id",
-    )
     served, eqa = serve_with_adc_referee(
         emb,
         emb.filter((F.col("vec_id") < 4) | not_purged),
         e2e_postings,
-        fresh_post,
+        ann_postings(surv_emb, coarse, books),
         coarse,
         books,
         out_col="adc_bitmatch_vs_fresh_encode",

@@ -77,6 +77,65 @@ LEX = TreeFamily(
 )
 
 
+def lex_postings(docs: DataFrame, *keep: str) -> DataFrame:
+    """(term, doc_id, dl, *keep, tf, term_bucket): one posting per
+    distinct term of each document in ``docs`` (doc_id, text, *keep),
+    with its term frequency ``tf``, the document length ``dl`` and the
+    term's bucket. ``keep`` columns must be functions of doc_id. The
+    one tokenize-to-postings expression of the offline builds and the
+    streamed stores."""
+    # split projected once below the Generate: size(split)+explode(split)
+    # in one select re-splits the text per exploded row (guide §2.3)
+    t = docs.withColumn("terms", _terms()).select(
+        "doc_id", *keep, F.size("terms").alias("dl"), F.explode("terms").alias("term")
+    )
+    return (
+        t.groupBy("term", "doc_id", "dl", *keep)
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .withColumn("term_bucket", _bucket(F.col("term")))
+    )
+
+
+def _write_bucketed(frame: DataFrame, path: str, mode: str = "overwrite") -> None:
+    """Write ``frame`` to ``path`` partitioned by term_bucket, one file
+    per bucket."""
+    frame.repartition("term_bucket").write.mode(mode).partitionBy("term_bucket").parquet(path)
+
+
+def _df_frame(postings: DataFrame) -> DataFrame:
+    """(term, df, term_bucket): the number of postings, and so of
+    documents, per term."""
+    return (
+        postings.groupBy("term")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .withColumn("term_bucket", _bucket(F.col("term")))
+    )
+
+
+def write_df_stats(postings: DataFrame, dest: str, stats: DataFrame | None = None) -> None:
+    """Write ``dest/df`` (term, df, bucketed) and ``dest/stats`` (one
+    row: n_docs, tot_dl) for ``postings`` (term, doc_id, dl). df counts
+    each term's postings. Without ``stats`` they come from the distinct
+    (doc_id, dl) pairs, which equal a document scan when every document
+    has text. All integers, so postings over disjoint document sets
+    fold exactly."""
+    _write_bucketed(_df_frame(postings), os.path.join(dest, "df"))
+    if stats is None:
+        stats = (
+            postings.select("doc_id", "dl")
+            .distinct()
+            .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("tot_dl"))
+        )
+    stats.coalesce(1).write.mode("overwrite").parquet(os.path.join(dest, "stats"))
+
+
+def _docs_stats(docs: DataFrame) -> DataFrame:
+    """(n_docs, tot_dl) of ``docs`` by a document scan."""
+    return docs.agg(
+        F.count(F.lit(1)).alias("n_docs"), F.sum(F.size(_terms())).alias("tot_dl")
+    )
+
+
 def build_lex_index(spark: SparkSession, sf_dir: str) -> str:
     """Tokenize the corpus ONCE and persist the inverted index
     (idempotent per corpus fingerprint). Cost shape: one corpus scan
@@ -87,40 +146,9 @@ def build_lex_index(spark: SparkSession, sf_dir: str) -> str:
 
     def build(staging: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
-        # split projected once below the Generate: size(split)+explode(split)
-        # in one select re-splits the text per exploded row (guide §2.3)
-        t = docs.withColumn("terms", _terms()).select(
-            "doc_id", F.size("terms").alias("dl"), F.explode("terms").alias("term")
-        )
-        postings = (
-            t.groupBy("term", "doc_id", "dl")
-            .agg(F.count(F.lit(1)).alias("tf"))
-            .withColumn("term_bucket", _bucket(F.col("term")))
-        )
-        dfq = (
-            postings.groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .withColumn("term_bucket", _bucket(F.col("term")))
-        )
-        stats = docs.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.size(_terms())).alias("tot_dl"),
-        )
-        (
-            postings.repartition("term_bucket")
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(os.path.join(staging, "postings"))
-        )
-        (
-            dfq.repartition("term_bucket")
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(os.path.join(staging, "df"))
-        )
-        stats.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(staging, "stats")
-        )
+        postings = lex_postings(docs)
+        _write_bucketed(postings, os.path.join(staging, "postings"))
+        write_df_stats(postings, staging, stats=_docs_stats(docs))
 
     meta = {"version": LEX_INDEX_VERSION, "buckets": LEX_BUCKETS}
     return ensure_tree(LEX.dir(sf_dir), sf_dir, "meta.json", meta, build)
@@ -239,60 +267,33 @@ def ensure_lex_upsert_tree(spark: SparkSession, sf_dir: str) -> str:
             F.expr("max(doc_id) * 4 div 5").cast("long").alias("split")
         ).localCheckpoint(eager=True)
         with_split = docs.join(F.broadcast(split))
-
-        def _index_parts(d: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-            # split projected once below the Generate (see build_lex_index)
-            t = d.withColumn("terms", _terms()).select(
-                "doc_id", F.size("terms").alias("dl"), F.explode("terms").alias("term")
-            )
-            postings = (
-                t.groupBy("term", "doc_id", "dl")
-                .agg(F.count(F.lit(1)).alias("tf"))
-                .withColumn("term_bucket", _bucket(F.col("term")))
-            )
-            dfq = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-            stats = d.agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum(F.size(_terms())).alias("tot_dl"),
-            )
-            return postings, dfq, stats
-
-        def _write_bucketed(frame: DataFrame, sub: str, mode: str = "overwrite") -> None:
-            (
-                frame.repartition("term_bucket")
-                .write.mode(mode)
-                .partitionBy("term_bucket")
-                .parquet(os.path.join(staging, sub))
-            )
+        base = with_split.filter(F.col("doc_id") < F.col("split"))
+        delta = with_split.filter(F.col("doc_id") >= F.col("split"))
 
         # phase 1: the pre-existing BASE index (persisted artifacts)
-        base_p, base_df, base_st = _index_parts(
-            with_split.filter(F.col("doc_id") < F.col("split"))
-        )
-        _write_bucketed(base_p, "postings")
-        _write_bucketed(base_df.withColumn("term_bucket", _bucket(F.col("term"))), "df_base")
-        base_st.coalesce(1).write.mode("overwrite").parquet(
+        base_p = lex_postings(base)
+        _write_bucketed(base_p, os.path.join(staging, "postings"))
+        _write_bucketed(_df_frame(base_p), os.path.join(staging, "df_base"))
+        _docs_stats(base).coalesce(1).write.mode("overwrite").parquet(
             os.path.join(staging, "stats_base")
         )
         # phase 2, the UPSERT: O(delta) tokenize + partition-aligned
         # posting append; df/stats re-emitted by merging the PERSISTED
         # base artifacts (read back from disk) with the delta counts
-        delta_p, delta_df, delta_st = _index_parts(
-            with_split.filter(F.col("doc_id") >= F.col("split"))
-        )
-        _write_bucketed(delta_p, "postings", mode="append")
+        delta_p = lex_postings(delta)
+        _write_bucketed(delta_p, os.path.join(staging, "postings"), mode="append")
         merged_df = (
             spark.read.parquet(os.path.join(staging, "df_base"))
             .select("term", "df")
-            .unionByName(delta_df)
+            .unionByName(_df_frame(delta_p).select("term", "df"))
             .groupBy("term")
             .agg(F.sum("df").alias("df"))
             .withColumn("term_bucket", _bucket(F.col("term")))
         )
-        _write_bucketed(merged_df, "df")
-        base_st_disk = spark.read.parquet(os.path.join(staging, "stats_base"))
+        _write_bucketed(merged_df, os.path.join(staging, "df"))
         merged_st = (
-            base_st_disk.unionByName(delta_st)
+            spark.read.parquet(os.path.join(staging, "stats_base"))
+            .unionByName(_docs_stats(delta))
             .agg(F.sum("n_docs").alias("n_docs"), F.sum("tot_dl").alias("tot_dl"))
         )
         merged_st.coalesce(1).write.mode("overwrite").parquet(os.path.join(staging, "stats"))
@@ -396,11 +397,12 @@ def compact_lex_postings(
     tombstones: DataFrame | None = None,
 ) -> None:
     """The ONE lexical delete+compact algebra: read the postings at
-    ``src_postings``, drop tombstoned documents, rewrite ONE segment
-    per term bucket under ``dest/postings``, and RE-DERIVE df + corpus
-    stats from the PERSISTED surviving postings (read back from
-    ``dest`` — the same merge pass that rewrites the segments carries
-    the counts; exact integer math, document text never read).
+    ``src_postings`` (term, doc_id, dl, tf by term_bucket; other
+    columns, such as a streamed store's ``seg``, are dropped), drop
+    tombstoned documents, rewrite ONE segment per term bucket under
+    ``dest/postings``, and RE-DERIVE df + corpus stats from the
+    PERSISTED surviving postings read back from ``dest``
+    (``write_df_stats``; exact integer math, document text never read).
     ``tombstones`` is a (doc_id) DataFrame — the id-list shape a real
     purge request has — broadcast into a left-anti join (the list is
     bounded by construction, so survivors never shuffle on doc_id);
@@ -409,15 +411,14 @@ def compact_lex_postings(
     op_lex_index_delete_compact (offline upsert tree),
     op_stream_lex_compact_serve (streamed store),
     and op_lex_lifecycle_e2e (the composed lineage), so no two
-    compaction paths can drift (round-11 review finding)."""
+    compaction paths can drift."""
     from pyspark.sql import Observation
 
-    src = spark.read.parquet(src_postings)
-    # n_before / n_after measured by observe() metrics riding the
-    # passes that already scan each tree (r15, guide §1.2: the old
-    # shape paid two EXTRA full-tree count jobs): n_before on the
+    src = spark.read.parquet(src_postings).select("term", "doc_id", "dl", "tf", "term_bucket")
+    # n_before / n_after are observe() metrics on the passes that
+    # already scan each tree, so no extra count job: n_before on the
     # source scan that feeds the rewrite, n_after on the PERSISTED
-    # survivors' read-back that derives df — still disk-measured
+    # survivors' read-back that derives df/stats
     obs_before = Observation("compact_lex_n_before")
     src_counted = src.observe(obs_before, F.count(F.lit(1)).alias("n"))
     if tombstones is None:
@@ -428,33 +429,13 @@ def compact_lex_postings(
         survivors = src_counted.join(
             F.broadcast(tombstones.select("doc_id")), "doc_id", "left_anti"
         )
-    (
-        survivors.repartition("term_bucket")
-        .write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .parquet(os.path.join(dest, "postings"))
-    )
-    surv_disk = spark.read.parquet(os.path.join(dest, "postings"))
+    _write_bucketed(survivors, os.path.join(dest, "postings"))
     obs_after = Observation("compact_lex_n_after")
-    dfq = (
-        surv_disk.observe(obs_after, F.count(F.lit(1)).alias("n"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .withColumn("term_bucket", _bucket(F.col("term")))
-    )
-    (
-        dfq.repartition("term_bucket")
-        .write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .parquet(os.path.join(dest, "df"))
-    )
-    (
-        surv_disk.select("doc_id", "dl")
-        .distinct()
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("tot_dl"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(os.path.join(dest, "stats"))
+    write_df_stats(
+        spark.read.parquet(os.path.join(dest, "postings")).observe(
+            obs_after, F.count(F.lit(1)).alias("n")
+        ),
+        dest,
     )
     # purge evidence (the shared write_purge_ledger artifact), in the
     # same dest tree and therefore the caller's staging transaction;

@@ -13,6 +13,21 @@ comparison checks real streaming semantics against batch SQL:
 - foreachBatch upsert across ordered micro-batches == last-write-wins
   per key.
 
+Streamed stores. The foreachBatch ops replay their input through
+``replay_microbatches`` (n ordered micro-batches, one per trigger),
+and every store they write per epoch (ANN and lexical postings, Bloom
+pairs and word deltas, the decontamination ledger, the dedup admit
+and seen stores) follows one contract:
+
+- layout: epoch ``e`` writes the Hive partition ``<store>/seg=<e>``
+  (``write_epoch``), optionally partitioned below it;
+  ``spark.read.parquet(<store>)`` reads all segments with an int
+  ``seg`` column, which returned rows and compacted trees drop;
+- an epoch overwrites its own segment, so an epoch run again with the
+  same id leaves the end state of one run;
+- a body that reads its own store reads only segments ``seg <
+  epoch_id`` (``earlier_segments``).
+
 Scale: all state is watermark-bounded (windows evict on close, dedup
 state within the watermark); swap the file source for Kafka and the
 memory sink for parquet/foreachBatch and the queries run unchanged on
@@ -24,8 +39,9 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from game_data_etl_pipeline_spark.catalog import load_table
@@ -52,9 +68,8 @@ def _session_workdir(spark: SparkSession, tag: str, sf_dir: str) -> str:
     """Per-SESSION scratch root for the file-source/sink ops. Keyed by
     the Spark application id as well as the fixture dir so two
     concurrent sessions on the same fixture get disjoint stage/store/
-    sink trees instead of rmtree-ing each other's (round-7 advice);
-    within one session the rmtree-then-rebuild remains the intended
-    idempotent-rerun semantics."""
+    sink trees instead of rmtree-ing each other's; within one session
+    a rerun rebuilds the tree from scratch."""
     return os.path.join(
         "/tmp",
         f"spark_graft_{tag}",
@@ -63,64 +78,21 @@ def _session_workdir(spark: SparkSession, tag: str, sf_dir: str) -> str:
     )
 
 
-def _assert_residues_present(
-    present: set[int], col: str, mod: int, op: str
-) -> None:
-    """The streaming-ingest ops replay the fixture as ``mod``
-    micro-batches split by ``col % mod`` and their oracles hard-code
-    ``n_batches = mod`` — on a degenerate fixture where a residue
-    class is empty the staged file count silently drops and the op
-    could never match its oracle. Fail loudly instead (round-9
-    advice). r16: the residue coverage is now measured by an
-    ``observe()`` riding the ONE staging write (guide §1.2 — the old
-    form paid a separate distinct+collect job over the full source
-    per streamed op), so this helper only checks the observed set."""
-    missing = sorted(set(range(mod)) - present)
-    if missing:
-        raise ValueError(
-            f"{op}: degenerate fixture — residue classes {missing} of "
-            f"{col} % {mod} hold no rows, so the {mod}-batch replay "
-            f"(and its n_batches={mod} oracle) cannot be staged"
-        )
-
-
 def _fmt(col, alias: str):
     return F.date_format(col, _TS_FMT).alias(alias)
 
 
-def _stage_microbatches(
-    df: DataFrame,
-    work: str,
-    *,
-    n: int = 3,
-    residue_col: str | None = None,
-    op: str | None = None,
-) -> str:
-    """Stage ``df`` (carrying an int ``batch_id`` column in [0, n)) as
-    ``n`` mtime-ordered single-file parquet micro-batch dirs under
-    ``<work>/incoming``, for deterministic replay with
-    ``maxFilesPerTrigger=1``. The ONE fixture-staging device shared by
-    every stream-ingest op (ANN segments, lexical postings, the
-    decontamination screen — round-10 verdict task 7), so the replay
-    harnesses cannot drift: the workdir is recreated from scratch
-    (idempotent rerun within a session; _session_workdir keys by app
-    id across sessions), each residue class lands as exactly one file,
-    and the mtime ladder fixes the ingestion order the availableNow
-    trigger replays.
+def _stage_microbatches(df: DataFrame, work: str, n: int, op: str) -> str:
+    """Stage ``df`` (an int ``batch_id`` column in [0, n)) under a
+    fresh ``<work>/incoming`` as dirs ``batch0`` .. ``batch<n-1>``, one
+    parquet file each, with mtimes in batch order, and return that dir.
 
-    r16 (guide §1.2/§6): ONE partitioned write instead of ``n``
-    filtered scans of the source — the old form scanned the full
-    source once per batch (3 jobs) plus a separate residue-coverage
-    distinct+collect job; the new form scans once, shuffles the rows
-    to their batch partition (hash on the duplicated ``_pb`` column so
-    ``batch_id`` itself stays in the data files the replay schema
-    reads), sorts within partitions so the staged bytes stay
-    deterministic like the old scan-ordered coalesce(1) files, and
-    carries the per-residue counts on an ``observe()`` riding the same
-    write. Pass ``residue_col``/``op`` to fail loudly on a degenerate
-    fixture (the old _assert_residues_nonempty contract)."""
-    from pyspark.sql import Observation
-
+    One partitioned write stages every batch: the rows shuffle to their
+    batch on a copy of ``batch_id`` (so ``batch_id`` stays in the
+    files) and sort within it, so the staged bytes are deterministic.
+    An ``observe()`` on the same write counts each batch; a batch with
+    no rows raises ``ValueError`` naming ``op``, because the replay and
+    the oracles of its ops assume all ``n`` batches."""
     stage = os.path.join(work, "incoming")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(stage)
@@ -140,25 +112,63 @@ def _stage_microbatches(
         .write.partitionBy("_pb")
         .parquet(tmp)
     )
-    counts = obs.get
-    if residue_col is not None and op is not None:
-        present = {b for b in range(n) if (counts[f"b{b}"] or 0) > 0}
-        _assert_residues_present(present, residue_col, n, op)
+    missing = [b for b in range(n) if not obs.get[f"b{b}"]]
+    if missing:
+        raise ValueError(
+            f"{op}: batches {missing} of {n} hold no rows, so the {n}-batch "
+            f"replay (and its n_batches={n} oracle) cannot be staged"
+        )
     now = 1_700_000_000
     for b in range(n):
         d = os.path.join(stage, f"batch{b}")
-        src = os.path.join(tmp, f"_pb={b}")
-        if os.path.isdir(src):
-            os.rename(src, d)
-        else:
-            # empty residue class (only reachable when the caller did
-            # not request the loud assert): keep the old contract of
-            # one (empty) file per batch dir
-            df.filter(F.col("batch_id") == b).coalesce(1).write.parquet(d)
+        os.rename(os.path.join(tmp, f"_pb={b}"), d)
         for f in os.listdir(d):
             os.utime(os.path.join(d, f), (now + b, now + b))
     shutil.rmtree(tmp, ignore_errors=True)
     return stage
+
+
+def replay_microbatches(
+    spark: SparkSession,
+    df: DataFrame,
+    work: str,
+    body: Callable[[DataFrame, int], None],
+    *,
+    n: int = 3,
+    op: str,
+) -> None:
+    """Stage ``df`` as ``n`` micro-batches (``_stage_microbatches``)
+    and replay them through a file-source stream read with ``df``'s
+    schema, one batch per trigger in batch order, running
+    ``body(batch_df, epoch_id)`` on each until the stream drains."""
+    stage = _stage_microbatches(df, work, n, op)
+    (
+        spark.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(os.path.join(stage, "*"))
+        .writeStream.foreachBatch(body)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def write_epoch(
+    frame: DataFrame, store: str, epoch_id: int, part: str | None = None
+) -> None:
+    """Overwrite epoch ``epoch_id``'s segment ``<store>/seg=<epoch_id>``
+    with ``frame``, partitioned by ``part`` (one file per value) when
+    given."""
+    writer = frame.repartition(part).write.partitionBy(part) if part else frame.write
+    writer.mode("overwrite").parquet(os.path.join(store, f"seg={epoch_id}"))
+
+
+def earlier_segments(spark: SparkSession, store: str, epoch_id: int) -> DataFrame | None:
+    """The rows ``store``'s epochs before ``epoch_id`` wrote, or None
+    while the store does not exist."""
+    if not os.path.isdir(store):
+        return None
+    return spark.read.parquet(store).filter(F.col("seg") < epoch_id)
 
 
 @register(
@@ -327,28 +337,18 @@ def op_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     latest version per event_id. The merge is anti-join + union —
     MERGE INTO emulated on plain parquet."""
     work = _session_workdir(spark, "upsert", sf_dir)
-    stage = os.path.join(work, "incoming")
     target = os.path.join(work, "target")
-    shutil.rmtree(work, ignore_errors=True)
-    os.makedirs(stage)
-
     events = load_table(spark, sf_dir, "events").select("event_id", F.round("value", 2).alias("value"))
-    base = events.withColumn("version", F.lit(1))
-    update = (
-        events.filter(F.col("event_id") < 100)
-        .withColumn("value", F.round(F.col("value") + 1000, 2))
-        .withColumn("version", F.lit(2))
+    base = events.select("*", F.lit(1).alias("version"), F.lit(0).alias("batch_id"))
+    update = events.filter(F.col("event_id") < 100).select(
+        "event_id",
+        F.round(F.col("value") + 1000, 2).alias("value"),
+        F.lit(2).alias("version"),
+        F.lit(1).alias("batch_id"),
     )
-    # two staged files; file-source order follows modification time
-    base.coalesce(1).write.parquet(os.path.join(stage, "batch1"))
-    update.coalesce(1).write.parquet(os.path.join(stage, "batch2"))
-    now = 1_700_000_000
-    for i, d in enumerate(("batch1", "batch2")):
-        for f in os.listdir(os.path.join(stage, d)):
-            os.utime(os.path.join(stage, d, f), (now + i, now + i))
 
     def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        batch = batch_df.dropDuplicates(["event_id"])
+        batch = batch_df.drop("batch_id").dropDuplicates(["event_id"])
         if os.path.isdir(target):
             current = spark.read.parquet(target)
             merged = current.join(batch, "event_id", "left_anti").unionByName(batch)
@@ -358,13 +358,9 @@ def op_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
         shutil.rmtree(target, ignore_errors=True)
         os.rename(target + "_next", target)
 
-    stream = (
-        spark.readStream.schema("event_id long, value double, version int")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(stage, "*"))
+    replay_microbatches(
+        spark, base.unionByName(update), work, upsert, n=2, op="op_stream_foreachbatch_upsert"
     )
-    q = stream.writeStream.foreachBatch(upsert).trigger(availableNow=True).start()
-    q.awaitTermination()
     return spark.read.parquet(target)
 
 
@@ -911,10 +907,11 @@ def op_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     1. within-batch dedup: groupBy(fingerprint).min(doc_id) — first
        writer wins inside a batch;
     2. anti-join the survivors against the persistent fingerprint
-       STORE (parquet; only 32-hex digests + the admitting doc_id,
-       never document bodies);
-    3. append survivors to the admitted sink and their fingerprints
-       to the store — the store grows monotonically across batches.
+       STORE's earlier segments (parquet; only 32-hex digests + the
+       admitting doc_id, never document bodies);
+    3. write survivors to the epoch's segment of the admitted sink and
+       their fingerprints to the epoch's segment of the store — the
+       store grows monotonically across batches.
 
     Batch-equivalent contract (the DuckDB oracle): the admitted set
     equals keep-first over arrival order, i.e. per fingerprint the
@@ -942,29 +939,20 @@ def op_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("fingerprint", F.md5("text"))
         .select("doc_id", "batch_id", "fingerprint")
     )
-    stage = _stage_microbatches(arrivals, work)
 
     def admit(batch_df: DataFrame, epoch_id: int) -> None:
         fresh = batch_df.groupBy("fingerprint").agg(
             F.min("doc_id").alias("doc_id"),
             F.min("batch_id").alias("admitted_in_batch"),
         )
-        if os.path.isdir(store):
-            seen = spark.read.parquet(store).select("fingerprint")
-            fresh = fresh.join(seen, "fingerprint", "left_anti")
-        fresh.select("doc_id", "fingerprint", "admitted_in_batch").write.mode(
-            "append"
-        ).parquet(admitted)
-        fresh.select("fingerprint", "doc_id").write.mode("append").parquet(store)
+        seen = earlier_segments(spark, store, epoch_id)
+        if seen is not None:
+            fresh = fresh.join(seen.select("fingerprint"), "fingerprint", "left_anti")
+        write_epoch(fresh.select("doc_id", "fingerprint", "admitted_in_batch"), admitted, epoch_id)
+        write_epoch(fresh.select("fingerprint", "doc_id"), store, epoch_id)
 
-    stream = (
-        spark.readStream.schema("doc_id long, batch_id int, fingerprint string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(stage, "*"))
-    )
-    q = stream.writeStream.foreachBatch(admit).trigger(availableNow=True).start()
-    q.awaitTermination()
-    return spark.read.parquet(admitted)
+    replay_microbatches(spark, arrivals, work, admit, op="op_stream_incremental_dedup")
+    return spark.read.parquet(admitted).drop("seg")
 
 
 @register(
@@ -1057,6 +1045,7 @@ def op_stream_incremental_fuzzy_dedup(spark: SparkSession, sf_dir: str) -> DataF
     must be dropped, pinned in tests/test_streaming.py."""
     work = _session_workdir(spark, "incfuzzy", sf_dir)
     store = os.path.join(work, "store")
+    bands = os.path.join(work, "store_bands")
     admitted = os.path.join(work, "admitted")
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     toks = F.split(F.col("text"), " ")
@@ -1080,7 +1069,6 @@ def op_stream_incremental_fuzzy_dedup(spark: SparkSession, sf_dir: str) -> DataF
     sigs = terms.groupBy("doc_id").agg(*[h(j) for j in range(8)]).withColumn(
         "batch_id", (F.col("doc_id") % 3).cast("int")
     )
-    stage = _stage_microbatches(sigs, work)
 
     scols = [f"s{j}" for j in range(8)]
 
@@ -1137,11 +1125,11 @@ def op_stream_incremental_fuzzy_dedup(spark: SparkSession, sf_dir: str) -> DataF
         blocked = _verify(
             cands, rows, rows.select(F.col("doc_id").alias("o_id"), *scols)
         )
-        if os.path.isdir(store):
-            store_sigs = spark.read.parquet(store)
+        store_sigs = earlier_segments(spark, store, epoch_id)
+        if store_sigs is not None:
             store_cands = (
                 batch_bands.join(
-                    spark.read.parquet(store + "_bands"), ["band", "bv"]
+                    earlier_segments(spark, bands, epoch_id), ["band", "bv"]
                 )
                 .select("doc_id", "o_id")
                 .distinct()
@@ -1153,45 +1141,31 @@ def op_stream_incremental_fuzzy_dedup(spark: SparkSession, sf_dir: str) -> DataF
             rows.select("doc_id", F.col("batch_id").alias("admitted_in_batch"))
             .join(blocked, "doc_id", "left_anti")
         )
-        ok.write.mode("append").parquet(admitted)
+        write_epoch(ok, admitted, epoch_id)
         # seen-store: EVERY arrival goes on record — signatures (for
         # the verify join) and band keys (for the candidate equi-join)
-        rows.select(F.col("doc_id").alias("o_id"), *scols).write.mode(
-            "append"
-        ).parquet(store)
-        batch_bands.select(
-            F.col("doc_id").alias("o_id"), "band", "bv"
-        ).write.mode("append").parquet(store + "_bands")
+        write_epoch(rows.select(F.col("doc_id").alias("o_id"), *scols), store, epoch_id)
+        write_epoch(peer_bands, bands, epoch_id)
 
-    schema = "doc_id long, " + ", ".join(f"s{j} long" for j in range(8)) + ", batch_id int"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(stage, "*"))
-    )
-    q = stream.writeStream.foreachBatch(admit).trigger(availableNow=True).start()
-    q.awaitTermination()
-    return spark.read.parquet(admitted)
+    replay_microbatches(spark, sigs, work, admit, op="op_stream_incremental_fuzzy_dedup")
+    return spark.read.parquet(admitted).drop("seg")
 
 
 def stream_ann_store(
     spark: SparkSession, sf_dir: str, tag: str, op: str
 ) -> str:
-    """The shared streamed-ANN-segment device: stage the corpus as 3
-    mtime-ordered micro-batches split by vec_id % 3, replay with
-    maxFilesPerTrigger=1, and have each foreachBatch transaction
-    encode ONLY its batch against the persisted trained structure
-    (coarse centroids + codebooks read once from the warehouse
-    artifact, eagerly checkpointed so the closure ships bounded
-    frames, never retrained) and append partition-aligned into a
-    cent_id postings layout. Returns the streamed store path. Shared
-    by op_stream_index_ingest (which audits the store) and
-    op_stream_ann_serve (which SERVES from it), so the ingest path
-    under audit and the ingest path under serve cannot drift."""
-    from game_data_etl_pipeline_spark.llmdata.ann_index import build_ann_index
-    from game_data_etl_pipeline_spark.llmdata.similarity import ivf_assign, pq_encode
+    """The streamed ANN store shared by op_stream_index_ingest (which
+    audits it) and op_stream_ann_serve / _compacted (which serve it):
+    the embeddings replay as 3 micro-batches split by vec_id % 3, and
+    each epoch encodes only its batch (``ann_postings``) against the
+    persisted coarse centroids and codebooks, which are never
+    retrained. Rows keep their ``batch_id`` and land in
+    ``<work>/postings/seg=<epoch>/cent_id=<cell>``. Returns the
+    postings path."""
+    from game_data_etl_pipeline_spark.llmdata.ann_index import ann_postings, build_ann_index
 
     main_path = build_ann_index(spark, sf_dir)
+    # read once and checkpointed, so each epoch ships bounded frames
     coarse = spark.read.parquet(os.path.join(main_path, "coarse")).localCheckpoint(
         eager=True
     )
@@ -1204,36 +1178,11 @@ def stream_ann_store(
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", (F.col("vec_id") % 3).cast("int").alias("batch_id")
     )
-    stage = _stage_microbatches(emb, work, residue_col="vec_id", op=op)
 
     def ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        # one narrow pass: argmax cell assignment and per-row PQ codes
-        # are both pure expressions against O(1) broadcast rows, so the
-        # batch is encoded without a single vec_id join (r15: the old
-        # shape re-joined the batch against itself twice per commit —
-        # two shuffles of pure bookkeeping, guide §2.4)
-        assigned = ivf_assign(
-            batch_df.select("vec_id", "embedding", "batch_id"),
-            cents=coarse,
-            form="argmax",
-            extra_cols=("batch_id",),
-        )
-        post = pq_encode(
-            assigned.select("vec_id", "embedding", "batch_id", "cent_id"),
-            books,
-            keep=("batch_id", "cent_id"),
-        )
-        post.repartition("cent_id").write.mode("append").partitionBy(
-            "cent_id"
-        ).parquet(store)
+        write_epoch(ann_postings(batch_df, coarse, books, "batch_id"), store, epoch_id, "cent_id")
 
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<double>, batch_id int")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(stage, "*"))
-    )
-    q = stream.writeStream.foreachBatch(ingest).trigger(availableNow=True).start()
-    q.awaitTermination()
+    replay_microbatches(spark, emb, work, ingest, op=op)
     return store
 
 
@@ -1250,28 +1199,18 @@ def stream_ann_store(
     """,
 )
 def op_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING ingestion into the persisted ANN index — the
-    continuous-embedding shape that completes the index lifecycle
-    (build_ann_index offline / op_sim_ivfpq_serve query-time /
-    op_sim_index_upsert batch-delta / this op for the arrival stream):
-    new vectors flow in micro-batches and each foreachBatch
-    transaction encodes ONLY the batch against the persisted trained
-    structure (coarse centroids + codebooks read from the warehouse
-    artifact, never retrained) and appends partition-aligned into a
-    cent_id postings layout. Per-batch work is O(batch); index
-    structure is immutable; the serving tier sees new vectors as soon
-    as their postings land — the standard freshness design (FAISS/
-    Milvus segment appends) expressed as Structured Streaming.
+    """Streamed ingestion into the persisted ANN index: the embeddings
+    arrive as 3 micro-batches (vec_id % 3) through ``stream_ann_store``,
+    each epoch encoding only its batch against the frozen coarse
+    centroids and codebooks into its own cent_id-partitioned segment.
+    Per-batch work is O(batch) and the trained structure never changes
+    (the FAISS/Milvus growing-segment design).
 
-    Fixture shape: the corpus split into 3 micro-batches by
-    vec_id % 3, staged as mtime-ordered parquet files and replayed
-    with maxFilesPerTrigger=1 (the op_stream_incremental_dedup
-    device). Audited on the PERSISTED post-stream store:
-    ``full_coverage`` (every corpus vector indexed exactly once,
-    all 3 batches represented), ``encode_consistent`` (every streamed
-    row's (cent_id, codes) bit-identical to the offline build's
-    encode of the same vector — the artifact path and the streaming
-    path cannot drift), ``cells_bounded`` (0 < cells <= k=8)."""
+    Audited on the persisted store: ``full_coverage`` (every corpus
+    vector indexed exactly once, all 3 batches present),
+    ``encode_consistent`` (every streamed (cent_id, codes) equals the
+    offline build's for the same vector) and ``cells_bounded``
+    (0 < cells <= k)."""
     from game_data_etl_pipeline_spark.llmdata.ann_index import build_ann_index
     from game_data_etl_pipeline_spark.llmdata.cluster import K
 
@@ -1344,73 +1283,25 @@ def op_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def op_stream_lex_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING ingestion into the LEXICAL index — op_stream_index_
-    ingest's twin, completing the inverted file's lifecycle
-    (build_lex_index offline / op_text_bm25_serve query-time /
-    op_lex_index_upsert batch-delta / op_lex_index_delete_compact
-    merge / this op for the arrival stream): documents arrive in
-    micro-batches and each foreachBatch transaction tokenizes ONLY
-    the batch and appends its (term, doc_id, dl, tf) postings
-    partition-aligned into a term_bucket store — the Lucene
-    per-commit-segment shape as Structured Streaming. Per-batch work
-    is O(batch); no base posting is ever touched; df/stats stay
-    derived facts re-emitted at merge time (delete_compact), exactly
-    the near-real-time-search freshness design.
+    """Streamed ingestion into the lexical index, op_stream_index_ingest's
+    twin: the documents arrive as 3 micro-batches (doc_id % 3) through
+    ``stream_lex_postings``, each epoch tokenizing only its batch into
+    its own term_bucket-partitioned segment of (term, doc_id, dl, tf)
+    postings (the Lucene per-commit segment). Per-batch work is
+    O(batch); df/stats are not derived here.
 
-    Fixture shape: the corpus split into 3 micro-batches by
-    doc_id % 3, staged as mtime-ordered parquet files and replayed
-    with maxFilesPerTrigger=1 (the op_stream_index_ingest device).
-    Audited on the PERSISTED post-stream store: ``n_postings``
-    (hash-compared against DuckDB's distinct (doc_id, term) count),
-    ``full_coverage`` (every doc represented, all 3 batches seen),
+    Audited on the persisted store: ``n_postings`` (hash-compared
+    against DuckDB's distinct (doc_id, term) count), ``full_coverage``
+    (every doc represented, all 3 batches present),
     ``postings_consistent`` (every streamed (term, doc_id) row's
-    (tf, dl) bit-identical to the OFFLINE build's row — the streaming
-    tokenize path and the build path cannot drift), and
-    ``buckets_bounded`` (every term_bucket in [0, LEX_BUCKETS))."""
-    from game_data_etl_pipeline_spark.llmdata.lex_index import (
-        LEX_BUCKETS,
-        _bucket,
-        build_lex_index,
-    )
-    from game_data_etl_pipeline_spark.llmdata.text import _terms
+    (tf, dl) equals the offline build's) and ``buckets_bounded``
+    (every term_bucket in [0, LEX_BUCKETS))."""
+    from game_data_etl_pipeline_spark.llmdata.lex_index import LEX_BUCKETS, build_lex_index
 
     main_path = build_lex_index(spark, sf_dir)
+    work = stream_lex_postings(spark, sf_dir, "lexingest", "op_stream_lex_ingest")
 
-    work = _session_workdir(spark, "lexingest", sf_dir)
-    store = os.path.join(work, "postings")
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", (F.col("doc_id") % 3).cast("int").alias("batch_id")
-    )
-    stage = _stage_microbatches(
-        docs, work, residue_col="doc_id", op="op_stream_lex_ingest"
-    )
-
-    def ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        # split projected once below the Generate (see stream_lex_store)
-        t = batch_df.withColumn("terms", _terms()).select(
-            "doc_id",
-            "batch_id",
-            F.size("terms").alias("dl"),
-            F.explode("terms").alias("term"),
-        )
-        post = (
-            t.groupBy("term", "doc_id", "dl", "batch_id")
-            .agg(F.count(F.lit(1)).alias("tf"))
-            .withColumn("term_bucket", _bucket(F.col("term")))
-        )
-        post.repartition("term_bucket").write.mode("append").partitionBy(
-            "term_bucket"
-        ).parquet(store)
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string, batch_id int")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(stage, "*"))
-    )
-    q = stream.writeStream.foreachBatch(ingest).trigger(availableNow=True).start()
-    q.awaitTermination()
-
-    after = spark.read.parquet(store).select(
+    after = spark.read.parquet(os.path.join(work, "postings")).select(
         "term",
         "doc_id",
         "dl",
@@ -1463,101 +1354,37 @@ def op_stream_lex_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_lex_store(spark: SparkSession, sf_dir: str, tag: str, op: str) -> str:
-    """The shared streamed-LEXICAL-store device — stream_ann_store's
-    twin: stage the corpus as 3 mtime-ordered micro-batches, replay
-    with maxFilesPerTrigger=1, and have each foreachBatch transaction
-    tokenize ONLY its batch and append ONE O(batch) artifact — its
-    partition-aligned postings into the term_bucket layout. After the
-    stream drains, one narrow post-stream fold re-derives serveable
-    df/stats from the persisted postings (exact integer algebra over
-    disjoint doc sets — the same re-derivation the shared compactor
-    runs at merge time; no document re-read, the text column never
-    leaves the ingest pass). Returns the work dir holding postings/
-    (per-commit segments), df/, stats/.
-    Shared by op_stream_lex_serve (serves the fresh store) and
-    op_stream_lex_compact_serve (tombstones + merges it), so the
-    served path and the compacted path ingest through the same
-    code."""
-    from game_data_etl_pipeline_spark.llmdata.lex_index import _bucket
-    from game_data_etl_pipeline_spark.llmdata.text import _terms
+def stream_lex_postings(spark: SparkSession, sf_dir: str, tag: str, op: str) -> str:
+    """The streamed lexical store's ingest half, op_stream_lex_ingest's
+    whole store: the documents replay as 3 micro-batches split by
+    doc_id % 3, and each epoch tokenizes only its batch
+    (``lex_postings``, batch_id kept) into
+    ``<work>/postings/seg=<epoch>/term_bucket=<b>``. Returns ``work``."""
+    from game_data_etl_pipeline_spark.llmdata.lex_index import lex_postings
 
     work = _session_workdir(spark, tag, sf_dir)
+    store = os.path.join(work, "postings")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", (F.col("doc_id") % 3).cast("int").alias("batch_id")
     )
-    stage = _stage_microbatches(docs, work, residue_col="doc_id", op=op)
-
-    post_store = os.path.join(work, "postings")
 
     def ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        # project the split ONCE before the explode: a size(split)+
-        # explode(split) pair in one select leaves the size() in the
-        # Project ABOVE the Generate, re-splitting the text once per
-        # exploded row (guide §2.3 — measured 0.46s vs 0.13s per batch
-        # at sf0.1; at scale it is a dl× redundant tokenize)
-        t = batch_df.withColumn("terms", _terms()).select(
-            "doc_id",
-            F.size("terms").alias("dl"),
-            F.explode("terms").alias("term"),
-        )
-        post = (
-            t.groupBy("term", "doc_id", "dl")
-            .agg(F.count(F.lit(1)).alias("tf"))
-            .withColumn("term_bucket", _bucket(F.col("term")))
-        )
-        # ONE append per commit (r16, guide §1.2/§6): the r15 shape
-        # checkpointed the batch postings and ran two MORE write
-        # actions per commit (a per-term df delta and a 1-row stats
-        # delta) — 4 driver actions per micro-batch of pure
-        # bookkeeping. df/stats are DERIVED facts; they re-derive in
-        # one narrow post-stream fold below, exactly the algebra the
-        # shared compactor already runs at merge time.
-        post.repartition("term_bucket").write.mode("append").partitionBy(
-            "term_bucket"
-        ).parquet(post_store)
+        write_epoch(lex_postings(batch_df, "batch_id"), store, epoch_id, "term_bucket")
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string, batch_id int")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(stage, "*"))
-    )
-    q = stream.writeStream.foreachBatch(ingest).trigger(availableNow=True).start()
-    q.awaitTermination()
+    replay_microbatches(spark, docs, work, ingest, op=op)
+    return work
 
-    # post-stream fold: df/stats re-derived from the PERSISTED NARROW
-    # postings (term/doc_id/dl/tf — the text column is never re-read).
-    # Exact integer algebra, value-identical to the r15 per-commit
-    # delta sums: each (term, doc_id) pair appears exactly once across
-    # the disjoint batches, so groupBy(term).count over the whole tree
-    # equals the sum of per-batch per-term doc counts; dl is a per-doc
-    # fact on every posting row and split(" ") of any string is
-    # non-empty, so every NON-NULL-text doc has >= 1 posting row and
-    # the (n_docs, tot_dl) derivation matches the per-batch form
-    # (documents.text is non-null in every fixture; a NULL text would
-    # drop from n_docs under BOTH the r15 per-commit delta and this
-    # fold — the r15-ADVICE note — so the two shapes cannot drift).
-    # At 100 TB the fold is one pass over the narrow postings paid per
-    # stream DRAIN, not per commit — the same pass the nightly
-    # compactor already makes when it re-derives df/stats.
-    posts = spark.read.parquet(post_store)
-    (
-        posts.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .withColumn("term_bucket", _bucket(F.col("term")))
-        .repartition("term_bucket")
-        .write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .parquet(os.path.join(work, "df"))
-    )
-    (
-        posts.groupBy("doc_id")
-        .agg(F.first("dl").alias("dl"))
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("tot_dl"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(os.path.join(work, "stats"))
-    )
+
+def stream_lex_store(spark: SparkSession, sf_dir: str, tag: str, op: str) -> str:
+    """A serveable streamed lexical store, shared by op_stream_lex_serve
+    and op_stream_lex_compact_serve: ``stream_lex_postings``, then df/
+    and stats/ derived once from the persisted postings after the
+    stream drains (``write_df_stats``; the text is never re-read).
+    Returns ``work``."""
+    from game_data_etl_pipeline_spark.llmdata.lex_index import write_df_stats
+
+    work = stream_lex_postings(spark, sf_dir, tag, op)
+    write_df_stats(spark.read.parquet(os.path.join(work, "postings")), work)
     return work
 
 
@@ -1573,27 +1400,18 @@ def stream_lex_store(spark: SparkSession, sf_dir: str, tag: str, op: str) -> str
     """,
 )
 def op_stream_lex_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SERVE FROM THE STREAMED LEXICAL STORE — the end-to-end
-    freshness proof op_stream_lex_ingest stopped short of (round-9
-    verdict: the streamed postings were audited bit-identical to the
-    offline build but never *served*): documents arrive in 3
-    micro-batches through the shared ``stream_lex_store`` device
-    (per-commit O(batch) postings + df/stats deltas, one
-    vocabulary-bounded post-stream fold), and the query path is the
-    verbatim ``bm25_from_index`` bucket-pruned lookup.
+    """BM25 served from the streamed lexical store: the documents arrive
+    as 3 micro-batches through ``stream_lex_store`` (one postings
+    segment per epoch, then one df/stats fold over the persisted
+    postings), and the query path is the ``bm25_from_index``
+    bucket-pruned lookup.
 
-    The gate is the strongest in the registry: op_text_bm25's DuckDB
-    oracle VERBATIM, so the driver's value hash holds
-    stream-ingest -> delta-merge -> serve to BIT-EQUALITY with the
-    full corpus-scan scorer. This is the near-real-time-search claim
-    made executable: a document ingested in micro-batch N is served
-    with exactly the scores a full offline rebuild would give.
-
-    At 100 TB this is the Elasticsearch/Lucene NRT pipeline as
-    Structured Streaming: per-commit segments land O(batch), the
-    df/stats fold is vocabulary-bounded (Zipf, not corpus), and
-    query-time bucket pruning is identical before and after any
-    number of commits."""
+    Gate: op_text_bm25's DuckDB oracle verbatim, so the oracle's value
+    hash holds stream-ingest -> fold -> serve to bit-equality with the
+    corpus-scan scorer: a document ingested in micro-batch N is served
+    with the scores a full offline rebuild gives (the Lucene NRT
+    pipeline as Structured Streaming; the fold is vocabulary-bounded
+    and bucket pruning is unchanged by any number of commits)."""
     from game_data_etl_pipeline_spark.llmdata.lex_index import bm25_from_index
 
     work = stream_lex_store(spark, sf_dir, "lexserve", "op_stream_lex_serve")
@@ -1622,46 +1440,25 @@ def op_stream_lex_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def op_stream_lex_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THE STREAMED LEXICAL STORE'S FULL LIFECYCLE — stream-ingest ->
-    delete -> compact -> serve, op_stream_ann_serve_compacted's twin
-    on the text side (round-11 symmetry: the offline lexical tree has
-    delete+compact at survivor bit-equality, the streamed store only
-    accumulated per-commit segments): documents arrive in 3
-    micro-batches through the shared ``stream_lex_store`` device, an
-    explicit id-LIST purge request (TOMB_IDS — the GDPR-takedown
-    shape, round-12 verdict task 2; the pmod residue fixture retired)
-    is broadcast into the tombstone anti-join, and the merge drops
-    tombstoned postings, rewrites ONE segment per term bucket
-    (strictly fewer parquet files — asserted loudly in the driver,
-    the residue-assert precedent), and RE-DERIVES df and the corpus
-    stats from the surviving postings — exact integer math, no
-    document re-read, exactly the op_lex_index_delete_compact
-    algebra pointed at the streamed store instead of the offline
-    upsert tree. The compaction's purge LEDGER (the shared compactor's
-    deletion-evidence artifact) doubles as the tomb-meta marker — the
-    serve path replays the ``check_tomb_meta`` staleness handshake the
-    e2e lineage trees carry against the ledger's digest (round-13
-    verdict task 3: one artifact, no duplicate id-list marker), so a
-    store compacted under a DIFFERENT purge list than the session
-    constant fails loudly instead of serving under the wrong oracle. ``purge_ledger_consistent`` rides along (round-13 verdict
-    task 2 — the streamed rows wrote the ledger but never read it
-    back): the persisted purge LEDGER is read back at serve through
-    the shared ``purge_ledger_referee`` and held to the session
-    TOMB_IDS digest plus the before/after/purged posting counts
-    measured on the persisted streamed store and its compacted
-    sibling — the offline lifecycle rows' evidence discipline.
+    """The streamed lexical store's full lifecycle, stream-ingest ->
+    delete -> compact -> serve, op_stream_ann_serve_compacted's twin:
+    the documents arrive as 3 micro-batches through
+    ``stream_lex_store``; the id-list purge request TOMB_IDS is
+    broadcast into the tombstone anti-join of ``compact_lex_postings``
+    (op_lex_index_delete_compact's algebra), which rewrites ONE segment
+    per term bucket and re-derives df and the corpus stats from the
+    surviving postings, in a staged sibling tree published with its
+    purge ledger. Strictly fewer parquet files than the streamed store
+    is asserted, and the serve path runs the ``check_tomb_meta``
+    handshake against the ledger, so a store compacted under another
+    purge list fails loudly. ``purge_ledger_consistent`` reads the
+    ledger back (``purge_ledger_referee``) and holds it to the TOMB_IDS
+    digest and the posting counts of both stores.
 
     Gate: op_text_bm25's oracle recomputed over ``doc_id NOT IN
-    TOMB_IDS`` VERBATIM (the SQL list interpolated from the same
-    constant) — serving from the compacted streamed store IS the
-    full-rebuild scorer for the surviving corpus, IDF shifts and all,
-    held to bit-equality by the driver's value hash. At 100 TB this is
-    Lucene NRT plus forceMerge as one Structured Streaming pipeline:
-    commits land O(batch) all day, the nightly merge streams each
-    bucket's survivors once (partition pruning scopes per-bucket
-    schedules) and carries the stats re-derivation in the same pass,
-    and next morning's queries read one segment per bucket with
-    exactly the scores a from-scratch rebuild would give."""
+    TOMB_IDS`` verbatim: serving from the compacted streamed store is
+    the full-rebuild scorer of the surviving corpus, IDF shifts and
+    all (Lucene NRT plus forceMerge as one pipeline)."""
     from game_data_etl_pipeline_spark.llmdata.lex_index import (
         bm25_from_index,
         compact_lex_postings,
@@ -1672,14 +1469,8 @@ def op_stream_lex_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     comp = os.path.join(work, "compacted")
     shutil.rmtree(comp, ignore_errors=True)
-    # the shared delete+compact algebra (the same code the offline
-    # op_lex_index_delete_compact runs), pointed at the streamed
-    # store, purging the broadcast TOMB_IDS list — built in a STAGED
-    # sibling and atomically published (round-13 verdict task 7, the
-    # offline trees' staging_tree discipline): the compactor writes
-    # the purge ledger as its LAST staging step, so a crash anywhere
-    # in the rewrite leaves NO compacted tree at all — a compacted-
-    # but-unevidenced store cannot exist even transiently
+    # the compactor writes the purge ledger last in the staging tree,
+    # so a crash in the rewrite publishes no compacted tree at all
     with staging_tree(comp) as staging:
         compact_lex_postings(
             spark,
@@ -1695,16 +1486,7 @@ def op_stream_lex_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"op_stream_lex_compact_serve: compaction did not merge "
             f"segments ({files_before} -> {files_after} parquet files)"
         )
-    # purge-list handshake: the serve path validates the purge LEDGER
-    # the shared compactor just recorded — the e2e trees' staleness
-    # discipline pointed at the ONE deletion-evidence artifact
-    # (round-13 verdict task 3: the duplicate stream_compact_done.json
-    # id-list marker is gone; handshake and evidence are one file)
     check_tomb_meta(comp, PURGE_LEDGER)
-    # purge-evidence referee (round-13 verdict task 2): the ledger the
-    # shared compactor persisted is READ BACK at serve and held to the
-    # purge measured on the persisted trees — the offline lifecycle
-    # rows' purge_ledger_consistent discipline on the streamed path
     audit = purge_ledger_referee(
         spark,
         comp,
@@ -1743,35 +1525,21 @@ def op_stream_lex_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def op_stream_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SERVE FROM THE STREAMED ANN SEGMENTS — op_stream_lex_serve's
-    twin on the vector side, closing the same asymmetry the round-9
-    verdict flagged for the lexical index (op_stream_index_ingest
-    audits the streamed store bit-identical to the offline build but
-    never serves it): embeddings arrive in 3 micro-batches, each
-    foreachBatch encoding ONLY its batch against the frozen trained
-    structure and appending cent_id-partitioned segments (the shared
-    ``stream_ann_store`` device — the audited path and the served
-    path are the same code), then the verbatim probe -> ADC ->
-    shortlist -> exact-rerank chain (``ivfpq_serve_stages``) runs
-    against the streamed segments under op_sim_ivfpq_serve's oracle —
-    per-query VALUES the driver hash-compares.
+    """ANN served from the streamed segments, op_stream_lex_serve's twin
+    on the vector side: the embeddings arrive as 3 micro-batches
+    through ``stream_ann_store`` (each epoch encodes only its batch
+    against the frozen trained structure into its own cent_id-
+    partitioned segment), then the probe -> ADC -> shortlist ->
+    exact-rerank chain (``ivfpq_serve_stages``) runs against them under
+    op_sim_ivfpq_serve's oracle.
 
-    Because the router and codebooks are frozen and streaming encode
-    is deterministic, a vector ingested in micro-batch N serves with
-    EXACTLY the ADC score a full offline rebuild would give it — the
-    in-query referee proves it: every probed-cell ADC score is
-    computed twice, once from the streamed segments and once from the
-    offline build artifact, joined pair-for-pair and asserted
-    IEEE-bit-identical with count equality both directions
-    (``adc_bitmatch_vs_main``, the op_sim_ivfpq_serve_compacted
-    referee discipline pointed at the freshness path instead of the
-    delete path).
-
-    At 100 TB this is Milvus/FAISS growing-segment serving as
-    Structured Streaming: per-commit segments land O(batch), queries
-    fan over sealed + growing segments identically (same probe set,
-    same LUTs), and this gate is what proves freshness costs zero
-    accuracy."""
+    Router and codebooks are frozen and the encode is deterministic, so
+    a vector ingested in micro-batch N serves with the ADC score a full
+    offline rebuild gives. ``adc_bitmatch_vs_main`` proves it in-query:
+    every probed-cell ADC score is computed from the streamed segments
+    and from the offline build, joined pair-for-pair and held
+    IEEE-bit-equal with count equality both ways (the Milvus/FAISS
+    growing-segment design: freshness costs no accuracy)."""
     from game_data_etl_pipeline_spark.llmdata.ann_index import (
         read_ann_index,
         serve_with_adc_referee,
@@ -1829,48 +1597,27 @@ def op_stream_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def op_stream_ann_serve_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THE STREAMED STORE'S FULL LIFECYCLE — stream-ingest -> delete ->
-    compact -> serve (round-10 verdict task 2: the offline upsert tree
-    has delete+compact with a value-level serve gate, but the streamed
-    store only ever ACCUMULATED segments — real growing-segment stores
-    tombstone and merge those too, or the 'freshness costs nothing'
-    claim quietly stops at the first GDPR purge). Embeddings arrive in
-    3 micro-batches through the shared ``stream_ann_store`` device
-    (each commit appends a cent_id-partitioned segment encoded against
-    the frozen trained structure); an explicit id-LIST purge request
-    (TOMB_IDS — the GDPR-takedown shape, round-12 verdict task 2; the
-    pmod residue fixture retired) is then broadcast into the
-    tombstone anti-join and the per-cell
-    append segments merge into ONE segment per cell — survivors
-    stream through a shuffle-free per-cell rewrite, bytes moved, never
-    re-encoded — and the verbatim probe -> ADC -> shortlist -> rerank
-    chain serves from the compacted streamed store.
+    """The streamed ANN store's full lifecycle, stream-ingest -> delete
+    -> compact -> serve: the embeddings arrive as 3 micro-batches
+    through ``stream_ann_store`` (one cent_id-partitioned segment per
+    epoch); the id-list purge request TOMB_IDS is broadcast into the
+    tombstone anti-join of ``compact_ann_postings``, which rewrites the
+    survivors into ONE segment per cell (bytes moved, never
+    re-encoded) in a staged sibling tree; the probe -> ADC -> shortlist
+    -> rerank chain serves from it.
 
-    Two referees, both in-query because DuckDB cannot replay trained
-    codebooks: ``adc_bitmatch_vs_main`` holds every probed-cell ADC
-    score from the compacted STREAMED segments IEEE-bit-equal,
-    pair-for-pair with count equality both directions, to the scores
-    from the ORIGINAL offline build artifact restricted to survivors
-    (frozen router + codebooks + deterministic encode make post-delete
-    scores exactly replayable across stores — the shared
-    ``serve_with_adc_referee`` body); ``segments_merged`` pins the compaction
-    did real filesystem work (strictly fewer parquet files than the
-    3-appends-per-cell streamed store). A third,
-    ``purge_ledger_consistent`` (round-13 verdict task 2), reads the
-    compaction's persisted purge LEDGER back at serve through the
-    shared ``purge_ledger_referee`` and holds it to the session
-    TOMB_IDS digest plus the before/after/purged posting counts
-    measured on the persisted stores — the offline lifecycle rows'
-    evidence discipline on the streamed path. The driver hash-verifies the
+    Referees, in-query because DuckDB cannot replay trained codebooks:
+    ``adc_bitmatch_vs_main`` holds every probed-cell ADC score from the
+    compacted streamed segments IEEE-bit-equal, pair-for-pair with
+    count equality both ways, to the offline build's scores restricted
+    to survivors (``serve_with_adc_referee``); ``segments_merged``
+    asserts strictly fewer parquet files than the streamed store;
+    ``purge_ledger_consistent`` reads the compaction's purge ledger
+    back (``purge_ledger_referee``) and holds it to the TOMB_IDS digest
+    and the posting counts of both stores. The oracle hash-verifies the
     per-query survivor neighborhoods against op_sim_ivfpq_serve's
-    oracle re-derived over ``vec_id NOT IN TOMB_IDS``.
-
-    At 100 TB this is the nightly segment-merge on the ingest tier:
-    per-commit segments land O(batch) all day, the merge reads each
-    cell range once and rewrites survivors shuffle-free, and the
-    morning's queries fan over merged segments with bit-identical
-    scores — freshness, deletes, and compaction proven mutually
-    score-neutral."""
+    oracle re-derived over ``vec_id NOT IN TOMB_IDS``: freshness,
+    deletes and compaction are score-neutral."""
     from game_data_etl_pipeline_spark.llmdata.ann_index import (
         compact_ann_postings,
         read_ann_index,
@@ -1882,20 +1629,10 @@ def op_stream_ann_serve_compacted(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     tomb = F.col("vec_id").isin(*TOMB_IDS)
 
-    # compact: drop the broadcast TOMB_IDS purge list, merge the
-    # per-commit appends into ONE segment per cell in a sibling tree —
-    # the shared compact_ann_postings algebra (the same code
-    # ensure_compact_tree and the e2e lineage run), pointed at the
-    # streamed store; the store itself is never mutated, the
-    # ensure_compact_tree discipline. The applied purge list rides the
-    # compactor's purge LEDGER and the serve path replays the
-    # check_tomb_meta handshake against it (the e2e trees' staleness
-    # discipline; one evidence artifact — r13 task 3).
+    # the store itself is never mutated; the compactor writes the purge
+    # ledger last in the staging tree, so a crash publishes nothing
     compacted_dir = os.path.join(os.path.dirname(store), "compacted")
     shutil.rmtree(compacted_dir, ignore_errors=True)
-    # staged + atomic publish (round-13 verdict task 7): the compactor
-    # writes the purge ledger LAST, so the rename either exposes a
-    # fully-evidenced compacted tree or nothing at all
     with staging_tree(compacted_dir) as staging:
         compact_ann_postings(
             spark, store, staging, tombstones=tombstone_ids_df(spark, "vec_id")
@@ -1903,11 +1640,6 @@ def op_stream_ann_serve_compacted(spark: SparkSession, sf_dir: str) -> DataFrame
         publish_staging(staging, compacted_dir, marker=PURGE_LEDGER)
     files_before = count_parquet_files(store)
     files_after = count_parquet_files(compacted_dir)
-    # purge-list handshake against the purge LEDGER itself (round-13
-    # verdict task 3: the duplicate _stream_compact_done.json marker is
-    # gone — handshake and deletion evidence are ONE underscore-
-    # prefixed artifact, which Spark's parquet listing skips even
-    # though it lives inside the postings layout)
     check_tomb_meta(compacted_dir, PURGE_LEDGER)
 
     coarse, books, main_postings = read_ann_index(spark, sf_dir)
@@ -1915,11 +1647,9 @@ def op_stream_ann_serve_compacted(spark: SparkSession, sf_dir: str) -> DataFrame
     comp = spark.read.parquet(compacted_dir).select(
         "vec_id", "codes", F.col("cent_id").cast("long").alias("cent_id")
     )
-    # the survivor world: candidate/rerank/audit corpus excludes the
-    # purged ids; queries (vec_id < 4) stay external vectors (TOMB_IDS
-    # are all >= 4 by construction, asserted at the constant).
-    # Referee yardstick: the offline build artifact restricted to
-    # survivors — the shared serve_with_adc_referee body.
+    # survivor world: the purged ids leave the candidates; the queries
+    # (vec_id < 4, never in TOMB_IDS) stay; the yardstick is the
+    # offline build restricted to survivors
     served, audit = serve_with_adc_referee(
         emb,
         emb.filter((F.col("vec_id") < 4) | ~tomb),
@@ -1931,10 +1661,6 @@ def op_stream_ann_serve_compacted(spark: SparkSession, sf_dir: str) -> DataFrame
     audit = audit.withColumn(
         "segments_merged", F.lit(0 < files_after < files_before)
     )
-    # purge-evidence referee (round-13 verdict task 2): read the
-    # ledger back at serve and hold it to the purge measured on the
-    # persisted streamed store vs its compacted sibling — counts are
-    # posting rows read from disk, the offline lifecycle discipline
     paudit = purge_ledger_referee(
         spark,
         compacted_dir,
@@ -1954,33 +1680,22 @@ def op_stream_ann_serve_compacted(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle=decontam_ledger_oracle("bloom_pruned"),
 )
 def op_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DECONTAMINATION AT INGESTION TIME — the screen moved from the
-    offline corpus pass to the arrival stream, which is where a 100 TB
-    pipeline actually wants it (screen each crawl shard as it lands,
-    not the assembled corpus months later): the benchmark side is
-    static, so its fixed-size Bloom bitmap (the
-    op_corpus_decontaminate_bloom words table, ~0.5 MB regardless of
-    corpus size) and its distinct shingle set are built ONCE and
-    eagerly checkpointed; training documents then arrive in 3
-    micro-batches and each foreachBatch transaction shingles ONLY its
-    batch, probes the bitmap map-side (all-k-bits containment), exact-
-    rescreens its bounded Bloom-positive set against the benchmark
-    pairs, and appends its per-doc contamination ledger — O(batch)
-    work per commit, the training corpus never assembled, never
-    re-scanned, never shuffled by shingle.
+    """Decontamination at ingestion time: the benchmark side is static,
+    so its Bloom bitmap (the op_corpus_decontaminate_bloom words table,
+    ~0.5 MB whatever the corpus size) and its distinct (b_id, g) pairs
+    are built once and checkpointed; the training documents then
+    arrive as 3 micro-batches (xxhash64(doc_id) pmod 3, a content-blind
+    router), and each epoch shingles only its batch, probes the bitmap
+    map-side, exact-rescreens its Bloom-positive shingles against the
+    benchmark pairs and writes its per-doc ledger as its own segment.
+    The training corpus is never assembled or shuffled by shingle.
 
-    The decomposition is exact by construction: a document's shingles
-    live entirely inside its own batch and the ledger is per-doc, so
-    the union of per-batch ledgers IS the whole-corpus ledger — which
-    the gate proves at value level: the oracle is
-    op_corpus_decontaminate's ledger VERBATIM (every flagged doc_id,
-    its distinct-hit-shingle count, its distinct-benchmark-doc count,
-    hash-compared). ``bloom_pruned`` audits that the bitmap did real
-    work: summed across batches, strictly fewer Bloom-positive
-    shingles entered the exact rescreen than were probed. Batches
-    split by xxhash64(doc_id) pmod 3 — the content-blind router shape
-    of a real ingest fan-out — with the residue-coverage assert
-    failing loudly on degenerate fixtures."""
+    A document's shingles live inside its own batch and the ledger is
+    per-doc, so the union of the per-epoch ledgers is the whole-corpus
+    ledger: the oracle is op_corpus_decontaminate's ledger verbatim.
+    ``bloom_pruned`` audits that, summed over epochs, fewer
+    Bloom-positive shingles entered the exact rescreen than were
+    probed."""
     from game_data_etl_pipeline_spark.llmdata.dedup import (
         _shingles,
         bloom_candidates,
@@ -2009,24 +1724,13 @@ def op_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     train_docs = docs.filter(~is_bench).withColumn(
         "batch_id", F.pmod(F.xxhash64("doc_id"), F.lit(3)).cast("int")
     )
-    stage = _stage_microbatches(
-        train_docs, work, residue_col="batch_id", op="op_stream_decontaminate"
-    )
 
     # per-batch (n_probed, n_cand) pairs, measured by observe() riding
-    # the ledger write (r16, guide §1.2: the r15 shape paid 4 driver
-    # actions per commit — two localCheckpoints materializing the
-    # shingle and candidate sets plus two writes; with the counters as
-    # CollectMetrics nodes on the ONE chain, each set has exactly one
-    # consumer and the whole commit is one job). CollectMetrics blocks
-    # pushdown, so n_probed counts exactly the distinct batch shingles
-    # and n_cand exactly the Bloom-positive survivors — the same rows
-    # the old standalone count jobs measured.
-    # A retried epoch must leave the end state of one run: each epoch
-    # overwrites its own ledger segment, and its counters are keyed by
-    # epoch_id (last write wins) and persisted next to the ledger.
-    from pyspark.sql import Observation
-
+    # the ledger write, so each commit is one job. CollectMetrics
+    # blocks pushdown, so n_probed counts exactly the distinct batch
+    # shingles and n_cand exactly the Bloom-positive survivors.
+    # Counters are keyed by epoch_id (a rerun epoch replaces its pair)
+    # and persisted next to the ledger as counters.json.
     batch_counters: dict[int, tuple[int, int]] = {}
 
     def screen(batch_df: DataFrame, epoch_id: int) -> None:
@@ -2040,29 +1744,23 @@ def op_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         candidates = bloom_candidates(sh, words).observe(
             obs_cand, F.count(F.lit(1)).alias("n")
         )
-        (
+        write_epoch(
             candidates.join(F.broadcast(bench_pairs), "g")
             .groupBy("doc_id")
             .agg(
                 F.countDistinct("g").alias("n_hit_shingles"),
                 F.countDistinct("b_id").alias("n_bench_docs"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(ledger_store, f"seg{epoch_id}"))
+            ),
+            ledger_store,
+            epoch_id,
         )
         batch_counters[epoch_id] = (obs_probed.get["n"], obs_cand.get["n"])
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string, batch_id int")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(stage, "*"))
-    )
-    q = stream.writeStream.foreachBatch(screen).trigger(availableNow=True).start()
-    q.awaitTermination()
+    replay_microbatches(spark, train_docs, work, screen, op="op_stream_decontaminate")
 
     with open(os.path.join(work, "counters.json"), "w") as f:
         json.dump({str(e): list(pc) for e, pc in sorted(batch_counters.items())}, f)
-    ledger = spark.read.parquet(os.path.join(ledger_store, "seg*"))
+    ledger = spark.read.parquet(ledger_store).drop("seg")
     n_probed = sum(p for p, _c in batch_counters.values())
     n_cand = sum(c for _p, c in batch_counters.values())
     audit = spark.range(1).select(
@@ -2082,37 +1780,24 @@ def op_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=decontam_ledger_oracle("merged_equals_rebuilt", "fill_under_max"),
 )
 def op_stream_bloom_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THE BENCHMARK ARRIVES AS A STREAM — op_bloom_index_upsert's
-    delta-merge algebra moved to Structured Streaming, completing the
-    contamination filter's lifecycle matrix (build offline / serve
-    persisted / batch-delta upsert / THIS op for continuous benchmark
-    growth — the shape of an eval suite that gains tasks weekly):
-    benchmark documents arrive in 3 content-hash-routed micro-batches;
-    each foreachBatch transaction shingles ONLY its batch and appends
-    two O(batch) artifacts — the batch's (b_id, g) pair set and its
-    words-table delta (a bit_or fold of just those shingles, <=65k
-    rows). After the stream drains, ONE bounded bit_or groupBy folds
-    the persisted deltas into the final filter: bitmaps are monotone
-    and bit_or is associative-commutative, so arrival order, batch
-    boundaries, and shingle duplication across batches all vanish —
-    the merge is EXACT by algebra, not by luck.
+    """The benchmark arrives as a stream: op_bloom_index_upsert's
+    delta-merge algebra on Structured Streaming. Benchmark documents
+    arrive as 3 content-hash-routed micro-batches; each epoch shingles
+    only its batch and writes two O(batch) segments, its (b_id, g) pair
+    set and its words-table delta (a bit_or fold of those shingles,
+    <= 65k rows). After the stream drains ONE bounded bit_or groupBy
+    folds the deltas into the filter; bit_or is associative,
+    commutative and idempotent, so arrival order, batch boundaries and
+    shingles shared across batches do not change it.
 
-    Gate: the training corpus screened with the stream-accumulated
-    filter reproduces the offline exact screen's per-doc ledger
-    VERBATIM (driver value-hash), and two referees ride along:
-    ``merged_equals_rebuilt`` holds the folded filter word-for-word
-    equal (count equality both directions + broadcast join + 64-bit
-    ==) to a from-scratch rebuild over the full benchmark — the
-    in-query referee that exists to VERIFY, paying the one
-    bench-side re-scan only in this gate; ``fill_under_max`` pins the
-    accumulated filter under the saturation ceiling (a stream that
-    quietly outgrows the geometry must surface here, the same
-    BLOOM_FILL_MAX gauge the builders enforce loudly).
-
-    At 100 TB this is benchmark-registry maintenance as an ingest
-    stream: each new eval shard lands O(shard), the 0.5 MB filter
-    re-folds in one vocabulary-free bounded job, and no previously
-    ingested benchmark doc is ever re-read."""
+    Gate: the training corpus screened with the folded filter
+    reproduces the offline exact screen's per-doc ledger verbatim, and
+    two referees ride along: ``merged_equals_rebuilt`` holds the folded
+    filter word-for-word equal to a from-scratch rebuild over the full
+    benchmark (the one bench-side re-scan, paid only in this gate), and
+    ``fill_under_max`` pins the filter under BLOOM_FILL_MAX, the
+    saturation ceiling the index builds enforce. No ingested benchmark doc
+    is ever re-read."""
     from game_data_etl_pipeline_spark.llmdata.dedup import (
         _shingles,
         bloom_candidates,
@@ -2130,43 +1815,23 @@ def op_stream_bloom_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = docs.filter(is_bench).withColumn(
         "batch_id", F.pmod(F.xxhash64("doc_id"), F.lit(3)).cast("int")
     )
-    stage = _stage_microbatches(
-        bench, work, residue_col="batch_id", op="op_stream_bloom_upsert"
-    )
 
     def ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        # one O(batch) shingle pass lands the batch's pair set in its
-        # OWN segment dir; the words-table delta then folds from the
-        # PERSISTED batch segment read back from disk (r16, guide
-        # §1.2: the r15 shape eagerly checkpointed the shingle set so
-        # two appends could share it — 3 driver actions and a
-        # block-manager materialization per commit; deriving the delta
-        # from the just-persisted segment is one action fewer, skips
-        # the checkpoint, and makes the delta provably a function of
-        # the durable artifact, the evidence discipline the compactors
-        # use)
-        # A retried epoch overwrites its own segment. Its words delta is
-        # appended again, which only duplicates rows that the bit_or
-        # fold below absorbs (x | x == x), so the filter is unchanged.
-        seg = os.path.join(pair_store, f"seg{epoch_id}")
-        (
+        # the batch's (b_id, g) pair set lands in its own segment, and
+        # its words-table delta folds from that persisted segment, so
+        # the delta is a function of the durable artifact and the
+        # shingle set needs no checkpoint
+        write_epoch(
             _shingles(batch_df.select("doc_id", "text"))
             .select(F.col("doc_id").alias("b_id"), "g")
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(seg)
+            .distinct(),
+            pair_store,
+            epoch_id,
         )
-        bloom_words(
-            spark.read.parquet(seg).select("g").distinct()
-        ).write.mode("append").parquet(word_deltas)
+        seg = spark.read.parquet(os.path.join(pair_store, f"seg={epoch_id}"))
+        write_epoch(bloom_words(seg.select("g").distinct()), word_deltas, epoch_id)
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string, batch_id int")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(stage, "*"))
-    )
-    q = stream.writeStream.foreachBatch(ingest).trigger(availableNow=True).start()
-    q.awaitTermination()
+    replay_microbatches(spark, bench, work, ingest, op="op_stream_bloom_upsert")
 
     # the post-stream fold: ONE bit_or groupBy over the persisted
     # deltas (<= 3 x 65k rows, bounded by geometry, not corpus)
@@ -2176,7 +1841,7 @@ def op_stream_bloom_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.bit_or("bits").alias("bits"))
         .localCheckpoint()
     )
-    bench_pairs = spark.read.parquet(os.path.join(pair_store, "seg*"))
+    bench_pairs = spark.read.parquet(pair_store)
 
     # the screen, from the stream-accumulated filter
     train = _shingles(docs.filter(~is_bench)).distinct()

@@ -7,9 +7,11 @@ Usage: python scripts/dump_plans.py <tag> <suffix> <name> [<name> ...]
 
 e.g.  python scripts/dump_plans.py r16 after op_sim_mmr q_retrieval_pipeline
 
-Streaming ops run their stream when invoked (the returned frame is the
-post-stream batch plan) — slower to dump, but the serving plan is the
-part the evidence is about.
+Each op's declared setup steps (``spec.setup``) run before the op, as
+in bench.py, so an op that serves a persisted index is dumped with
+that index built. Streaming ops run their stream when invoked (the
+returned frame is the post-stream batch plan) — slower to dump, but
+the serving plan is the part the evidence is about.
 """
 
 from __future__ import annotations
@@ -42,6 +44,8 @@ def main() -> int:
             rc = 1
             continue
         try:
+            for step in spec.setup:
+                step(spark, sf_dir)
             plan = I.explain_str(spec.fn(spark, sf_dir), "formatted")
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: {type(e).__name__}: {e}", file=sys.stderr)

@@ -1,6 +1,7 @@
 """The persisted-index lifecycle (llmdata/artifacts.py) is bookkeeping
 around the Spark writes: these tests pin the Spark work of a cold build
-and the cache-hit rule of every op's declared setup."""
+and of a warm run of each streamed store op, and the cache-hit rule of
+every op's declared setup."""
 
 from __future__ import annotations
 
@@ -15,7 +16,7 @@ SPECS = registry.all_specs()
 # Spark jobs of one cold build on the sf0.001 fixture. Job counts do not
 # depend on host speed or core count; a change to a builder's writes
 # moves them.
-COLD_BUILD_JOBS = {"ann": 30, "lex": 10, "bloom": 10}
+COLD_BUILD_JOBS = {"ann": 29, "lex": 10, "bloom": 10}
 
 
 def _jobs(spark, fn, *args) -> int:
@@ -39,6 +40,38 @@ def test_cold_build_jobs(spark, sf_dir, tmp_path, monkeypatch, family):
     monkeypatch.setenv(env, str(tmp_path / family))
     assert _jobs(spark, build, sf_dir) == COLD_BUILD_JOBS[family]
     assert _jobs(spark, build, sf_dir) == 0, "a cache hit ran Spark jobs"
+
+
+# Spark jobs of one warm run (the op called and its result collected)
+# of each streamed store op on the sf0.001 fixture; the same on 2 and 4
+# cores. Warm means the ANN and lexical indexes exist and the served
+# query terms' buckets are resolved, as after any earlier run.
+STREAM_JOBS = {
+    "op_stream_lex_serve": 26,
+    "op_stream_index_ingest": 39,
+    "op_stream_lex_ingest": 23,
+    "op_stream_incremental_dedup": 23,
+    "op_stream_incremental_fuzzy_dedup": 47,
+    "op_stream_foreachbatch_upsert": 12,
+    "op_stream_ann_serve": 60,
+    "op_stream_decontaminate": 29,
+    "op_stream_bloom_upsert": 44,
+}
+
+
+@pytest.mark.parametrize("op", sorted(STREAM_JOBS))
+def test_streamed_op_jobs(spark, sf_dir, op):
+    from game_data_etl_pipeline_spark.llmdata.ann_index import build_ann_index
+    from game_data_etl_pipeline_spark.llmdata.lex_index import (
+        build_lex_index,
+        resolve_term_buckets,
+    )
+
+    build_ann_index(spark, sf_dir)
+    build_lex_index(spark, sf_dir)
+    resolve_term_buckets(spark, ("vector", "stream", "spark"))  # bm25_from_index's default
+    run = lambda spark, sf_dir: SPECS[op].fn(spark, sf_dir).collect()  # noqa: E731
+    assert _jobs(spark, run, sf_dir) == STREAM_JOBS[op]
 
 
 def _published_trees() -> set[str]:

@@ -345,16 +345,27 @@ def test_streamed_compact_publish_is_atomic(spark, sf_dir, monkeypatch):
 
 def test_replayed_epoch_leaves_single_run_end_state(spark, sf_dir, monkeypatch):
     """A retried micro-batch (the foreachBatch body run again with the
-    same epoch_id) must leave the end state of one clean run: the
-    streamed Bloom upsert's per-epoch pair segments, and the streamed
-    decontamination screen's per-epoch ledger and counters."""
+    same epoch_id) must leave the end state of one clean run, for every
+    streamed store: each epoch overwrites its own ``seg=<epoch>``
+    segment, and the dedup bodies read only earlier segments (a body
+    that read its own would admit nothing on the rerun). The
+    decontamination counters are checked too."""
     import json
 
     from pyspark.sql.streaming.readwriter import DataStreamWriter
 
     from game_data_etl_pipeline_spark.streaming.queries import _session_workdir
 
-    ops = (("op_stream_bloom_upsert", "bloomupsert"), ("op_stream_decontaminate", "decontam"))
+    ops = (
+        ("op_stream_bloom_upsert", "bloomupsert"),
+        ("op_stream_decontaminate", "decontam"),
+        ("op_stream_lex_serve", "lexserve"),
+        ("op_stream_index_ingest", "idxingest"),
+        ("op_stream_lex_ingest", "lexingest"),
+        ("op_stream_incremental_dedup", "incdedup"),
+        ("op_stream_incremental_fuzzy_dedup", "incfuzzy"),
+        ("op_stream_foreachbatch_upsert", "upsert"),
+    )
 
     def end_state(op: str, tag: str):
         rows = sorted(tuple(r) for r in SPECS[op].fn(spark, sf_dir).collect())
