@@ -54,16 +54,15 @@ from game_data_etl_pipeline_spark.llmdata.artifacts import (
     TOMB_IDS,
     TOMB_IDS_SQL,
     TOMB_MOD,
-    TOMB_RESIDUE,
+    Postings,
     TreeFamily,
-    count_parquet_files as _count_parquet_files,
+    compact_postings,
     ensure_tree,
-    purge_ids_digest,
     purge_ledger_current,
-    read_purge_ledger,
+    purge_ledger_referee,
+    segments_merged,
     tomb_ids_current,
-    tombstone_ids_df,
-    write_purge_ledger,
+    tomb_residue,
 )
 from game_data_etl_pipeline_spark.llmdata.similarity import (
     IVFPQ_PROBES,
@@ -82,8 +81,10 @@ from game_data_etl_pipeline_spark.registry import register
 INDEX_VERSION = 1
 
 ANN = TreeFamily("SPARK_GRAFT_INDEX_DIR", "ann_index", "embeddings.parquet", INDEX_VERSION)
-_index_root = ANN.root
-ann_index_dir = ANN.dir
+
+# what a tombstone compaction of ANN postings rewrites: PQ codes are
+# moved as they are, never re-encoded
+ANN_POSTINGS = Postings("vec_id", "cent_id", ("vec_id", "codes", "cent_id"))
 
 
 def ann_postings(
@@ -128,7 +129,7 @@ def build_ann_index(spark: SparkSession, sf_dir: str) -> str:
         )
 
     meta = {"version": INDEX_VERSION, "pq_m": PQ_M, "pq_ksub": PQ_KSUB, "source": sf_dir}
-    return ensure_tree(ann_index_dir(sf_dir), sf_dir, "meta.json", meta, build)
+    return ensure_tree(ANN.dir(sf_dir), sf_dir, "meta.json", meta, build)
 
 
 def read_ann_index(
@@ -158,9 +159,7 @@ def serve_with_adc_referee(
 ) -> tuple[DataFrame, DataFrame]:
     """The ONE survivor-serve + ADC-bit-equality-referee body every
     frozen-structure replay gate shares (op_sim_ivfpq_serve_compacted,
-    op_stream_ann_serve / _compacted, op_sim_lifecycle_e2e —
-    previously four near-identical scaffolds; the round-12 review's
-    drift finding, the compact_ann_postings argument one level up):
+    op_stream_ann_serve / _compacted, op_sim_lifecycle_e2e):
     run the verbatim probe -> ADC -> shortlist -> exact-rerank chain
     over ``emb_surv``'s candidate world from ``comp_postings``, and
     referee every probed-cell ADC score from that store against the
@@ -171,9 +170,8 @@ def serve_with_adc_referee(
     crossJoin. ``emb`` supplies the query slot (vec_id < 4), and the
     query-slot exclusion is applied to BOTH postings frames HERE —
     symmetrically, so a caller passing either frame filtered or
-    unfiltered gets the same referee (the round-12 review's
-    asymmetric-contract finding); tombstone/survivor filters compose
-    by pre-filtering the frames."""
+    unfiltered gets the same referee; tombstone/survivor filters
+    compose by pre-filtering the frames."""
     from game_data_etl_pipeline_spark.llmdata.audits import bitmatch_audit
 
     comp_cands = comp_postings.filter(F.col("vec_id") >= 4)
@@ -501,73 +499,12 @@ def op_sim_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-def compact_ann_postings(
-    spark: SparkSession,
-    src_postings: str,
-    dest_postings: str,
-    tombstones: DataFrame | None = None,
-) -> None:
-    """The ONE ANN delete+compact algebra: read the postings at
-    ``src_postings``, drop tombstoned vectors, and rewrite ONE segment
-    per cell under ``dest_postings`` — bytes moved, never re-encoded,
-    the input tree untouched. ``tombstones`` is a (vec_id) DataFrame
-    — the id-list shape a real purge has — broadcast into a left-anti
-    join (survivors stream map-side, no shuffle beyond the per-cell
-    repartition the rewrite needs anyway); ``None`` keeps the
-    deterministic pmod(vec_id, TOMB_MOD) == TOMB_RESIDUE residue
-    fixture. Shared by ensure_compact_tree (offline upsert tree),
-    op_stream_ann_serve_compacted (streamed store), and the e2e
-    lifecycle lineage, so offline, streamed, and composed compaction
-    cannot drift."""
-    from pyspark.sql import Observation
-
-    src = spark.read.parquet(src_postings).select("vec_id", "codes", "cent_id")
-    # n_before measured by an observe() metric ON THE SAME SCAN that
-    # feeds the rewrite (r15, guide §1.2: the old shape re-scanned the
-    # whole source tree a second time just to count it) — the ledger
-    # still attests to exactly the rows the compaction read
-    obs_before = Observation("compact_ann_n_before")
-    src_counted = src.observe(obs_before, F.count(F.lit(1)).alias("n"))
-    if tombstones is None:
-        survivors = src_counted.filter(
-            F.pmod(F.col("vec_id"), F.lit(TOMB_MOD)) != TOMB_RESIDUE
-        )
-    else:
-        survivors = src_counted.join(
-            F.broadcast(tombstones.select("vec_id")), "vec_id", "left_anti"
-        )
-    (
-        survivors.repartition("cent_id")
-        .write.mode("overwrite")
-        .partitionBy("cent_id")
-        .parquet(dest_postings)
-    )
-    # purge evidence, in the same output tree (and therefore the same
-    # staging transaction when the caller stages): n_after is counted
-    # from the PERSISTED survivors — the ledger attests to what was
-    # actually written, not to a plan
-    write_purge_ledger(
-        dest_postings,
-        n_before=obs_before.get["n"],
-        n_after=spark.read.parquet(dest_postings).count(),
-        purge_ids=(
-            None
-            if tombstones is None
-            else [r[0] for r in tombstones.select("vec_id").distinct().collect()]
-        ),
-        predicate=(
-            f"pmod(vec_id, {TOMB_MOD}) == {TOMB_RESIDUE}"
-            if tombstones is None
-            else None
-        ),
-    )
-
 
 def ensure_compact_tree(spark: SparkSession, sf_dir: str) -> str:
     """Build (idempotently) the compacted tree: the upsert demo tree's
-    2-segments-per-cell postings with the pmod(vec_id, TOMB_MOD) ==
-    TOMB_RESIDUE tombstones dropped, rewritten ONE segment per cell
-    into a fresh tree — the input tree is never mutated, so a crash
+    2-segments-per-cell postings with the ``tomb_residue`` tombstones
+    dropped, rewritten ONE segment per cell into a fresh tree by
+    ``compact_postings`` — the input tree is never mutated, so a crash
     mid-compaction leaves the old index serving. A tree without its
     purge ledger is rebuilt. Shared by op_sim_index_compact (which
     audits the rewrite) and op_sim_ivfpq_serve_compacted (which
@@ -575,8 +512,8 @@ def ensure_compact_tree(spark: SparkSession, sf_dir: str) -> str:
     demo = ensure_upsert_tree(spark, sf_dir)
 
     def build(staging: str) -> None:
-        compact_ann_postings(
-            spark, os.path.join(demo, "postings"), os.path.join(staging, "postings")
+        compact_postings(
+            spark, ANN_POSTINGS, os.path.join(demo, "postings"), os.path.join(staging, "postings")
         )
 
     return ensure_tree(
@@ -641,7 +578,7 @@ def op_sim_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     rename swaps readers to the merged segments."""
     demo = ensure_upsert_tree(spark, sf_dir)
     comp = ensure_compact_tree(spark, sf_dir)
-    tomb = F.pmod(F.col("vec_id"), F.lit(TOMB_MOD)) == TOMB_RESIDUE
+    tomb = tomb_residue("vec_id")
 
     before = spark.read.parquet(os.path.join(demo, "postings")).select(
         "vec_id", "codes", F.col("cent_id").cast("long").alias("cent_id")
@@ -651,8 +588,7 @@ def op_sim_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("codes").alias("a_codes"),
         F.col("cent_id").cast("long").alias("a_cent_id"),
     )
-    files_before = _count_parquet_files(os.path.join(demo, "postings"))
-    files_after = _count_parquet_files(os.path.join(comp, "postings"))
+    merged = segments_merged(os.path.join(demo, "postings"), os.path.join(comp, "postings"))
     bstats = before.agg(
         F.count(F.lit(1)).alias("n_before"),
         F.sum(F.when(tomb, 1).otherwise(0)).alias("n_tombstoned"),
@@ -686,7 +622,7 @@ def op_sim_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("n_joined") == F.col("n_after_actual"))
                 & (F.col("n_same") == F.col("n_after_actual"))
             ).alias("survivors_identical"),
-            F.lit(0 < files_after < files_before).alias("segments_merged"),
+            F.lit(merged).alias("segments_merged"),
         )
     )
 
@@ -754,7 +690,7 @@ def op_sim_ivfpq_serve_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = ensure_compact_tree(spark, sf_dir)
     coarse, books, main_postings = read_ann_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    tomb = F.pmod(F.col("vec_id"), F.lit(TOMB_MOD)) == TOMB_RESIDUE
+    tomb = tomb_residue("vec_id")
     comp_postings = spark.read.parquet(os.path.join(comp, "postings")).select(
         "vec_id", "codes", F.col("cent_id").cast("long").alias("cent_id")
     )
@@ -778,18 +714,18 @@ def ensure_ann_e2e_tree(spark: SparkSession, sf_dir: str) -> str:
     ANN family: one lineage walked build -> delta upsert (the
     ensure_upsert_tree end state: full coverage, two segments per
     cell) -> id-LIST tombstone (TOMB_IDS, the purge-request shape) ->
-    compact through the shared ``compact_ann_postings`` algebra into
-    ONE segment per cell. A tree purged with another list, or without
-    its purge ledger, is rebuilt; the upsert tree stays live
-    throughout."""
+    compact through the shared ``compact_postings`` into ONE segment
+    per cell. A tree purged with another list, or without its purge
+    ledger, is rebuilt; the upsert tree stays live throughout."""
     demo = ensure_upsert_tree(spark, sf_dir)
 
     def build(staging: str) -> None:
-        compact_ann_postings(
+        compact_postings(
             spark,
+            ANN_POSTINGS,
             os.path.join(demo, "postings"),
             os.path.join(staging, "postings"),
-            tombstones=tombstone_ids_df(spark, "vec_id"),
+            purge_ids=TOMB_IDS,
         )
 
     return ensure_tree(
@@ -838,15 +774,13 @@ def ensure_ann_e2e_tree(spark: SparkSession, sf_dir: str) -> str:
     """,
 )
 def op_sim_lifecycle_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THE FULL LIFECYCLE COMPOSED ON ONE LINEAGE — round-11 verdict
-    task 2: every transition (build->upsert, upsert->compact,
-    stream->serve) was gated in isolation; this op walks ONE tree
-    through build -> delta upsert -> id-list tombstone -> compact ->
-    serve and holds the END STATE to a fresh encode of the net
-    corpus. It also closes task 3's delete-shape gap: the tombstones
-    here are an explicit id LIST (TOMB_IDS — the GDPR-purge /
-    takedown-set shape), anti-joined by the shared
-    ``compact_ann_postings`` algebra, not the residue predicate the
+    """THE FULL LIFECYCLE COMPOSED ON ONE LINEAGE: where each transition
+    (build->upsert, upsert->compact, stream->serve) has its own gate,
+    this op walks ONE tree through build -> delta upsert -> id-list
+    tombstone -> compact -> serve and holds the END STATE to a fresh
+    encode of the net corpus. The tombstones here are an explicit id
+    LIST (TOMB_IDS — the GDPR-purge / takedown-set shape), anti-joined
+    by the shared ``compact_postings``, not the residue predicate the
     per-transition gates use.
 
     Gate: the verbatim probe -> ADC -> shortlist -> exact-rerank
@@ -868,16 +802,12 @@ def op_sim_lifecycle_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
       stronger than the per-transition gates' referee, which compares
       codes COPIED from the same artifact; here the yardstick never
       touches the lineage's bytes.
-    - ``tombstones_enforced``: zero TOMB_IDS rows remain in the e2e
-      postings AND the survivor count is exactly the upsert tree's
-      count minus the purge hits (both sides measured on the
-      persisted trees).
-    - ``purge_ledger_consistent``: the compaction's persisted purge
-      LEDGER (written by the shared compactor inside the same staging
-      transaction — the GDPR evidence artifact) records the session
-      TOMB_IDS digest and count arithmetic that reproduces the
-      tree-measured before/after exactly; a missing ledger fails
-      loudly in ``read_purge_ledger``.
+    - ``tombstones_enforced`` and ``purge_ledger_consistent``
+      (``purge_ledger_referee``): zero TOMB_IDS rows remain in the e2e
+      postings and the survivor count is exactly the upsert tree's
+      count minus the purge hits; the compaction's purge ledger
+      records the session TOMB_IDS digest and the counts measured on
+      the persisted trees; a missing ledger raises.
     - ``segments_merged``: the e2e tree holds strictly fewer parquet
       files than the 2-segments-per-cell upsert tree.
 
@@ -893,7 +823,6 @@ def op_sim_lifecycle_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarse = spark.read.parquet(os.path.join(main_path, "coarse"))
     books = spark.read.parquet(os.path.join(main_path, "codebooks"))
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    tomb_df = tombstone_ids_df(spark, "vec_id")
 
     e2e_postings = spark.read.parquet(os.path.join(e2e, "postings")).select(
         "vec_id", "codes", F.col("cent_id").cast("long").alias("cent_id")
@@ -916,49 +845,15 @@ def op_sim_lifecycle_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         out_col="adc_bitmatch_vs_fresh_encode",
     )
 
-    # referee 2: the purge actually happened, measured on the persisted
-    # trees (zero purged rows left; survivor count == before - hits)
-    before = spark.read.parquet(os.path.join(demo, "postings")).select("vec_id")
-    after = e2e_postings.select("vec_id")
-    b_stats = before.join(F.broadcast(tomb_df), "vec_id", "left_semi").agg(
-        F.count(F.lit(1)).alias("n_purge_hits")
-    ).crossJoin(before.agg(F.count(F.lit(1)).alias("n_before")))
-    a_stats = after.agg(
-        F.count(F.lit(1)).alias("n_after"),
-        F.sum(F.when(F.col("vec_id").isin(*TOMB_IDS), 1).otherwise(0)).alias(
-            "n_tomb_left"
-        ),
+    enforced = purge_ledger_referee(
+        spark,
+        os.path.join(e2e, "postings"),
+        spark.read.parquet(os.path.join(demo, "postings")).select("vec_id"),
+        e2e_postings.select("vec_id"),
+        "vec_id",
     )
-    # referee 4 rides the same stats frame: the compaction's persisted
-    # PURGE LEDGER (the GDPR evidence artifact, round-12 verdict task
-    # 5) must attest to exactly this purge — the recorded id-list
-    # digest is the session TOMB_IDS digest, and the recorded counts
-    # reproduce the before/after arithmetic measured on the trees
-    led = read_purge_ledger(os.path.join(e2e, "postings"))
-    led_ok = (
-        led["purge"].get("kind") == "id_list"
-        and led["purge"].get("digest") == purge_ids_digest(TOMB_IDS)
-        and led["n_purged"] == led["n_before"] - led["n_after"]
-    )
-    enforced = b_stats.crossJoin(F.broadcast(a_stats)).select(
-        (
-            (F.coalesce(F.col("n_tomb_left"), F.lit(0)) == 0)
-            & (F.col("n_after") == F.col("n_before") - F.col("n_purge_hits"))
-        ).alias("tombstones_enforced"),
-        (
-            F.lit(bool(led_ok))
-            & (F.col("n_before") == F.lit(int(led["n_before"])))
-            & (F.col("n_after") == F.lit(int(led["n_after"])))
-            & (F.col("n_purge_hits") == F.lit(int(led["n_purged"])))
-        ).alias("purge_ledger_consistent"),
-    )
-
-    files_before = _count_parquet_files(os.path.join(demo, "postings"))
-    files_after = _count_parquet_files(os.path.join(e2e, "postings"))
-    audit = (
-        eqa.crossJoin(F.broadcast(enforced))
-        .withColumn("segments_merged", F.lit(0 < files_after < files_before))
-    )
+    merged = segments_merged(os.path.join(demo, "postings"), os.path.join(e2e, "postings"))
+    audit = eqa.crossJoin(F.broadcast(enforced)).withColumn("segments_merged", F.lit(merged))
     return served.crossJoin(F.broadcast(audit))
 
 
@@ -1240,7 +1135,8 @@ def op_sim_index_merge_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     moves, and the atomic rename swaps readers to the merged tree."""
     base = ensure_merge_base_tree(spark, sf_dir)
     merged = ensure_merge_policy_tree(spark, sf_dir)
-    man = json.load(open(os.path.join(merged, "postings", MERGE_MANIFEST)))
+    with open(os.path.join(merged, "postings", MERGE_MANIFEST)) as f:
+        man = json.load(f)
 
     before = spark.read.parquet(os.path.join(base, "postings")).select(
         "vec_id", "codes", "cent_id", F.col("seg").cast("int").alias("seg")
@@ -1265,8 +1161,9 @@ def op_sim_index_merge_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     untouched_ok = (
         dig_now == man["untouched_digests"] == dig_merged_tree and len(dig_now) > 0
     )
-    files_before = _count_parquet_files(os.path.join(base, "postings"))
-    files_after = _count_parquet_files(os.path.join(merged, "postings"))
+    files_reduced = segments_merged(
+        os.path.join(base, "postings"), os.path.join(merged, "postings")
+    )
     manifest_ok = (
         man["policy"] == "size_tiered"
         and man["k"] == MERGE_POLICY_K
@@ -1331,7 +1228,7 @@ def op_sim_index_merge_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("merged_rows_identical"),
             F.lit(bool(untouched_ok)).alias("untouched_segments_byte_identical"),
             F.lit(bool(manifest_ok)).alias("manifest_consistent"),
-            F.lit(0 < files_after < files_before).alias("files_reduced"),
+            F.lit(files_reduced).alias("files_reduced"),
         )
     )
 

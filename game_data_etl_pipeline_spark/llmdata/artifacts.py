@@ -29,10 +29,29 @@ here.
   path merely extends this one are left alone, as are ``staging_*``
   dirs (they may be another process's build in flight).
 
-The family-neutral purge primitives live here too: the tombstone
-fixtures (``TOMB_MOD``/``TOMB_RESIDUE`` residue, ``TOMB_IDS`` id list),
-and the purge ledger every compaction writes into its own staging tree
-as the evidence of what it deleted.
+The family-neutral half of a purge lives here too: the tombstone
+fixtures (the ``tomb_residue`` predicate, ``TOMB_IDS`` id list), the
+one tombstone compaction (``compact_postings``) and its purge ledger.
+The compaction contract:
+
+- **One transaction.** The survivors and the purge ledger are written
+  into the same staging tree, so a published tree always carries the
+  evidence of what it deleted and a failed compaction publishes
+  nothing. ``publish_compaction`` is that transaction for a tree that
+  is rebuilt on every run (a streamed store's compaction).
+- **Counts.** ``n_before`` is observed on the compaction's own scan of
+  the source and ``n_after`` on its own write of the survivors: no
+  extra count job, and the ledger attests to exactly the rows read and
+  written.
+- **Ledger location.** An ANN tree keeps it in ``<tree>/postings/``
+  (underscore-prefixed, so Spark's listing skips it), a lexical tree
+  at ``<tree>/``, next to the df/stats the lexical fold re-derives. A
+  family's fold is the only family-specific step: df/stats for the
+  lexical index, nothing for ANN (PQ codes are moved as they are).
+- **Bloom registry.** A registry tree is a pure function of its
+  marker's family map (family -> slice predicate): every registry
+  edit republishes the whole tree from one snapshot of the published
+  families.
 """
 
 from __future__ import annotations
@@ -49,7 +68,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 # how long a displaced tree survives before GC may reap it: long
@@ -219,11 +238,24 @@ def count_parquet_files(root: str) -> int:
     )
 
 
+def segments_merged(before: str, after: str) -> bool:
+    """The merge check of a rewrite: the tree at ``after`` holds at
+    least one and strictly fewer parquet files than ``before``."""
+    files_before, files_after = count_parquet_files(before), count_parquet_files(after)
+    return 0 < files_after < files_before
+
+
 # --- purge primitives ---------------------------------------------------
 
 # residue tombstone fixture: ~6% of ids (pmod keeps the expression
 # total; ids are nonnegative, so DuckDB's % replays it exactly)
 TOMB_MOD, TOMB_RESIDUE = 17, 3
+
+
+def tomb_residue(id_col: str) -> Column:
+    """True for the rows of the residue tombstone fixture."""
+    return F.pmod(F.col(id_col), F.lit(TOMB_MOD)) == TOMB_RESIDUE
+
 
 # id-list tombstone fixture, the shape of a real purge request. The ids
 # lie in the smallest fixture's id range (0..499), outside the query
@@ -239,12 +271,12 @@ TOMB_IDS_SQL = f"({', '.join(map(str, TOMB_IDS))})"
 PURGE_LEDGER = "_purge_ledger.json"
 
 
-def tombstone_ids_df(spark: SparkSession, id_col: str) -> DataFrame:
-    """TOMB_IDS as a one-column DataFrame named ``id_col``, built as a
+def tombstone_ids_df(spark: SparkSession, id_col: str, ids: Sequence[int] = TOMB_IDS) -> DataFrame:
+    """``ids`` as a one-column DataFrame named ``id_col``, built as a
     JVM-side literal explode (a Python local table would plan as Scan
     ExistingRDD, which the serve plan contracts forbid)."""
     return spark.range(1).select(
-        F.explode(F.array(*[F.lit(i).cast("long") for i in TOMB_IDS])).alias(id_col)
+        F.explode(F.array(*[F.lit(int(i)).cast("long") for i in ids])).alias(id_col)
     )
 
 
@@ -285,6 +317,67 @@ def write_purge_ledger(
             },
             f,
         )
+
+
+@dataclass(frozen=True)
+class Postings:
+    """The postings layout a tombstone compaction rewrites."""
+
+    key: str  # the row id a purge names
+    part: str  # partition column: one segment per value after compaction
+    cols: tuple[str, ...]  # the columns kept, in order
+
+
+def compact_postings(
+    spark: SparkSession,
+    layout: Postings,
+    src: str,
+    dest: str,
+    *,
+    purge_ids: Sequence[int] | None = None,
+    ledger_dir: str | None = None,
+) -> None:
+    """The one tombstone compaction: read the postings at ``src``, drop
+    the rows whose ``layout.key`` is in ``purge_ids`` (a broadcast
+    left-anti join; ``None`` drops the ``tomb_residue`` rows instead),
+    rewrite the survivors as one segment per ``layout.part`` value under
+    ``dest``, and write the purge ledger into ``ledger_dir`` (``dest``
+    when None). The source is never mutated; the caller stages ``dest``
+    and the ledger together."""
+    obs_before, obs_after = Observation(), Observation()
+    rows = spark.read.parquet(src).select(*layout.cols).observe(obs_before, F.count(F.lit(1)).alias("n"))
+    if purge_ids is None:
+        survivors = rows.filter(~tomb_residue(layout.key))
+    else:
+        survivors = rows.join(
+            F.broadcast(tombstone_ids_df(spark, layout.key, purge_ids)), layout.key, "left_anti"
+        )
+    (
+        survivors.observe(obs_after, F.count(F.lit(1)).alias("n"))
+        .repartition(layout.part)
+        .write.mode("overwrite")
+        .partitionBy(layout.part)
+        .parquet(dest)
+    )
+    write_purge_ledger(
+        ledger_dir or dest,
+        n_before=obs_before.get["n"],
+        n_after=obs_after.get["n"],
+        purge_ids=purge_ids,
+        predicate=f"pmod({layout.key}, {TOMB_MOD}) == {TOMB_RESIDUE}",
+    )
+
+
+def publish_compaction(final: str, compact: Callable[[str], None]) -> None:
+    """Replace ``final`` by the tree ``compact(staging)`` writes,
+    published with its purge ledger at its root in one rename, and
+    raise unless the ledger records the session TOMB_IDS. For trees
+    rebuilt on every run: the previous ``final`` is removed first."""
+    shutil.rmtree(final, ignore_errors=True)
+    with staging_tree(final) as staging:
+        compact(staging)
+        publish_staging(staging, final, marker=PURGE_LEDGER)
+    check_tomb_meta(final, PURGE_LEDGER)
 
 
 def read_purge_ledger(dest: str) -> dict:
@@ -346,12 +439,16 @@ def tomb_ids_current(path: str, marker: str) -> bool:
 def purge_ledger_referee(
     spark: SparkSession, ledger_dir: str, before: DataFrame, after: DataFrame, id_col: str
 ) -> DataFrame:
-    """One-row boolean frame ``purge_ledger_consistent``: True iff the
-    ledger in ``ledger_dir`` records an id-list purge with the session
-    TOMB_IDS digest and consistent arithmetic, its n_before/n_after
-    equal the row counts of the persisted ``before``/``after`` trees,
-    and its n_purged equals the TOMB_IDS hits counted in ``before``. A
-    missing ledger raises in ``read_purge_ledger``."""
+    """One-row boolean frame of the id-list purge from ``before`` to
+    ``after`` (the persisted trees), both measured on the trees:
+
+    - ``purge_ledger_consistent``: the ledger in ``ledger_dir`` records
+      an id-list purge with the session TOMB_IDS digest and consistent
+      arithmetic, its n_before/n_after equal the row counts of the
+      trees, and its n_purged equals the TOMB_IDS hits in ``before``. A
+      missing ledger raises in ``read_purge_ledger``.
+    - ``tombstones_enforced``: no TOMB_IDS row is left in ``after``, and
+      its count is ``before``'s minus those hits."""
     led = read_purge_ledger(ledger_dir)
     led_ok = (
         led["purge"].get("kind") == "id_list"
@@ -363,12 +460,19 @@ def purge_ledger_referee(
         .agg(F.count(F.lit(1)).alias("n_purge_hits"))
         .crossJoin(before.agg(F.count(F.lit(1)).alias("n_before")))
     )
-    a_stats = after.agg(F.count(F.lit(1)).alias("n_after"))
+    a_stats = after.agg(
+        F.count(F.lit(1)).alias("n_after"),
+        F.sum(F.when(F.col(id_col).isin(*TOMB_IDS), 1).otherwise(0)).alias("n_tomb_left"),
+    )
     return b_stats.crossJoin(F.broadcast(a_stats)).select(
+        (
+            (F.coalesce(F.col("n_tomb_left"), F.lit(0)) == 0)
+            & (F.col("n_after") == F.col("n_before") - F.col("n_purge_hits"))
+        ).alias("tombstones_enforced"),
         (
             F.lit(bool(led_ok))
             & (F.col("n_before") == F.lit(int(led["n_before"])))
             & (F.col("n_after") == F.lit(int(led["n_after"])))
             & (F.col("n_purge_hits") == F.lit(int(led["n_purged"])))
-        ).alias("purge_ledger_consistent")
+        ).alias("purge_ledger_consistent"),
     )

@@ -1461,6 +1461,13 @@ def bloom_words(grams: DataFrame, *, bits: int = BLOOM_BITS) -> DataFrame:
     )
 
 
+def bit_or_fold(words: DataFrame) -> DataFrame:
+    """(widx, bits): the union of the words tables stacked in ``words``.
+    Bitmaps are monotone, so one bit_or per word index is exact; a word
+    index absent from a table contributes nothing."""
+    return words.groupBy("widx").agg(F.bit_or("bits").alias("bits"))
+
+
 def bloom_fill_ratio(words: DataFrame, *, bits: int = BLOOM_BITS) -> float:
     """Measured fill ratio of a words table: popcount of every 64-bit
     word (one bounded aggregate over <= bits/64 rows) over the bitmap
@@ -1657,8 +1664,6 @@ BLOOM_INDEX_VERSION = 1
 BLOOM = TreeFamily(
     "SPARK_GRAFT_INDEX_DIR_BLOOM", "bloom_index", "documents.parquet", BLOOM_INDEX_VERSION
 )
-_bloom_root = BLOOM.root
-bloom_index_dir = BLOOM.dir
 
 
 def check_bloom_meta(path: str) -> None:
@@ -1730,7 +1735,7 @@ def build_bloom_index(spark: SparkSession, sf_dir: str) -> str:
     Both derive from ONE benchmark-side shingle pass; the benchmark
     corpus is never read again by any screen that serves from this
     tree. A tree built at another geometry is rebuilt."""
-    final = bloom_index_dir(sf_dir)
+    final = BLOOM.dir(sf_dir)
 
     def build(staging: str) -> dict:
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1938,15 +1943,11 @@ def ensure_bloom_upsert_tree(spark: SparkSession, sf_dir: str) -> str:
             os.path.join(staging, "base_words")
         )
         # the upsert proper: persisted base words read back, delta words
-        # bit_or-folded in (a union + one bit_or aggregate — word indexes
-        # absent from one side contribute identity-0 bits)
+        # bit_or-folded in
         base_words = spark.read.parquet(os.path.join(staging, "base_words"))
-        merged = (
+        merged = bit_or_fold(
             base_words.unionByName(bloom_words(delta_pairs.select("g").distinct()))
-            .groupBy("widx")
-            .agg(F.bit_or("bits").alias("bits"))
-            .localCheckpoint()
-        )
+        ).localCheckpoint()
         assert_bloom_fill(merged, what=f"bloom_upsert[{final}]")
         merged.coalesce(1).write.parquet(os.path.join(staging, "words"))
         base_pairs.unionByName(delta_pairs).coalesce(4).write.parquet(
@@ -2071,30 +2072,23 @@ BLOOM_FAMILIES = (("suite_a", 0), ("suite_b", 3))
 def ensure_bloom_registry(
     spark: SparkSession, sf_dir: str, families=BLOOM_FAMILIES
 ) -> str:
-    """Build (idempotently, INCREMENTALLY) the (benchmark_id)-keyed
-    contamination FILTER REGISTRY — round-11 verdict task 6: the
-    single persisted filter models ONE benchmark snapshot, but real
-    pipelines screen against many eval suites with different refresh
-    cadences, so each family gets its own filter artifact
-    (``families/<id>/words`` + ``families/<id>/pairs``) and the
-    screen probes their bit_or UNION (``union_words/`` — bitmaps are
-    monotone, so one merged filter is EXACT, never approximate).
+    """Build (idempotently, incrementally) the (benchmark_id)-keyed
+    contamination filter registry: real pipelines screen against many
+    eval suites with different refresh cadences, so each family gets
+    its own filter artifact (``families/<id>/words`` +
+    ``families/<id>/pairs``) and the screen probes their bit_or union
+    (``union_words/`` — bitmaps are monotone, so one merged filter is
+    exact, never approximate).
 
-    Registration is PER FAMILY against the PUBLISHED tree — the shape
-    a live registry actually has: a family not yet in the marker
-    stages a new tree that copies every already-registered family's
-    artifacts forward BYTE-FOR-BYTE, writes the new family's pairs +
-    words (one O(suite) shingle pass), folds the union from the
-    STAGED family copies plus the new words (one O(families x
-    geometry) bit_or over ~0.5 MB filters — no BENCHMARK outside the
-    new suite is ever re-read, and the staged copies are one
-    consistent snapshot, so the fold cannot pair old family bytes
-    with a concurrent publisher's newer union), and
-    republishes. Earlier families' bytes surviving a later
-    registration untouched is therefore a construction invariant, and
-    tests/test_llmdata.py digests a family's artifacts between two
-    registrations to pin it. Saturation guards the union at every
-    registration (the geometry must hold the SUM of the families)."""
+    Registration is per family against the published tree: a family
+    not yet in the marker is added by ``_edit_registry``, which copies
+    every registered family forward byte for byte, builds the new one
+    (one O(suite) shingle pass; no other benchmark is re-read), folds
+    the union from the staged families and republishes. Earlier
+    families' bytes surviving a later registration is therefore a
+    construction invariant (tests/test_llmdata.py digests a family's
+    artifacts between two registrations), and saturation guards the
+    union at every registration."""
     final = BLOOM.dir(sf_dir, "registry")
     for fam, residue in families:
         _register_bloom_family(spark, sf_dir, final, fam, residue)
@@ -2102,26 +2096,110 @@ def ensure_bloom_registry(
     return final
 
 
-def _family_pairs(
-    spark: SparkSession, sf_dir: str, fam: str, mod: int, residue: int
-) -> DataFrame:
-    """One family's distinct (b_id, g) benchmark pair set — the
-    doc_id % mod == residue fixture slice standing in for that eval
-    suite's snapshot — with the degenerate-slice guard (an empty
-    family would make the isolation/union referees pass vacuously)."""
+def _family_pairs(spark: SparkSession, sf_dir: str, fam: str, pred: str) -> DataFrame:
+    """One family's distinct (b_id, g) benchmark pair set: the
+    documents matching its slice predicate ``pred`` (the fixture slice
+    standing in for that eval suite's snapshot), with the
+    degenerate-slice guard (an empty family would make the
+    isolation/union referees pass vacuously)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     pairs = (
-        _shingles(docs.filter(F.pmod(F.col("doc_id"), F.lit(mod)) == residue))
+        _shingles(docs.filter(F.expr(pred)))
         .select(F.col("doc_id").alias("b_id"), "g")
         .distinct()
         .localCheckpoint()
     )
     if not pairs.head(1):
-        raise ValueError(
-            f"bloom registry: degenerate fixture — family {fam} "
-            f"(doc_id % {mod} == {residue}) holds no shingles"
-        )
+        raise ValueError(f"bloom registry: degenerate fixture — family {fam} ({pred}) holds no shingles")
     return pairs
+
+
+def _slice(mod: int, residue: int) -> str:
+    """The slice predicate a registry marker records for a family."""
+    return f"doc_id % {mod} == {residue}"
+
+
+def _registered(final: str) -> dict[str, str]:
+    """The family map (family -> slice predicate) of the registry
+    published at ``final``; empty when there is none at the session
+    geometry (a stale-geometry tree is displaced)."""
+    marker = os.path.join(final, "registry_done.json")
+    if not (os.path.isfile(marker) and _geometry_current(final)):
+        return {}
+    with open(marker) as f:
+        return json.load(f)["families"]
+
+
+def _edit_registry(
+    spark: SparkSession,
+    sf_dir: str,
+    final: str,
+    registered: dict[str, str],
+    target: dict[str, str],
+    *,
+    keep_prev: bool,
+) -> None:
+    """The one registry edit: republish the registry at ``final`` (whose
+    published family map is ``registered``) with the family map
+    ``target``. A family whose predicate is unchanged is copied forward
+    byte for byte; a new or changed one is built from its slice (one
+    O(suite) shingle pass); a dropped one is removed. The union is
+    re-folded from the staged family words (O(families x geometry)),
+    so the edit reads the live tree once, in its copy of the families,
+    and a concurrent publish cannot pair old family bytes with a newer
+    union. ``keep_prev`` also folds the pre-edit union from the staged
+    pre-edit families into ``union_prev_words``, the evidence the
+    refresh and retire gates compare against. The saturation guard
+    runs on the union before anything publishes (the geometry must hold
+    the SUM of the families), and a failed edit leaves the live tree as
+    it was."""
+    built = {
+        fam: _family_pairs(spark, sf_dir, fam, pred)
+        for fam, pred in target.items()
+        if registered.get(fam) != pred
+    }
+
+    def build(staging: str) -> None:
+        fams = os.path.join(staging, "families")
+
+        def union(names) -> DataFrame:
+            return bit_or_fold(spark.read.parquet(*[os.path.join(fams, f, "words") for f in names]))
+
+        if registered:
+            shutil.copytree(os.path.join(final, "families"), fams)
+        if keep_prev:
+            union(registered).coalesce(1).write.parquet(os.path.join(staging, "union_prev_words"))
+        for fam, pred in registered.items():
+            if target.get(fam) != pred:
+                shutil.rmtree(os.path.join(fams, fam))
+        for fam, pairs in built.items():
+            pairs.coalesce(2).write.parquet(os.path.join(fams, fam, "pairs"))
+            bloom_words(pairs.select("g").distinct()).coalesce(1).write.parquet(
+                os.path.join(fams, fam, "words")
+            )
+        words = union(target).localCheckpoint()
+        assert_bloom_fill(words, what=f"bloom_registry[{final}]")
+        words.coalesce(1).write.parquet(os.path.join(staging, "union_words"))
+
+    meta = {
+        "version": BLOOM_INDEX_VERSION,
+        "bits": BLOOM_BITS,
+        "seeds": list(BLOOM_SEEDS),
+        "families": target,
+    }
+    publish_tree(final, sf_dir, "registry_done.json", meta, build, replace=bool(registered))
+
+
+def _union_set_bits(spark: SparkSession, path: str) -> DataFrame:
+    """One row (n_prev, n_now): the set bits of the registry's preserved
+    pre-edit union and of its live union, the did-work evidence of a
+    refresh (the union grows) or a retirement (it shrinks)."""
+
+    def n_set(name: str, alias: str) -> DataFrame:
+        words = spark.read.parquet(os.path.join(path, name))
+        return words.agg(F.sum(F.bit_count("bits")).alias(alias))
+
+    return n_set("union_prev_words", "n_prev").crossJoin(n_set("union_words", "n_now"))
 
 
 def _register_bloom_family(
@@ -2134,66 +2212,18 @@ def _register_bloom_family(
 ) -> None:
     """One registry registration (see ensure_bloom_registry): no-op if
     ``fam`` is already in the published marker at the current
-    geometry AND the recorded slice predicate matches the requested
-    one; a predicate mismatch (the snapshot definition changed under
-    the cache — the round-12 advice's stale-artifact class) delegates
-    to the refresh path, which rebuilds THIS family and re-folds the
-    union, mirroring the ``_geometry_current`` displace-and-rebuild
-    discipline instead of surfacing later as a confusing
-    union_equals_full failure. Otherwise stage copy-forward + new
-    family + union fold + atomic republish."""
-    marker_path = os.path.join(final, "registry_done.json")
-    registered: dict[str, str] = {}
-    if os.path.isfile(marker_path) and _geometry_current(final):
-        with open(marker_path) as f:
-            registered = json.load(f).get("families", {})
-        if fam in registered:
-            if registered[fam] == f"doc_id % {mod} == {residue}":
-                return
-            refresh_bloom_family(spark, sf_dir, final, fam, residue, mod=mod)
-            return
-    pairs = _family_pairs(spark, sf_dir, fam, mod, residue)
-
-    def build(staging: str) -> None:
-        if registered:
-            # copy every already-registered family forward byte-for-byte
-            shutil.copytree(
-                os.path.join(final, "families"),
-                os.path.join(staging, "families"),
-            )
-        fdir = os.path.join(staging, "families", fam)
-        pairs.coalesce(2).write.parquet(os.path.join(fdir, "pairs"))
-        bloom_words(pairs.select("g").distinct()).coalesce(1).write.parquet(
-            os.path.join(fdir, "words")
-        )
-        union = spark.read.parquet(os.path.join(fdir, "words"))
-        if registered:
-            # incremental union: fold the STAGED family copies plus
-            # this family's delta — O(families x geometry), still no
-            # benchmark re-read outside the new suite. Reading the
-            # live tree's union_words here instead would be a SECOND
-            # read of `final` at a later time than the copytree above:
-            # a concurrent republish between the two reads could pair
-            # old family bytes with a new union. The staged copies ARE
-            # the one snapshot.
-            for other in registered:
-                union = union.unionByName(
-                    spark.read.parquet(
-                        os.path.join(staging, "families", other, "words")
-                    )
-                )
-            union = union.groupBy("widx").agg(F.bit_or("bits").alias("bits"))
-        union = union.localCheckpoint()
-        assert_bloom_fill(union, what=f"bloom_registry[{final}]/{fam}")
-        union.coalesce(1).write.parquet(os.path.join(staging, "union_words"))
-
-    meta = {
-        "version": BLOOM_INDEX_VERSION,
-        "bits": BLOOM_BITS,
-        "seeds": list(BLOOM_SEEDS),
-        "families": {**registered, fam: f"doc_id % {mod} == {residue}"},
-    }
-    publish_tree(final, sf_dir, "registry_done.json", meta, build, replace=bool(registered))
+    geometry with the requested slice predicate; a predicate mismatch
+    (the snapshot definition changed under the cache) delegates to the
+    refresh path, which rebuilds THIS family and re-folds the union.
+    Otherwise ``_edit_registry`` adds the family."""
+    registered = _registered(final)
+    pred = _slice(mod, residue)
+    if registered.get(fam) == pred:
+        return
+    if fam in registered:
+        refresh_bloom_family(spark, sf_dir, final, fam, residue, mod=mod)
+        return
+    _edit_registry(spark, sf_dir, final, registered, {**registered, fam: pred}, keep_prev=False)
 
 
 def _registry_screen_frames(
@@ -2362,72 +2392,20 @@ def refresh_bloom_family(
     ADD, but an eval suite's refresh can also REMOVE content, and a
     monotone bitmap cannot subtract. The only exact path is the one
     real registries take: rebuild THAT family's filter from its new
-    snapshot and RE-FOLD the union from all per-family words tables —
-    O(families x geometry), never a benchmark re-read outside the
-    refreshed suite. The pre-refresh union is preserved in the tree
-    as ``union_prev_words`` so the serving gate can prove the refresh
-    changed the filter. Every other family's artifacts are copied
-    forward byte-for-byte (the registration discipline)."""
-    # geometry handshake FIRST (the registration path's discipline):
-    # refreshing a stale-geometry tree would bit_or old-geometry family
-    # words with a new-geometry rebuild into one incoherent union
+    snapshot and RE-FOLD the union from all per-family words tables
+    (``_edit_registry``), keeping the pre-refresh union as
+    ``union_prev_words`` so the serving gate can prove the refresh
+    changed the filter. Raises for an unregistered family or a
+    stale-geometry tree (folding old-geometry family words with a
+    new-geometry rebuild would make an incoherent union); a no-op when
+    the family is already at this snapshot."""
     check_bloom_meta(final)
-    marker_path = os.path.join(final, "registry_done.json")
-    with open(marker_path) as f:
-        meta = json.load(f)
-    registered = meta.get("families", {})
+    registered = _registered(final)
     if fam not in registered:
         raise ValueError(f"refresh_bloom_family: {fam} is not registered")
-    target_pred = f"doc_id % {mod} == {residue}"
-    if registered.get(fam) == target_pred:
-        return  # already at this snapshot
-    pairs = _family_pairs(spark, sf_dir, fam, mod, residue)
-
-    def build(staging: str) -> None:
-        shutil.copytree(
-            os.path.join(final, "families"), os.path.join(staging, "families")
-        )
-        # preserve the superseded union for the refresh-did-work
-        # referee, RE-DERIVED from the staged pre-refresh family words
-        # (one snapshot): copying final/union_words later would race a
-        # concurrent refresher — the loser could copy the winner's
-        # POST-refresh union as its "pre-refresh" union and publish a
-        # sticky tree whose did-work referee fails forever (round-12
-        # third review pass)
-        prev = None
-        for other in registered:
-            w = spark.read.parquet(os.path.join(staging, "families", other, "words"))
-            prev = w if prev is None else prev.unionByName(w)
-        (
-            prev.groupBy("widx")
-            .agg(F.bit_or("bits").alias("bits"))
-            .coalesce(1)
-            .write.parquet(os.path.join(staging, "union_prev_words"))
-        )
-        # the refreshed family rebuilds from its new snapshot
-        fdir = os.path.join(staging, "families", fam)
-        shutil.rmtree(fdir)
-        pairs.coalesce(2).write.parquet(os.path.join(fdir, "pairs"))
-        bloom_words(pairs.select("g").distinct()).coalesce(1).write.parquet(
-            os.path.join(fdir, "words")
-        )
-        # union RE-FOLD over all family words (a refresh can shrink a
-        # family, so the incremental bit_or of the old union is wrong
-        # by construction here)
-        union = None
-        for other in registered:
-            w = spark.read.parquet(os.path.join(staging, "families", other, "words"))
-            union = w if union is None else union.unionByName(w)
-        union = (
-            union.groupBy("widx")
-            .agg(F.bit_or("bits").alias("bits"))
-            .localCheckpoint()
-        )
-        assert_bloom_fill(union, what=f"bloom_registry_refresh[{final}]/{fam}")
-        union.coalesce(1).write.parquet(os.path.join(staging, "union_words"))
-
-    meta = {**meta, "families": {**registered, fam: target_pred}}
-    publish_tree(final, sf_dir, "registry_done.json", meta, build, replace=True)
+    pred = _slice(mod, residue)
+    if registered[fam] != pred:
+        _edit_registry(spark, sf_dir, final, registered, {**registered, fam: pred}, keep_prev=True)
 
 
 def ensure_bloom_refresh_demo(spark: SparkSession, sf_dir: str) -> str:
@@ -2440,42 +2418,30 @@ def ensure_bloom_refresh_demo(spark: SparkSession, sf_dir: str) -> str:
     refresh instead of a registration, plus the preserved pre-refresh
     union for the did-work referee."""
     final = BLOOM.dir(sf_dir, "refresh")
+
     def _assert_refresh_did_work() -> None:
         # the refresh must CHANGE the filter or the did-work referee
         # (and its TRUE oracle literal) fails on valid data: the guard
-        # checks the INVARIANT itself — the %12==9 delta must have set
-        # at least one new union bit — not merely that the delta slice
-        # is non-empty. Runs on the BUILD path and on the early-return
-        # path alike (round-12 advice: checking only after publish let
-        # a published-but-degenerate tree early-return forever,
-        # deferring the failure to the op's refresh_changed_filter
-        # gate instead of the loud builder error).
-        n_prev = bloom_fill_ratio(
-            spark.read.parquet(os.path.join(final, "union_prev_words"))
-        )
-        n_now = bloom_fill_ratio(
-            spark.read.parquet(os.path.join(final, "union_words"))
-        )
-        if not n_prev < n_now:
+        # checks the invariant itself — the %12==9 delta must have set
+        # at least one new union bit — on the build path and on the
+        # early-return path alike, so a published-but-degenerate tree
+        # fails here instead of in the op's refresh_changed_filter gate
+        bits = _union_set_bits(spark, final).first()
+        if not bits.n_prev < bits.n_now:
             raise ValueError(
                 "ensure_bloom_refresh_demo: degenerate fixture — the "
                 "doc_id % 12 == 9 delta slice set no new union bit, so "
                 "the refresh-did-work referee would fail on valid data"
             )
 
-    marker = os.path.join(final, "registry_done.json")
-    if os.path.isfile(marker) and _geometry_current(final):
-        with open(marker) as f:
-            fams = json.load(f).get("families", {})
-        if fams.get("suite_b") == "doc_id % 6 == 3":
-            if os.path.isdir(os.path.join(final, "union_prev_words")):
-                _assert_refresh_did_work()
-                return final
-            # marker at target but the preserved union is gone (torn
-            # external cleanup): every lineage step below would no-op
-            # and hand back the same broken tree — displace and rebuild
-            # (the _geometry_current cache-miss discipline)
-            displace(final, "deadend")
+    if _registered(final).get("suite_b") == _slice(6, 3):
+        if os.path.isdir(os.path.join(final, "union_prev_words")):
+            _assert_refresh_did_work()
+            return final
+        # marker at target but the preserved union is gone (torn
+        # external cleanup): every lineage step below would no-op and
+        # hand back the same broken tree — displace and rebuild
+        displace(final, "deadend")
     _register_bloom_family(spark, sf_dir, final, "suite_a", 0, mod=6)
     _register_bloom_family(spark, sf_dir, final, "suite_b", 3, mod=12)
     refresh_bloom_family(spark, sf_dir, final, "suite_b", 3, mod=6)
@@ -2545,15 +2511,12 @@ def op_bloom_registry_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagging training docs for it the moment the refresh publishes —
     no whole-registry rebuild, no cross-suite blast radius."""
     path = ensure_bloom_refresh_demo(spark, sf_dir)
-    union, ledger, eq_union, iso = _registry_screen_frames(
+    _union, ledger, eq_union, iso = _registry_screen_frames(
         spark, sf_dir, path,
         "refreshed_union_equals_full", "unrefreshed_family_untouched",
     )
-    union_prev = spark.read.parquet(os.path.join(path, "union_prev_words"))
-    changed = (
-        union_prev.agg(F.sum(F.bit_count("bits")).alias("n_prev"))
-        .crossJoin(union.agg(F.sum(F.bit_count("bits")).alias("n_now")))
-        .select((F.col("n_prev") < F.col("n_now")).alias("refresh_changed_filter"))
+    changed = _union_set_bits(spark, path).select(
+        (F.col("n_prev") < F.col("n_now")).alias("refresh_changed_filter")
     )
     audit = eq_union.crossJoin(F.broadcast(iso)).crossJoin(F.broadcast(changed))
     return ledger.crossJoin(F.broadcast(audit))
@@ -2563,70 +2526,28 @@ def retire_bloom_family(
     spark: SparkSession, sf_dir: str, final: str, fam: str
 ) -> None:
     """RETIRE one family from a published registry — the lifecycle
-    half register (add) and refresh (revise) cannot express (round-12
-    verdict task 4): when an eval suite is withdrawn entirely, its
-    filter must stop screening and its ledger attributions must
-    vanish, and a monotone bitmap cannot subtract — so, exactly like
-    refresh, the only exact path is structural: DROP the family's
-    artifacts and RE-FOLD the union from the surviving per-family
-    words tables (O(families x geometry) over ~0.5 MB filters, never
-    a benchmark re-read). The pre-retire union is preserved as
-    ``union_prev_words`` so the serving gate can prove the retirement
-    shrank the filter. Every surviving family's artifacts are copied
-    forward byte-for-byte; a crash mid-retire leaves the old registry
-    serving. Idempotent: a
-    family absent from the marker is already retired."""
+    half register (add) and refresh (revise) cannot express: when an
+    eval suite is withdrawn entirely, its filter must stop screening
+    and its ledger attributions must vanish, and a monotone bitmap
+    cannot subtract — so, exactly like refresh, the only exact path is
+    structural: ``_edit_registry`` drops the family's artifacts and
+    RE-FOLDS the union from the surviving per-family words tables,
+    keeping the pre-retire union as ``union_prev_words`` so the serving
+    gate can prove the retirement shrank the filter. Idempotent: a
+    family absent from the marker is already retired. Retiring the
+    last family raises."""
     check_bloom_meta(final)
-    marker_path = os.path.join(final, "registry_done.json")
-    with open(marker_path) as f:
-        meta = json.load(f)
-    registered = meta.get("families", {})
+    registered = _registered(final)
     if fam not in registered:
         return  # already retired
-    survivors = [o for o in registered if o != fam]
+    survivors = {o: pred for o, pred in registered.items() if o != fam}
     if not survivors:
         raise ValueError(
             f"retire_bloom_family: retiring {fam} would publish an "
             f"EMPTY registry — a screen probing an all-zero union flags "
             f"nothing and looks healthy; drop the registry tree instead"
         )
-
-    def build(staging: str) -> None:
-        shutil.copytree(
-            os.path.join(final, "families"), os.path.join(staging, "families")
-        )
-        # preserve the superseded union for the retire-shrunk-filter
-        # referee, re-derived from the staged PRE-retire family words
-        # (one snapshot — the refresh path's torn-read discipline)
-        prev = None
-        for other in registered:
-            w = spark.read.parquet(os.path.join(staging, "families", other, "words"))
-            prev = w if prev is None else prev.unionByName(w)
-        (
-            prev.groupBy("widx")
-            .agg(F.bit_or("bits").alias("bits"))
-            .coalesce(1)
-            .write.parquet(os.path.join(staging, "union_prev_words"))
-        )
-        # drop the retired family's artifacts and re-fold the union
-        # from the survivors (a retirement SHRINKS the admitted set,
-        # so the incremental bit_or is wrong by construction here —
-        # the same reason refresh re-folds)
-        shutil.rmtree(os.path.join(staging, "families", fam))
-        union = None
-        for other in survivors:
-            w = spark.read.parquet(os.path.join(staging, "families", other, "words"))
-            union = w if union is None else union.unionByName(w)
-        union = (
-            union.groupBy("widx")
-            .agg(F.bit_or("bits").alias("bits"))
-            .localCheckpoint()
-        )
-        assert_bloom_fill(union, what=f"bloom_registry_retire[{final}]/{fam}")
-        union.coalesce(1).write.parquet(os.path.join(staging, "union_words"))
-
-    meta = {**meta, "families": {o: registered[o] for o in survivors}}
-    publish_tree(final, sf_dir, "registry_done.json", meta, build, replace=True)
+    _edit_registry(spark, sf_dir, final, registered, survivors, keep_prev=True)
 
 
 def ensure_bloom_retire_demo(spark: SparkSession, sf_dir: str) -> str:
@@ -2637,40 +2558,30 @@ def ensure_bloom_retire_demo(spark: SparkSession, sf_dir: str) -> str:
     registry whose union is suite_a's filter alone, plus the
     preserved pre-retire union for the shrunk-filter referee."""
     final = BLOOM.dir(sf_dir, "retire")
+
     def _assert_retire_did_work() -> None:
         # the retirement must SHRINK the filter or the did-work
         # referee (and its TRUE oracle literal) fails on valid data:
         # suite_b must have contributed at least one union bit suite_a
-        # alone does not set. Runs on the build path AND the
-        # early-return path (the refresh demo's round-12-advice
-        # lesson: a published-but-degenerate tree must fail loudly at
-        # build time, not defer to the serve gate).
-        n_prev = bloom_fill_ratio(
-            spark.read.parquet(os.path.join(final, "union_prev_words"))
-        )
-        n_now = bloom_fill_ratio(
-            spark.read.parquet(os.path.join(final, "union_words"))
-        )
-        if not n_now < n_prev:
+        # alone does not set. Runs on the build path and the
+        # early-return path, like the refresh demo's guard.
+        bits = _union_set_bits(spark, final).first()
+        if not bits.n_now < bits.n_prev:
             raise ValueError(
                 "ensure_bloom_retire_demo: degenerate fixture — retiring "
                 "suite_b cleared no union bit, so the retire-shrunk-filter "
                 "referee would fail on valid data"
             )
 
-    marker = os.path.join(final, "registry_done.json")
-    if os.path.isfile(marker) and _geometry_current(final):
-        with open(marker) as f:
-            fams = json.load(f).get("families", {})
-        if list(fams) == ["suite_a"]:
-            if os.path.isdir(os.path.join(final, "union_prev_words")):
-                _assert_retire_did_work()
-                return final
-            # marker at target but the preserved union is gone (torn
-            # external cleanup): re-running the lineage below would
-            # re-REGISTER suite_b into the retired tree — displace and
-            # rebuild instead (the refresh demo's deadend discipline)
-            displace(final, "deadend")
+    if list(_registered(final)) == ["suite_a"]:
+        if os.path.isdir(os.path.join(final, "union_prev_words")):
+            _assert_retire_did_work()
+            return final
+        # marker at target but the preserved union is gone (torn
+        # external cleanup): re-running the lineage below would
+        # re-REGISTER suite_b into the retired tree — displace and
+        # rebuild instead (the refresh demo's deadend discipline)
+        displace(final, "deadend")
     for fam, residue in BLOOM_FAMILIES:
         _register_bloom_family(spark, sf_dir, final, fam, residue)
     retire_bloom_family(spark, sf_dir, final, "suite_b")
@@ -2743,7 +2654,7 @@ def op_bloom_registry_retire(spark: SparkSession, sf_dir: str) -> DataFrame:
     (/root/reference/etl/pipeline.py) has no contamination tooling;
     this extends the LLM-data surface the brief requires."""
     path = ensure_bloom_retire_demo(spark, sf_dir)
-    union, ledger, eq_union, iso = _registry_screen_frames(
+    _union, ledger, eq_union, iso = _registry_screen_frames(
         spark,
         sf_dir,
         path,
@@ -2751,11 +2662,8 @@ def op_bloom_registry_retire(spark: SparkSession, sf_dir: str) -> DataFrame:
         "survivor_family_untouched",
         yardstick="survivor_pairs",
     )
-    union_prev = spark.read.parquet(os.path.join(path, "union_prev_words"))
-    shrunk = (
-        union_prev.agg(F.sum(F.bit_count("bits")).alias("n_prev"))
-        .crossJoin(union.agg(F.sum(F.bit_count("bits")).alias("n_now")))
-        .select((F.col("n_now") < F.col("n_prev")).alias("retire_shrunk_filter"))
+    shrunk = _union_set_bits(spark, path).select(
+        (F.col("n_now") < F.col("n_prev")).alias("retire_shrunk_filter")
     )
     audit = eq_union.crossJoin(F.broadcast(iso)).crossJoin(F.broadcast(shrunk))
     return ledger.crossJoin(F.broadcast(audit))
@@ -2791,7 +2699,7 @@ def ensure_bloom_lifecycle_demo(spark: SparkSession, sf_dir: str) -> str:
     and the lineage rebuilds from scratch (the refresh demo's
     deadend discipline, scoped to exactly the unresumable states)."""
     final = BLOOM.dir(sf_dir, "lifecycle")
-    end = {"suite_a": "doc_id % 6 == 0", "suite_b": "doc_id % 6 == 3"}
+    end = {"suite_a": _slice(6, 0), "suite_b": _slice(6, 3)}
 
     def _retire_did_work() -> bool:
         # the retire must SHRINK the filter (suite_c's % 12 == 1 docs
@@ -2800,27 +2708,15 @@ def ensure_bloom_lifecycle_demo(spark: SparkSession, sf_dir: str) -> str:
         # that tells the true end state from the crash-after-refresh
         # state, whose preserved union sits strictly BELOW the live
         # one (a refresh grows the filter; a retire shrinks it)
-        n_prev = bloom_fill_ratio(
-            spark.read.parquet(os.path.join(final, "union_prev_words"))
-        )
-        n_now = bloom_fill_ratio(
-            spark.read.parquet(os.path.join(final, "union_words"))
-        )
-        return n_now < n_prev
+        bits = _union_set_bits(spark, final).first()
+        return bits.n_now < bits.n_prev
 
-    safe_prefix = {"suite_a": "doc_id % 6 == 0", "suite_b": "doc_id % 12 == 3"}
-    marker = os.path.join(final, "registry_done.json")
-    if os.path.isfile(marker) and _geometry_current(final):
-        with open(marker) as f:
-            fams = json.load(f).get("families", {})
-        if (
-            fams == end
-            and os.path.isdir(os.path.join(final, "union_prev_words"))
-            and _retire_did_work()
-        ):
-            return final
-        if not all(safe_prefix.get(f) == pred for f, pred in fams.items()):
-            displace(final, "deadend")
+    safe_prefix = {"suite_a": _slice(6, 0), "suite_b": _slice(12, 3)}
+    fams = _registered(final)
+    if fams == end and os.path.isdir(os.path.join(final, "union_prev_words")) and _retire_did_work():
+        return final
+    if not all(safe_prefix.get(f) == pred for f, pred in fams.items()):
+        displace(final, "deadend")
     _register_bloom_family(spark, sf_dir, final, "suite_a", 0, mod=6)
     _register_bloom_family(spark, sf_dir, final, "suite_b", 3, mod=12)
     refresh_bloom_family(spark, sf_dir, final, "suite_b", 3, mod=6)
@@ -2905,14 +2801,11 @@ def op_bloom_registry_lifecycle_e2e(spark: SparkSession, sf_dir: str) -> DataFra
     ETL (/root/reference/etl/pipeline.py) has no contamination
     tooling; this extends the LLM-data surface the brief requires."""
     path = ensure_bloom_lifecycle_demo(spark, sf_dir)
-    union, ledger, eq_union, iso = _registry_screen_frames(
+    _union, ledger, eq_union, iso = _registry_screen_frames(
         spark, sf_dir, path, "lifecycle_union_equals_full", "first_family_untouched"
     )
-    union_prev = spark.read.parquet(os.path.join(path, "union_prev_words"))
-    shrunk = (
-        union_prev.agg(F.sum(F.bit_count("bits")).alias("n_prev"))
-        .crossJoin(union.agg(F.sum(F.bit_count("bits")).alias("n_now")))
-        .select((F.col("n_now") < F.col("n_prev")).alias("retire_shrunk_filter"))
+    shrunk = _union_set_bits(spark, path).select(
+        (F.col("n_now") < F.col("n_prev")).alias("retire_shrunk_filter")
     )
     audit = eq_union.crossJoin(F.broadcast(iso)).crossJoin(F.broadcast(shrunk))
     return ledger.crossJoin(F.broadcast(audit))

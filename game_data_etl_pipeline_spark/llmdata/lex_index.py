@@ -33,6 +33,7 @@ share the original DuckDB oracle verbatim.
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,15 +43,14 @@ from game_data_etl_pipeline_spark.llmdata.artifacts import (
     TOMB_IDS,
     TOMB_IDS_SQL,
     TOMB_MOD,
-    TOMB_RESIDUE,
+    Postings,
     TreeFamily,
-    count_parquet_files,
+    compact_postings,
     ensure_tree,
     purge_ledger_current,
     purge_ledger_referee,
+    segments_merged,
     tomb_ids_current,
-    tombstone_ids_df,
-    write_purge_ledger,
 )
 from game_data_etl_pipeline_spark.llmdata.text import BM25_CTES, _terms
 from game_data_etl_pipeline_spark.registry import register
@@ -75,6 +75,10 @@ def _bucket(term_col):
 LEX = TreeFamily(
     "SPARK_GRAFT_LEX_INDEX_DIR", "lex_index", "documents.parquet", LEX_INDEX_VERSION
 )
+
+# what a tombstone compaction of lexical postings rewrites (a streamed
+# store's seg and batch_id columns are dropped)
+LEX_POSTINGS = Postings("doc_id", "term_bucket", ("term", "doc_id", "dl", "tf", "term_bucket"))
 
 
 def lex_postings(docs: DataFrame, *keep: str) -> DataFrame:
@@ -394,68 +398,17 @@ def compact_lex_postings(
     spark: SparkSession,
     src_postings: str,
     dest: str,
-    tombstones: DataFrame | None = None,
+    purge_ids: Sequence[int] | None = None,
 ) -> None:
-    """The ONE lexical delete+compact algebra: read the postings at
-    ``src_postings`` (term, doc_id, dl, tf by term_bucket; other
-    columns, such as a streamed store's ``seg``, are dropped), drop
-    tombstoned documents, rewrite ONE segment per term bucket under
-    ``dest/postings``, and RE-DERIVE df + corpus stats from the
-    PERSISTED surviving postings read back from ``dest``
-    (``write_df_stats``; exact integer math, document text never read).
-    ``tombstones`` is a (doc_id) DataFrame — the id-list shape a real
-    purge request has — broadcast into a left-anti join (the list is
-    bounded by construction, so survivors never shuffle on doc_id);
-    ``None`` keeps the deterministic pmod(doc_id, TOMB_MOD) ==
-    TOMB_RESIDUE residue fixture. Shared by
-    op_lex_index_delete_compact (offline upsert tree),
-    op_stream_lex_compact_serve (streamed store),
-    and op_lex_lifecycle_e2e (the composed lineage), so no two
-    compaction paths can drift."""
-    from pyspark.sql import Observation
-
-    src = spark.read.parquet(src_postings).select("term", "doc_id", "dl", "tf", "term_bucket")
-    # n_before / n_after are observe() metrics on the passes that
-    # already scan each tree, so no extra count job: n_before on the
-    # source scan that feeds the rewrite, n_after on the PERSISTED
-    # survivors' read-back that derives df/stats
-    obs_before = Observation("compact_lex_n_before")
-    src_counted = src.observe(obs_before, F.count(F.lit(1)).alias("n"))
-    if tombstones is None:
-        survivors = src_counted.filter(
-            F.pmod(F.col("doc_id"), F.lit(TOMB_MOD)) != TOMB_RESIDUE
-        )
-    else:
-        survivors = src_counted.join(
-            F.broadcast(tombstones.select("doc_id")), "doc_id", "left_anti"
-        )
-    _write_bucketed(survivors, os.path.join(dest, "postings"))
-    obs_after = Observation("compact_lex_n_after")
-    write_df_stats(
-        spark.read.parquet(os.path.join(dest, "postings")).observe(
-            obs_after, F.count(F.lit(1)).alias("n")
-        ),
-        dest,
-    )
-    # purge evidence (the shared write_purge_ledger artifact), in the
-    # same dest tree and therefore the caller's staging transaction;
-    # counts are POSTING rows, measured before from the source and
-    # after from the PERSISTED survivors
-    write_purge_ledger(
-        dest,
-        n_before=obs_before.get["n"],
-        n_after=obs_after.get["n"],
-        purge_ids=(
-            None
-            if tombstones is None
-            else [r[0] for r in tombstones.select("doc_id").distinct().collect()]
-        ),
-        predicate=(
-            f"pmod(doc_id, {TOMB_MOD}) == {TOMB_RESIDUE}"
-            if tombstones is None
-            else None
-        ),
-    )
+    """The lexical tombstone compaction: ``compact_postings`` rewrites
+    the postings at ``src_postings`` without the purged documents, one
+    segment per term bucket, into ``dest/postings`` with the purge
+    ledger at ``dest``; then the lexical fold re-derives ``dest/df``
+    and ``dest/stats`` from the persisted survivors (``write_df_stats``;
+    exact integer math, document text never read)."""
+    postings = os.path.join(dest, "postings")
+    compact_postings(spark, LEX_POSTINGS, src_postings, postings, purge_ids=purge_ids, ledger_dir=dest)
+    write_df_stats(spark.read.parquet(postings), dest)
 
 
 def ensure_lex_e2e_tree(spark: SparkSession, sf_dir: str) -> str:
@@ -463,20 +416,14 @@ def ensure_lex_e2e_tree(spark: SparkSession, sf_dir: str) -> str:
     lexical family: one lineage walked build -> delta upsert (the
     ensure_lex_upsert_tree end state: merged df/stats, two posting
     segments per bucket) -> id-LIST tombstone (TOMB_IDS, the
-    purge-request shape) -> compact through the shared
-    ``compact_lex_postings`` algebra (one segment per bucket, df and
-    corpus stats re-derived from the survivors). A tree purged with
-    another list, or without its purge ledger, is rebuilt; the upsert
-    tree stays live."""
+    purge-request shape) -> ``compact_lex_postings`` (one segment per
+    bucket, df and corpus stats re-derived from the survivors). A tree
+    purged with another list, or without its purge ledger, is rebuilt;
+    the upsert tree stays live."""
     demo = ensure_lex_upsert_tree(spark, sf_dir)
 
     def build(staging: str) -> None:
-        compact_lex_postings(
-            spark,
-            os.path.join(demo, "postings"),
-            staging,
-            tombstones=tombstone_ids_df(spark, "doc_id"),
-        )
+        compact_lex_postings(spark, os.path.join(demo, "postings"), staging, purge_ids=TOMB_IDS)
 
     return ensure_tree(
         LEX.dir(sf_dir, "e2e"),
@@ -514,13 +461,13 @@ def _e2e_survivor_oracle() -> str:
     oracle=_e2e_survivor_oracle(),
 )
 def op_lex_lifecycle_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THE FULL LIFECYCLE COMPOSED ON ONE LINEAGE — round-11 verdict
-    task 2 on the lexical side: build (base slice) -> delta upsert
-    (exact integer df/stats merge) -> id-LIST tombstone (TOMB_IDS —
-    task 3's purge-request shape, anti-joined by the shared
-    ``compact_lex_postings`` algebra instead of the residue predicate
-    the per-transition gates use) -> compact (one segment per bucket,
-    df and corpus stats RE-DERIVED from the survivors) -> serve.
+    """THE FULL LIFECYCLE COMPOSED ON ONE LINEAGE on the lexical side:
+    build (base slice) -> delta upsert (exact integer df/stats merge)
+    -> id-LIST tombstone (TOMB_IDS, the purge-request shape,
+    anti-joined by ``compact_lex_postings`` instead of the residue
+    predicate the per-transition gates use) -> compact (one segment
+    per bucket, df and corpus stats RE-DERIVED from the survivors) ->
+    serve.
 
     Gate: serving BM25 from the lineage's end state is held to
     BIT-EQUALITY with op_text_bm25's oracle recomputed over
@@ -534,13 +481,10 @@ def op_lex_lifecycle_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus (tests/test_llmdata.py). Segment hygiene is enforced
     loudly: the compacted tree must hold strictly fewer parquet files
     than the 2-segments-per-bucket upsert tree.
-    ``purge_ledger_consistent`` rides along (round-12 verdict task
-    5): the compaction's persisted purge LEDGER — written by the
-    shared compactor inside the same staging transaction, the GDPR
-    evidence artifact — must record the session TOMB_IDS digest and
-    count arithmetic that reproduces the posting counts measured on
-    the persisted upsert/e2e trees; a missing ledger fails loudly in
-    ``read_purge_ledger``.
+    ``purge_ledger_consistent`` (``purge_ledger_referee``) rides
+    along: the compaction's purge ledger records the session TOMB_IDS
+    digest and the posting counts measured on the persisted upsert and
+    e2e trees; a missing ledger raises.
 
     At 100 TB this is the inverted index's whole life as one provable
     pipeline: the build amortizes, deltas land O(delta), the purge
@@ -549,23 +493,13 @@ def op_lex_lifecycle_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the morning's scores are the scores a fresh index would give."""
     demo = ensure_lex_upsert_tree(spark, sf_dir)
     e2e = ensure_lex_e2e_tree(spark, sf_dir)
-    files_before = count_parquet_files(os.path.join(demo, "postings"))
-    files_after = count_parquet_files(os.path.join(e2e, "postings"))
-    if not 0 < files_after < files_before:
-        raise ValueError(
-            f"op_lex_lifecycle_e2e: compaction did not merge segments "
-            f"({files_before} -> {files_after} parquet files)"
-        )
-    # the purge-evidence referee: ledger counts reproduce the posting
-    # counts measured on the persisted trees, and the recorded digest
-    # is the session purge list's — the shared purge_ledger_referee
-    # body (r14: this gate's inline copy consolidated into the one
-    # checker the streamed compact-serve gates also run)
+    if not segments_merged(os.path.join(demo, "postings"), os.path.join(e2e, "postings")):
+        raise ValueError(f"op_lex_lifecycle_e2e: compaction did not merge the segments of {demo}")
     audit = purge_ledger_referee(
         spark,
         e2e,
         spark.read.parquet(os.path.join(demo, "postings")),
         spark.read.parquet(os.path.join(e2e, "postings")),
         "doc_id",
-    )
+    ).select("purge_ledger_consistent")
     return bm25_from_index(spark, e2e).crossJoin(F.broadcast(audit))

@@ -46,15 +46,12 @@ from pyspark.sql import functions as F
 
 from game_data_etl_pipeline_spark.catalog import load_table
 from game_data_etl_pipeline_spark.llmdata.artifacts import (
-    PURGE_LEDGER,
     TOMB_IDS,
     TOMB_IDS_SQL,
-    check_tomb_meta,
-    count_parquet_files,
-    publish_staging,
+    compact_postings,
+    publish_compaction,
     purge_ledger_referee,
-    staging_tree,
-    tombstone_ids_df,
+    segments_merged,
 )
 from game_data_etl_pipeline_spark.llmdata.dedup import decontam_ledger_oracle
 from game_data_etl_pipeline_spark.llmdata.text import BM25_CTES
@@ -1443,17 +1440,16 @@ def op_stream_lex_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streamed lexical store's full lifecycle, stream-ingest ->
     delete -> compact -> serve, op_stream_ann_serve_compacted's twin:
     the documents arrive as 3 micro-batches through
-    ``stream_lex_store``; the id-list purge request TOMB_IDS is
-    broadcast into the tombstone anti-join of ``compact_lex_postings``
-    (op_lex_index_delete_compact's algebra), which rewrites ONE segment
-    per term bucket and re-derives df and the corpus stats from the
-    surviving postings, in a staged sibling tree published with its
-    purge ledger. Strictly fewer parquet files than the streamed store
-    is asserted, and the serve path runs the ``check_tomb_meta``
-    handshake against the ledger, so a store compacted under another
-    purge list fails loudly. ``purge_ledger_consistent`` reads the
-    ledger back (``purge_ledger_referee``) and holds it to the TOMB_IDS
-    digest and the posting counts of both stores.
+    ``stream_lex_store``; ``compact_lex_postings`` (op_lex_index_
+    delete_compact's algebra) drops the id-list purge request TOMB_IDS,
+    rewrites ONE segment per term bucket and re-derives df and the
+    corpus stats from the surviving postings, in a sibling tree
+    published with its purge ledger (``publish_compaction``, which
+    raises unless the ledger records TOMB_IDS). Strictly fewer parquet
+    files than the streamed store is asserted.
+    ``purge_ledger_consistent`` reads the ledger back
+    (``purge_ledger_referee``) and holds it to the TOMB_IDS digest and
+    the posting counts of both stores.
 
     Gate: op_text_bm25's oracle recomputed over ``doc_id NOT IN
     TOMB_IDS`` verbatim: serving from the compacted streamed store is
@@ -1467,33 +1463,19 @@ def op_stream_lex_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = stream_lex_store(
         spark, sf_dir, "lexcompact", "op_stream_lex_compact_serve"
     )
-    comp = os.path.join(work, "compacted")
-    shutil.rmtree(comp, ignore_errors=True)
-    # the compactor writes the purge ledger last in the staging tree,
-    # so a crash in the rewrite publishes no compacted tree at all
-    with staging_tree(comp) as staging:
-        compact_lex_postings(
-            spark,
-            os.path.join(work, "postings"),
-            staging,
-            tombstones=tombstone_ids_df(spark, "doc_id"),
-        )
-        publish_staging(staging, comp, marker=PURGE_LEDGER)
-    files_before = count_parquet_files(os.path.join(work, "postings"))
-    files_after = count_parquet_files(os.path.join(comp, "postings"))
-    if not 0 < files_after < files_before:
-        raise ValueError(
-            f"op_stream_lex_compact_serve: compaction did not merge "
-            f"segments ({files_before} -> {files_after} parquet files)"
-        )
-    check_tomb_meta(comp, PURGE_LEDGER)
+    postings, comp = os.path.join(work, "postings"), os.path.join(work, "compacted")
+    publish_compaction(
+        comp, lambda staging: compact_lex_postings(spark, postings, staging, purge_ids=TOMB_IDS)
+    )
+    if not segments_merged(postings, os.path.join(comp, "postings")):
+        raise ValueError(f"op_stream_lex_compact_serve: compaction did not merge the segments of {postings}")
     audit = purge_ledger_referee(
         spark,
         comp,
-        spark.read.parquet(os.path.join(work, "postings")),
+        spark.read.parquet(postings),
         spark.read.parquet(os.path.join(comp, "postings")),
         "doc_id",
-    )
+    ).select("purge_ledger_consistent")
     return bm25_from_index(spark, comp).crossJoin(F.broadcast(audit))
 
 
@@ -1600,11 +1582,11 @@ def op_stream_ann_serve_compacted(spark: SparkSession, sf_dir: str) -> DataFrame
     """The streamed ANN store's full lifecycle, stream-ingest -> delete
     -> compact -> serve: the embeddings arrive as 3 micro-batches
     through ``stream_ann_store`` (one cent_id-partitioned segment per
-    epoch); the id-list purge request TOMB_IDS is broadcast into the
-    tombstone anti-join of ``compact_ann_postings``, which rewrites the
-    survivors into ONE segment per cell (bytes moved, never
-    re-encoded) in a staged sibling tree; the probe -> ADC -> shortlist
-    -> rerank chain serves from it.
+    epoch); ``compact_postings`` drops the id-list purge request
+    TOMB_IDS and rewrites the survivors into ONE segment per cell
+    (bytes moved, never re-encoded) in a sibling tree published with
+    its purge ledger (``publish_compaction``); the probe -> ADC ->
+    shortlist -> rerank chain serves from it.
 
     Referees, in-query because DuckDB cannot replay trained codebooks:
     ``adc_bitmatch_vs_main`` holds every probed-cell ADC score from the
@@ -1619,7 +1601,7 @@ def op_stream_ann_serve_compacted(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle re-derived over ``vec_id NOT IN TOMB_IDS``: freshness,
     deletes and compaction are score-neutral."""
     from game_data_etl_pipeline_spark.llmdata.ann_index import (
-        compact_ann_postings,
+        ANN_POSTINGS,
         read_ann_index,
         serve_with_adc_referee,
     )
@@ -1629,18 +1611,12 @@ def op_stream_ann_serve_compacted(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     tomb = F.col("vec_id").isin(*TOMB_IDS)
 
-    # the store itself is never mutated; the compactor writes the purge
-    # ledger last in the staging tree, so a crash publishes nothing
+    # the store itself is never mutated
     compacted_dir = os.path.join(os.path.dirname(store), "compacted")
-    shutil.rmtree(compacted_dir, ignore_errors=True)
-    with staging_tree(compacted_dir) as staging:
-        compact_ann_postings(
-            spark, store, staging, tombstones=tombstone_ids_df(spark, "vec_id")
-        )
-        publish_staging(staging, compacted_dir, marker=PURGE_LEDGER)
-    files_before = count_parquet_files(store)
-    files_after = count_parquet_files(compacted_dir)
-    check_tomb_meta(compacted_dir, PURGE_LEDGER)
+    publish_compaction(
+        compacted_dir,
+        lambda staging: compact_postings(spark, ANN_POSTINGS, store, staging, purge_ids=TOMB_IDS),
+    )
 
     coarse, books, main_postings = read_ann_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -1658,16 +1634,14 @@ def op_stream_ann_serve_compacted(spark: SparkSession, sf_dir: str) -> DataFrame
         coarse,
         books,
     )
-    audit = audit.withColumn(
-        "segments_merged", F.lit(0 < files_after < files_before)
-    )
+    audit = audit.withColumn("segments_merged", F.lit(segments_merged(store, compacted_dir)))
     paudit = purge_ledger_referee(
         spark,
         compacted_dir,
         spark.read.parquet(store).select("vec_id"),
         comp.select("vec_id"),
         "vec_id",
-    )
+    ).select("purge_ledger_consistent")
     return served.crossJoin(F.broadcast(audit.crossJoin(paudit)))
 
 
@@ -1800,6 +1774,7 @@ def op_stream_bloom_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     is ever re-read."""
     from game_data_etl_pipeline_spark.llmdata.dedup import (
         _shingles,
+        bit_or_fold,
         bloom_candidates,
         bloom_fill_audit,
         bloom_words,
@@ -1835,12 +1810,7 @@ def op_stream_bloom_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the post-stream fold: ONE bit_or groupBy over the persisted
     # deltas (<= 3 x 65k rows, bounded by geometry, not corpus)
-    words = (
-        spark.read.parquet(word_deltas)
-        .groupBy("widx")
-        .agg(F.bit_or("bits").alias("bits"))
-        .localCheckpoint()
-    )
+    words = bit_or_fold(spark.read.parquet(word_deltas)).localCheckpoint()
     bench_pairs = spark.read.parquet(pair_store)
 
     # the screen, from the stream-accumulated filter

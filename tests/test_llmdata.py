@@ -13,6 +13,8 @@ no exact duplicates (500 distinct md5 over 500 docs).
 
 from __future__ import annotations
 
+import pytest
+
 from game_data_etl_pipeline_spark import registry
 
 SPECS = registry.all_specs()
@@ -794,15 +796,17 @@ def test_compact_serve_equality_and_fewer_segments(spark, sf_dir):
 
     from game_data_etl_pipeline_spark.catalog import load_table
     from game_data_etl_pipeline_spark.llmdata.ann_index import (
+        ANN,
         INDEX_VERSION,
-        TOMB_MOD,
-        TOMB_RESIDUE,
-        _count_parquet_files,
-        _index_root,
         ensure_upsert_tree,
         read_ann_index,
     )
-    from game_data_etl_pipeline_spark.llmdata.artifacts import fingerprint_key
+    from game_data_etl_pipeline_spark.llmdata.artifacts import (
+        TOMB_MOD,
+        TOMB_RESIDUE,
+        count_parquet_files as _count_parquet_files,
+        fingerprint_key,
+    )
     from pyspark.sql import functions as F
 
     # run the registered op once: builds both trees, all audits true
@@ -812,7 +816,7 @@ def test_compact_serve_equality_and_fewer_segments(spark, sf_dir):
 
     demo = ensure_upsert_tree(spark, sf_dir)
     comp = _os.path.join(
-        _index_root(),
+        ANN.root(),
         f"compact_v{INDEX_VERSION}",
         fingerprint_key(sf_dir, "embeddings.parquet"),
     )
@@ -850,7 +854,7 @@ def test_index_fingerprint_staleness(spark, sf_dir, tmp_path, monkeypatch):
     import shutil as _shutil
 
     from game_data_etl_pipeline_spark.llmdata import lex_index as lx
-    from game_data_etl_pipeline_spark.llmdata.ann_index import ann_index_dir
+    from game_data_etl_pipeline_spark.llmdata.ann_index import ANN
 
     fixture = tmp_path / "fixture"
     fixture.mkdir()
@@ -878,9 +882,9 @@ def test_index_fingerprint_staleness(spark, sf_dir, tmp_path, monkeypatch):
     assert served_after == served_before
 
     # the ANN side shares fingerprint_key: same re-key behavior
-    ann_first = ann_index_dir(str(fixture))
+    ann_first = ANN.dir(str(fixture))
     _os.utime(fixture / "embeddings.parquet", ns=(2_000_000_000, 2_000_000_000))
-    assert ann_index_dir(str(fixture)) != ann_first
+    assert ANN.dir(str(fixture)) != ann_first
 
 
 def test_publish_staging_loser_discards_and_trusts_winner(tmp_path):
@@ -1025,7 +1029,7 @@ def test_lex_delete_compact_semantics(spark, sf_dir):
     n_docs/tot_dl/df, so surviving docs' BM25 must differ from the
     full-corpus serve (a compactor that dropped rows but kept stale
     stats would pass (a) and (b) and fail this)."""
-    from game_data_etl_pipeline_spark.llmdata.ann_index import TOMB_MOD, TOMB_RESIDUE
+    from game_data_etl_pipeline_spark.llmdata.artifacts import TOMB_MOD, TOMB_RESIDUE
 
     compacted = {
         r.doc_id: (r.bm25, r.n_terms_hit)
@@ -1203,7 +1207,7 @@ def test_bloom_registry_refresh_semantics(spark, sf_dir, tmp_path, monkeypatch):
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR_BLOOM", str(tmp_path / "bloom"))
     final = _os.path.join(
-        dd._bloom_root(),
+        dd.BLOOM.root(),
         f"refresh_v{dd.BLOOM_INDEX_VERSION}",
         fingerprint_key(sf_dir, "documents.parquet"),
     )
@@ -1259,7 +1263,7 @@ def test_register_predicate_mismatch_self_heals(spark, sf_dir, tmp_path, monkeyp
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR_BLOOM", str(tmp_path / "bloom"))
     final = _os.path.join(
-        dd._bloom_root(),
+        dd.BLOOM.root(),
         f"registry_v{dd.BLOOM_INDEX_VERSION}",
         fingerprint_key(sf_dir, "documents.parquet"),
     )
@@ -1328,7 +1332,7 @@ def test_bloom_registry_retire_semantics(spark, sf_dir, tmp_path, monkeypatch):
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR_BLOOM", str(tmp_path / "bloom"))
     final = _os.path.join(
-        dd._bloom_root(),
+        dd.BLOOM.root(),
         f"retire_v{dd.BLOOM_INDEX_VERSION}",
         fingerprint_key(sf_dir, "documents.parquet"),
     )
@@ -1392,6 +1396,70 @@ def test_bloom_registry_retire_semantics(spark, sf_dir, tmp_path, monkeypatch):
         dd.retire_bloom_family(spark, sf_dir, final, "suite_a")
 
 
+@pytest.mark.parametrize("verb", ["register", "refresh", "retire"])
+def test_registry_edit_failure_leaves_live_tree(spark, sf_dir, tmp_path, monkeypatch, verb):
+    """A registry edit that fails partway (here: the union write
+    raises, after the families were staged) must leave the live
+    registry exactly as it was, digest and marker, with no staging dir
+    behind, and the next call must complete the edit."""
+    import glob as _glob
+    import hashlib as _hashlib
+    import json as _json
+    import os as _os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from game_data_etl_pipeline_spark.llmdata import dedup as dd
+
+    def _tree_digest(d):
+        h = _hashlib.sha256()
+        for root, _dirs, files in sorted(_os.walk(d)):
+            for fn in sorted(files):
+                with open(_os.path.join(root, fn), "rb") as f:
+                    h.update(fn.encode() + f.read())
+        return h.hexdigest()
+
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR_BLOOM", str(tmp_path / "bloom"))
+    final = dd.BLOOM.dir(sf_dir, "registry")
+    dd._register_bloom_family(spark, sf_dir, final, "suite_a", 0, mod=6)
+    if verb != "register":
+        dd._register_bloom_family(spark, sf_dir, final, "suite_b", 3, mod=12)
+    edit = {
+        "register": lambda: dd._register_bloom_family(spark, sf_dir, final, "suite_b", 3),
+        "refresh": lambda: dd.refresh_bloom_family(spark, sf_dir, final, "suite_b", 3, mod=6),
+        "retire": lambda: dd.retire_bloom_family(spark, sf_dir, final, "suite_b"),
+    }[verb]
+    marker = _os.path.join(final, "registry_done.json")
+    with open(marker) as f:
+        marker_before = f.read()
+    digest_before = _tree_digest(final)
+
+    write_parquet = DataFrameWriter.parquet
+
+    def failing_union_write(self, path, *a, **k):
+        if _os.path.basename(str(path)) == "union_words":
+            raise RuntimeError("injected union write failure")
+        return write_parquet(self, path, *a, **k)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(DataFrameWriter, "parquet", failing_union_write)
+        with pytest.raises(RuntimeError, match="injected union write failure"):
+            edit()
+    with open(marker) as f:
+        assert f.read() == marker_before, "a failed edit changed the live marker"
+    assert _tree_digest(final) == digest_before, "a failed edit changed the live tree"
+    assert not _glob.glob(_os.path.join(_os.path.dirname(final), "staging_*"))
+
+    edit()
+    with open(marker) as f:
+        families = _json.load(f)["families"]
+    assert families == {
+        "register": {"suite_a": "doc_id % 6 == 0", "suite_b": "doc_id % 6 == 3"},
+        "refresh": {"suite_a": "doc_id % 6 == 0", "suite_b": "doc_id % 6 == 3"},
+        "retire": {"suite_a": "doc_id % 6 == 0"},
+    }[verb]
+
+
 def test_purge_ledger_evidence_and_torn_write(spark, sf_dir, tmp_path, monkeypatch):
     """The purge AUDIT LEDGER (round-12 verdict task 5): every
     compaction must leave persisted evidence of what it deleted,
@@ -1410,13 +1478,14 @@ def test_purge_ledger_evidence_and_torn_write(spark, sf_dir, tmp_path, monkeypat
     import pytest
 
     from game_data_etl_pipeline_spark.llmdata import ann_index as ai
+    from game_data_etl_pipeline_spark.llmdata import artifacts
     from game_data_etl_pipeline_spark.llmdata.artifacts import PURGE_LEDGER, fingerprint_key
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "ann"))
     monkeypatch.setenv("SPARK_GRAFT_LEX_INDEX_DIR", str(tmp_path / "lex"))
 
     e2e = _os.path.join(
-        ai._index_root(),
+        ai.ANN.root(),
         f"e2e_v{ai.INDEX_VERSION}",
         fingerprint_key(sf_dir, "embeddings.parquet"),
     )
@@ -1426,17 +1495,17 @@ def test_purge_ledger_evidence_and_torn_write(spark, sf_dir, tmp_path, monkeypat
         def _boom(*a, **k):
             raise RuntimeError("torn ledger write")
 
-        mp.setattr(ai, "write_purge_ledger", _boom)
+        mp.setattr(artifacts, "write_purge_ledger", _boom)
         with pytest.raises(RuntimeError, match="torn ledger write"):
             ai.ensure_ann_e2e_tree(spark, sf_dir)
     assert not _os.path.isdir(e2e), "torn compaction published a tree"
 
     # (b) the real build writes the evidence
     assert ai.ensure_ann_e2e_tree(spark, sf_dir) == e2e
-    led = ai.read_purge_ledger(_os.path.join(e2e, "postings"))
+    led = artifacts.read_purge_ledger(_os.path.join(e2e, "postings"))
     assert led["purge"]["kind"] == "id_list"
     assert led["purge"]["ids"] == sorted(ai.TOMB_IDS)
-    assert led["purge"]["digest"] == ai.purge_ids_digest(ai.TOMB_IDS)
+    assert led["purge"]["digest"] == artifacts.purge_ids_digest(ai.TOMB_IDS)
     demo = ai.ensure_upsert_tree(spark, sf_dir)
     n_before = spark.read.parquet(_os.path.join(demo, "postings")).count()
     n_after = spark.read.parquet(_os.path.join(e2e, "postings")).count()
@@ -1447,19 +1516,19 @@ def test_purge_ledger_evidence_and_torn_write(spark, sf_dir, tmp_path, monkeypat
     # (c) evidence removed later: loud at read, cache miss at build
     _os.remove(_os.path.join(e2e, "postings", PURGE_LEDGER))
     with pytest.raises(ValueError, match="purge ledger"):
-        ai.read_purge_ledger(_os.path.join(e2e, "postings"))
+        artifacts.read_purge_ledger(_os.path.join(e2e, "postings"))
     assert not ai.purge_ledger_current(e2e, _os.path.join(e2e, "postings"))
     assert not _os.path.isdir(e2e), "ledger-less tree must be displaced"
     rebuilt = ai.ensure_ann_e2e_tree(spark, sf_dir)
-    led2 = ai.read_purge_ledger(_os.path.join(rebuilt, "postings"))
+    led2 = artifacts.read_purge_ledger(_os.path.join(rebuilt, "postings"))
     assert led2 == led, "rebuild must reproduce the identical ledger"
 
     # the lexical compactor writes the same artifact at its tree root
     from game_data_etl_pipeline_spark.llmdata import lex_index as li
 
     lex_e2e = li.ensure_lex_e2e_tree(spark, sf_dir)
-    lled = ai.read_purge_ledger(lex_e2e)
-    assert lled["purge"]["digest"] == ai.purge_ids_digest(ai.TOMB_IDS)
+    lled = artifacts.read_purge_ledger(lex_e2e)
+    assert lled["purge"]["digest"] == artifacts.purge_ids_digest(ai.TOMB_IDS)
     assert lled["n_purged"] == lled["n_before"] - lled["n_after"] > 0
 
 
@@ -1699,7 +1768,7 @@ def test_bloom_build_self_heals_stale_geometry(spark, sf_dir, tmp_path, monkeypa
     from game_data_etl_pipeline_spark.llmdata import dedup as dd
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR_BLOOM", str(tmp_path / "bloom"))
-    stale = dd.bloom_index_dir(sf_dir)
+    stale = dd.BLOOM.dir(sf_dir)
     _os.makedirs(stale)
     with open(_os.path.join(stale, "meta.json"), "w") as f:
         _json.dump({"version": 1, "bits": 64, "seeds": [1, 2, 3]}, f)
@@ -1753,7 +1822,7 @@ def test_bloom_registry_lifecycle_e2e_semantics(spark, sf_dir, tmp_path, monkeyp
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR_BLOOM", str(tmp_path / "bloom"))
     final = _os.path.join(
-        dd._bloom_root(),
+        dd.BLOOM.root(),
         f"lifecycle_v{dd.BLOOM_INDEX_VERSION}",
         fingerprint_key(sf_dir, "documents.parquet"),
     )
@@ -1804,7 +1873,7 @@ def test_bloom_registry_lifecycle_e2e_semantics(spark, sf_dir, tmp_path, monkeyp
     # test is what tells the states apart)
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR_BLOOM", str(tmp_path / "bloom2"))
     final2 = _os.path.join(
-        dd._bloom_root(),
+        dd.BLOOM.root(),
         f"lifecycle_v{dd.BLOOM_INDEX_VERSION}",
         fingerprint_key(sf_dir, "documents.parquet"),
     )
@@ -1856,11 +1925,13 @@ def test_merge_policy_untouched_immutable_and_serve_identical(spark, sf_dir):
 
     from game_data_etl_pipeline_spark.catalog import load_table
     from game_data_etl_pipeline_spark.llmdata.ann_index import (
-        _count_parquet_files,
         _seg_dir_digests,
         ensure_merge_base_tree,
         ensure_merge_policy_tree,
         read_ann_index,
+    )
+    from game_data_etl_pipeline_spark.llmdata.artifacts import (
+        count_parquet_files as _count_parquet_files,
     )
     from game_data_etl_pipeline_spark.llmdata.similarity import ivfpq_serve_stages
     from pyspark.sql import functions as F

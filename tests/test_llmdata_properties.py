@@ -138,7 +138,7 @@ def test_lex_compact_algebra_matches_rebuild_property(spark, tmp_path_factory, c
 
     from pyspark.sql import functions as F
 
-    from game_data_etl_pipeline_spark.llmdata.ann_index import TOMB_MOD, TOMB_RESIDUE
+    from game_data_etl_pipeline_spark.llmdata.artifacts import TOMB_MOD, TOMB_RESIDUE
     from game_data_etl_pipeline_spark.llmdata.lex_index import (
         _bucket,
         compact_lex_postings,

@@ -307,18 +307,17 @@ def test_streamed_compact_publish_is_atomic(spark, sf_dir, monkeypatch):
 
     import pytest
 
-    from game_data_etl_pipeline_spark.llmdata import ann_index, lex_index
+    from game_data_etl_pipeline_spark.llmdata import artifacts
     from game_data_etl_pipeline_spark.llmdata.artifacts import PURGE_LEDGER
     from game_data_etl_pipeline_spark.streaming.queries import _session_workdir
 
     def boom(*a, **k):
         raise OSError("injected crash before the purge-ledger write")
 
-    monkeypatch.setattr(ann_index, "write_purge_ledger", boom)
-    monkeypatch.setattr(lex_index, "write_purge_ledger", boom)
+    monkeypatch.setattr(artifacts, "write_purge_ledger", boom)
 
-    # lexical: compact_lex_postings resolves write_purge_ledger from
-    # lex_index at call time, so the injection hits after the segment
+    # lexical: compact_postings resolves write_purge_ledger from
+    # artifacts at call time, so the injection hits after the segment
     # rewrite and before the evidence lands
     with pytest.raises(OSError, match="injected crash"):
         SPECS["op_stream_lex_compact_serve"].fn(spark, sf_dir).count()
@@ -326,7 +325,7 @@ def test_streamed_compact_publish_is_atomic(spark, sf_dir, monkeypatch):
     assert not os.path.exists(os.path.join(lex_work, "compacted"))
     assert not glob.glob(os.path.join(lex_work, "staging_*"))
 
-    # ann: same injection point inside compact_ann_postings
+    # ann: the same injection point
     with pytest.raises(OSError, match="injected crash"):
         SPECS["op_stream_ann_serve_compacted"].fn(spark, sf_dir).count()
     ann_work = _session_workdir(spark, "annservecomp", sf_dir)
