@@ -49,7 +49,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from game_data_etl_pipeline_spark.catalog import load_table
+from game_data_etl_pipeline_spark.catalog import load_table, read_parquet
 from game_data_etl_pipeline_spark.llmdata.artifacts import (
     TOMB_IDS,
     TOMB_IDS_SQL,
@@ -138,11 +138,12 @@ def read_ann_index(
     """(coarse, codebooks, postings) for ``sf_dir``, building the
     artifact first if absent. The postings' cent_id comes back as a
     PARTITION column (directory-derived int) — cast to long so joins
-    against the coarse centroid ids stay cast-free."""
+    against the coarse centroid ids stay cast-free. The published tree
+    is immutable, so each part's schema is inferred once per session."""
     path = build_ann_index(spark, sf_dir)
-    coarse = spark.read.parquet(os.path.join(path, "coarse"))
-    books = spark.read.parquet(os.path.join(path, "codebooks"))
-    postings = spark.read.parquet(os.path.join(path, "postings")).select(
+    coarse = read_parquet(spark, os.path.join(path, "coarse"))
+    books = read_parquet(spark, os.path.join(path, "codebooks"))
+    postings = read_parquet(spark, os.path.join(path, "postings")).select(
         "vec_id", "codes", F.col("cent_id").cast("long").alias("cent_id")
     )
     return coarse, books, postings

@@ -30,7 +30,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from game_data_etl_pipeline_spark.catalog import load_table
+from game_data_etl_pipeline_spark.catalog import load_table, read_parquet
 from game_data_etl_pipeline_spark.llmdata.artifacts import (
     TreeFamily,
     displace,
@@ -1796,8 +1796,8 @@ def op_corpus_decontaminate_bloom_served(spark: SparkSession, sf_dir: str) -> Da
     real work."""
     path = build_bloom_index(spark, sf_dir)
     check_bloom_meta(path)
-    words = spark.read.parquet(os.path.join(path, "words"))
-    bench_pairs = spark.read.parquet(os.path.join(path, "pairs"))
+    words = read_parquet(spark, os.path.join(path, "words"))
+    bench_pairs = read_parquet(spark, os.path.join(path, "pairs"))
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # ONE training-corpus scan: the deduped shingle projection
     # materializes once and feeds BOTH the probe chain and the
@@ -1872,8 +1872,8 @@ def op_bloom_saturation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     live artifact."""
     path = build_bloom_index(spark, sf_dir)
     check_bloom_meta(path)
-    words = spark.read.parquet(os.path.join(path, "words"))
-    pairs = spark.read.parquet(os.path.join(path, "pairs"))
+    words = read_parquet(spark, os.path.join(path, "words"))
+    pairs = read_parquet(spark, os.path.join(path, "pairs"))
     n_sh = pairs.select("g").distinct().agg(
         F.count(F.lit(1)).alias("n_bench_shingles")
     )

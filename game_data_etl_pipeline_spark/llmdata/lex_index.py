@@ -38,7 +38,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from game_data_etl_pipeline_spark.catalog import load_table
+from game_data_etl_pipeline_spark.catalog import load_table, read_parquet
 from game_data_etl_pipeline_spark.llmdata.artifacts import (
     TOMB_IDS,
     TOMB_IDS_SQL,
@@ -225,16 +225,16 @@ def bm25_from_index(
     k1, b = 1.2, 0.75
     buckets = resolve_term_buckets(spark, query_terms)
     postings = (
-        spark.read.parquet(os.path.join(path, "postings"))
+        read_parquet(spark, os.path.join(path, "postings"))
         .filter(F.col("term_bucket").isin(buckets) & F.col("term").isin(*query_terms))
         .select("term", "doc_id", "dl", "tf")
     )
     dfq = (
-        spark.read.parquet(os.path.join(path, "df"))
+        read_parquet(spark, os.path.join(path, "df"))
         .filter(F.col("term_bucket").isin(buckets) & F.col("term").isin(*query_terms))
         .select("term", "df")
     )
-    stats = spark.read.parquet(os.path.join(path, "stats"))
+    stats = read_parquet(spark, os.path.join(path, "stats"))
     idf = F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
     score = idf * (F.col("tf") * (k1 + 1.0)) / (
         F.col("tf") + k1 * ((1.0 - b) + b * F.col("dl") * F.col("n_docs") / F.col("tot_dl"))

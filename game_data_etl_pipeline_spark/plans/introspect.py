@@ -12,7 +12,10 @@ Parses ``df.explain("formatted")`` output into checkable facts:
 - ``num_exchanges``    — shuffle count (every Exchange is a full
   network materialization of the stream at scale);
 - ``codegen_span_count`` / ``wholestage_fraction`` — how much of the
-  plan runs fused JVM codegen vs interpreted or Python.
+  plan runs fused JVM codegen vs interpreted or Python;
+- ``codegen_compilations`` — the JVM's Janino compile count, whose
+  difference across a repeated call shows whether its generated classes
+  stayed in the codegen cache.
 
 PySpark 4.1 exposes no stable py4j surface for the formatted plan
 string, so we capture ``df.explain()`` stdout (the documented API).
@@ -180,6 +183,14 @@ def executed_facts(df: DataFrame) -> PlanFacts:
         codegen_spans=codegen_span_count(formatted),
         partial_agg=has_partial_aggregation(formatted),
     )
+
+
+def codegen_compilations(spark) -> int:
+    """Janino compilations of generated classes in this JVM so far
+    (Spark's ``CodegenMetrics``): the difference across a call is the
+    classes that call found missing from the codegen cache."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def plan_report(specs: dict, spark, sf_dir: str) -> str:

@@ -12,6 +12,11 @@ in bench.py, so an op that serves a persisted index is dumped with
 that index built. Streaming ops run their stream when invoked (the
 returned frame is the post-stream batch plan) — slower to dump, but
 the serving plan is the part the evidence is about.
+
+Each dumped op is then called twice more, its result written to the
+``noop`` sink, and the Janino compilations of the second of those calls
+are printed next to its Exchange count: near 0 when the op's generated
+classes stay in the session's codegen cache between calls.
 """
 
 from __future__ import annotations
@@ -47,6 +52,10 @@ def main() -> int:
             for step in spec.setup:
                 step(spark, sf_dir)
             plan = I.explain_str(spec.fn(spark, sf_dir), "formatted")
+            for _ in range(2):
+                n0 = I.codegen_compilations(spark)
+                spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            compiled = I.codegen_compilations(spark) - n0
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: {type(e).__name__}: {e}", file=sys.stderr)
             rc = 1
@@ -54,7 +63,7 @@ def main() -> int:
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)
-        print(f"wrote {path} ({plan.count('Exchange')} Exchange refs)")
+        print(f"wrote {path} ({plan.count('Exchange')} Exchange refs, {compiled} classes compiled by a second call)")
     return rc
 
 

@@ -5,6 +5,10 @@ Usage: python scripts/gen_plan_scorecard.py [sf_dir]
 
 One line per query: join strategies, exchange (shuffle) count,
 broadcast count, pushed-filter count, whole-stage-codegen span count.
+The codegen count is taken from the executed plan (AQE's final plan,
+``introspect.executed_facts``, which runs the query): AQE's initial plan
+has no codegen stages yet. The other columns come from the plan before
+execution.
 This is the artifact of the ".explain until it's the plan you'd want"
 loop — tests/test_plans.py pins the load-bearing rows; this file shows
 the whole surface at a glance.
@@ -31,7 +35,8 @@ def main() -> None:
         f"`python scripts/gen_plan_scorecard.py {sf_dir}` over every registered",
         "batch query. xchg = Exchange (shuffle) count, bcast = broadcast",
         "exchanges, pushed = predicates pushed to the parquet scan, codegen =",
-        "whole-stage-codegen spans. Streaming queries can't be explained",
+        "whole-stage-codegen spans of the executed (AQE final) plan; the other",
+        "columns read the plan before execution. Streaming queries can't be explained",
         "pre-start and are marked `streaming`. Plan CONTRACTS (the rows that",
         "must never regress) live in tests/test_plans.py; this file is the",
         "full-surface snapshot. GLOBALWIN=N marks plans containing an",
@@ -47,7 +52,9 @@ def main() -> None:
             lines.append(f"{name:36s} streaming (memory-sink; batch-oracled)")
             continue
         try:
-            f = I.facts(spec.fn(spark, sf_dir))
+            df = spec.fn(spark, sf_dir)
+            f = I.facts(df)
+            codegen = I.executed_facts(df).codegen_spans
         except Exception as e:  # pragma: no cover - diagnostic output only
             lines.append(f"{name:36s} !! {type(e).__name__}: {e}")
             continue
@@ -55,7 +62,7 @@ def main() -> None:
         gw = f" GLOBALWIN={f.global_window_sorts}" if f.global_window_sorts else ""
         lines.append(
             f"{name:36s} xchg={f.exchanges} bcast={f.broadcasts} "
-            f"pushed={len(f.pushed_filters)} codegen={f.codegen_spans} joins={joins}{gw}"
+            f"pushed={len(f.pushed_filters)} codegen={codegen} joins={joins}{gw}"
         )
     lines.append("```")
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
