@@ -25,9 +25,9 @@ the documents file's (size, mtime_ns) fingerprint + format version):
 
 Build-vs-serve float discipline: tf, dl, df, n_docs, tot_dl are all
 INTEGERS, so persisting them loses nothing; the serve-time score is
-the identical IEEE expression op_text_bm25 evaluates (4dp per-term
-rounds absorbing the libm LN ulp), which is what lets the serve op
-share the original DuckDB oracle verbatim.
+``text.bm25_scored``, the scorer op_text_bm25 runs over its documents
+scan, which is what lets the serve op share the original DuckDB oracle
+verbatim.
 """
 
 from __future__ import annotations
@@ -52,7 +52,7 @@ from game_data_etl_pipeline_spark.llmdata.artifacts import (
     segments_merged,
     tomb_ids_current,
 )
-from game_data_etl_pipeline_spark.llmdata.text import BM25_CTES, _terms
+from game_data_etl_pipeline_spark.llmdata.text import BM25_CTES, BM25_TERMS, _terms, bm25_scored
 from game_data_etl_pipeline_spark.registry import register
 
 # v2 (round 9): _bucket moved from abs(xxhash64)%N — whose abs leaves
@@ -214,41 +214,33 @@ def resolve_term_buckets(
     return _BUCKET_CACHE[query_terms]
 
 
-def bm25_from_index(
-    spark: SparkSession, path: str, query_terms: tuple[str, ...] = ("vector", "stream", "spark")
-) -> DataFrame:
-    """The shared serving path: BM25 from a persisted index tree at
-    ``path`` — bucket-pruned posting/df lookups, broadcast stats, the
-    op_text_bm25 IEEE score expression. Used by op_text_bm25_serve
-    (main index) and op_lex_index_upsert (post-upsert tree), so the
-    two serve paths cannot drift."""
-    k1, b = 1.2, 0.75
-    buckets = resolve_term_buckets(spark, query_terms)
-    postings = (
-        read_parquet(spark, os.path.join(path, "postings"))
-        .filter(F.col("term_bucket").isin(buckets) & F.col("term").isin(*query_terms))
-        .select("term", "doc_id", "dl", "tf")
-    )
-    dfq = (
-        read_parquet(spark, os.path.join(path, "df"))
-        .filter(F.col("term_bucket").isin(buckets) & F.col("term").isin(*query_terms))
-        .select("term", "df")
-    )
-    stats = read_parquet(spark, os.path.join(path, "stats"))
-    idf = F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-    score = idf * (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * ((1.0 - b) + b * F.col("dl") * F.col("n_docs") / F.col("tot_dl"))
-    )
+def bm25_index_parts(
+    spark: SparkSession, path: str, terms: tuple[str, ...]
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The BM25 parts of ``terms`` read from the index tree at
+    ``path``: ``tf`` and ``df`` pruned to the terms' bucket
+    directories, and the one-row ``stats``. All integers, equal to
+    ``text.bm25_scan_parts`` over the indexed corpus."""
+    buckets = resolve_term_buckets(spark, terms)
+    wanted = F.col("term_bucket").isin(buckets) & F.col("term").isin(*terms)
+    tf = read_parquet(spark, os.path.join(path, "postings")).filter(wanted)
+    df = read_parquet(spark, os.path.join(path, "df")).filter(wanted)
     return (
-        postings.join(F.broadcast(dfq), "term")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", F.round(score, 4).alias("s"))
-        .groupBy("doc_id")
-        .agg(
-            F.round(F.sum("s"), 4).alias("bm25"),
-            F.count(F.lit(1)).alias("n_terms_hit"),
-        )
+        tf.select("doc_id", "dl", "term", "tf"),
+        df.select("term", "df"),
+        read_parquet(spark, os.path.join(path, "stats")),
     )
+
+
+def bm25_from_index(
+    spark: SparkSession, path: str, query_terms: tuple[str, ...] = BM25_TERMS
+) -> DataFrame:
+    """BM25 of ``query_terms`` served from the index tree at ``path``:
+    the one-query ``bm25_scored`` over ``bm25_index_parts``, as
+    (doc_id, bm25, n_terms_hit). Every lexical serve op reads its tree
+    through it."""
+    parts = bm25_index_parts(spark, path, query_terms)
+    return bm25_scored(*parts, {0: query_terms}).drop("query_id")
 
 
 def ensure_lex_upsert_tree(spark: SparkSession, sf_dir: str) -> str:

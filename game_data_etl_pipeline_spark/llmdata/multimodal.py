@@ -25,26 +25,12 @@ from game_data_etl_pipeline_spark.registry import register
 
 FRAME_BYTES = 256  # fake "frame" stride for the frame-sampling operator
 
-try:  # real decoder would go here; not present in this container
-    import PIL.Image  # noqa: F401
-
-    _HAVE_PIL = True
-except ImportError:
-    _HAVE_PIL = False
-
 
 def _fake_decode(payload: bytes) -> tuple[int, int, str]:
     """DETERMINISTIC FAKE decode: derives (width, height, format) from
     the byte length alone. Replace with a real codec in production."""
     n = len(payload)
     return 64 + n % 512, 64 + (n // 7) % 512, "fakepng"
-
-
-def real_decode(payload: bytes):  # pragma: no cover - no codec in container
-    """The real decode hook. STUB: raises until a codec is installed."""
-    if not _HAVE_PIL:
-        raise NotImplementedError("image codec not available in this environment")
-    raise NotImplementedError("wire PIL decode here when enabling real codecs")
 
 
 @register(

@@ -1,62 +1,57 @@
-"""The COMPOSED retrieval stack as single registered endpoints.
+"""The composed retrieval chain: lexical and dense candidates, RRF
+fusion and MMR diversification, for a batch of queries.
 
-Round 7 verified the retrieval stages individually — BM25 lexical
-scoring (text.py), cosine/IVF-PQ dense retrieval (similarity.py,
-ann_index.py), RRF fusion and MMR diversification (similarity.py) —
-but not their composition, which is where plan-sharing bugs hide
-(a barrier dropped between stages silently re-scans the corpus; a
-rank computed off an unmaterialized frame can shift under AQE). This
-module closes that (round-8 verdict item 3):
+One chain. A batch is a ``{query_id: terms}`` dict: query ``i`` uses
+vec ``i`` as its dense query and ``terms`` as its lexical query. A
+single query is the one-query batch ``ONE_QUERY`` = ``{0:
+BATCH_QUERY_TERMS[0]}``: the single-query ops run the batch chain with
+it and drop ``query_id``. Per query, the chain takes the lexical and
+the dense top-K_EACH over the embedded corpus, fuses them with
+``similarity.fuse_rrf`` (k=60), keeps the fused top-K_FUSED and picks
+K_OUT of them with ``similarity.mmr_select`` (lambda=0.5).
 
-- ``q_retrieval_pipeline``: BM25 top-20 + EXACT cosine top-20 ->
-  RRF(k=60) fusion -> fused top-10 -> MMR(lambda=0.5) selection of 5,
-  one lazy chain, VALUE-ORACLED END TO END — the DuckDB oracle
-  replays every stage including the unrolled greedy MMR steps, so a
-  single drifted rank anywhere in the composition flips the value
-  hash.
-- ``q_retrieval_pipeline_ann``: the same chain with the dense side
-  swapped to the PERSISTED-INDEX IVF-PQ serve path (probe -> ADC ->
-  exact rerank), i.e. what the stack runs at 100 TB where exact
-  cosine over the corpus is unaffordable. ANN membership depends on
-  trained codebooks no SQL engine can replay, so (registry
-  discipline, the op_sim_ivfpq precedent) the output is the
-  deterministic lexical spine (hash-compared value by value) plus
-  in-query audit booleans over the approximate side.
+Two lexical sources, one scorer: ``lex_ranked_batch`` scores
+``text.bm25_scored`` over one documents scan, ``lex_ranked_batch_served``
+over bucket-pruned reads of the persisted inverted index; their parts
+are the same integers, so their ranks agree bit for bit. Two dense
+sources: the exact cosine scan of embeddings
+(``exact_sem_ranked_batch``) and the persisted IVF-PQ index
+(``ann_sem_ranked_batch``). ANN membership depends on trained codebooks
+that no SQL engine replays, so an op with an ANN side returns the
+deterministic lexical spine plus in-query audits
+(``audited_pipeline``).
 
-The module also holds the retrieval-adjacent training-data and
-query-shape operators that build on the same primitives:
-``op_sim_hard_negatives`` (denoised contrastive-negative mining),
-``op_sim_filtered_topk`` / ``op_sim_filtered_ann_serve`` (metadata-
-filtered vector search: exact pre-filter strategy and the predicate
-pushed into the persisted index scan).
+Checkpoint rule: ``localCheckpoint`` only a frame that two consumers
+read, so that the second consumer does not recompute it.
 
-Corpus note: both sides draw candidates from the EMBEDDED corpus
-(doc_id present in embeddings) — at sf0.1 the documents table has
-5000 docs but only 2000 embeddings, and a candidate without a vector
-cannot enter MMR's diversity matrix. A production stack embeds its
-whole serving corpus; the restriction is the fixture-faithful
-equivalent.
+Scale shape: every per-query rank is a window partitioned by query_id
+with a WindowGroupLimit below its exchange (a per-query top-K heap,
+never a global sort); every frame after candidate generation holds
+|queries| * K rows. The corpus-scale stages are the documents scan
+(or the pruned postings read) and the embeddings scans, pinned by
+tests/test_plans.py.
 
-Scale shape: each ranker reduces to its top-K via
-TakeOrderedAndProject heaps (never a global sort); ranks are assigned
-by the sort_array/posexplode form over the K survivors (no
-single-partition window); fusion is union + K-keyed groupBy (Spark
-cannot broadcast a FULL OUTER side); the fused top-10 and its 10x10
-cosine matrix are materialized once and the 5 greedy MMR steps are
-constant work. The only corpus-scale stages are the two scoring scans
-(documents once — inside op_text_bm25's materialize-once barrier —
-and embeddings once per dense scorer), pinned by
-tests/test_plans.py::test_retrieval_pipeline_plan_contract.
+Candidates come from the EMBEDDED corpus (doc_id present in
+embeddings): at sf0.1 the documents table has 5000 docs but only 2000
+embeddings, and a candidate without a vector cannot enter MMR's
+diversity matrix. BM25's corpus statistics still cover every document.
+
+The module also holds retrieval-adjacent ops built on the same
+primitives: ``op_sim_hard_negatives`` (denoised contrastive-negative
+mining), ``op_sim_filtered_topk`` / ``op_sim_filtered_ann_serve``
+(metadata-filtered vector search), ``op_retrieval_eval_metrics`` and
+the served late-interaction op.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from game_data_etl_pipeline_spark.catalog import load_table, widen_narrow_scan
+from game_data_etl_pipeline_spark.catalog import load_table
 from game_data_etl_pipeline_spark.llmdata import text as _text
 from game_data_etl_pipeline_spark.llmdata.ann_index import build_ann_index, read_ann_index
 from game_data_etl_pipeline_spark.llmdata.artifacts import TreeFamily, ensure_tree
@@ -65,11 +60,12 @@ from game_data_etl_pipeline_spark.llmdata.similarity import (
     IVFPQ_SHORTLIST,
     LATE_INTERACTION_ORACLE,
     _cosine_to_query0,
+    _ranked,
     dot_expr,
     euclidean_expr,
+    fuse_rrf,
     ivfpq_adc_scored,
-    mmr_select_embedded,
-    mmr_select_grouped_embedded,
+    mmr_select,
     norm_expr,
 )
 from game_data_etl_pipeline_spark.registry import register
@@ -78,82 +74,26 @@ K_EACH = 20   # per-ranker candidate list
 K_FUSED = 10  # fused candidates entering MMR
 K_OUT = 5     # MMR selections returned
 
-
-def _ranked(top: DataFrame, score: str, rank_name: str) -> DataFrame:
-    """Rank a bounded top-K frame without a window: collapse the <=K
-    survivors into one sorted array and posexplode (rank-1, doc) —
-    op_sim_hybrid_rrf's global-window-free rank assignment."""
-    arr = F.sort_array(
-        F.collect_list(
-            F.struct((-F.col(score)).alias("ns"), F.col("doc_id").alias("doc_id"))
-        )
-    )
-    return (
-        top.agg(arr.alias("arr"))
-        .select(F.posexplode("arr").alias("pos", "s"))
-        .select(
-            F.col("s.doc_id").alias("doc_id"),
-            (F.col("pos") + 1).cast("int").alias(rank_name),
-        )
-    )
-
-
-def lex_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 top-20 over the embedded corpus as (doc_id, lex_rank).
-    The semi-join against embeddings reads ONLY vec_id (column-pruned
-    scan) and keeps BM25's corpus statistics untouched — scores are
-    computed over the full documents table, the restriction applies
-    to the CANDIDATE list."""
-    embk = load_table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("doc_id")
-    )
-    lex_top = (
-        _text.op_text_bm25(spark, sf_dir)
-        .join(embk, "doc_id", "left_semi")
-        .orderBy(F.desc("bm25"), "doc_id")
-        .limit(K_EACH)
-    )
-    return _ranked(lex_top, "bm25", "lex_rank")
-
-
-def fuse_rrf(lex: DataFrame, sem: DataFrame) -> DataFrame:
-    """RRF(k=60) fusion of two bounded rank lists as union + K-keyed
-    groupBy (op_sim_hybrid_rrf's full-outer-join replacement)."""
-    rrf = F.round(
-        F.coalesce(1.0 / (60 + F.col("lex_rank")), F.lit(0.0))
-        + F.coalesce(1.0 / (60 + F.col("sem_rank")), F.lit(0.0)),
-        6,
-    )
-    both = lex.withColumn("sem_rank", F.lit(None).cast("int")).unionByName(
-        sem.withColumn("lex_rank", F.lit(None).cast("int"))
-    )
-    return (
-        both.groupBy("doc_id")
-        .agg(F.max("lex_rank").alias("lex_rank"), F.max("sem_rank").alias("sem_rank"))
-        .select("doc_id", "lex_rank", "sem_rank", rrf.alias("rrf"))
-    )
-
-
-def _mmr_over_fused(fused: DataFrame, emb: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(fused10, picks): take the fused top-K_FUSED, fetch their
-    embeddings (a broadcast of 10 ids against the embeddings scan),
-    materialize the bounded candidate + pairwise frames once, and run
-    the shared greedy loop with rel = 60*rrf (monotone in rrf; the
-    x60 rescale puts relevance on the pairwise-cosine scale so
-    lambda=0.5 trades them meaningfully)."""
-    fused10 = (
-        fused.orderBy(F.desc("rrf"), "doc_id").limit(K_FUSED).localCheckpoint()
-    )
-    # r16: the pairwise matrix folds in-expression off the ONE collect
-    # (mmr_select_embedded), so with_emb has a single consumer — its
-    # checkpoint and the broadcast pair self-join are gone and the MMR
-    # tail is one job over one embeddings fetch (guide §1.2)
-    with_emb = emb.join(
-        F.broadcast(fused10.select("doc_id", "rrf")),
-        emb["vec_id"] == F.col("doc_id"),
-    ).select("doc_id", (F.col("rrf") * 60).alias("rel"), "embedding")
-    picks = mmr_select_embedded(with_emb, steps=K_OUT, lam=0.5)
-    return fused10, picks
+# the 3-query batch: query_id i uses vec i as its dense query and its
+# own lexical term set. The Spark plan and the DuckDB oracle of every
+# batch op are generated from a dict of this shape.
+BATCH_QUERY_TERMS = {
+    0: _text.BM25_TERMS,
+    1: ("join", "hash", "merge"),
+    2: ("filter", "scan", "column"),
+}
+# 8 queries over the fixture vocabulary; 0-2 repeat the 3-query sets,
+# so shared terms are scored once and fanned out to several queries
+BATCH_QUERY_TERMS_8 = {
+    **BATCH_QUERY_TERMS,
+    3: ("sort", "window", "group"),
+    4: ("table", "row", "batch"),
+    5: ("key", "value", "data"),
+    6: ("query", "fast", "slow"),
+    7: ("agg", "order", "part"),
+}
+# the single-query ops' batch
+ONE_QUERY = {0: BATCH_QUERY_TERMS[0]}
 
 
 # the 5 unrolled greedy MMR steps over the fused candidates — the
@@ -274,63 +214,19 @@ _MMR_STEPS_SQL = """
     """,
 )
 def q_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full exact retrieval stack to one endpoint: BM25 top-20 +
-    exact-cosine top-20 (query = vec 0) -> RRF(k=60) -> fused top-10
-    -> greedy MMR (lambda=0.5) -> the 5 selections with their full
-    provenance (lex_rank, sem_rank, rrf, mmr). Every stage's values
-    feed the next and the DuckDB oracle replays the whole chain —
-    this is the composition check that the individually-verified
-    stage ops cannot give.
+    """The exact retrieval chain for one query (``ONE_QUERY``: terms
+    'vector stream spark', dense query vec 0): BM25 top-20 + exact
+    cosine top-20 -> RRF(k=60) -> fused top-10 -> greedy MMR
+    (lambda=0.5) -> the 5 picks with their provenance (lex_rank,
+    sem_rank, rrf, mmr). The DuckDB oracle replays every stage,
+    including the unrolled greedy MMR steps, so one drifted rank
+    anywhere in the composition flips the value hash.
 
-    Float discipline (all inherited from the stage ops): cosine 4dp
-    before ranking, rrf 6dp from integer ranks, rel = 60*rrf (one
-    identical multiply both engines), m = 0.5*rel - 0.5*maxsim the
-    same IEEE sequence, output mmr 6dp with -0.0 normalization; every
-    ordering breaks ties on doc_id."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    lex = lex_ranked(spark, sf_dir)
-    sem_scored = _cosine_to_query0(emb).drop("embedding")
-    sem = _ranked(
-        sem_scored.orderBy(F.desc("cos"), "doc_id").limit(K_EACH), "cos", "sem_rank"
-    )
-    fused = fuse_rrf(lex, sem)
-    fused10, picks = _mmr_over_fused(fused, emb.select("vec_id", "embedding"))
-    return picks.join(F.broadcast(fused10), "doc_id").select(
-        "sel_rank",
-        "doc_id",
-        "lex_rank",
-        "sem_rank",
-        "rrf",
-        (F.round(F.col("m"), 6) + 0.0).alias("mmr"),
-    )
-
-
-def ann_sem_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dense top-20 for query vec 0 via the PERSISTED IVF-PQ index:
-    probe the top-IVFPQ_PROBES coarse cells, ADC-score only postings
-    in probed cells, exact-rerank the shortlist, return (doc_id,
-    sem_rank) — q_retrieval_pipeline_ann's candidate generator and
-    the per-query serving shape of the 100 TB stack (the corpus-wide
-    exact scorer it replaces is the thing that stops scaling)."""
-    coarse, books, postings = read_ann_index(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q0 = emb.filter(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    scored = ivfpq_adc_scored(
-        q0, postings.filter(F.col("vec_id") != 0), coarse, books, probes=IVFPQ_PROBES
-    ).drop("query_id")
-    shortlist = scored.orderBy(F.col("adc_sqdist").asc(), "vec_id").limit(
-        IVFPQ_SHORTLIST
-    )
-    rerank_d = euclidean_expr(F.col("qe"), F.col("embedding"))
-    sem_top = (
-        emb.join(F.broadcast(shortlist.select("vec_id", "qe")), "vec_id")
-        .select(F.col("vec_id").alias("doc_id"), rerank_d.alias("rdist"))
-        .orderBy(F.col("rdist").asc(), "doc_id")
-        .limit(K_EACH)
-    )
-    return _ranked(sem_top.select("doc_id", (-F.col("rdist")).alias("s")), "s", "sem_rank")
+    Float discipline: cosine 4dp before ranking, rrf 6dp from integer
+    ranks, rel = 60*rrf (one identical multiply in both engines), m =
+    0.5*rel - 0.5*maxsim the same IEEE sequence, output mmr 6dp with
+    -0.0 normalization; every ordering breaks ties on doc_id."""
+    return retrieval_pipeline_batch(spark, sf_dir, ONE_QUERY).drop("query_id")
 
 
 @register(
@@ -357,86 +253,15 @@ def ann_sem_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_retrieval_pipeline_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_retrieval_pipeline with the dense side swapped to the
-    persisted-index IVF-PQ serve path (``ann_sem_ranked``) — the
-    composition a 100 TB deployment actually runs, where the exact
-    corpus-wide cosine scorer is unaffordable and dense candidates
-    come from the index.
-
-    ANN membership depends on trained codebooks no SQL engine can
-    replay, so (the op_sim_ivfpq registry discipline) the output is
-    one row of deterministic values + in-query audits over the live
-    composed chain:
-
-    - ``lex_top_docs`` / ``n_lex``: the lexical top-20 doc ids in
-      rank order, value-hashed against DuckDB — the deterministic
-      spine proving the lexical side flowed through the composition
-      intact.
-    - ``sem_full``: the ANN side produced a full top-20.
-    - ``fused_in_bounds``: RRF fusion produced between 20 and 40
-      candidates (exact bound depends on list overlap).
-    - ``selected_complete``: MMR returned exactly 5 picks, all drawn
-      from the fused top-10.
-    - ``sem_recall_floor_met``: the ANN top-20 recalls >= 40% of the
-      exact cosine top-20 (measured 0.80/0.60/0.55 at
-      sf0.001/0.01/0.1; the floor keeps margin under the pruning
-      misses op_sim_ivfpq documents).
-      The exact side is computed in-query as the audit yardstick —
-      it exists to VERIFY, not to serve."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    lex = lex_ranked(spark, sf_dir).localCheckpoint()
-    sem = ann_sem_ranked(spark, sf_dir).localCheckpoint()
-    fused = fuse_rrf(lex, sem)
-    fused10, picks = _mmr_over_fused(fused, emb.select("vec_id", "embedding"))
-
-    # audit yardstick: the exact cosine top-20 (what the ANN side
-    # approximates), one corpus scan
-    exact_sem = _ranked(
-        _cosine_to_query0(emb)
-        .drop("embedding")
-        .orderBy(F.desc("cos"), "doc_id")
-        .limit(K_EACH),
-        "cos",
-        "sem_rank",
-    )
-    lex_row = lex.agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("lex_rank", "doc_id"))),
-                lambda s: s["doc_id"].cast("string"),
-            ),
-            ",",
-        ).alias("lex_top_docs"),
-        F.count(F.lit(1)).alias("n_lex"),
-    )
-    sem_row = sem.agg(F.count(F.lit(1)).alias("n_sem"))
-    overlap = (
-        sem.select("doc_id")
-        .join(exact_sem.select("doc_id"), "doc_id", "left_semi")
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-    )
-    fused_row = fused.agg(F.count(F.lit(1)).alias("n_fused"))
-    picks_row = picks.join(
-        F.broadcast(fused10.select("doc_id")), "doc_id", "left_semi"
-    ).agg(F.count(F.lit(1)).alias("n_sel_in_fused"))
-    return (
-        lex_row.join(F.broadcast(sem_row))
-        .join(F.broadcast(overlap))
-        .join(F.broadcast(fused_row))
-        .join(F.broadcast(picks_row))
-        .select(
-            "lex_top_docs",
-            "n_lex",
-            (F.col("n_sem") == K_EACH).alias("sem_full"),
-            (
-                (F.col("n_fused") >= K_EACH) & (F.col("n_fused") <= 2 * K_EACH)
-            ).alias("fused_in_bounds"),
-            (F.col("n_sel_in_fused") == K_OUT).alias("selected_complete"),
-            (F.col("n_overlap") >= F.lit(int(0.4 * K_EACH))).alias(
-                "sem_recall_floor_met"
-            ),
-        )
-    )
+    """q_retrieval_pipeline with the dense side served from the
+    persisted IVF-PQ index (probe -> ADC -> exact rerank), the
+    composition a deployment runs where exact corpus-wide cosine is
+    unaffordable. The lexical side scans documents. One row: the
+    lexical spine and the audits of ``audited_pipeline``, with
+    ``sem_recall_floor_met``."""
+    return audited_pipeline(
+        spark, sf_dir, ONE_QUERY, lexer=lex_ranked_batch, audit=recall_floor_audit
+    ).drop("query_id")
 
 
 @register(
@@ -492,7 +317,7 @@ def op_sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ORACLE-replayable yardstick (4dp-rounded cosine, doc_id tie
     breaks, so DuckDB replays the identical ranking). At 100 TB the
     candidate band comes from the persisted ANN index instead
-    (ann_sem_ranked's probe -> ADC -> exact-rerank chain) and the
+    (ann_sem_ranked_batch's probe -> ADC -> exact-rerank chain) and the
     same margin + re-rank runs on the BOUNDED shortlist — mining cost
     per query drops from O(n) to O(shortlist), which is how
     production miners (FAISS-backed) actually run."""
@@ -929,127 +754,24 @@ def op_retrieval_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_retrieval_pipeline_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The CAPSTONE query path: the whole retrieval stack served from
-    persisted indexes — lexical candidates from the inverted index
-    (op_text_bm25_serve, bit-equal to the corpus-scan scorer by its
-    shared oracle), dense candidates from the IVF-PQ index
-    (ann_sem_ranked) — fused with RRF and diversified with MMR. At
-    query time NO document text is read anywhere in the chain: the
-    only corpus-shaped touches are pruned posting lookups, cell-
-    pruned code reads, and the bounded embedding fetches for
-    rerank/MMR. This is what the 100 TB steady state actually
-    executes per query.
-
-    Oracle: the lexical spine value-hashes against DuckDB exactly as
-    q_retrieval_pipeline_ann's does (the served lexical scores are
-    bit-equal to inline, so the same SQL holds), plus
-    ``matches_inline_pipeline`` — an in-query audit joining this
-    pipeline's MMR selections against q_retrieval_pipeline_ann's
-    (identical candidate semantics, different physical path: any
-    divergence means the served lexical index drifted from the
-    corpus-scan scorer INSIDE the composition)."""
-    from game_data_etl_pipeline_spark.llmdata.lex_index import op_text_bm25_serve
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    embk = emb.select(F.col("vec_id").alias("doc_id"))
-    lex_top = (
-        op_text_bm25_serve(spark, sf_dir)
-        .join(embk, "doc_id", "left_semi")
-        .orderBy(F.desc("bm25"), "doc_id")
-        .limit(K_EACH)
-    )
-    lex = _ranked(lex_top, "bm25", "lex_rank").localCheckpoint()
-    sem = ann_sem_ranked(spark, sf_dir).localCheckpoint()
-    fused = fuse_rrf(lex, sem)
-    fused10, picks = _mmr_over_fused(fused, emb.select("vec_id", "embedding"))
-
-    lex_row = lex.agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("lex_rank", "doc_id"))),
-                lambda s: s["doc_id"].cast("string"),
-            ),
-            ",",
-        ).alias("lex_top_docs"),
-        F.count(F.lit(1)).alias("n_lex"),
-    )
-    sem_row = sem.agg(F.count(F.lit(1)).alias("n_sem"))
-    fused_row = fused.agg(F.count(F.lit(1)).alias("n_fused"))
-    picks_row = picks.join(
-        F.broadcast(fused10.select("doc_id")), "doc_id", "left_semi"
-    ).agg(F.count(F.lit(1)).alias("n_sel_in_fused"))
-    # cross-path audit: rebuild the INLINE-lexical fused selection and
-    # require identical MMR picks (same sel_rank -> same doc).
-    # inline_lex has exactly ONE consumer (the fuse), so no checkpoint
-    # (r16, guide §5: checkpoint only what two consumers read)
-    inline_lex = lex_ranked(spark, sf_dir)
-    inline_fused = fuse_rrf(inline_lex, sem)
-    _, inline_mmr = _mmr_over_fused(inline_fused, emb.select("vec_id", "embedding"))
-    agree = (
-        picks.select("sel_rank", "doc_id")
-        .join(
-            F.broadcast(inline_mmr.select("sel_rank", F.col("doc_id").alias("d2"))),
-            "sel_rank",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_cmp"),
-            F.sum(F.when(F.col("doc_id") == F.col("d2"), 1).otherwise(0)).alias(
-                "n_same"
-            ),
-        )
-    )
-    return (
-        lex_row.join(F.broadcast(sem_row))
-        .join(F.broadcast(fused_row))
-        .join(F.broadcast(picks_row))
-        .join(F.broadcast(agree))
-        .select(
-            "lex_top_docs",
-            "n_lex",
-            (F.col("n_sem") == K_EACH).alias("sem_full"),
-            (
-                (F.col("n_fused") >= K_EACH) & (F.col("n_fused") <= 2 * K_EACH)
-            ).alias("fused_in_bounds"),
-            (F.col("n_sel_in_fused") == K_OUT).alias("selected_complete"),
-            (
-                (F.col("n_cmp") == K_OUT) & (F.col("n_same") == K_OUT)
-            ).alias("matches_inline_pipeline"),
-        )
-    )
+    """The retrieval chain for one query served from persisted
+    indexes only: lexical candidates from the inverted index, dense
+    candidates from the IVF-PQ index. No document text is read at
+    query time; the corpus-shaped touches are pruned posting reads,
+    cell-pruned code reads and the bounded embedding fetches for
+    rerank and MMR. One row: the lexical spine (the served scores are
+    bit-equal to the scan's, so q_retrieval_pipeline_ann's SQL holds)
+    and the audits of ``audited_pipeline``, with
+    ``matches_inline_pipeline``: the MMR picks equal those of the same
+    chain with the lexical side scanned from documents."""
+    return audited_pipeline(
+        spark, sf_dir, ONE_QUERY, lexer=lex_ranked_batch_served, audit=inline_picks_audit
+    ).drop("query_id")
 
 
 # ---------------------------------------------------------------------------
-# Batched retrieval: the composed pipeline generalized to a QUERY BATCH
+# The batch chain and the batch oracles
 # ---------------------------------------------------------------------------
-
-# the batch's (query vector, query terms) pairs: query_id i uses vec i
-# as its dense query and its own lexical term set. Everything below —
-# the Spark plan AND the DuckDB oracle — is generated from a dict of
-# this shape, so batch construction is N-ary (round-9 verdict task:
-# the batch size is a loop bound, not a literal); the 3-query fixture
-# stays the compatibility anchor (its q0 == the single-query pipeline,
-# pinned in pytest) and the 8-query fixture measures the amortization
-# curve's next point.
-BATCH_QUERY_TERMS = {
-    0: ("vector", "stream", "spark"),
-    1: ("join", "hash", "merge"),
-    2: ("filter", "scan", "column"),
-}
-# size of the 3-query compatibility fixture above (consumed by the
-# pytest plan contracts), NOT of the 8-query dict below
-N_BATCH_QUERIES = len(BATCH_QUERY_TERMS)
-# 8 queries over the fixture vocabulary, with deliberate term overlap
-# across queries (0-2 repeat the 3-batch sets): shared terms are
-# scored once and fanned out, the per-term amortization the batch
-# form exists for.
-BATCH_QUERY_TERMS_8 = {
-    **BATCH_QUERY_TERMS,
-    3: ("sort", "window", "group"),
-    4: ("table", "row", "batch"),
-    5: ("key", "value", "data"),
-    6: ("query", "fast", "slow"),
-    7: ("agg", "order", "part"),
-}
 
 
 def _mmr_grouped_steps_sql(steps: int = 5) -> str:
@@ -1107,38 +829,12 @@ def lex_ranked_batch(
     sf_dir: str,
     query_terms: dict[int, tuple[str, ...]] = BATCH_QUERY_TERMS,
 ) -> DataFrame:
-    """Per-query BM25 top-20 for the whole batch from ONE corpus scan:
-    the scan collapses each document to (doc_id, dl, hits among the
-    UNION of all queries' terms) and is materialized once (the
-    op_text_bm25 barrier); per-(doc, term) scores are computed once —
-    a term's tf/df/idf do not depend on which query asked — then the
-    broadcast (query_id, term) mapping fans each scored term out to
-    its queries and a groupBy sums per (query_id, doc). Candidate
-    lists rank per query via a window PARTITIONED BY query_id over
-    the scored rows (never a global window). Batching cost over the
-    single-query form: the scan is shared, the per-term score is
-    shared for shared terms, only the fan-out rows scale with
-    |queries|."""
-    all_terms = tuple(sorted({t for ts in query_terms.values() for t in ts}))
-    docs = load_table(spark, sf_dir, "documents")
-    base = widen_narrow_scan(
-        docs.select(
-            "doc_id",
-            F.size(_text._terms()).alias("dl"),
-            F.filter(_text._terms(), lambda t: t.isin(*all_terms)).alias("hits"),
-        ),
-        spark,
-    ).localCheckpoint()
-    stats = base.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("tot_dl")
-    )
-    tf = (
-        base.select("doc_id", "dl", F.explode("hits").alias("term"))
-        .groupBy("doc_id", "dl", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    return _lex_ranked_batch_tail(spark, sf_dir, query_terms, tf, dfq, stats)
+    """Per-query BM25 top-K_EACH over the embedded corpus as
+    (query_id, doc_id, lex_rank), scored by ``text.bm25_scored`` over
+    one documents scan for the whole batch."""
+    terms = _text.query_term_union(query_terms)
+    parts = _text.bm25_scan_parts(spark, sf_dir, terms)
+    return _lex_top(spark, sf_dir, _text.bm25_scored(*parts, query_terms))
 
 
 def lex_ranked_batch_served(
@@ -1146,98 +842,32 @@ def lex_ranked_batch_served(
     sf_dir: str,
     query_terms: dict[int, tuple[str, ...]] = BATCH_QUERY_TERMS,
 ) -> DataFrame:
-    """lex_ranked_batch from the PERSISTED inverted index — query time
-    touches zero corpus: the union of all queries' terms resolves to
-    its term buckets once (the memoized bounded job), the postings and
-    df scans prune to those partition directories, and the shared
-    scoring tail — identical IEEE expression, identical fan-out —
-    produces the same per-query rank lists bit for bit. The index's
-    (term, doc_id, dl, tf) postings ARE the scan path's tf frame and
-    its per-term df / corpus stats are the same exact integers, so
-    the equivalence is structural, not approximate — which is what
-    lets q_retrieval_pipeline_batch_served keep the machine-generated
-    batch oracle VERBATIM."""
+    """``lex_ranked_batch`` scored over the persisted inverted index
+    (``lex_index.bm25_index_parts``) instead of a documents scan: the
+    batch's terms resolve to their buckets once and the postings and
+    df reads prune to those directories. The parts are the scan's
+    integers and the scorer is the same, so the ranks are bit-equal."""
     from game_data_etl_pipeline_spark.llmdata.lex_index import (
+        bm25_index_parts,
         build_lex_index,
-        resolve_term_buckets,
     )
 
-    path = build_lex_index(spark, sf_dir)
-    all_terms = tuple(sorted({t for ts in query_terms.values() for t in ts}))
-    buckets = resolve_term_buckets(spark, all_terms)
-    tf = (
-        spark.read.parquet(os.path.join(path, "postings"))
-        .filter(F.col("term_bucket").isin(buckets) & F.col("term").isin(*all_terms))
-        .select("doc_id", "dl", "term", "tf")
-    )
-    dfq = (
-        spark.read.parquet(os.path.join(path, "df"))
-        .filter(F.col("term_bucket").isin(buckets) & F.col("term").isin(*all_terms))
-        .select("term", "df")
-    )
-    stats = spark.read.parquet(os.path.join(path, "stats"))
-    return _lex_ranked_batch_tail(spark, sf_dir, query_terms, tf, dfq, stats)
+    terms = _text.query_term_union(query_terms)
+    parts = bm25_index_parts(spark, build_lex_index(spark, sf_dir), terms)
+    return _lex_top(spark, sf_dir, _text.bm25_scored(*parts, query_terms))
 
 
-def _lex_ranked_batch_tail(
-    spark: SparkSession,
-    sf_dir: str,
-    query_terms: dict[int, tuple[str, ...]],
-    tf: DataFrame,
-    dfq: DataFrame,
-    stats: DataFrame,
-) -> DataFrame:
-    """The shared batch-BM25 scoring tail: per-(doc, term) score from
-    (tf, df, stats) parts — computed once regardless of how many
-    queries share the term — fanned out by the broadcast (query_id,
-    term) mapping, summed per (query_id, doc), ranked per query by a
-    window PARTITIONED BY query_id. One body serves both the
-    corpus-scan parts (lex_ranked_batch) and the index-read parts
-    (lex_ranked_batch_served), so the two paths cannot drift."""
-    k1, b = 1.2, 0.75
-    idf = F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-    score = idf * (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * ((1.0 - b) + b * F.col("dl") * F.col("n_docs") / F.col("tot_dl"))
-    )
-    qt = spark.createDataFrame(
-        [(q, t) for q, ts in sorted(query_terms.items()) for t in ts],
-        "query_id long, term string",
-    )
-    bm = (
-        tf.join(F.broadcast(dfq), "term")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", "term", F.round(score, 4).alias("s"))
-        .join(F.broadcast(qt), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(F.round(F.sum("s"), 4).alias("bm25"))
-    )
-    embk = load_table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("doc_id")
-    )
+def _lex_top(spark: SparkSession, sf_dir: str, bm: DataFrame) -> DataFrame:
+    """The per-query top-K_EACH of scored ``bm`` rows whose doc_id has
+    an embedding (a semi-join reading only vec_id), ranked by a window
+    partitioned by query_id."""
+    embk = load_table(spark, sf_dir, "embeddings").select(F.col("vec_id").alias("doc_id"))
     w = Window.partitionBy("query_id").orderBy(F.desc("bm25"), "doc_id")
     return (
         bm.join(embk, "doc_id", "left_semi")
         .withColumn("lex_rank", F.row_number().over(w).cast("int"))
         .filter(F.col("lex_rank") <= K_EACH)
         .select("query_id", "doc_id", "lex_rank")
-    )
-
-
-def fuse_rrf_grouped(lex: DataFrame, sem: DataFrame) -> DataFrame:
-    """fuse_rrf keyed by (query_id, doc_id): union + groupBy over the
-    batch's bounded rank lists."""
-    rrf = F.round(
-        F.coalesce(1.0 / (60 + F.col("lex_rank")), F.lit(0.0))
-        + F.coalesce(1.0 / (60 + F.col("sem_rank")), F.lit(0.0)),
-        6,
-    )
-    both = lex.withColumn("sem_rank", F.lit(None).cast("int")).unionByName(
-        sem.withColumn("lex_rank", F.lit(None).cast("int"))
-    )
-    return (
-        both.groupBy("query_id", "doc_id")
-        .agg(F.max("lex_rank").alias("lex_rank"), F.max("sem_rank").alias("sem_rank"))
-        .select("query_id", "doc_id", "lex_rank", "sem_rank", rrf.alias("rrf"))
     )
 
 
@@ -1362,18 +992,19 @@ def retrieval_pipeline_batch(
     *,
     served: bool = False,
 ) -> DataFrame:
-    """The N-ary batch-pipeline core shared by the registered 3- and
-    8-query fixtures (and any external batch): see
-    q_retrieval_pipeline_batch for the plan narrative. Nothing in the
-    chain depends on |batch| except the bounded fan-out frames.
-    ``served=True`` swaps the lexical side to the persisted inverted
-    index (bit-equal by construction — see lex_ranked_batch_served),
-    leaving ZERO documents scans in the query-time plan."""
+    """The exact retrieval chain for a batch: per query the lexical
+    top-K_EACH (``served`` picks the inverted index over the documents
+    scan) and the exact cosine top-K_EACH, fused and diversified.
+    Returns (query_id, sel_rank, doc_id, lex_rank, sem_rank, rrf,
+    mmr). Each candidate list has one consumer, the fusion, so neither
+    is checkpointed; the fused candidates are, as the MMR and the
+    provenance join both read them."""
     emb = load_table(spark, sf_dir, "embeddings")
     lexer = lex_ranked_batch_served if served else lex_ranked_batch
-    lex = lexer(spark, sf_dir, query_terms).localCheckpoint()
-    sem = exact_sem_ranked_batch(emb, sorted(query_terms))
-    fused, cands, picks = batch_fuse_mmr(emb, lex, sem)
+    lex = lexer(spark, sf_dir, query_terms)
+    cands = fused_candidates(lex, exact_sem_ranked_batch(emb, sorted(query_terms)))
+    cands = cands.localCheckpoint()
+    picks = mmr_picks(emb, cands)
     return picks.join(
         F.broadcast(cands.select("query_id", "doc_id", "lex_rank", "sem_rank", "rrf")),
         ["query_id", "doc_id"],
@@ -1391,11 +1022,10 @@ def retrieval_pipeline_batch(
 def exact_sem_ranked_batch(
     emb: DataFrame, qids: list[int], rank_name: str = "sem_rank"
 ) -> DataFrame:
-    """Per-query exact-cosine top-K_EACH for the batch from ONE
-    embeddings scan (query rows broadcast against it; ranks as windows
-    PARTITIONED BY query_id). The one exact dense scorer shared by the
-    batch pipeline's candidate side and the batch-ANN op's in-query
-    recall yardstick, so the two cannot drift."""
+    """Per-query exact-cosine top-K_EACH as (query_id, doc_id,
+    rank_name) from one embeddings scan (the query rows broadcast
+    against it): the candidate side of the exact chain and the recall
+    yardstick of the ANN audits."""
     qs = emb.filter(F.col("vec_id").isin(qids)).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
@@ -1417,38 +1047,33 @@ def exact_sem_ranked_batch(
     )
 
 
-def batch_fuse_mmr(
-    emb: DataFrame, lex: DataFrame, sem: DataFrame
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The shared post-candidate batch tail: RRF fusion keyed by
-    (query_id, doc_id), fused top-K_FUSED per query, the bounded
-    embedding/pairs materializations, and the grouped greedy MMR.
-    Returns (fused, cands, picks) so callers can attach provenance or
-    audits. One body serves the exact, served, and ANN batch forms —
-    a change to K handling or rel scaling propagates to all three."""
-    fused = fuse_rrf_grouped(lex, sem)
+def fused_candidates(lex: DataFrame, sem: DataFrame) -> DataFrame:
+    """RRF fusion of the per-query rank lists and the fused
+    top-K_FUSED per query, as (query_id, doc_id, lex_rank, sem_rank,
+    rrf, rel) with rel = 60*rrf (monotone in rrf; the rescale puts
+    relevance on the pairwise-cosine scale so lambda=0.5 trades them
+    meaningfully)."""
     w_f = Window.partitionBy("query_id").orderBy(F.desc("rrf"), "doc_id")
-    cands = (
-        fused.withColumn("rn", F.row_number().over(w_f))
+    return (
+        fuse_rrf(lex, sem, "query_id")
+        .withColumn("rn", F.row_number().over(w_f))
         .filter(F.col("rn") <= K_FUSED)
         .drop("rn")
         .withColumn("rel", F.col("rrf") * 60)
-        .localCheckpoint()
     )
-    # r16: the per-query pairwise matrices fold in-expression off the
-    # ONE grouped collect (mmr_select_grouped_embedded), so with_emb
-    # has a single consumer — its checkpoint and the broadcast pair
-    # self-join are gone and the whole batch MMR tail is one job
-    # (guide §1.2). Every candidate doc_id has an embedding row (the
-    # lexical side is embk-semi-joined, the dense side IS vec_ids), so
-    # the joined candidate set equals cands exactly.
+
+
+def mmr_picks(emb: DataFrame, cands: DataFrame) -> DataFrame:
+    """The per-query greedy MMR (lambda=0.5) of K_OUT over ``cands``
+    (``fused_candidates``), as (query_id, sel_rank, doc_id, rel, m).
+    Every candidate doc_id has an embedding row (the lexical side is
+    semi-joined to embeddings, the dense side is vec_ids)."""
     with_emb = (
         emb.select(F.col("vec_id").alias("doc_id"), "embedding")
         .join(F.broadcast(cands.select("query_id", "doc_id", "rel")), "doc_id")
         .select("query_id", "doc_id", "rel", "embedding")
     )
-    picks = mmr_select_grouped_embedded(with_emb, steps=K_OUT, lam=0.5)
-    return fused, cands, picks
+    return mmr_select(with_emb, "query_id", steps=K_OUT, lam=0.5)
 
 
 @register(
@@ -1457,40 +1082,17 @@ def batch_fuse_mmr(
     oracle=_batch_oracle_sql(BATCH_QUERY_TERMS),
 )
 def q_retrieval_pipeline_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_retrieval_pipeline generalized to a QUERY BATCH — the serving
-    shape a real stack runs (queries arrive in batches; per-query
-    chains waste the constant fusion/MMR tail |queries| times over):
-    3 queries, each with its own dense vector (vec 0/1/2) and lexical
-    term set, flow through ONE shared chain — one documents scan
-    scores all queries' BM25 (the per-term work is shared across
-    queries that share terms), one embeddings scan scores all dense
-    sides (3 broadcast query rows against the scan), fusion groups by
-    (query_id, doc_id), and the greedy MMR tail runs ONCE as a single
-    per-query-array fold job — the mmr_select_grouped form — so its
-    constant cost amortizes
-    across the batch instead of multiplying by it. bench.py carries
-    the entry; measured sf0.1 (probe-matched bench run, same
-    session): 4.33 s median for the 3-query batch vs 2.84 s for the
-    single-query form — 1.44 s/query vs 2.84 s/query, a 2x per-query
-    amortization that grows with |batch| since the scans and the MMR
-    tail are both shared.
+    """The exact retrieval chain for the 3-query batch
+    BATCH_QUERY_TERMS: one documents scan scores every query's BM25
+    (a term shared by several queries is scored once), one embeddings
+    scan scores every dense side, fusion groups by (query_id, doc_id)
+    and the greedy MMR tail is one job for the whole batch.
 
-    VALUE-ORACLED END TO END for ALL queries: the DuckDB oracle
-    replays the whole batch — per-query BM25 from a (query_id, term)
-    VALUES table, per-query cosine ranks, per-query RRF, and the
-    5 unrolled MMR steps with every argmax and membership test
-    correlated on query_id (machine-generated alongside the Spark
-    form from one K_OUT loop). 15 output rows (3 queries x 5 picks),
-    each carrying full provenance (lex_rank, sem_rank, rrf, mmr).
-
-    Scale shape: candidate generation per query stays top-K bounded
-    (batch windows partition by query_id — partition count =
-    |queries|, partition size = the per-query scored set, never
-    global); all post-candidate frames are |queries| * K rows,
-    materialized once; document text is read exactly once for the
-    whole batch. At 100 TB with large batches the same plan holds:
-    the scans stay corpus-shaped (shared), everything downstream
-    scales with |batch| * K, not the corpus."""
+    Value-oracled end to end for every query: the DuckDB oracle,
+    generated from the same dict, replays per-query BM25, cosine ranks,
+    RRF and the K_OUT unrolled MMR steps with every argmax and
+    membership test correlated on query_id. 15 rows (3 queries x 5
+    picks) with full provenance."""
     return retrieval_pipeline_batch(spark, sf_dir, BATCH_QUERY_TERMS)
 
 
@@ -1500,19 +1102,10 @@ def q_retrieval_pipeline_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_batch_oracle_sql(BATCH_QUERY_TERMS_8),
 )
 def q_retrieval_pipeline_batch8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The batch pipeline at N=8 — the next point on the amortization
-    curve (round-9 verdict: generalize batch construction to N and
-    measure per-query cost continuing to fall). Identical plan to the
-    3-query form — same two corpus scans, same broadcast fan-out,
-    same grouped-MMR tail — only the bounded fan-out frames grow, so
-    per-query cost falls as the constant chain splits 8 ways instead
-    of 3 (bench.py carries both entries; SCALE.md records the
-    s/query curve at N ∈ {1, 3, 8}). Query sets deliberately overlap
-    terms with the 3-batch (queries 0-2 are identical) so shared-term
-    scoring amortizes across queries, not just scans. Fully
-    value-oracled: the oracle is machine-generated from the SAME
-    8-entry dict (VALUES table, union-of-terms filter, 8-way
-    correlated MMR unroll) — 40 output rows, full provenance."""
+    """q_retrieval_pipeline_batch at N=8 (BATCH_QUERY_TERMS_8, whose
+    queries 0-2 are the 3-query batch): the same plan, with only the
+    bounded per-query frames growing. The oracle is generated from the
+    same 8-entry dict: 40 rows with full provenance."""
     return retrieval_pipeline_batch(spark, sf_dir, BATCH_QUERY_TERMS_8)
 
 
@@ -1526,29 +1119,13 @@ def q_retrieval_pipeline_batch8(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_batch_oracle_sql(BATCH_QUERY_TERMS),
 )
 def q_retrieval_pipeline_batch_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The batch pipeline SERVED — the lexical side reads the
-    persisted inverted index instead of scanning documents, which
-    removes the last corpus-text read from the query-time plan: the
-    batch's union-of-terms resolves to its term buckets once, the
-    postings/df scans prune to those partition directories, and the
-    dense side stays the one embeddings scan. ZERO documents scans
-    anywhere in the plan (plan-pinned — the unserved batch op's
-    contract allows one scan behind the barrier; this op's allows
-    none), which is the actual multi-tenant serving shape at 100 TB:
-    per-batch cost is O(terms' posting lists) + one embeddings pass +
-    the bounded fan-out frames, and the corpus text is never touched
-    after the index build.
-
-    Held to the STRONGEST composed gate in the registry: the
-    machine-generated 3-query batch oracle VERBATIM, because the
-    index-read parts (tf, df, n_docs, tot_dl) are the same exact
-    integers the scan path derives and the scoring tail is shared
-    code (_lex_ranked_batch_tail) — so index-served BM25, fusion,
-    and all 15 MMR picks must match the corpus-scan pipeline value
-    for value, not merely in rank order. A pytest additionally pins
-    this op's output row-identical to q_retrieval_pipeline_batch's,
-    making build/serve consistency a structural fact the driver
-    re-proves every window."""
+    """q_retrieval_pipeline_batch with the lexical side served from the
+    persisted inverted index: the batch's terms resolve to their
+    buckets once, the postings and df reads prune to those
+    directories, and no documents scan is left in the plan. Held to
+    the 3-query batch oracle verbatim: the index parts are the scan's
+    integers and the scorer is shared, so every rank, fusion score and
+    MMR pick matches the scanned chain value for value."""
     return retrieval_pipeline_batch(spark, sf_dir, BATCH_QUERY_TERMS, served=True)
 
 
@@ -1561,20 +1138,8 @@ def q_retrieval_pipeline_batch_served(spark: SparkSession, sf_dir: str) -> DataF
     oracle=_batch_oracle_sql(BATCH_QUERY_TERMS_8),
 )
 def q_retrieval_pipeline_batch_served8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SERVED batch pipeline at N=8 — the missing point on the
-    serve-path amortization curve (round-10 verdict task 4: the
-    N=1/3/8 curve was measured only for the scan-based batch, and the
-    served path's constant tail — bucket resolution, postings reads —
-    differs from the scan path's, so its curve must be measured, not
-    inferred). Identical plan to q_retrieval_pipeline_batch_served —
-    ZERO documents scans, the batch's union-of-terms resolved to its
-    partition buckets once, one embeddings pass on the dense side —
-    with only the bounded fan-out frames growing 8/3x, so s/query
-    keeps falling as the postings reads and the grouped-MMR tail
-    split 8 ways (bench.py carries the entry; SCALE.md records the
-    served s/query at N ∈ {3, 8} next to the scan curve). Held to the
-    machine-generated 8-query batch oracle VERBATIM: all 40 MMR picks
-    with full provenance, value-hashed."""
+    """q_retrieval_pipeline_batch_served at N=8, held to the 8-query
+    batch oracle verbatim: 40 MMR picks with full provenance."""
     return retrieval_pipeline_batch(spark, sf_dir, BATCH_QUERY_TERMS_8, served=True)
 
 
@@ -1583,14 +1148,13 @@ def ann_sem_ranked_batch(
     sf_dir: str,
     query_terms: dict[int, tuple[str, ...]] = BATCH_QUERY_TERMS,
 ) -> DataFrame:
-    """Per-query dense top-20 for the whole batch from the PERSISTED
-    IVF-PQ index — ann_sem_ranked generalized the batch way: ALL
-    queries' probe cells resolve in one pass over the broadcast
-    centroids, the postings scan prunes to the UNION of probed cells
-    (shared across queries probing the same cell — the batch
-    amortization on the vector side), ADC scores per (query, posting)
-    pair, and the shortlist/rerank windows PARTITION BY query_id.
-    Returns (query_id, doc_id, sem_rank)."""
+    """Per-query dense top-K_EACH as (query_id, doc_id, sem_rank)
+    served from the persisted IVF-PQ index: every query's probe cells
+    resolve in one pass over the broadcast centroids, the postings
+    scan prunes to the union of probed cells (shared by queries that
+    probe the same cell), ADC scores each (query, posting) pair, and
+    the shortlist and exact-rerank windows are partitioned by
+    query_id."""
     coarse, books, postings = read_ann_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     qids = sorted(query_terms)
@@ -1643,9 +1207,17 @@ def _batch_ann_oracle_sql(query_terms: dict[int, tuple[str, ...]]) -> str:
     oracle=_batch_ann_oracle_sql(BATCH_QUERY_TERMS),
 )
 def q_retrieval_pipeline_batch_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fully-served batch at N=3 — see retrieval_pipeline_batch_ann
-    (the shared N-ary body) for the plan narrative and gate design."""
-    return retrieval_pipeline_batch_ann(spark, sf_dir, BATCH_QUERY_TERMS)
+    """The 3-query batch served from both persisted indexes (lexical
+    from the inverted index, dense from IVF-PQ): no corpus scan at
+    query time. One row per query: the lexical spine and the audits of
+    ``audited_pipeline``, with ``sem_recall_floor_met``."""
+    return audited_pipeline(
+        spark,
+        sf_dir,
+        BATCH_QUERY_TERMS,
+        lexer=lex_ranked_batch_served,
+        audit=recall_floor_audit,
+    )
 
 
 @register(
@@ -1657,119 +1229,126 @@ def q_retrieval_pipeline_batch_ann(spark: SparkSession, sf_dir: str) -> DataFram
     oracle=_batch_ann_oracle_sql(BATCH_QUERY_TERMS_8),
 )
 def q_retrieval_pipeline_batch_ann8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FULLY-SERVED batch at N=8 — the last cell of the
-    (scan / lex-served / fully-served) × (N=1 / 3 / 8) serving matrix
-    (round 11: the served amortization curve exists for the lexical
-    side; this measures it when BOTH candidate generators read
-    persisted indexes). Same plan as q_retrieval_pipeline_batch_ann —
-    zero corpus scans at query time, all 8 queries' probe cells
-    resolved in one pass with postings reads shared across queries
-    probing the same cells — with only the bounded fan-out frames
-    growing. Gate: 8 per-query rows, each lexical spine value-hashed
-    via the machine-generated oracle, each ANN audit held per query
-    (the left-join spine keeps degenerate queries visible as FALSE
-    rather than dropped)."""
-    return retrieval_pipeline_batch_ann(spark, sf_dir, BATCH_QUERY_TERMS_8)
+    """q_retrieval_pipeline_batch_ann at N=8: the same plan, with only
+    the bounded per-query frames growing."""
+    return audited_pipeline(
+        spark,
+        sf_dir,
+        BATCH_QUERY_TERMS_8,
+        lexer=lex_ranked_batch_served,
+        audit=recall_floor_audit,
+    )
 
 
-def retrieval_pipeline_batch_ann(
+def recall_floor_audit(
     spark: SparkSession,
     sf_dir: str,
     query_terms: dict[int, tuple[str, ...]],
+    emb: DataFrame,
+    sem: DataFrame,
+) -> tuple[DataFrame, Column]:
+    """``sem_recall_floor_met``, an ``audited_pipeline`` audit: the ANN
+    top-K_EACH recalls >= 40% of the exact cosine top-K_EACH, the
+    yardstick computed in-query (measured 0.80/0.60/0.55 at
+    sf0.001/0.01/0.1)."""
+    yard = exact_sem_ranked_batch(emb, sorted(query_terms), rank_name="rank")
+    yard_docs = F.transform("yard", lambda s: s["doc_id"])
+    ok = F.size(F.array_intersect("sem_docs", yard_docs)) >= int(0.4 * K_EACH)
+    return yard, ok.alias("sem_recall_floor_met")
+
+
+def inline_picks_audit(
+    spark: SparkSession,
+    sf_dir: str,
+    query_terms: dict[int, tuple[str, ...]],
+    emb: DataFrame,
+    sem: DataFrame,
+) -> tuple[DataFrame, Column]:
+    """``matches_inline_pipeline``, an ``audited_pipeline`` audit: the
+    MMR picks equal, rank for rank, those of the same chain with the
+    lexical side scanned from documents (the served index must be
+    invisible to results)."""
+    inline_lex = lex_ranked_batch(spark, sf_dir, query_terms)
+    yard = mmr_picks(emb, fused_candidates(inline_lex, sem))
+    ok = (F.size("pick") == K_OUT) & (F.col("pick") == F.col("yard"))
+    return yard.withColumnRenamed("sel_rank", "rank"), ok.alias("matches_inline_pipeline")
+
+
+def audited_pipeline(
+    spark: SparkSession,
+    sf_dir: str,
+    query_terms: dict[int, tuple[str, ...]],
+    *,
+    lexer: Callable[..., DataFrame],
+    audit: Callable[..., tuple[DataFrame, Column]],
 ) -> DataFrame:
-    """THE FULLY-SERVED BATCH — both retrieval sides read persisted
-    indexes for the whole query batch, which is the complete 100 TB
-    serving shape (q_retrieval_pipeline_served's composition times
-    the batch amortization): the lexical side is
-    lex_ranked_batch_served (bucket-pruned inverted-index lookups,
-    zero documents scans), the dense side is ann_sem_ranked_batch
-    (all queries probe the IVF-PQ index in one chain; postings reads
-    shared across queries probing the same cells), and fusion + the
-    grouped-MMR tail run once for the batch. Per-batch marginal cost:
-    O(terms' posting lists) + O(probed cells' postings) + the bounded
-    fan-out frames — NEITHER corpus is scanned at query time (the one
-    embeddings pass left is the audit yardstick plus the bounded
-    rerank/pairs lookups).
+    """The retrieval chain with its dense side served from the IVF-PQ
+    index (``ann_sem_ranked_batch``) and its lexical side from
+    ``lexer`` (``lex_ranked_batch`` or ``lex_ranked_batch_served``),
+    reduced to one row per query: the deterministic lexical spine and
+    in-query audits of the approximate side.
 
-    Oracle discipline (q_retrieval_pipeline_ann's, batched): ANN
-    membership depends on trained codebooks no SQL engine can replay,
-    so the driver hash-verifies the deterministic PER-QUERY lexical
-    spine (each query's top-20 doc ids in rank order, machine-
-    generated from the same dict as the Spark form) and the
-    approximate side is held by per-query in-query audits —
-    ``sem_full`` (a full ANN top-20 per query), ``fused_in_bounds``
-    (20..40 fused candidates per query), ``selected_complete``
-    (exactly K_OUT MMR picks per query, all from that query's fused
-    top-10), ``sem_recall_floor_met`` (each query's ANN top-20
-    recalls >= 40% of its exact cosine top-20, computed in-query as
-    the yardstick). N output rows, one per query — a per-query gate
-    where the single-query op has one global row."""
+    - ``lex_top_docs`` / ``n_lex``: the query's lexical top-K_EACH doc
+      ids in rank order, value-hashed against DuckDB.
+    - ``sem_full``: the ANN side produced a full top-K_EACH.
+    - ``fused_in_bounds``: RRF fused K_EACH..2*K_EACH candidates.
+    - ``selected_complete``: MMR returned K_OUT picks, all from the
+      query's fused top-K_FUSED.
+    - the last column is ``audit``'s (``recall_floor_audit`` or
+      ``inline_picks_audit``): called with the embeddings and the ANN
+      side, it returns its yardstick (query_id, rank, doc_id) and a
+      column over the per-query aggregate, where ``yard`` and ``pick``
+      are the rank-sorted (rank, doc_id) arrays and ``sem_docs`` the
+      ANN side's doc ids.
+
+    Every audited frame is tagged and unioned, and one aggregate per
+    query derives all the audits from the tagged (rank, doc_id) rows
+    (<= 75 per query), so the audits add one shuffle, not a join per
+    audit. A query keeps its row while it has a lexical spine (the
+    oracle groups the lexical side), however its ANN side degenerates.
+    ``lex``, ``sem`` and the fused candidates are checkpointed: the
+    chain and the audit both read them."""
     emb = load_table(spark, sf_dir, "embeddings")
-    lex = lex_ranked_batch_served(spark, sf_dir, query_terms).localCheckpoint()
+    lex = lexer(spark, sf_dir, query_terms).localCheckpoint()
     sem = ann_sem_ranked_batch(spark, sf_dir, query_terms).localCheckpoint()
-    fused, cands, picks = batch_fuse_mmr(emb, lex, sem)
-
-    # audit yardstick: per-query exact cosine top-20, one embeddings
-    # scan for the whole batch (exists to VERIFY, not to serve) — the
-    # batch pipeline's own exact scorer, shared code
-    exact_sem = exact_sem_ranked_batch(
-        emb, sorted(query_terms), rank_name="x_rank"
-    ).select("query_id", "doc_id")
-
-    lex_rows = lex.groupBy("query_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("lex_rank", "doc_id"))),
-                lambda s: s["doc_id"].cast("string"),
-            ),
-            ",",
-        ).alias("lex_top_docs"),
-        F.count(F.lit(1)).alias("n_lex"),
+    cands = fused_candidates(lex, sem).localCheckpoint()
+    picks = mmr_picks(emb, cands)
+    yardstick, ok = audit(spark, sf_dir, query_terms, emb, sem)
+    tagged = [
+        (lex, "lex", F.col("lex_rank")),
+        (sem, "sem", F.col("sem_rank")),
+        (cands, "cand", F.lit(None).cast("int")),
+        (picks, "pick", F.col("sel_rank")),
+        (yardstick, "yard", F.col("rank")),
+    ]
+    rows = None
+    for frame, kind, rank in tagged:
+        part = frame.select("query_id", F.lit(kind).alias("kind"), rank.alias("rank"), "doc_id")
+        rows = part if rows is None else rows.unionByName(part)
+    of = lambda kind, c: F.when(F.col("kind") == kind, c)  # noqa: E731
+    ranked = lambda kind: F.array_sort(F.collect_list(of(kind, F.struct("rank", "doc_id"))))  # noqa: E731
+    per_q = rows.groupBy("query_id").agg(
+        ranked("lex").alias("lex"),
+        ranked("pick").alias("pick"),
+        ranked("yard").alias("yard"),
+        F.count(of("lex", 1)).alias("n_lex"),
+        F.count(of("sem", 1)).alias("n_sem"),
+        *(
+            F.collect_set(of(kind, F.col("doc_id"))).alias(f"{kind}_docs")
+            for kind in ("lex", "sem", "cand", "pick")
+        ),
     )
-    sem_rows = sem.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_sem"))
-    overlap = (
-        sem.join(F.broadcast(exact_sem), ["query_id", "doc_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-    )
-    fused_rows = fused.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_fused"))
-    picks_rows = (
-        picks.join(
-            F.broadcast(cands.select("query_id", "doc_id")),
-            ["query_id", "doc_id"],
-            "left_semi",
-        )
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_sel_in_fused"))
-    )
-    # lex_rows is the spine (it matches the oracle's GROUP BY over the
-    # lexical side); every audit frame LEFT-joins onto it with its
-    # count coalesced to 0, so a query whose ANN side degenerates
-    # (zero overlap with exact, zero scored candidates) still emits
-    # its row with the audit boolean FALSE instead of silently
-    # vanishing — the dropped-row failure mode the ivfpq serve chain's
-    # left-join spine exists to prevent (round-7 advice)
-    return (
-        lex_rows.join(F.broadcast(sem_rows), "query_id", "left")
-        .join(F.broadcast(overlap), "query_id", "left")
-        .join(F.broadcast(fused_rows), "query_id", "left")
-        .join(F.broadcast(picks_rows), "query_id", "left")
-        .select(
-            "query_id",
-            "lex_top_docs",
-            "n_lex",
-            (F.coalesce(F.col("n_sem"), F.lit(0)) == K_EACH).alias("sem_full"),
-            (
-                (F.coalesce(F.col("n_fused"), F.lit(0)) >= K_EACH)
-                & (F.coalesce(F.col("n_fused"), F.lit(0)) <= 2 * K_EACH)
-            ).alias("fused_in_bounds"),
-            (F.coalesce(F.col("n_sel_in_fused"), F.lit(0)) == K_OUT).alias(
-                "selected_complete"
-            ),
-            (
-                F.coalesce(F.col("n_overlap"), F.lit(0)) >= F.lit(int(0.4 * K_EACH))
-            ).alias("sem_recall_floor_met"),
-        )
+    n_fused = F.size(F.array_union("lex_docs", "sem_docs"))
+    return per_q.filter(F.col("n_lex") > 0).select(
+        "query_id",
+        F.array_join(F.transform("lex", lambda s: s["doc_id"].cast("string")), ",").alias(
+            "lex_top_docs"
+        ),
+        "n_lex",
+        (F.col("n_sem") == K_EACH).alias("sem_full"),
+        ((n_fused >= K_EACH) & (n_fused <= 2 * K_EACH)).alias("fused_in_bounds"),
+        (F.size(F.array_intersect("pick_docs", "cand_docs")) == K_OUT).alias("selected_complete"),
+        ok,
     )
 
 

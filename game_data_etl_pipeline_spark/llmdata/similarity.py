@@ -1332,8 +1332,8 @@ def ivfpq_adc_scored(
     probes: int = IVFPQ_PROBES,
 ) -> DataFrame:
     """The ONE probe-selection + ADC-scoring block every IVF-PQ
-    consumer shares (ivfpq_serve_stages, retrieval.ann_sem_ranked,
-    retrieval._filtered_ann_topk — previously three near-copies):
+    consumer shares (ivfpq_serve_stages, retrieval.ann_sem_ranked_batch,
+    retrieval._filtered_ann_topk):
     given ``queries`` (query_id, qe), encoded ``cands`` (vec_id,
     codes, cent_id), the broadcast ``coarse`` centroids and ``pq``
     codebooks, select each query's top-``probes`` coarse cells by
@@ -1567,6 +1567,49 @@ def _cosine_to_query0(emb: DataFrame) -> DataFrame:
     )
 
 
+def _ranked(top: DataFrame, score: str, rank_name: str) -> DataFrame:
+    """(doc_id, rank_name) for a bounded top-K frame, ranked by
+    ``score`` descending with ties on doc_id and no window: the <=K
+    survivors collapse into one sorted array, which posexplode turns
+    into (rank-1, doc). The input must already be bounded (an
+    ``orderBy().limit(K)`` TakeOrderedAndProject heap)."""
+    arr = F.sort_array(
+        F.collect_list(F.struct((-F.col(score)).alias("ns"), F.col("doc_id").alias("doc_id")))
+    )
+    return (
+        top.agg(arr.alias("arr"))
+        .select(F.posexplode("arr").alias("pos", "s"))
+        .select(
+            F.col("s.doc_id").alias("doc_id"),
+            (F.col("pos") + 1).cast("int").alias(rank_name),
+        )
+    )
+
+
+def fuse_rrf(lex: DataFrame, sem: DataFrame, *keys: str) -> DataFrame:
+    """Reciprocal rank fusion (k=60) of two bounded rank lists
+    (*keys, doc_id, lex_rank) and (*keys, doc_id, sem_rank), per
+    ``keys`` (e.g. query_id). A document missing from one list gets
+    no term from it. The full outer fusion is a union plus one
+    (*keys, doc_id) aggregate: Spark cannot broadcast either side of a
+    full outer join, so the join form would be a SortMergeJoin.
+    1.0/(60+rank) of an integer rank and the two-term sum are the
+    oracles' IEEE sequence, rounded to 6dp."""
+    rrf = F.round(
+        F.coalesce(1.0 / (60 + F.col("lex_rank")), F.lit(0.0))
+        + F.coalesce(1.0 / (60 + F.col("sem_rank")), F.lit(0.0)),
+        6,
+    )
+    both = lex.withColumn("sem_rank", F.lit(None).cast("int")).unionByName(
+        sem.withColumn("lex_rank", F.lit(None).cast("int"))
+    )
+    return (
+        both.groupBy(*keys, "doc_id")
+        .agg(F.max("lex_rank").alias("lex_rank"), F.max("sem_rank").alias("sem_rank"))
+        .select(*keys, "doc_id", "lex_rank", "sem_rank", rrf.alias("rrf"))
+    )
+
+
 @register(
     "op_sim_hybrid_rrf",
     tags=("llm", "similarity"),
@@ -1630,44 +1673,11 @@ def op_sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the same order, rounded 6dp.
     """
     K = 20
-
-    def _ranked(top: DataFrame, score: str, rank_name: str) -> DataFrame:
-        arr = F.sort_array(
-            F.collect_list(F.struct((-F.col(score)).alias("ns"), F.col("doc_id").alias("doc_id")))
-        )
-        return (
-            top.agg(arr.alias("arr"))
-            .select(F.posexplode("arr").alias("pos", "s"))
-            .select(
-                F.col("s.doc_id").alias("doc_id"),
-                (F.col("pos") + 1).cast("int").alias(rank_name),
-            )
-        )
-
     lex_top = _text.op_text_bm25(spark, sf_dir).orderBy(F.desc("bm25"), "doc_id").limit(K)
-    lex = _ranked(lex_top, "bm25", "lex_rank")
-
     emb = load_table(spark, sf_dir, "embeddings")
     scored = _cosine_to_query0(emb).drop("embedding")
     sem = _ranked(scored.orderBy(F.desc("cos"), "doc_id").limit(K), "cos", "sem_rank")
-
-    rrf = F.round(
-        F.coalesce(1.0 / (60 + F.col("lex_rank")), F.lit(0.0))
-        + F.coalesce(1.0 / (60 + F.col("sem_rank")), F.lit(0.0)),
-        6,
-    )
-    # the FULL OUTER fusion of the two K-row lists as union + group-by:
-    # Spark cannot broadcast either side of a full outer join, so the
-    # join form compiles to a SortMergeJoin — bounded here (2K rows)
-    # but pointlessly so; one K-keyed aggregate carries both ranks
-    both = lex.withColumn("sem_rank", F.lit(None).cast("int")).unionByName(
-        sem.withColumn("lex_rank", F.lit(None).cast("int"))
-    )
-    return (
-        both.groupBy("doc_id")
-        .agg(F.max("lex_rank").alias("lex_rank"), F.max("sem_rank").alias("sem_rank"))
-        .select("doc_id", "lex_rank", "sem_rank", rrf.alias("rrf"))
-    )
+    return fuse_rrf(_ranked(lex_top, "bm25", "lex_rank"), sem)
 
 
 def _mmr_greedy_expr(steps: int, lam: float) -> Column:
@@ -1679,15 +1689,9 @@ def _mmr_greedy_expr(steps: int, lam: float) -> Column:
     rel itself — faithful to the old orderBy(rel) first pick even for
     lam values where m = lam*rel could collide). Ties break to the
     smallest doc_id via the struct-max on (key, -doc_id). Returns the
-    selection array (sel_rank, doc_id, rel, m).
-
-    r15 optimization (guide §1.2): the old loop ran 2 Spark JOBS per
-    greedy step (a join/agg/sort plan + a localCheckpoint per pick) —
-    ~10 sequential driver round-trips per MMR call over frames of at
-    most 20 rows. The fold is the same arithmetic on the same bounded
-    arrays in ONE job; every float op (lam*rel, (1-lam)*maxsim, the
-    subtraction) is the identical IEEE sequence, and max over the 4dp
-    sims is exact, so picks and m values are bit-identical."""
+    selection array (sel_rank, doc_id, rel, m). Every float op
+    (lam*rel, (1-lam)*maxsim, the subtraction) is the oracles' IEEE
+    sequence, and max over the 4dp sims is exact."""
     one_minus = 1 - lam
 
     def step_fn(acc, step):
@@ -1749,96 +1753,13 @@ def _mmr_greedy_expr(steps: int, lam: float) -> Column:
     return F.aggregate(F.sequence(F.lit(1), F.lit(steps)), init, step_fn)
 
 
-def mmr_select(
-    cands: DataFrame, pairs: DataFrame, *, steps: int = 5, lam: float = 0.5
-) -> DataFrame:
-    """The MMR greedy selection loop, shared by op_sim_mmr (over the
-    cosine top-20) and q_retrieval_pipeline (over the RRF-fused
-    top-10): given bounded ``cands`` (doc_id, rel) and the bounded
-    pairwise-similarity matrix ``pairs`` (d1, d2, sim — 4dp-rounded),
-    greedily pick ``steps`` rows maximizing lam*rel - (1-lam)*max(sim
-    to selected), ties on doc_id. A candidate with no ``pairs`` row
-    against the selected set scores maxsim = 0 (the MMR semantics for
-    unrelated docs, round-9 advice). Returns (sel_rank, doc_id, rel,
-    m) with m unrounded (callers round for output).
-
-    r15: the loop runs as ONE job — both bounded inputs collapse to
-    single array rows and ``_mmr_greedy_expr`` folds the greedy steps
-    in-expression (the old shape paid 2 jobs + a localCheckpoint per
-    step; see _mmr_greedy_expr's docstring for the equivalence
-    argument).
-
-    WARNING (r15-ADVICE): inputs MUST be constant-size. The
-    collect_list folds the ENTIRE candidate/pair frames into one row
-    of one task — an unbounded caller fails as a single-task OOM, not
-    gracefully. Every registry caller bounds cands at <=20 rows
-    (pairs <=400) by upstream top-k BEFORE calling. (Registry paths
-    use mmr_select_embedded, which carries the same contract.)"""
-    ca = cands.agg(
-        F.collect_list(F.struct("doc_id", "rel")).alias("cs")
-    )
-    pa = pairs.agg(
-        F.collect_list(F.struct("d1", "d2", "sim")).alias("ps")
-    )
-    return (
-        ca.join(F.broadcast(pa), F.lit(True))
-        .select(
-            F.explode(_mmr_greedy_expr(steps, lam)).alias("sel")
-        )
-        .select("sel.sel_rank", "sel.doc_id", "sel.rel", "sel.m")
-    )
-
-
-def mmr_select_grouped(
-    cands: DataFrame, pairs: DataFrame, *, steps: int = 5, lam: float = 0.5
-) -> DataFrame:
-    """``mmr_select`` generalized to a QUERY BATCH: ``cands`` carries
-    (query_id, doc_id, rel) and ``pairs`` (query_id, d1, d2, sim), both
-    bounded and materialized by the caller; each query's <=K survivors
-    collapse to per-query arrays (one groupBy each — never a global
-    window) and the whole greedy tail folds in ONE job through
-    ``_mmr_greedy_expr``, SHARED across the batch — the amortization
-    q_retrieval_pipeline_batch exists to demonstrate — instead of
-    re-paid per query as |queries| single-query MMR chains would.
-    Candidates missing from ``pairs`` score maxsim = 0, matching
-    mmr_select's semantics (round-9 advice).
-    Returns (query_id, sel_rank, doc_id, rel, m), m unrounded."""
-    ca = cands.groupBy("query_id").agg(
-        F.collect_list(F.struct("doc_id", "rel")).alias("cs")
-    )
-    pa = pairs.groupBy("query_id").agg(
-        F.collect_list(F.struct("d1", "d2", "sim")).alias("ps")
-    )
-    # r15: one job for the whole batch — per-query candidate/pair
-    # arrays fold through the same _mmr_greedy_expr as the single-query
-    # form (the old shape paid 2 jobs + a localCheckpoint per greedy
-    # step even though the batch tail was shared). LEFT join: a query
-    # with no pairs rows still selects, with every maxsim = 0.
-    return (
-        ca.join(F.broadcast(pa), "query_id", "left")
-        .withColumn(
-            "ps",
-            F.coalesce(
-                F.col("ps"),
-                F.array().cast("array<struct<d1:bigint,d2:bigint,sim:double>>"),
-            ),
-        )
-        .select("query_id", F.explode(_mmr_greedy_expr(steps, lam)).alias("sel"))
-        .select("query_id", "sel.sel_rank", "sel.doc_id", "sel.rel", "sel.m")
-    )
-
-
 def _pairs_from_cands_expr() -> Column:
     """The pairwise-similarity array (d1, d2, sim structs) computed
-    IN-EXPRESSION from the collected candidate array ``ce`` of
-    (doc_id, rel, embedding) structs — pairwise_cosine's identical
-    arithmetic (dot/(n1*n2), ROUND 4dp — same IEEE sequence on the
-    same doubles) with zero joins: the r15 single-job MMR fold still
-    paid a checkpointed candidate materialization plus a broadcast
-    self-join to BUILD the matrix; over a <=20-row bounded frame the
-    matrix is cheaper as a nested transform inside the same collected
-    row (r16, guide §1.2). The norm recompute per ordered pair is
-    O(K²·d) on bounded K — flops, not jobs."""
+    in-expression from the collected candidate array ``ce`` of
+    (doc_id, rel, embedding) structs: cosine dot/(n1*n2) rounded to
+    4dp, the oracles' ``ROUND(list_cosine_similarity(a, b), 4)``, with
+    no join. The norm recompute per ordered pair is O(K²·d) on bounded
+    K: flops, not jobs."""
     return F.flatten(
         F.transform(
             F.col("ce"),
@@ -1861,87 +1782,36 @@ def _pairs_from_cands_expr() -> Column:
     )
 
 
-def mmr_select_embedded(
-    with_emb: DataFrame, *, steps: int = 5, lam: float = 0.5
+def mmr_select(
+    with_emb: DataFrame, *keys: str, steps: int = 5, lam: float = 0.5
 ) -> DataFrame:
-    """``mmr_select`` with the pairwise matrix computed in-expression:
-    ONE collect of the bounded (doc_id, rel, embedding) frame feeds
-    both the candidate array and the pair array, so the whole MMR
-    tail — including the diversity matrix — is a single job with no
-    checkpoint and no self-join (r16; the r15 shape was one fold job
-    but still materialized ``with_emb`` for the pairwise join).
-    Same bounded-input contract as mmr_select: inputs MUST be
-    constant-size (<=20 candidates) — the collect is a single row.
-    Values bit-identical: the sims are pairwise_cosine's expression,
-    the fold is the same _mmr_greedy_expr."""
-    row = with_emb.agg(
-        F.collect_list(F.struct("doc_id", "rel", "embedding")).alias("ce")
-    )
-    return (
-        row.select(
-            F.transform(
-                F.col("ce"),
-                lambda c: F.struct(
-                    c["doc_id"].alias("doc_id"), c["rel"].alias("rel")
-                ),
-            ).alias("cs"),
-            _pairs_from_cands_expr().alias("ps"),
-        )
-        .select(F.explode(_mmr_greedy_expr(steps, lam)).alias("sel"))
-        .select("sel.sel_rank", "sel.doc_id", "sel.rel", "sel.m")
-    )
+    """Greedy maximal marginal relevance per ``keys`` (none: the whole
+    frame) over ``with_emb`` (*keys, doc_id, rel, embedding): pick
+    ``steps`` rows, each maximizing lam*rel - (1-lam)*max(sim to the
+    already selected), ties on the smaller doc_id; a candidate with no
+    selected neighbor scores maxsim = 0. One collect per key feeds
+    both the candidate array and the in-expression pairwise cosine
+    matrix, and ``_mmr_greedy_expr`` folds the steps, so the whole
+    selection is one job with no self-join. Returns (*keys, sel_rank,
+    doc_id, rel, m), m unrounded.
 
-
-def mmr_select_grouped_embedded(
-    with_emb: DataFrame, *, steps: int = 5, lam: float = 0.5
-) -> DataFrame:
-    """``mmr_select_grouped`` with the per-query pairwise matrices
-    computed in-expression (see mmr_select_embedded): input carries
-    (query_id, doc_id, rel, embedding), one groupBy collects each
-    query's bounded candidate array, and the whole batch's greedy
-    tail — diversity matrices included — folds in ONE job. A query
-    with a single candidate gets an empty pair array (maxsim = 0,
-    the mmr_select_grouped left-join semantics). Bounded-input
-    contract unchanged: <=K_FUSED candidates per query."""
-    rows = with_emb.groupBy("query_id").agg(
+    The input MUST be bounded per key (every caller passes <=20
+    candidates): each key's candidates are collected into one row of
+    one task."""
+    rows = with_emb.groupBy(*keys).agg(
         F.collect_list(F.struct("doc_id", "rel", "embedding")).alias("ce")
     )
     return (
         rows.select(
-            "query_id",
+            *keys,
             F.transform(
                 F.col("ce"),
-                lambda c: F.struct(
-                    c["doc_id"].alias("doc_id"), c["rel"].alias("rel")
-                ),
+                lambda c: F.struct(c["doc_id"].alias("doc_id"), c["rel"].alias("rel")),
             ).alias("cs"),
             _pairs_from_cands_expr().alias("ps"),
         )
-        .select("query_id", F.explode(_mmr_greedy_expr(steps, lam)).alias("sel"))
-        .select("query_id", "sel.sel_rank", "sel.doc_id", "sel.rel", "sel.m")
-    )
-
-
-def pairwise_cosine(cands: DataFrame) -> DataFrame:
-    """4dp-rounded pairwise cosine matrix over a BOUNDED candidate
-    frame carrying (doc_id, embedding) — the diversity input of
-    mmr_select, materialized by the caller."""
-    a = cands.select(
-        F.col("doc_id").alias("d1"),
-        F.col("embedding").alias("e1"),
-        norm_expr(F.col("embedding")).alias("n1"),
-    )
-    b = cands.select(
-        F.col("doc_id").alias("d2"),
-        F.col("embedding").alias("e2"),
-        norm_expr(F.col("embedding")).alias("n2"),
-    )
-    return a.join(F.broadcast(b), F.col("d1") != F.col("d2")).select(
-        "d1",
-        "d2",
-        F.round(
-            dot_expr(F.col("e1"), F.col("e2")) / (F.col("n1") * F.col("n2")), 4
-        ).alias("sim"),
+        .select(*keys, F.explode(_mmr_greedy_expr(steps, lam)).alias("sel"))
+        .select(*keys, "sel.sel_rank", "sel.doc_id", "sel.rel", "sel.m")
     )
 
 
@@ -2037,13 +1907,9 @@ def op_sim_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     exemplars from a near-dup cluster.
 
     Scale shape: relevance reduces the corpus to the top-20 through a
-    TakeOrderedAndProject heap; the 20x20 pairwise-cosine matrix and
-    the candidate list are then materialized ONCE (constant-size —
-    the greedy loop must not replay the corpus scan per step), and
-    each of the 5 selection steps is a constant-work join/aggregate
-    over those bounded frames ending in another 1-row heap. No step
-    touches the corpus again; nothing unbounded ever sits in one
-    task. On a cluster the loop costs 5 tiny jobs after one scan.
+    TakeOrderedAndProject heap; ``mmr_select`` then collects those 20
+    rows once and folds the 20x20 pairwise-cosine matrix and the 5
+    greedy steps in one job. No step touches the corpus again.
 
     Determinism: relevance and pairwise cosines are rounded to 4dp
     BEFORE any comparison, every argmax breaks ties on doc_id, and
@@ -2059,11 +1925,7 @@ def op_sim_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(20)
         .select("doc_id", "rel", "embedding")
     )
-    # r16: the pairwise matrix folds in-expression off the ONE collect
-    # (mmr_select_embedded), so cands has a single consumer — the
-    # checkpoint and the broadcast pair self-join are both gone and
-    # the whole op is one job (guide §1.2)
-    out = mmr_select_embedded(cands, steps=5, lam=0.5)
+    out = mmr_select(cands, steps=5, lam=0.5)
     return out.select(
         "sel_rank", "doc_id", "rel", (F.round(F.col("m"), 6) + 0.0).alias("mmr")
     )

@@ -1613,48 +1613,35 @@ BM25_CTES = """
         )"""
 
 
-@register(
-    "op_text_bm25",
-    tags=("llm", "text"),
-    oracle=BM25_CTES
-    + """
-        SELECT doc_id, bm25, n_terms_hit FROM bm
-    """,
-)
-def op_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 lexical retrieval scoring (k1=1.2, b=0.75) of every
-    document against a fixed query term set — the sparse/lexical
-    complement to the embedding-ANN retrieval family (op_sim_*):
-    production retrieval stacks run both and fuse.
+# the registered single-query BM25 term set (BM25_CTES's IN list)
+BM25_TERMS = ("vector", "stream", "spark")
 
-    Scale shape: the corpus is scanned ONCE — the scan collapses each
-    document to the narrow (doc_id, dl, query-term hits) projection,
-    which is materialized (the bigram_logprob/langid_trigram
-    materialize-once pattern; Catalyst does NOT reuse the scan across
-    the tf / df / corpus-stats consumers, verified by the absence of
-    ReusedExchange in the executed plan, so without the barrier the
-    100 TB text column would be read three times). The materialized
-    stream is tiny — two ints plus only the matching query terms per
-    doc. Document frequency and the corpus stats (N, total length)
-    are broadcast back into the per-hit score; document bodies never
-    shuffle.
 
-    Float discipline: both engines evaluate the identical operation
-    sequence (dl/avgdl expressed as dl*n_docs/tot_dl — never a
-    pre-divided avgdl — and 1-b folded to the exact-binary 0.25);
-    the only cross-engine exposure is the libm LN ulp, handled like
-    op_text_tfidf by rounding per-term scores to 4dp; the outer SUM
-    adds 4dp-rounded values whose magnitudes sit far from rounding
-    boundaries, so order-of-addition cannot flip the final ROUND.
-    """
-    query_terms = ("vector", "stream", "spark")
-    k1, b = 1.2, 0.75
+def query_term_union(query_terms: dict[int, tuple[str, ...]]) -> tuple[str, ...]:
+    """Every term of a {query_id: terms} batch once, in first-seen
+    order (so a one-query batch keeps its own term order)."""
+    return tuple(dict.fromkeys(t for ts in query_terms.values() for t in ts))
+
+
+def bm25_scan_parts(
+    spark: SparkSession, sf_dir: str, terms: tuple[str, ...]
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The BM25 parts of ``terms`` from one documents scan: ``tf``
+    (doc_id, dl, term, tf), ``df`` (term, df) and the one-row
+    ``stats`` (n_docs, tot_dl).
+
+    The scan collapses each document to the narrow (doc_id, dl,
+    matching terms) projection, which is materialized: Catalyst does
+    not reuse the scan across the tf / df / stats consumers (no
+    ReusedExchange in the executed plan), so without the barrier the
+    text column would be read three times. Document bodies never
+    shuffle."""
     docs = load_table(spark, sf_dir, "documents")
     base = widen_narrow_scan(
         docs.withColumn("terms", _terms()).select(
             "doc_id",
             F.size("terms").alias("dl"),
-            F.filter("terms", lambda t: t.isin(*query_terms)).alias("hits"),
+            F.filter("terms", lambda t: t.isin(*terms)).alias("hits"),
         ),
         spark,
     ).localCheckpoint()
@@ -1667,21 +1654,82 @@ def op_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "dl", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    dfq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    return tf, tf.groupBy("term").agg(F.count(F.lit(1)).alias("df")), stats
+
+
+def bm25_scored(
+    tf: DataFrame,
+    df: DataFrame,
+    stats: DataFrame,
+    query_terms: dict[int, tuple[str, ...]],
+) -> DataFrame:
+    """BM25 (k1=1.2, b=0.75) of every document for each query of a
+    {query_id: terms} batch, from (tf, df, stats) parts that cover the
+    batch's terms (``bm25_scan_parts`` or ``lex_index.bm25_index_parts``).
+    Returns (query_id, doc_id, bm25, n_terms_hit) for the documents
+    that hit at least one of the query's terms.
+
+    Each (doc, term) score is computed once, whichever queries share
+    the term; a literal term -> query ids map fans it out, and one
+    aggregate sums it per (query_id, doc_id). df and the one-row stats
+    are broadcast.
+
+    Float discipline: the oracles' operation sequence (dl/avgdl as
+    dl*n_docs/tot_dl, never a pre-divided avgdl; 1-b folded to the
+    exact-binary 0.25); the libm LN ulp is absorbed by rounding each
+    per-term score to 4dp, and the sum adds 4dp values far from
+    rounding boundaries, so the order of addition cannot flip the
+    final ROUND."""
+    k1, b = 1.2, 0.75
     idf = F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
     score = idf * (F.col("tf") * (k1 + 1.0)) / (
         F.col("tf") + k1 * ((1.0 - b) + b * F.col("dl") * F.col("n_docs") / F.col("tot_dl"))
     )
+    queries_of = F.create_map(
+        *(
+            c
+            for t in query_term_union(query_terms)
+            for c in (
+                F.lit(t),
+                F.array(*(F.lit(q) for q, ts in sorted(query_terms.items()) if t in ts)).cast(
+                    "array<bigint>"
+                ),
+            )
+        )
+    )
     return (
-        tf.join(F.broadcast(dfq), "term")
+        tf.join(F.broadcast(df), "term")
         .crossJoin(F.broadcast(stats))
-        .select("doc_id", F.round(score, 4).alias("s"))
-        .groupBy("doc_id")
+        .select(
+            F.explode(queries_of[F.col("term")]).alias("query_id"),
+            "doc_id",
+            F.round(score, 4).alias("s"),
+        )
+        .groupBy("query_id", "doc_id")
         .agg(
             F.round(F.sum("s"), 4).alias("bm25"),
             F.count(F.lit(1)).alias("n_terms_hit"),
         )
     )
+
+
+@register(
+    "op_text_bm25",
+    tags=("llm", "text"),
+    oracle=BM25_CTES
+    + """
+        SELECT doc_id, bm25, n_terms_hit FROM bm
+    """,
+)
+def op_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25 lexical retrieval scoring (k1=1.2, b=0.75) of every
+    document against the fixed query term set BM25_TERMS: the
+    one-query ``bm25_scored`` over one documents scan
+    (``bm25_scan_parts``). The sparse complement to the embedding
+    retrieval family (op_sim_*): production retrieval stacks run both
+    and fuse."""
+    one = {0: BM25_TERMS}
+    return bm25_scored(*bm25_scan_parts(spark, sf_dir, BM25_TERMS), one).drop("query_id")
 
 
 @register(

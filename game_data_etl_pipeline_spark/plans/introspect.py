@@ -20,9 +20,9 @@ Parses ``df.explain("formatted")`` output into checkable facts:
 PySpark 4.1 exposes no stable py4j surface for the formatted plan
 string, so we capture ``df.explain()`` stdout (the documented API).
 
-Used two ways: plan-contract tests (tests/test_plans.py) pin the
-strategy of every headline query; ``plan_report`` prints a one-line
-scorecard per query for manual tuning.
+Used by the plan-contract tests (tests/test_plans.py), which pin the
+strategy of every headline query, and by ``scripts/gen_plan_scorecard.py``
+(the PLANS.md scorecard) and ``scripts/dump_plans.py``.
 """
 
 from __future__ import annotations
@@ -191,20 +191,3 @@ def codegen_compilations(spark) -> int:
     classes that call found missing from the codegen cache."""
     metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
-
-
-def plan_report(specs: dict, spark, sf_dir: str) -> str:
-    """One scorecard line per query: joins / shuffles / pushdown / codegen."""
-    lines = []
-    for name in sorted(specs):
-        try:
-            f = facts(specs[name].fn(spark, sf_dir))
-        except Exception as e:  # streaming queries can't explain pre-start
-            lines.append(f"{name:34s} !! {type(e).__name__}")
-            continue
-        joins = ",".join(j[0] for j in f.joins) or "-"
-        lines.append(
-            f"{name:34s} joins={joins:8s} xchg={f.exchanges} bcast={f.broadcasts} "
-            f"pushed={len(f.pushed_filters)} codegen={f.codegen_spans}"
-        )
-    return "\n".join(lines)

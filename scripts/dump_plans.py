@@ -14,9 +14,14 @@ returned frame is the post-stream batch plan) — slower to dump, but
 the serving plan is the part the evidence is about.
 
 Each dumped op is then called twice more, its result written to the
-``noop`` sink, and the Janino compilations of the second of those calls
-are printed next to its Exchange count: near 0 when the op's generated
-classes stay in the session's codegen cache between calls.
+``noop`` sink. Printed next to its Exchange count, for the second of
+those (warm) calls:
+
+- its Spark jobs, counted by the job group the call runs in, so the
+  jobs run while the frame is built (checkpoints, bucket resolution)
+  count too;
+- its Janino compilations: near 0 when the op's generated classes stay
+  in the session's codegen cache between calls.
 """
 
 from __future__ import annotations
@@ -40,6 +45,7 @@ def main() -> int:
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("dump-plans")
+    sc = spark.sparkContext
     specs = registry.all_specs()
     rc = 0
     for name in names:
@@ -52,10 +58,16 @@ def main() -> int:
             for step in spec.setup:
                 step(spark, sf_dir)
             plan = I.explain_str(spec.fn(spark, sf_dir), "formatted")
-            for _ in range(2):
-                n0 = I.codegen_compilations(spark)
+            spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            n0 = I.codegen_compilations(spark)
+            group = f"dump-plans-{name}"
+            sc.setJobGroup(group, f"warm call of {name}")
+            try:
                 spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
             compiled = I.codegen_compilations(spark) - n0
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: {type(e).__name__}: {e}", file=sys.stderr)
             rc = 1
@@ -63,7 +75,10 @@ def main() -> int:
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)
-        print(f"wrote {path} ({plan.count('Exchange')} Exchange refs, {compiled} classes compiled by a second call)")
+        print(
+            f"wrote {path} ({plan.count('Exchange')} Exchange refs; warm call: "
+            f"{jobs} jobs, {compiled} classes compiled)"
+        )
     return rc
 
 

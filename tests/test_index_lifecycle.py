@@ -1,7 +1,8 @@
 """The persisted-index lifecycle (llmdata/artifacts.py) is bookkeeping
 around the Spark writes: these tests pin the Spark work of a cold build,
 of the compactions and Bloom registry edits, and of a warm run of each
-streamed store op, and the cache-hit rule of every op's declared setup."""
+streamed store op and each composed retrieval op (which serve from the
+trees), and the cache-hit rule of every op's declared setup."""
 
 from __future__ import annotations
 
@@ -86,6 +87,32 @@ def test_streamed_op_jobs(spark, sf_dir, op):
     resolve_term_buckets(spark, ("vector", "stream", "spark"))  # bm25_from_index's default
     run = lambda spark, sf_dir: SPECS[op].fn(spark, sf_dir).collect()  # noqa: E731
     assert _jobs(spark, run, sf_dir) == STREAM_JOBS[op]
+
+
+# Spark jobs of one warm call (construction and collect) of each
+# composed retrieval op on the sf0.001 fixture, the same on 2 and 4
+# cores; warm means the op has run once in this session, so its index
+# trees, their schemas and its term buckets are resolved.
+RETRIEVAL_JOBS = {
+    "q_retrieval_pipeline": 18,
+    "q_retrieval_pipeline_ann": 30,
+    "q_retrieval_pipeline_served": 37,
+    "q_retrieval_pipeline_batch": 18,
+    "q_retrieval_pipeline_batch8": 18,
+    "q_retrieval_pipeline_batch_served": 12,
+    "q_retrieval_pipeline_batch_served8": 12,
+    "q_retrieval_pipeline_batch_ann": 24,
+    "q_retrieval_pipeline_batch_ann8": 24,
+}
+
+
+@pytest.mark.parametrize("op", sorted(RETRIEVAL_JOBS))
+def test_retrieval_op_jobs(spark, sf_dir, op):
+    for step in SPECS[op].setup:
+        step(spark, sf_dir)
+    run = lambda spark, sf_dir: SPECS[op].fn(spark, sf_dir).collect()  # noqa: E731
+    run(spark, sf_dir)
+    assert _jobs(spark, run, sf_dir) == RETRIEVAL_JOBS[op]
 
 
 # Spark jobs of the compactions and Bloom registry edits on the sf0.001

@@ -863,43 +863,52 @@ def test_ivfpq_serve_compacted_plan_contract(spark):
     assert "compact_v" in plan, "serve plan does not read the compacted tree"
 
 
+def _ungrouped_windows(simple: str) -> list[str]:
+    """Window nodes of a simple-mode plan whose child is not a
+    WindowGroupLimit: a rank window whose top-K filter Spark did not
+    push below its exchange (so every scored row is shuffled, not the
+    per-partition top K)."""
+    lines = simple.splitlines()
+    return [
+        line.strip()
+        for line, child in zip(lines, lines[1:])
+        if " Window [" in line and "WindowGroupLimit" not in child
+    ]
+
+
 def test_retrieval_pipeline_plan_contract(spark):
-    """q_retrieval_pipeline's fused stage (everything before the
-    bounded MMR frames are materialized) must preserve each stage op's
+    """q_retrieval_pipeline's fused stage (the one-query batch's
+    scanned BM25 top-20 and exact cosine top-20 fused by RRF, everything
+    before the bounded MMR frames are materialized) must preserve each stage op's
     scale contract THROUGH the composition: zero documents scans (the
     BM25 materialize-once barrier holds), embeddings read at most 3
     times — the 1-row query lookup, the corpus scoring scan, and the
     lexical semi-join which must be column-pruned to vec_id alone —
-    two TakeOrderedAndProject K-heaps (never a global sort), rank
-    assignment without a single-partition window, and union+groupBy
-    fusion (no SortMergeJoin from a full-outer form)."""
+    every per-query rank window reduced to its top K below its
+    exchange (a WindowGroupLimit, the windowed form of a top-K heap),
+    no single-partition window, and union+groupBy fusion (no
+    SortMergeJoin from a full-outer form)."""
     import re
 
     from game_data_etl_pipeline_spark.catalog import load_table
     from game_data_etl_pipeline_spark.llmdata.retrieval import (
-        K_EACH,
-        _ranked,
-        fuse_rrf,
-        lex_ranked,
+        ONE_QUERY,
+        exact_sem_ranked_batch,
+        lex_ranked_batch,
     )
-    from game_data_etl_pipeline_spark.llmdata.similarity import _cosine_to_query0
-    from pyspark.sql import functions as F
+    from game_data_etl_pipeline_spark.llmdata.similarity import fuse_rrf
 
     emb = load_table(spark, SF, "embeddings")
-    lex = lex_ranked(spark, SF)
-    sem = _ranked(
-        _cosine_to_query0(emb).drop("embedding").orderBy(F.desc("cos"), "doc_id").limit(K_EACH),
-        "cos",
-        "sem_rank",
-    )
-    fused = fuse_rrf(lex, sem)
+    lex = lex_ranked_batch(spark, SF, ONE_QUERY)
+    fused = fuse_rrf(lex, exact_sem_ranked_batch(emb, sorted(ONE_QUERY)), "query_id")
     plan = I.explain_str(fused, "formatted")
     simple = I.explain_str(fused, "simple")
     assert not re.findall(r"Scan parquet[^\n]*documents", plan), "bm25 barrier lost"
     schemas = I.read_schemas(plan)
     assert len(schemas) <= 3, schemas
     assert ["vec_id"] in schemas, f"semi-join scan not pruned: {schemas}"
-    assert simple.count("TakeOrderedAndProject") == 2
+    assert " Window [" in simple
+    assert _ungrouped_windows(simple) == []
     assert I.num_global_window_sorts(simple) == 0
     assert "SortMergeJoin" not in simple
 
@@ -930,47 +939,27 @@ def test_batch_pipeline_plan_contract(spark):
     (the batch BM25 barrier covers all queries from one scan), the
     lexical semi-join pruned to vec_id, no SortMergeJoin, and no
     GLOBAL window — the per-query ranks run as windows PARTITIONED BY
-    query_id, which is the one shape allowed to replace the
-    single-query TakeOrderedAndProject heaps."""
+    query_id, each with a WindowGroupLimit below its exchange."""
     import re
 
     from game_data_etl_pipeline_spark.catalog import load_table
     from game_data_etl_pipeline_spark.llmdata.retrieval import (
-        K_EACH,
-        N_BATCH_QUERIES,
-        fuse_rrf_grouped,
+        BATCH_QUERY_TERMS,
+        exact_sem_ranked_batch,
         lex_ranked_batch,
     )
-    from game_data_etl_pipeline_spark.llmdata.similarity import dot_expr, norm_expr
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
+    from game_data_etl_pipeline_spark.llmdata.similarity import fuse_rrf
 
     emb = load_table(spark, SF, "embeddings")
     lex = lex_ranked_batch(spark, SF)
-    qs = emb.filter(F.col("vec_id") < N_BATCH_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        norm_expr(F.col("embedding")).alias("qn"),
-    )
-    cos = F.round(
-        dot_expr(F.col("embedding"), F.col("qe"))
-        / (norm_expr(F.col("embedding")) * F.col("qn")),
-        4,
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "doc_id")
-    sem = (
-        emb.join(F.broadcast(qs))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("doc_id"), cos.alias("cos"))
-        .withColumn("sem_rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("sem_rank") <= K_EACH)
-        .select("query_id", "doc_id", "sem_rank")
-    )
-    fused = fuse_rrf_grouped(lex, sem)
+    sem = exact_sem_ranked_batch(emb, sorted(BATCH_QUERY_TERMS))
+    fused = fuse_rrf(lex, sem, "query_id")
     plan = I.explain_str(fused, "formatted")
     simple = I.explain_str(fused, "simple")
     assert not re.findall(r"Scan parquet[^\n]*documents", plan), "batch bm25 barrier lost"
     assert ["vec_id"] in I.read_schemas(plan), "semi-join scan not pruned"
+    assert " Window [" in simple
+    assert _ungrouped_windows(simple) == []
     assert I.num_global_window_sorts(simple) == 0
     assert "SortMergeJoin" not in simple
 

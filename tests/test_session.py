@@ -93,3 +93,14 @@ def test_published_ann_tree_reads_identically(spark, sf_dir):
     for a, b, c in zip(first, second, plain):
         assert a.schema == b.schema == c.schema
         assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect())) == sorted(map(tuple, c.collect()))
+
+
+def test_served_lexer_rebuilds_without_jobs(spark, sf_dir):
+    """A second build of the served batch lexer runs no Spark job: the
+    published lexical tree's schemas, the index cache hit and the term
+    buckets are all resolved by the first."""
+    from game_data_etl_pipeline_spark.llmdata.retrieval import lex_ranked_batch_served
+
+    lex_ranked_batch_served(spark, sf_dir)
+    jobs, _ = _jobs_and_result(spark, lambda: lex_ranked_batch_served(spark, sf_dir))
+    assert jobs == 0
