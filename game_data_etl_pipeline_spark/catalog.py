@@ -16,12 +16,27 @@ The contract is that a path's schema does not change while its identity
 holds. The fixture tables and the published index trees keep it; so
 does a store that one writer rewrites with fixed columns (the streamed
 lexical store, which ``bm25_from_index`` also serves).
+
+Scratch state belongs to the session, not the process. Every session
+owns one root, ``<tempfile.gettempdir()>/spark_graft/<applicationId>``:
+``session_dir`` names a ``<tag>/<sf key>`` dir under it for the
+streamed ops' stage, store and sink trees, and ``derived`` builds a
+derived input (a re-laid-out copy of a fixture table, a catalog table,
+a landed file) on a fresh dir there once per session and remembers
+what the build returned. A new session (a restart in the same process)
+builds its own copies and registers its own catalog tables. The roots
+a process created are removed when it exits.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 import weakref
+from dataclasses import dataclass, field
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,9 +67,56 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# per session (dropped with it): real path -> (identity, inferred schema);
-# a new identity replaces the entry, so there is one per path
-_SCHEMAS: weakref.WeakKeyDictionary[SparkSession, dict[str, tuple[tuple, StructType]]] = weakref.WeakKeyDictionary()
+@dataclass
+class _SessionState:
+    # real path -> (identity, inferred schema); a new identity replaces
+    # the entry, so there is one per path
+    schemas: dict[str, tuple[tuple, StructType]] = field(default_factory=dict)
+    # (tag, sf_dir) -> what the derived input's build returned
+    derived: dict[tuple[str, str], Any] = field(default_factory=dict)
+    # op_cache_reuse's cached frame, released by its next call
+    cached: DataFrame | None = None
+    root: str | None = None
+
+
+# one state per session, dropped with it
+_STATE: weakref.WeakKeyDictionary[SparkSession, _SessionState] = weakref.WeakKeyDictionary()
+
+
+def session_state(spark: SparkSession) -> _SessionState:
+    return _STATE.setdefault(spark, _SessionState())
+
+
+def _remove_root(root: str) -> None:
+    shutil.rmtree(root, ignore_errors=True)
+    try:
+        os.rmdir(os.path.dirname(root))  # the shared parent, once empty
+    except OSError:
+        pass
+
+
+def session_dir(spark: SparkSession, tag: str, sf_dir: str) -> str:
+    """``<session root>/<tag>/<sf key>``: the scratch dir of ``tag`` on
+    ``sf_dir`` in this session (not created here). The root is removed
+    when the process exits."""
+    state = session_state(spark)
+    if state.root is None:
+        state.root = os.path.join(tempfile.gettempdir(), "spark_graft", spark.sparkContext.applicationId)
+        atexit.register(_remove_root, state.root)
+    return os.path.join(state.root, tag, sf_dir.strip("/").replace("/", "_"))
+
+
+def derived(spark: SparkSession, tag: str, sf_dir: str, build: Callable[[str], Any]) -> Any:
+    """``build(d)`` on a fresh ``d = session_dir(spark, tag, sf_dir)``,
+    run once per session; later calls return what it returned."""
+    memo = session_state(spark).derived
+    key = (tag, sf_dir)
+    if key not in memo:
+        d = session_dir(spark, tag, sf_dir)
+        shutil.rmtree(d, ignore_errors=True)
+        os.makedirs(d)
+        memo[key] = build(d)
+    return memo[key]
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -67,7 +129,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     except OSError:
         return spark.read.parquet(path)
     identity = (st.st_dev, st.st_ino, st.st_mtime_ns)
-    schemas = _SCHEMAS.setdefault(spark, {})
+    schemas = session_state(spark).schemas
     cached = schemas.get(real)
     if cached is not None and cached[0] == identity:
         return spark.read.schema(cached[1]).parquet(path)

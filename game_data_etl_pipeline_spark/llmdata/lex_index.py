@@ -14,7 +14,7 @@ the documents file's (size, mtime_ns) fingerprint + format version):
 
 - ``postings/`` (term, doc_id, tf, dl) over the FULL vocabulary,
   PARTITIONED BY ``term_bucket`` = xxhash64(term) mod LEX_BUCKETS — a
-  query's terms resolve to their buckets and the scan prunes to those
+  query's terms fold to their buckets and the scan prunes to those
   directories, the classic term-sharded inverted-file layout. At
   100 TB the bucket count rises with vocabulary; lookups stay
   O(query terms' buckets), never the corpus.
@@ -55,17 +55,10 @@ from game_data_etl_pipeline_spark.llmdata.artifacts import (
 from game_data_etl_pipeline_spark.llmdata.text import BM25_CTES, BM25_TERMS, _terms, bm25_scored
 from game_data_etl_pipeline_spark.registry import register
 
-# v2 (round 9): _bucket moved from abs(xxhash64)%N — whose abs leaves
-# Long.MIN_VALUE negative under non-ANSI mode, violating the 0..15
-# layout invariant — to pmod, which is total. pmod re-keys every
-# bucket, so the format version bumps and v1 artifacts are never mixed.
+# v2: _bucket is pmod, total over all longs (v1's abs(xxhash64) % N left
+# Long.MIN_VALUE negative); a re-keyed layout bumps the version
 LEX_INDEX_VERSION = 2
 LEX_BUCKETS = 16
-
-# term-tuple -> bucket list, memoized per process: xxhash64 lives
-# JVM-side, so resolving a query's buckets costs one bounded 3-row
-# job — pay it once per distinct query-term set, not per execution
-_BUCKET_CACHE: dict[tuple[str, ...], list[int]] = {}
 
 
 def _bucket(term_col):
@@ -171,9 +164,9 @@ def build_lex_index(spark: SparkSession, sf_dir: str) -> str:
 )
 def op_text_bm25_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 served from the PERSISTED inverted index — query time
-    touches ZERO corpus: the query terms' buckets are computed up
-    front (one bounded 3-row job), the postings and df scans prune to
-    those partition directories, the 1-row stats artifact broadcasts,
+    touches ZERO corpus: the query terms' buckets fold to literals at
+    planning time, the postings and df scans prune to those partition
+    directories, the 1-row stats artifact broadcasts,
     and the score is op_text_bm25's identical IEEE expression. The
     oracle is shared VERBATIM with op_text_bm25, so the index path is
     held to bit-equality with the corpus-scan path by the driver's
@@ -190,28 +183,11 @@ def op_text_bm25_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Local-fixture honesty: at sf0.1 serve measures ~par with the
     inline form (1.5 vs 1.4 s median) — the corpus is small enough
     that one materialized scan is already cheap, and serve's fixed
-    costs (bucket resolution, partitioned-dir footers) dominate. The
+    costs (partitioned-dir listing and footers) dominate. The
     win is the asymptotic shape, not the 5000-doc wall-clock; the
     value oracle proves the path exact either way."""
     path = build_lex_index(spark, sf_dir)
     return bm25_from_index(spark, path)
-
-
-def resolve_term_buckets(
-    spark: SparkSession, query_terms: tuple[str, ...]
-) -> list[int]:
-    """The memoized query-term -> term_bucket resolution every index
-    reader shares: one bounded |terms|-row job per distinct term set
-    per process (the driver-side collect is the partition-pruning
-    device — bucket ids must be literals to prune the scan)."""
-    if query_terms not in _BUCKET_CACHE:
-        qb = (
-            spark.createDataFrame([(t,) for t in query_terms], "term string")
-            .select(_bucket(F.col("term")).alias("b"))
-            .collect()
-        )
-        _BUCKET_CACHE[query_terms] = sorted({r.b for r in qb})
-    return _BUCKET_CACHE[query_terms]
 
 
 def bm25_index_parts(
@@ -220,9 +196,11 @@ def bm25_index_parts(
     """The BM25 parts of ``terms`` read from the index tree at
     ``path``: ``tf`` and ``df`` pruned to the terms' bucket
     directories, and the one-row ``stats``. All integers, equal to
-    ``text.bm25_scan_parts`` over the indexed corpus."""
-    buckets = resolve_term_buckets(spark, terms)
-    wanted = F.col("term_bucket").isin(buckets) & F.col("term").isin(*terms)
+    ``text.bm25_scan_parts`` over the indexed corpus. The bucket of a
+    literal term constant-folds, so the scan prunes on a literal
+    ``term_bucket IN (...)`` without running a job."""
+    buckets = [_bucket(F.lit(t)) for t in terms]
+    wanted = F.col("term_bucket").isin(*buckets) & F.col("term").isin(*terms)
     tf = read_parquet(spark, os.path.join(path, "postings")).filter(wanted)
     df = read_parquet(spark, os.path.join(path, "df")).filter(wanted)
     return (

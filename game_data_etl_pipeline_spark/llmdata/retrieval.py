@@ -844,8 +844,8 @@ def lex_ranked_batch_served(
 ) -> DataFrame:
     """``lex_ranked_batch`` scored over the persisted inverted index
     (``lex_index.bm25_index_parts``) instead of a documents scan: the
-    batch's terms resolve to their buckets once and the postings and
-    df reads prune to those directories. The parts are the scan's
+    batch's terms fold to literal buckets and the postings and df
+    reads prune to those directories. The parts are the scan's
     integers and the scorer is the same, so the ranks are bit-equal."""
     from game_data_etl_pipeline_spark.llmdata.lex_index import (
         bm25_index_parts,
@@ -1120,12 +1120,12 @@ def q_retrieval_pipeline_batch8(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_retrieval_pipeline_batch_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_retrieval_pipeline_batch with the lexical side served from the
-    persisted inverted index: the batch's terms resolve to their
-    buckets once, the postings and df reads prune to those
-    directories, and no documents scan is left in the plan. Held to
-    the 3-query batch oracle verbatim: the index parts are the scan's
-    integers and the scorer is shared, so every rank, fusion score and
-    MMR pick matches the scanned chain value for value."""
+    persisted inverted index: the batch's terms fold to literal
+    buckets, the postings and df reads prune to those directories,
+    and no documents scan is left in the plan. Held to the 3-query
+    batch oracle verbatim: the index parts are the scan's integers and
+    the scorer is shared, so every rank, fusion score and MMR pick
+    matches the scanned chain value for value."""
     return retrieval_pipeline_batch(spark, sf_dir, BATCH_QUERY_TERMS, served=True)
 
 
@@ -1363,11 +1363,6 @@ LATE_INDEX_VERSION = 1
 # prunes to n_query_term_buckets/LATE_BUCKETS of the posting files
 LATE_BUCKETS = 32
 
-# query-term -> bucket ids, memoized per process (the lex_index
-# _BUCKET_CACHE discipline: xxhash64 lives JVM-side, so resolving the
-# registered query set's buckets costs one bounded 9-row job, once)
-_LATE_BUCKET_CACHE: dict[tuple[str, ...], list[int]] = {}
-
 
 LATE = TreeFamily(
     "SPARK_GRAFT_LATE_INDEX_DIR", "late_index", "documents.parquet", LATE_INDEX_VERSION
@@ -1432,27 +1427,6 @@ def build_late_index(spark: SparkSession, sf_dir: str) -> str:
     return ensure_tree(LATE.dir(sf_dir), sf_dir, "meta.json", meta, build)
 
 
-def _late_query_buckets(spark: SparkSession) -> list[int]:
-    """Bucket ids of the registered query set's unigram terms — one
-    bounded 9-row JVM job, memoized per process, feeding the literal
-    partition-pruning filter of the served candidate scan."""
-    from game_data_etl_pipeline_spark.llmdata.similarity import LATE_QUERIES
-
-    terms = tuple(sorted({t for _i, q in LATE_QUERIES for t in q.split(" ")}))
-    if terms not in _LATE_BUCKET_CACHE:
-        rows = (
-            spark.range(1)
-            .select(
-                F.explode(F.array(*[F.lit(t) for t in terms])).alias("term")
-            )
-            .select(_late_bucket(F.col("term")).alias("b"))
-            .distinct()
-            .collect()
-        )  # bounded: one row per distinct query term
-        _LATE_BUCKET_CACHE[terms] = sorted(int(r["b"]) for r in rows)
-    return _LATE_BUCKET_CACHE[terms]
-
-
 @register(
     "op_sim_late_interaction_served",
     tags=("llm", "similarity", "retrieval", "index"),
@@ -1489,6 +1463,7 @@ def op_sim_late_interaction_served(spark: SparkSession, sf_dir: str) -> DataFram
     corpus per query batch and a bounded bucket-pruned posting scan:
     build cost amortizes across every query the snapshot serves."""
     from game_data_etl_pipeline_spark.llmdata.similarity import (
+        LATE_QUERIES,
         late_maxsim_rank,
         late_query_frames,
         late_shortlist,
@@ -1496,7 +1471,8 @@ def op_sim_late_interaction_served(spark: SparkSession, sf_dir: str) -> DataFram
 
     path = build_late_index(spark, sf_dir)
     qt, qk = late_query_frames(spark)
-    buckets = _late_query_buckets(spark)
+    # the query terms' buckets fold to literals: a pruned scan, no job
+    buckets = [_late_bucket(F.lit(t)) for t in sorted({t for _i, q in LATE_QUERIES for t in q.split(" ")})]
     du = (
         spark.read.parquet(os.path.join(path, "unigrams"))
         .filter(F.col("b").isin(*buckets))

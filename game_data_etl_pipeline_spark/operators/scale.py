@@ -18,22 +18,15 @@ when the data is 1000× bigger than the fixtures.
 
 from __future__ import annotations
 
-import atexit
 import os
 import re
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from game_data_etl_pipeline_spark.catalog import load_table
+from game_data_etl_pipeline_spark.catalog import derived, load_table, session_state
+from game_data_etl_pipeline_spark.llmdata.artifacts import count_parquet_files
 from game_data_etl_pipeline_spark.registry import register
-
-# op_cache_reuse: the previous invocation's cached DataFrame, released
-# on the next call so repeated registry sweeps never accumulate
-# InMemoryRelation entries (at most one live per session).
-_CACHE_REUSE_LIVE: list[DataFrame] = []
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 _DUCK_TS_FMT = "%Y-%m-%d %H:%M:%S.%f"
@@ -147,19 +140,16 @@ def op_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PARTITIONED_CACHE: dict[str, str] = {}
-
-
 def partitioned_events_dir(spark: SparkSession, sf_dir: str) -> str:
-    """events re-laid-out as parquet partitioned by event_type (written
-    once per process per sf)."""
-    if sf_dir not in _PARTITIONED_CACHE:
-        out = os.path.join(tempfile.mkdtemp(prefix="events_part_"), "events")
+    """events re-laid-out as parquet partitioned by event_type."""
+
+    def build(d: str) -> str:
         load_table(spark, sf_dir, "events").write.partitionBy("event_type").mode(
             "overwrite"
-        ).parquet(out)
-        _PARTITIONED_CACHE[sf_dir] = out
-    return _PARTITIONED_CACHE[sf_dir]
+        ).parquet(d)
+        return d
+
+    return derived(spark, "events_part", sf_dir, build)
 
 
 @register(
@@ -251,25 +241,24 @@ def op_timeseries_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BUCKETED_CACHE: dict[str, bool] = {}
 _BUCKETS = 8
 
 
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """lineitem/orders written as bucketed tables on their join key
-    (once per process per sf). Bucketing pre-shuffles AT WRITE TIME:
-    every subsequent join on the bucket key reads co-located buckets
-    and skips the exchange entirely."""
+    """lineitem/orders written as bucketed catalog tables on their join
+    key. Bucketing pre-shuffles AT WRITE TIME: every subsequent join on
+    the bucket key reads co-located buckets and skips the exchange
+    entirely."""
     key = sf_dir.replace("/", "_").replace(".", "_")
     li, od = f"lineitem_bkt{key}", f"orders_bkt{key}"
-    if sf_dir not in _BUCKETED_CACHE:
-        base = tempfile.mkdtemp(prefix="bucketed_")
+
+    def build(d: str) -> tuple[str, str]:
         (
             load_table(spark, sf_dir, "lineitem")
             .select("l_orderkey", "l_extendedprice", "l_discount")
             .write.bucketBy(_BUCKETS, "l_orderkey")
             .sortBy("l_orderkey")
-            .option("path", os.path.join(base, "lineitem"))
+            .option("path", os.path.join(d, "lineitem"))
             .mode("overwrite")
             .saveAsTable(li)
         )
@@ -278,12 +267,13 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .select("o_orderkey", "o_orderpriority")
             .write.bucketBy(_BUCKETS, "o_orderkey")
             .sortBy("o_orderkey")
-            .option("path", os.path.join(base, "orders"))
+            .option("path", os.path.join(d, "orders"))
             .mode("overwrite")
             .saveAsTable(od)
         )
-        _BUCKETED_CACHE[sf_dir] = True
-    return li, od
+        return li, od
+
+    return derived(spark, "bucketed", sf_dir, build)
 
 
 @register(
@@ -579,19 +569,17 @@ def op_timeseries_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MULTIFILE_CACHE: dict[str, str] = {}
-
-
 def _multifile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lineitem rewritten once per (process, sf) as 16 parquet files —
-    the multi-mapper layout every real table has."""
-    if sf_dir not in _MULTIFILE_CACHE:
-        d = os.path.join(tempfile.mkdtemp(prefix="multifile_"), "lineitem16")
+    """lineitem rewritten as 16 parquet files — the multi-mapper layout
+    every real table has."""
+
+    def build(d: str) -> str:
         load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_extendedprice"
         ).repartition(16).write.mode("overwrite").parquet(d)
-        _MULTIFILE_CACHE[sf_dir] = d
-    return spark.read.parquet(_MULTIFILE_CACHE[sf_dir])
+        return d
+
+    return spark.read.parquet(derived(spark, "multifile", sf_dir, build))
 
 
 @register(
@@ -654,26 +642,22 @@ def op_join_skew_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COMPACT_CACHE: dict[str, tuple[str, int, int]] = {}
 _COMPACT_TARGET = 4
 
 
 def _compacted_dir(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
     """events written as 64 small files, then compacted to
     _COMPACT_TARGET; returns (compacted_dir, n_small, n_compacted)."""
-    if sf_dir not in _COMPACT_CACHE:
-        base = tempfile.mkdtemp(prefix="compact_")
-        small, compacted = os.path.join(base, "small"), os.path.join(base, "compacted")
-        events = load_table(spark, sf_dir, "events")
-        events.repartition(64).write.mode("overwrite").parquet(small)
+
+    def build(d: str) -> tuple[str, int, int]:
+        small, compacted = os.path.join(d, "small"), os.path.join(d, "compacted")
+        load_table(spark, sf_dir, "events").repartition(64).write.mode("overwrite").parquet(small)
         spark.read.parquet(small).repartition(_COMPACT_TARGET).write.mode(
             "overwrite"
         ).parquet(compacted)
-        count_files = lambda d: sum(
-            1 for f in os.listdir(d) if f.endswith(".parquet")
-        )
-        _COMPACT_CACHE[sf_dir] = (compacted, count_files(small), count_files(compacted))
-    return _COMPACT_CACHE[sf_dir]
+        return compacted, count_parquet_files(small), count_parquet_files(compacted)
+
+    return derived(spark, "compact", sf_dir, build)
 
 
 @register(
@@ -707,7 +691,6 @@ def op_sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ZORDER_CACHE: dict[str, str] = {}
 _ZORDER_BITS = 10  # 10 bits per dimension -> 20-bit z-value
 _ZORDER_FILES = 16
 
@@ -734,7 +717,8 @@ def zorder_events_dir(spark: SparkSession, sf_dir: str) -> str:
     single-column clustering can't give you. File-span contraction and
     footer-level pruning are pinned in tests/test_plans.py.
     """
-    if sf_dir not in _ZORDER_CACHE:
+
+    def build(out: str) -> str:
         events = load_table(spark, sf_dir, "events")
         lo_u, hi_u = events.agg(F.min("user_id"), F.max("user_id")).first()
         mod = _minute_of_day("ts")
@@ -745,24 +729,24 @@ def zorder_events_dir(spark: SparkSession, sf_dir: str) -> str:
         for i in range(_ZORDER_BITS):
             z = z + F.shiftleft(F.shiftright(xb, i).bitwiseAND(F.lit(1)), 2 * i)
             z = z + F.shiftleft(F.shiftright(yb, i).bitwiseAND(F.lit(1)), 2 * i + 1)
-        out = os.path.join(tempfile.mkdtemp(prefix="events_zorder_"), "events")
-        # INT96 (Spark's legacy parquet timestamp encoding) carries NO
-        # footer min/max stats, which would defeat the whole layout;
-        # TIMESTAMP_MICROS is the modern encoding every stats-based
-        # skipper understands.
-        prev = spark.conf.get("spark.sql.parquet.outputTimestampType", None)
-        # repartitionByRange picks split points from a RANDOM sample
-        # (default 100 rows/partition), so file boundaries wobble run
-        # to run. For a one-time layout write, pay for a dense sample:
-        # near-exact, stable split points (the sample is sort-key
-        # values only — 16 x 50k longs is a few MB on the driver even
-        # at cluster scale), which lets the pruning regression test
-        # hold a tight bar instead of absorbing sampling variance.
-        prev_sample = spark.conf.get(
-            "spark.sql.execution.rangeExchange.sampleSizePerPartition", None
-        )
-        spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        spark.conf.set("spark.sql.execution.rangeExchange.sampleSizePerPartition", "50000")
+        confs = {
+            # INT96 (Spark's legacy parquet timestamp encoding) carries NO
+            # footer min/max stats, which would defeat the whole layout;
+            # TIMESTAMP_MICROS is the modern encoding every stats-based
+            # skipper understands.
+            "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+            # repartitionByRange picks split points from a RANDOM sample
+            # (default 100 rows/partition), so file boundaries wobble run
+            # to run. For a one-time layout write, pay for a dense sample:
+            # near-exact, stable split points (the sample is sort-key
+            # values only — 16 x 50k longs is a few MB on the driver even
+            # at cluster scale), which lets the pruning regression test
+            # hold a tight bar instead of absorbing sampling variance.
+            "spark.sql.execution.rangeExchange.sampleSizePerPartition": "50000",
+        }
+        prev = {k: spark.conf.get(k, None) for k in confs}
+        for k, v in confs.items():
+            spark.conf.set(k, v)
         try:
             (
                 events.withColumn("_z", z)
@@ -773,16 +757,14 @@ def zorder_events_dir(spark: SparkSession, sf_dir: str) -> str:
                 .parquet(out)
             )
         finally:
-            if prev is not None:
-                spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
-            if prev_sample is not None:
-                spark.conf.set(
-                    "spark.sql.execution.rangeExchange.sampleSizePerPartition", prev_sample
-                )
-            else:
-                spark.conf.unset("spark.sql.execution.rangeExchange.sampleSizePerPartition")
-        _ZORDER_CACHE[sf_dir] = out
-    return _ZORDER_CACHE[sf_dir]
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+        return out
+
+    return derived(spark, "events_zorder", sf_dir, build)
 
 
 @register(
@@ -1124,14 +1106,14 @@ def op_cache_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materializes it, so instead each invocation releases the previous
     # one's cache — at most one entry stays live per session (repeated
     # registry sweeps would otherwise accumulate InMemoryRelations).
-    while _CACHE_REUSE_LIVE:
-        _CACHE_REUSE_LIVE.pop().unpersist()
-    enriched = (
+    state = session_state(spark)
+    if state.cached is not None:
+        state.cached.unpersist()
+    enriched = state.cached = (
         orders.join(customer, F.col("o_custkey") == F.col("c_custkey"))
         .select("o_orderkey", "o_totalprice", "o_orderpriority", "c_mktsegment")
         .cache()
     )
-    _CACHE_REUSE_LIVE.append(enriched)
     by_segment = enriched.groupBy(F.col("c_mktsegment").alias("g")).agg(
         F.count(F.lit(1)).alias("n_orders"), F.round(F.sum("o_totalprice"), 2).alias("revenue")
     ).select(F.concat(F.lit("segment:"), F.col("g")).alias("grp"), "n_orders", "revenue")
@@ -1269,32 +1251,20 @@ def op_timeseries_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STATS_TABLE_CACHE: dict[str, str] = {}
-
-
 def _analyzed_customer(spark: SparkSession, sf_dir: str) -> str:
-    """customer written as a catalog table and ANALYZEd (once per
-    process per sf): table + column statistics are what the cost-based
-    optimizer reads for join reordering, broadcast decisions, and
-    cardinality estimates."""
+    """customer written as a catalog table and ANALYZEd: table + column
+    statistics are what the cost-based optimizer reads for join
+    reordering, broadcast decisions, and cardinality estimates."""
     # Any non-identifier char in sf_dir would break the SQL table
     # name, so sanitize with a regex (not a char-by-char replace).
-    key = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir)
-    tbl = f"customer_stats{key}"
-    if sf_dir not in _STATS_TABLE_CACHE:
-        base = tempfile.mkdtemp(prefix="stats_")
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
-        (
-            load_table(spark, sf_dir, "customer")
-            .write.option("path", os.path.join(base, "customer"))
-            .mode("overwrite")
-            .saveAsTable(tbl)
-        )
-        spark.sql(
-            f"ANALYZE TABLE {tbl} COMPUTE STATISTICS FOR COLUMNS c_custkey, c_acctbal"
-        )
-        _STATS_TABLE_CACHE[sf_dir] = tbl
-    return _STATS_TABLE_CACHE[sf_dir]
+    tbl = "customer_stats" + re.sub(r"[^A-Za-z0-9_]", "_", sf_dir)
+
+    def build(d: str) -> str:
+        load_table(spark, sf_dir, "customer").write.option("path", d).mode("overwrite").saveAsTable(tbl)
+        spark.sql(f"ANALYZE TABLE {tbl} COMPUTE STATISTICS FOR COLUMNS c_custkey, c_acctbal")
+        return tbl
+
+    return derived(spark, "customer_stats", sf_dir, build)
 
 
 @register(

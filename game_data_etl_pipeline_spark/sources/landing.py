@@ -18,25 +18,23 @@ itself is driver-side I/O, exercised in tests/test_etl_golden.py):
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from game_data_etl_pipeline_spark.catalog import TABLES, register_views
+from game_data_etl_pipeline_spark.catalog import TABLES, derived, load_table, register_views
 from game_data_etl_pipeline_spark.etl import fixtures, transform
 from game_data_etl_pipeline_spark.registry import register
 
-_LANDING_CACHE: dict[str, str] = {}
 
+def _landing_dir(spark: SparkSession) -> str:
+    """The deterministic fixture envelopes, landed in a dir."""
 
-def _landing_dir() -> str:
-    """Write the deterministic fixture envelopes once per process."""
-    if "dir" not in _LANDING_CACHE:
-        d = tempfile.mkdtemp(prefix="landing_")
+    def build(d: str) -> str:
         fixtures.write_landing(d)
-        _LANDING_CACHE["dir"] = d
-    return _LANDING_CACHE["dir"]
+        return d
+
+    return derived(spark, "landing", "", build)
 
 
 @register(
@@ -58,7 +56,7 @@ def op_scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:  # noqa: ARG001
     unwrap {status, data:[...]}, project identity fields. The missing
     isPlayableCharacter key surfaces as NULL (schema-checked), exactly
     the case the reference's .get(..., default) guards."""
-    raw = transform.parse_envelope(spark, os.path.join(_landing_dir(), "agents.json"), "agents")
+    raw = transform.parse_envelope(spark, os.path.join(_landing_dir(spark), "agents.json"), "agents")
     return raw.select(
         "uuid",
         F.col("displayName").alias("name"),
@@ -145,11 +143,8 @@ def op_source_python_api(spark: SparkSession, sf_dir: str) -> DataFrame:  # noqa
     from game_data_etl_pipeline_spark.sources.api_source import GameApiDataSource
 
     spark.dataSource.register(GameApiDataSource)
-    df = spark.read.format("game_api").option("landing_dir", _landing_dir()).load()
+    df = spark.read.format("game_api").option("landing_dir", _landing_dir(spark)).load()
     return df.groupBy("endpoint").agg(F.count(F.lit(1)).alias("n_records"))
-
-
-_CSV_CACHE: dict[str, str] = {}
 
 
 @register(
@@ -169,23 +164,18 @@ def op_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     order keeps the contract in code. (CSV stays an interchange format
     only; every curated table is parquet.)
     """
-    key = f"{sf_dir}"
-    if key not in _CSV_CACHE:
-        d = os.path.join(tempfile.mkdtemp(prefix="csv_src_"), "events_csv")
-        from game_data_etl_pipeline_spark.catalog import load_table
 
+    def build(d: str) -> str:
         load_table(spark, sf_dir, "events").filter(F.col("event_id") < 1000).select(
             "event_id", "event_type", "value"
         ).write.mode("overwrite").option("header", "false").csv(d)
-        _CSV_CACHE[key] = d
+        return d
+
     return (
         spark.read.schema("event_id bigint, event_type string, value double")
-        .csv(_CSV_CACHE[key])
+        .csv(derived(spark, "events_csv", sf_dir, build))
         .select("event_id", "event_type", F.round("value", 4).alias("val"))
     )
-
-
-_ORC_CACHE: dict[str, str] = {}
 
 
 @register(
@@ -202,20 +192,15 @@ def op_scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     writes natively (Hive-ecosystem handoff); types, predicate
     pushdown and column pruning work exactly as with parquet —
     Catalyst treats both as v1/v2 FileScan sources."""
-    from game_data_etl_pipeline_spark.catalog import load_table
 
-    key = f"{sf_dir}"
-    if key not in _ORC_CACHE:
-        d = os.path.join(tempfile.mkdtemp(prefix="orc_src_"), "supplier_orc")
+    def build(d: str) -> str:
         load_table(spark, sf_dir, "supplier").write.mode("overwrite").orc(d)
-        _ORC_CACHE[key] = d
+        return d
+
     return (
-        spark.read.orc(_ORC_CACHE[key])
+        spark.read.orc(derived(spark, "supplier_orc", sf_dir, build))
         .select("s_suppkey", "s_name", "s_nationkey", F.round("s_acctbal", 2).alias("acctbal"))
     )
-
-
-_MERGE_CACHE: dict[str, str] = {}
 
 
 @register(
@@ -255,30 +240,25 @@ def op_scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     file; files lacking a pruned column short-circuit to NULL without
     I/O.
     """
-    from game_data_etl_pipeline_spark.catalog import load_table
 
-    key = f"{sf_dir}"
-    if key not in _MERGE_CACHE:
-        base = os.path.join(tempfile.mkdtemp(prefix="evolve_"), "events_evolved")
+    def build(d: str) -> str:
         events = load_table(spark, sf_dir, "events")
         events.filter(F.col("event_id") % 2 == 0).select(
             "event_id", "event_type"
-        ).write.mode("overwrite").parquet(os.path.join(base, "gen=1"))
+        ).write.mode("overwrite").parquet(os.path.join(d, "gen=1"))
         events.filter(F.col("event_id") % 2 == 1).select(
             "event_id", "event_type", "value"
-        ).write.mode("overwrite").parquet(os.path.join(base, "gen=2"))
-        _MERGE_CACHE[key] = base
+        ).write.mode("overwrite").parquet(os.path.join(d, "gen=2"))
+        return d
+
     merged = spark.read.option("mergeSchema", "true").option(
         "recursiveFileLookup", "true"
-    ).parquet(_MERGE_CACHE[key])
+    ).parquet(derived(spark, "events_evolved", sf_dir, build))
     return merged.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.count("value").alias("n_with_value"),
         F.round(F.sum("value"), 2).alias("total_value"),
     )
-
-
-_TEXT_CACHE: dict[str, str] = {}
 
 
 @register(
@@ -302,28 +282,24 @@ def op_scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     structured write should land it in parquet — this operator is the
     front door, not the steady state.
     """
-    if sf_dir not in _TEXT_CACHE:
-        from game_data_etl_pipeline_spark.catalog import load_table
 
-        out = os.path.join(tempfile.mkdtemp(prefix="textlines_"), "docs.txt")
+    def build(d: str) -> str:
         (
             load_table(spark, sf_dir, "documents")
             .filter(F.col("doc_id") < 500)
             .select(F.concat_ws("\t", F.col("doc_id").cast("string"), "text").alias("value"))
             .coalesce(1)
             .write.mode("overwrite")
-            .text(os.path.dirname(out))
+            .text(d)
         )
-        _TEXT_CACHE[sf_dir] = os.path.dirname(out)
-    lines = spark.read.text(_TEXT_CACHE[sf_dir])
+        return d
+
+    lines = spark.read.text(derived(spark, "textlines", sf_dir, build))
     tab = F.instr("value", "\t")
     return lines.select(
         F.substring("value", 1, tab - 1).cast("bigint").alias("doc_id"),
         F.expr("substring(value, instr(value, '\t') + 1)").alias("text"),
     ).withColumn("n_chars", F.length("text").cast("bigint"))
-
-
-_JSON_CORRUPT_CACHE: dict[str, str] = {}
 
 
 @register(
@@ -359,10 +335,8 @@ def op_scan_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     The fixture derives deterministically from ``documents`` (same
     mod-7 rule in the oracle), so the whole path is value-checked.
     """
-    if sf_dir not in _JSON_CORRUPT_CACHE:
-        from game_data_etl_pipeline_spark.catalog import load_table
 
-        out = os.path.join(tempfile.mkdtemp(prefix="json_corrupt_"), "docs_jsonl")
+    def build(d: str) -> str:
         (
             load_table(spark, sf_dir, "documents")
             .filter(F.col("doc_id") < 500)
@@ -376,14 +350,15 @@ def op_scan_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .coalesce(1)
             .write.mode("overwrite")
-            .text(out)
+            .text(d)
         )
-        _JSON_CORRUPT_CACHE[sf_dir] = out
+        return d
+
     parsed = (
         spark.read.schema("doc_id long, lang string, n_chars long, _corrupt string")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt")
-        .json(_JSON_CORRUPT_CACHE[sf_dir])
+        .json(derived(spark, "json_corrupt", sf_dir, build))
     )
     labeled = parsed.select(
         F.when(F.col("_corrupt").isNotNull(), F.lit("_corrupt")).otherwise(F.col("lang")).alias("lang"),
@@ -420,7 +395,7 @@ def op_source_python_api_stream(spark: SparkSession, sf_dir: str) -> DataFrame: 
     spark.dataSource.register(GameApiStreamDataSource)
     stream = (
         spark.readStream.format("game_api_stream")
-        .option("landing_dir", _landing_dir())
+        .option("landing_dir", _landing_dir(spark))
         .load()
     )
     agg = stream.groupBy("endpoint").agg(F.count(F.lit(1)).alias("n_records"))

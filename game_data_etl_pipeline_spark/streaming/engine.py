@@ -8,8 +8,8 @@ landing bucket (or swaps for Kafka). Helpers here:
   normalization (schema must be explicit for file-source streams);
 - ``run_to_memory``: drive a streaming DataFrame to completion with
   trigger(availableNow) into a memory sink and return the result as a
-  batch DataFrame. Memory sinks are test/driver plumbing — production
-  sinks are parquet/foreachBatch; the queries themselves don't change.
+  batch DataFrame, leaving no temp view behind. Memory sinks are test/
+  driver plumbing — production sinks are parquet/foreachBatch.
 
 Scale: every streaming query here uses watermarks so state eviction is
 bounded; nothing accumulates unbounded per-key state.
@@ -84,14 +84,13 @@ def run_to_memory(result: DataFrame, *, output_mode: str) -> DataFrame:
     and each store has fixed per-micro-batch overhead — so streaming
     partition count should track KEY CARDINALITY, not the batch
     default (measured 2× on the fixture: 32 partitions 1.5 s vs 4
-    partitions 0.8 s). Tunable via SPARK_GRAFT_STREAM_PARTITIONS; on a
-    real cluster with millions of keys, raise it.
+    partitions 0.8 s). It runs on 4; on a real cluster with millions
+    of keys, raise it.
     """
     spark = result.sparkSession
     name = f"stream_result_{next(_MEM_COUNTER)}"
-    stream_parts = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "4")
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", stream_parts)
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
         q = (
             result.writeStream.outputMode(output_mode)
@@ -107,4 +106,6 @@ def run_to_memory(result: DataFrame, *, output_mode: str) -> DataFrame:
                 q.stop()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)  # the resolved frame keeps the rows
+    return out

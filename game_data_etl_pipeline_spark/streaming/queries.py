@@ -28,6 +28,10 @@ and seen stores) follows one contract:
 - a body that reads its own store reads only segments ``seg <
   epoch_id`` (``earlier_segments``).
 
+Their stage, store and sink trees live under ``catalog.session_dir``
+(per session, keyed by op and fixture dir, removed at exit); a rerun
+in the same session rebuilds its tree from scratch.
+
 Scale: all state is watermark-bounded (windows evict on close, dedup
 state within the watermark); swap the file source for Kafka and the
 memory sink for parquet/foreachBatch and the queries run unchanged on
@@ -44,7 +48,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from game_data_etl_pipeline_spark.catalog import load_table
+from game_data_etl_pipeline_spark.catalog import load_table, session_dir
 from game_data_etl_pipeline_spark.llmdata.artifacts import (
     TOMB_IDS,
     TOMB_IDS_SQL,
@@ -59,20 +63,6 @@ from game_data_etl_pipeline_spark.registry import register
 from game_data_etl_pipeline_spark.streaming.engine import events_stream, run_to_memory
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"  # == DuckDB strftime '%f' microseconds
-
-
-def _session_workdir(spark: SparkSession, tag: str, sf_dir: str) -> str:
-    """Per-SESSION scratch root for the file-source/sink ops. Keyed by
-    the Spark application id as well as the fixture dir so two
-    concurrent sessions on the same fixture get disjoint stage/store/
-    sink trees instead of rmtree-ing each other's; within one session
-    a rerun rebuilds the tree from scratch."""
-    return os.path.join(
-        "/tmp",
-        f"spark_graft_{tag}",
-        spark.sparkContext.applicationId,
-        sf_dir.strip("/").replace("/", "_"),
-    )
 
 
 def _fmt(col, alias: str):
@@ -333,7 +323,7 @@ def op_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     a correction file updating keys < 100; merge-by-key keeps the
     latest version per event_id. The merge is anti-join + union —
     MERGE INTO emulated on plain parquet."""
-    work = _session_workdir(spark, "upsert", sf_dir)
+    work = session_dir(spark, "upsert", sf_dir)
     target = os.path.join(work, "target")
     events = load_table(spark, sf_dir, "events").select("event_id", F.round("value", 2).alias("value"))
     base = events.select("*", F.lit(1).alias("version"), F.lit(0).alias("batch_id"))
@@ -647,7 +637,7 @@ def op_stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     the checkpoint's file-sink log, so the guarantee holds end to end
     (source offsets AND sink manifest), not just in the engine.
     """
-    work = _session_workdir(spark, "ckpt", sf_dir)
+    work = session_dir(spark, "ckpt", sf_dir)
     shutil.rmtree(work, ignore_errors=True)
     stage = os.path.join(work, "incoming")
     ckpt = os.path.join(work, "checkpoint")
@@ -840,8 +830,6 @@ def op_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "leftOuter",
     )
     out = run_to_memory(joined, output_mode="append")
-    from game_data_etl_pipeline_spark.catalog import load_table
-
     ev = load_table(spark, sf_dir, "events")
     mt = ev.agg(
         F.least(
@@ -925,7 +913,7 @@ def op_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedups against ALL history with zero executor state.
     tests/test_streaming.py::test_incremental_dedup_store_grows pins
     the micro-batch mechanics (store growth, cross-batch drop)."""
-    work = _session_workdir(spark, "incdedup", sf_dir)
+    work = session_dir(spark, "incdedup", sf_dir)
     store = os.path.join(work, "store")
     admitted = os.path.join(work, "admitted")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1040,7 +1028,7 @@ def op_stream_incremental_fuzzy_dedup(spark: SparkSession, sf_dir: str) -> DataF
     only those candidate pairs back to their signatures. The known fixture near-dup
     pairs (8,12) and (0,50) straddle batches: the later member of each
     must be dropped, pinned in tests/test_streaming.py."""
-    work = _session_workdir(spark, "incfuzzy", sf_dir)
+    work = session_dir(spark, "incfuzzy", sf_dir)
     store = os.path.join(work, "store")
     bands = os.path.join(work, "store_bands")
     admitted = os.path.join(work, "admitted")
@@ -1170,7 +1158,7 @@ def stream_ann_store(
         eager=True
     )
 
-    work = _session_workdir(spark, tag, sf_dir)
+    work = session_dir(spark, tag, sf_dir)
     store = os.path.join(work, "postings")
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", (F.col("vec_id") % 3).cast("int").alias("batch_id")
@@ -1359,7 +1347,7 @@ def stream_lex_postings(spark: SparkSession, sf_dir: str, tag: str, op: str) -> 
     ``<work>/postings/seg=<epoch>/term_bucket=<b>``. Returns ``work``."""
     from game_data_etl_pipeline_spark.llmdata.lex_index import lex_postings
 
-    work = _session_workdir(spark, tag, sf_dir)
+    work = session_dir(spark, tag, sf_dir)
     store = os.path.join(work, "postings")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", (F.col("doc_id") % 3).cast("int").alias("batch_id")
@@ -1693,7 +1681,7 @@ def op_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=True
     )
 
-    work = _session_workdir(spark, "decontam", sf_dir)
+    work = session_dir(spark, "decontam", sf_dir)
     ledger_store = os.path.join(work, "ledger")
     train_docs = docs.filter(~is_bench).withColumn(
         "batch_id", F.pmod(F.xxhash64("doc_id"), F.lit(3)).cast("int")
@@ -1784,7 +1772,7 @@ def op_stream_bloom_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     is_bench = F.pmod(F.col("doc_id"), F.lit(3)) == 0
 
-    work = _session_workdir(spark, "bloomupsert", sf_dir)
+    work = session_dir(spark, "bloomupsert", sf_dir)
     word_deltas = os.path.join(work, "word_deltas")
     pair_store = os.path.join(work, "pairs")
     bench = docs.filter(is_bench).withColumn(

@@ -77,14 +77,10 @@ STREAM_JOBS = {
 @pytest.mark.parametrize("op", sorted(STREAM_JOBS))
 def test_streamed_op_jobs(spark, sf_dir, op):
     from game_data_etl_pipeline_spark.llmdata.ann_index import read_ann_index
-    from game_data_etl_pipeline_spark.llmdata.lex_index import (
-        build_lex_index,
-        resolve_term_buckets,
-    )
+    from game_data_etl_pipeline_spark.llmdata.lex_index import build_lex_index
 
     read_ann_index(spark, sf_dir)
     build_lex_index(spark, sf_dir)
-    resolve_term_buckets(spark, ("vector", "stream", "spark"))  # bm25_from_index's default
     run = lambda spark, sf_dir: SPECS[op].fn(spark, sf_dir).collect()  # noqa: E731
     assert _jobs(spark, run, sf_dir) == STREAM_JOBS[op]
 
@@ -162,7 +158,6 @@ def test_lifecycle_step_jobs(spark, sf_dir, lifecycle_roots, monkeypatch, step):
 
     for var, path in lifecycle_roots.items():
         monkeypatch.setenv(var, path)
-    lex_index.resolve_term_buckets(spark, ("vector", "stream", "spark"))
     if step == "op_lex_index_delete_compact":
         fn = lambda spark, sf_dir: lex_index.op_lex_index_delete_compact(spark, sf_dir).collect()  # noqa: E731
     else:

@@ -1,11 +1,16 @@
 """Session configuration, and the work a session does once instead of
 once per call: the local core count read from SPARK_GRAFT_CPUS, the
-codegen cache that holds a serving working set, and the schema inferred
-once per immutable parquet input (``catalog.read_parquet``)."""
+codegen cache that holds a serving working set, the schema inferred
+once per immutable parquet input (``catalog.read_parquet``), and the
+derived inputs built once per session under its scratch root, which a
+restarted session builds again and the process removes at exit."""
 
 from __future__ import annotations
 
+import json
 import os
+import subprocess
+import sys
 
 import pytest
 
@@ -97,10 +102,79 @@ def test_published_ann_tree_reads_identically(spark, sf_dir):
 
 def test_served_lexer_rebuilds_without_jobs(spark, sf_dir):
     """A second build of the served batch lexer runs no Spark job: the
-    published lexical tree's schemas, the index cache hit and the term
-    buckets are all resolved by the first."""
+    published lexical tree's schemas and the index cache hit are
+    resolved by the first, and the term buckets fold to literals."""
     from game_data_etl_pipeline_spark.llmdata.retrieval import lex_ranked_batch_served
 
     lex_ranked_batch_served(spark, sf_dir)
     jobs, _ = _jobs_and_result(spark, lambda: lex_ranked_batch_served(spark, sf_dir))
     assert jobs == 0
+
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# one op per derived input (catalog.derived), plus op_cache_reuse's
+# per-session cached frame
+DERIVED_INPUT_OPS = (
+    "op_sink_partition_prune",
+    "op_join_bucketed",
+    "op_join_skew_aqe",
+    "op_sink_compaction",
+    "op_sink_zorder",
+    "op_catalog_stats",
+    "op_cache_reuse",
+    "op_scan_json",
+    "op_scan_csv",
+    "op_scan_orc",
+    "op_scan_merge_schema",
+    "op_scan_text",
+    "op_scan_json_corrupt",
+)
+
+_RESTART = """
+import json, sys
+from game_data_etl_pipeline_spark import registry
+from game_data_etl_pipeline_spark.session import get_spark
+
+ops, sf_dir = sys.argv[1].split(","), sys.argv[2]
+specs = registry.all_specs()
+failures = []
+for session in (1, 2):
+    spark = get_spark("restart")
+    for op in ops:
+        try:
+            for step in specs[op].setup:
+                step(spark, sf_dir)
+            specs[op].fn(spark, sf_dir).collect()
+        except Exception as e:
+            failures.append(f"session {session}: {op}: {type(e).__name__}: {str(e).splitlines()[0][:200]}")
+    spark.stop()
+print(json.dumps(failures))
+"""
+
+
+def test_ops_survive_session_restart(tmp_path, sf_dir):
+    """The derived-input ops run in one session, then in a second one
+    started after the first is stopped, in a process of their own with
+    its own TMPDIR: every call succeeds, and the process leaves that
+    TMPDIR empty."""
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    env = {
+        **os.environ,
+        "TMPDIR": str(tmp),
+        "SPARK_GRAFT_CPUS": "2",
+        "SPARK_GRAFT_DRIVER_MEM": "1g",
+        "PYTHONPATH": os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p),
+    }
+    proc = subprocess.run(
+        [sys.executable, "-c", _RESTART, ",".join(DERIVED_INPUT_OPS), sf_dir],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert json.loads(proc.stdout.strip().splitlines()[-1]) == []
+    assert os.listdir(tmp) == []

@@ -22,9 +22,9 @@ def test_incremental_dedup_store_grows(spark, sf_dir):
     rows = out.collect()
 
     # the persistent store holds exactly the admitted fingerprints
-    from game_data_etl_pipeline_spark.streaming.queries import _session_workdir
+    from game_data_etl_pipeline_spark.catalog import session_dir
 
-    work = _session_workdir(spark, "incdedup", sf_dir)
+    work = session_dir(spark, "incdedup", sf_dir)
     store = spark.read.parquet(os.path.join(work, "store"))
     assert store.count() == len(rows)
     assert {r.fingerprint for r in store.collect()} == {r.fingerprint for r in rows}
@@ -100,15 +100,13 @@ def test_index_ingest_batches_partition_store(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from game_data_etl_pipeline_spark.streaming.queries import (
-        _session_workdir,
-        op_stream_index_ingest,
-    )
+    from game_data_etl_pipeline_spark.catalog import session_dir
+    from game_data_etl_pipeline_spark.streaming.queries import op_stream_index_ingest
 
     out = op_stream_index_ingest(spark, sf_dir).collect()
     assert len(out) == 1 and out[0].full_coverage and out[0].encode_consistent
 
-    store = os.path.join(_session_workdir(spark, "idxingest", sf_dir), "postings")
+    store = os.path.join(session_dir(spark, "idxingest", sf_dir), "postings")
     rows = spark.read.parquet(store).select("vec_id", "batch_id").collect()
     for r in rows:
         assert r.batch_id == r.vec_id % 3, (r.vec_id, r.batch_id)
@@ -174,11 +172,11 @@ def test_streamed_compact_tomb_meta_handshake(spark, sf_dir):
         purge_ids_digest,
         read_purge_ledger,
     )
-    from game_data_etl_pipeline_spark.streaming.queries import _session_workdir
+    from game_data_etl_pipeline_spark.catalog import session_dir
 
     SPECS["op_stream_lex_compact_serve"].fn(spark, sf_dir).count()
     comp = os.path.join(
-        _session_workdir(spark, "lexcompact", sf_dir), "compacted"
+        session_dir(spark, "lexcompact", sf_dir), "compacted"
     )
     # consolidation: the ledger IS the handshake marker; the old
     # duplicate id-list marker must not come back
@@ -221,7 +219,7 @@ def test_streamed_compact_tomb_meta_handshake(spark, sf_dir):
 
     SPECS["op_stream_ann_serve_compacted"].fn(spark, sf_dir).count()
     ann_comp = os.path.join(
-        _session_workdir(spark, "annservecomp", sf_dir), "compacted"
+        session_dir(spark, "annservecomp", sf_dir), "compacted"
     )
     assert not os.path.exists(
         os.path.join(ann_comp, "_stream_compact_done.json")
@@ -256,12 +254,12 @@ def test_streamed_purge_ledger_referee_tamper(spark, sf_dir):
         purge_ledger_referee,
         read_purge_ledger,
     )
-    from game_data_etl_pipeline_spark.streaming.queries import _session_workdir
+    from game_data_etl_pipeline_spark.catalog import session_dir
 
     out = SPECS["op_stream_lex_compact_serve"].fn(spark, sf_dir)
     assert {r[0] for r in out.select("purge_ledger_consistent").distinct().collect()} == {True}
 
-    work = _session_workdir(spark, "lexcompact", sf_dir)
+    work = session_dir(spark, "lexcompact", sf_dir)
     comp = os.path.join(work, "compacted")
     before = spark.read.parquet(os.path.join(work, "postings"))
     after = spark.read.parquet(os.path.join(comp, "postings"))
@@ -309,7 +307,7 @@ def test_streamed_compact_publish_is_atomic(spark, sf_dir, monkeypatch):
 
     from game_data_etl_pipeline_spark.llmdata import artifacts
     from game_data_etl_pipeline_spark.llmdata.artifacts import PURGE_LEDGER
-    from game_data_etl_pipeline_spark.streaming.queries import _session_workdir
+    from game_data_etl_pipeline_spark.catalog import session_dir
 
     def boom(*a, **k):
         raise OSError("injected crash before the purge-ledger write")
@@ -321,14 +319,14 @@ def test_streamed_compact_publish_is_atomic(spark, sf_dir, monkeypatch):
     # rewrite and before the evidence lands
     with pytest.raises(OSError, match="injected crash"):
         SPECS["op_stream_lex_compact_serve"].fn(spark, sf_dir).count()
-    lex_work = _session_workdir(spark, "lexcompact", sf_dir)
+    lex_work = session_dir(spark, "lexcompact", sf_dir)
     assert not os.path.exists(os.path.join(lex_work, "compacted"))
     assert not glob.glob(os.path.join(lex_work, "staging_*"))
 
     # ann: the same injection point
     with pytest.raises(OSError, match="injected crash"):
         SPECS["op_stream_ann_serve_compacted"].fn(spark, sf_dir).count()
-    ann_work = _session_workdir(spark, "annservecomp", sf_dir)
+    ann_work = session_dir(spark, "annservecomp", sf_dir)
     assert not os.path.exists(os.path.join(ann_work, "compacted"))
     assert not glob.glob(os.path.join(ann_work, "staging_*"))
 
@@ -353,7 +351,7 @@ def test_replayed_epoch_leaves_single_run_end_state(spark, sf_dir, monkeypatch):
 
     from pyspark.sql.streaming.readwriter import DataStreamWriter
 
-    from game_data_etl_pipeline_spark.streaming.queries import _session_workdir
+    from game_data_etl_pipeline_spark.catalog import session_dir
 
     ops = (
         ("op_stream_bloom_upsert", "bloomupsert"),
@@ -368,7 +366,7 @@ def test_replayed_epoch_leaves_single_run_end_state(spark, sf_dir, monkeypatch):
 
     def end_state(op: str, tag: str):
         rows = sorted(tuple(r) for r in SPECS[op].fn(spark, sf_dir).collect())
-        counters = os.path.join(_session_workdir(spark, tag, sf_dir), "counters.json")
+        counters = os.path.join(session_dir(spark, tag, sf_dir), "counters.json")
         if not os.path.exists(counters):
             return rows, None
         with open(counters) as f:
@@ -389,3 +387,18 @@ def test_replayed_epoch_leaves_single_run_end_state(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(DataStreamWriter, "foreachBatch", replaying)
     for op, tag in ops:
         assert end_state(op, tag) == clean[op], f"{op}: replayed epochs changed the end state"
+
+
+def test_streamed_ops_leave_no_temp_views(spark, sf_dir):
+    """A memory-sink result holds its rows in driver memory for as long
+    as a view names it: repeated calls must not add temp views."""
+    op = SPECS["op_stream_tumbling"].fn
+
+    def temp_views() -> int:
+        return sum(t.isTemporary for t in spark.catalog.listTables())
+
+    op(spark, sf_dir).collect()
+    before = temp_views()
+    for _ in range(3):
+        assert op(spark, sf_dir).count() > 0
+    assert temp_views() == before
