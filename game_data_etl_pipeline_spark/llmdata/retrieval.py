@@ -51,7 +51,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from game_data_etl_pipeline_spark.catalog import load_table
+from game_data_etl_pipeline_spark.catalog import load_table, read_parquet
 from game_data_etl_pipeline_spark.llmdata import text as _text
 from game_data_etl_pipeline_spark.llmdata.ann_index import build_ann_index, read_ann_index
 from game_data_etl_pipeline_spark.llmdata.artifacts import TreeFamily, ensure_tree
@@ -1474,11 +1474,11 @@ def op_sim_late_interaction_served(spark: SparkSession, sf_dir: str) -> DataFram
     # the query terms' buckets fold to literals: a pruned scan, no job
     buckets = [_late_bucket(F.lit(t)) for t in sorted({t for _i, q in LATE_QUERIES for t in q.split(" ")})]
     du = (
-        spark.read.parquet(os.path.join(path, "unigrams"))
+        read_parquet(spark, os.path.join(path, "unigrams"))
         .filter(F.col("b").isin(*buckets))
         .select("doc_id", "dterm")
     )
-    dk = spark.read.parquet(os.path.join(path, "ctx_postings")).select(
+    dk = read_parquet(spark, os.path.join(path, "ctx_postings")).select(
         "doc_id", "dkey"
     )
     # doc-side vectors come from the artifact; the 9 query keys may be
@@ -1495,6 +1495,6 @@ def op_sim_late_interaction_served(spark: SparkSession, sf_dir: str) -> DataFram
         .select("key", token_vec_expr(F.col("key")).alias("tv"))
         .select("key", "tv", _norm(F.col("tv")).alias("tn"))
     )
-    vec = spark.read.parquet(os.path.join(path, "vocab")).unionByName(qvec).dropDuplicates(["key"])
+    vec = read_parquet(spark, os.path.join(path, "vocab")).unionByName(qvec).dropDuplicates(["key"])
     short = late_shortlist(du, qt)
     return late_maxsim_rank(dk, short, qk, vec)

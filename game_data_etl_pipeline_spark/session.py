@@ -21,6 +21,12 @@ One shared session per process; every knob here is a scale decision:
   working set misses on every access and every pass compiles as much as
   the first. The working set of registered queries must fit. The
   setting is static: a session built elsewhere keeps its own.
+- generated class names without the whole-stage codegen id
+  (``spark.sql.codegen.useIdInClassName=false``): the cache is keyed on
+  the generated source, and AQE numbers a query's stages in the order
+  they are planned, which differs between two calls of one op. With
+  the id in the class name the same stage compiles again under its new
+  number, so a warm call still missed the cache.
 """
 
 from __future__ import annotations
@@ -55,6 +61,7 @@ def get_spark(app_name: str = DEFAULT_APP_NAME, *, extra_conf: dict | None = Non
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

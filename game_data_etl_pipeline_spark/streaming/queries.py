@@ -1660,8 +1660,10 @@ def op_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed."""
     from game_data_etl_pipeline_spark.llmdata.dedup import (
         _shingles,
+        benchmark_pairs,
         bloom_candidates,
         bloom_words,
+        decontam_ledger,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1671,12 +1673,7 @@ def op_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pass materializes the (b_id, g) pair set, and the bitmap words
     # fold from its distinct shingles — the bitmap derives from the
     # checkpointed pairs instead of re-shingling the bench docs
-    bench_pairs = (
-        _shingles(docs.filter(is_bench))
-        .select(F.col("doc_id").alias("b_id"), "g")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    bench_pairs = benchmark_pairs(docs.filter(is_bench)).localCheckpoint(eager=True)
     words = bloom_words(bench_pairs.select("g").distinct()).localCheckpoint(
         eager=True
     )
@@ -1706,16 +1703,7 @@ def op_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         candidates = bloom_candidates(sh, words).observe(
             obs_cand, F.count(F.lit(1)).alias("n")
         )
-        write_epoch(
-            candidates.join(F.broadcast(bench_pairs), "g")
-            .groupBy("doc_id")
-            .agg(
-                F.countDistinct("g").alias("n_hit_shingles"),
-                F.countDistinct("b_id").alias("n_bench_docs"),
-            ),
-            ledger_store,
-            epoch_id,
-        )
+        write_epoch(decontam_ledger(candidates, bench_pairs), ledger_store, epoch_id)
         batch_counters[epoch_id] = (obs_probed.get["n"], obs_cand.get["n"])
 
     replay_microbatches(spark, train_docs, work, screen, op="op_stream_decontaminate")
@@ -1762,10 +1750,12 @@ def op_stream_bloom_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     is ever re-read."""
     from game_data_etl_pipeline_spark.llmdata.dedup import (
         _shingles,
+        benchmark_pairs,
         bit_or_fold,
         bloom_candidates,
         bloom_fill_audit,
         bloom_words,
+        decontam_ledger,
         words_bitmatch_audit,
     )
 
@@ -1784,13 +1774,7 @@ def op_stream_bloom_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         # its words-table delta folds from that persisted segment, so
         # the delta is a function of the durable artifact and the
         # shingle set needs no checkpoint
-        write_epoch(
-            _shingles(batch_df.select("doc_id", "text"))
-            .select(F.col("doc_id").alias("b_id"), "g")
-            .distinct(),
-            pair_store,
-            epoch_id,
-        )
+        write_epoch(benchmark_pairs(batch_df.select("doc_id", "text")), pair_store, epoch_id)
         seg = spark.read.parquet(os.path.join(pair_store, f"seg={epoch_id}"))
         write_epoch(bloom_words(seg.select("g").distinct()), word_deltas, epoch_id)
 
@@ -1803,15 +1787,7 @@ def op_stream_bloom_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the screen, from the stream-accumulated filter
     train = _shingles(docs.filter(~is_bench)).distinct()
-    candidates = bloom_candidates(train, words)
-    ledger = (
-        candidates.join(F.broadcast(bench_pairs), "g")
-        .groupBy("doc_id")
-        .agg(
-            F.countDistinct("g").alias("n_hit_shingles"),
-            F.countDistinct("b_id").alias("n_bench_docs"),
-        )
-    )
+    ledger = decontam_ledger(bloom_candidates(train, words), bench_pairs)
 
     # referee: stream-folded filter == from-scratch rebuild (the one
     # bench-side re-scan, spent only in this verification gate) — the

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import tempfile
-
 from game_data_etl_pipeline_spark.etl import fixtures
 from game_data_etl_pipeline_spark.sources.api_source import GameApiDataSource
 
@@ -16,8 +14,8 @@ def _read(spark, landing_dir, **opts):
     return r.load()
 
 
-def test_reads_all_endpoints_in_parallel_partitions(spark):
-    d = tempfile.mkdtemp(prefix="api_src_")
+def test_reads_all_endpoints_in_parallel_partitions(spark, tmp_path):
+    d = str(tmp_path)
     fixtures.write_landing(d)
     df = _read(spark, d)
     # one input partition per endpoint
@@ -26,10 +24,10 @@ def test_reads_all_endpoints_in_parallel_partitions(spark):
     assert counts == {"agents": 5, "weapons": 3, "maps": 2, "gamemodes": 2}
 
 
-def test_broken_endpoint_degrades_to_empty_not_failure(spark):
+def test_broken_endpoint_degrades_to_empty_not_failure(spark, tmp_path):
     """Reference parity: non-200 envelope -> [] for that endpoint, scan
     still succeeds (reference etl/pipeline.py:103-105)."""
-    d = tempfile.mkdtemp(prefix="api_src_broken_")
+    d = str(tmp_path)
     fixtures.write_landing(d, broken={"weapons"})
     df = _read(spark, d)
     counts = {r["endpoint"]: r["n"] for r in df.groupBy("endpoint").count().withColumnRenamed("count", "n").collect()}
@@ -37,25 +35,25 @@ def test_broken_endpoint_degrades_to_empty_not_failure(spark):
     assert counts["agents"] == 5
 
 
-def test_missing_file_degrades_to_empty(spark):
-    d = tempfile.mkdtemp(prefix="api_src_missing_")
+def test_missing_file_degrades_to_empty(spark, tmp_path):
+    d = str(tmp_path)
     fixtures.write_landing(d, endpoints=["agents"])
     df = _read(spark, d)  # 3 of 4 endpoint files absent
     assert df.count() == 5
 
 
-def test_endpoint_subset_option(spark):
-    d = tempfile.mkdtemp(prefix="api_src_subset_")
+def test_endpoint_subset_option(spark, tmp_path):
+    d = str(tmp_path)
     fixtures.write_landing(d)
     df = _read(spark, d, endpoints="maps,gamemodes")
     assert df.rdd.getNumPartitions() == 2
     assert df.count() == 4
 
 
-def test_stream_reader_replays_one_endpoint_per_batch():
+def test_stream_reader_replays_one_endpoint_per_batch(tmp_path):
     """Offsets advance one endpoint per read(); a drained reader
     returns its start offset unchanged (the stop signal)."""
-    d = tempfile.mkdtemp(prefix="api_src_stream_")
+    d = str(tmp_path)
     fixtures.write_landing(d)
     from game_data_etl_pipeline_spark.sources.api_source import GameApiStreamReader
 
@@ -74,10 +72,10 @@ def test_stream_reader_replays_one_endpoint_per_batch():
     assert [sorted(s) for s in seen] == [["agents"], ["weapons"], ["maps"], ["gamemodes"]]
 
 
-def test_stream_reader_recovery_replays_offset_range():
+def test_stream_reader_recovery_replays_offset_range(tmp_path):
     """readBetweenOffsets reproduces exactly the records of the
     skipped range — the checkpoint-recovery contract."""
-    d = tempfile.mkdtemp(prefix="api_src_recov_")
+    d = str(tmp_path)
     fixtures.write_landing(d)
     from game_data_etl_pipeline_spark.sources.api_source import GameApiStreamReader
 
@@ -88,8 +86,8 @@ def test_stream_reader_recovery_replays_offset_range():
     assert len(replay) == 5  # 3 weapons + 2 maps
 
 
-def test_stream_reader_broken_endpoint_empty_batch():
-    d = tempfile.mkdtemp(prefix="api_src_sbroken_")
+def test_stream_reader_broken_endpoint_empty_batch(tmp_path):
+    d = str(tmp_path)
     fixtures.write_landing(d, broken={"weapons"})
     from game_data_etl_pipeline_spark.sources.api_source import GameApiStreamReader
 

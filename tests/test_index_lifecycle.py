@@ -67,8 +67,8 @@ STREAM_JOBS = {
     "op_stream_incremental_fuzzy_dedup": 46,
     "op_stream_foreachbatch_upsert": 11,
     "op_stream_ann_serve": 55,
-    "op_stream_decontaminate": 28,
-    "op_stream_bloom_upsert": 43,
+    "op_stream_decontaminate": 25,
+    "op_stream_bloom_upsert": 42,
     "op_stream_lex_compact_serve": 45,
     "op_stream_ann_serve_compacted": 67,
 }
@@ -123,9 +123,9 @@ LIFECYCLE_JOBS = {
     "ensure_lex_e2e_tree": (11, None),
     "op_lex_index_delete_compact": (17, None),
     "ensure_bloom_registry": (26, None),
-    "ensure_bloom_refresh_demo": (48, 6),
-    "ensure_bloom_retire_demo": (41, 6),
-    "ensure_bloom_lifecycle_demo": (70, 6),
+    "ensure_bloom_refresh_demo": (48, 4),
+    "ensure_bloom_retire_demo": (41, 4),
+    "ensure_bloom_lifecycle_demo": (70, 4),
 }
 
 _ROOT_ENVS = {

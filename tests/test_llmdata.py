@@ -1671,29 +1671,6 @@ def test_bloom_saturation_guard_fails_loudly(spark, sf_dir):
     assert 0 < fill <= BLOOM_FILL_MAX
 
 
-def test_bloom_upsert_tree_idempotent_and_build_count(spark, sf_dir, tmp_path, monkeypatch):
-    """ensure_bloom_upsert_tree must be build-once: a second call in
-    the same process returns the published tree without rewriting it
-    (marker mtime unchanged), and the full-filter artifact it is
-    refereed against is not rebuilt either (the _BLOOM_BUILD_COUNT
-    discipline)."""
-    import os as _os
-
-    from game_data_etl_pipeline_spark.llmdata import artifacts
-    from game_data_etl_pipeline_spark.llmdata import dedup as dd
-
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR_BLOOM", str(tmp_path / "bloom"))
-    p1 = dd.ensure_bloom_upsert_tree(spark, sf_dir)
-    marker = _os.path.join(p1, "upsert_done.json")
-    m1 = _os.path.getmtime(marker)
-    p2 = dd.ensure_bloom_upsert_tree(spark, sf_dir)
-    assert p1 == p2 and _os.path.getmtime(marker) == m1
-    dd.build_bloom_index(spark, sf_dir)
-    before = artifacts.BUILD_COUNT
-    SPECS["op_bloom_index_upsert"].fn(spark, sf_dir).collect()
-    assert artifacts.BUILD_COUNT == before, "upsert op rebuilt the full filter"
-
-
 # (property-based tests live in test_llmdata_properties.py, guarded by
 # pytest.importorskip so a missing hypothesis cannot fail this module's
 # collection — round-11 advice)

@@ -39,11 +39,14 @@ def _jobs_and_result(spark, fn):
 
 
 def test_codegen_cache_holds_serving_working_set(spark, sf_dir):
-    """Two index-serving ops called three times in a row: after the
-    first round, their generated classes come from the codegen cache.
+    """Two index-serving ops called five times in a row: after the
+    first round, every generated class comes from the codegen cache.
     At Spark's default cache size of 100 classes the two ops' working
     set (137 classes compiled by the first round on sf0.001) is evicted
-    as it is cycled, and the later rounds compile 113 and 110."""
+    as it is cycled, and the later rounds compile 113 and 110. With the
+    whole-stage codegen id in the class names, a stage that AQE numbers
+    differently on a later call compiles again, and so does a ledger
+    whose countDistincts expand in a per-call order."""
     from game_data_etl_pipeline_spark import registry
     from game_data_etl_pipeline_spark.plans.introspect import codegen_compilations
 
@@ -53,12 +56,12 @@ def test_codegen_cache_holds_serving_working_set(spark, sf_dir):
         for step in spec.setup:
             step(spark, sf_dir)
     rounds = []
-    for _ in range(3):
+    for _ in range(5):
         n0 = codegen_compilations(spark)
         for spec in ops:
             spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         rounds.append(codegen_compilations(spark) - n0)
-    assert max(rounds[1:]) <= 30, f"classes compiled per round: {rounds}"
+    assert rounds[1:] == [0, 0, 0, 0], f"classes compiled per round: {rounds}"
 
 
 def test_second_load_table_runs_no_job(spark, sf_dir):
@@ -101,14 +104,19 @@ def test_published_ann_tree_reads_identically(spark, sf_dir):
 
 
 def test_served_lexer_rebuilds_without_jobs(spark, sf_dir):
-    """A second build of the served batch lexer runs no Spark job: the
-    published lexical tree's schemas and the index cache hit are
-    resolved by the first, and the term buckets fold to literals."""
-    from game_data_etl_pipeline_spark.llmdata.retrieval import lex_ranked_batch_served
+    """A second build of a served lexer frame (the batch lexer, the
+    late-interaction serve) runs no Spark job: the published tree's
+    schemas and the index cache hit are resolved by the first, and the
+    term buckets fold to literals."""
+    from game_data_etl_pipeline_spark.llmdata.retrieval import (
+        lex_ranked_batch_served,
+        op_sim_late_interaction_served,
+    )
 
-    lex_ranked_batch_served(spark, sf_dir)
-    jobs, _ = _jobs_and_result(spark, lambda: lex_ranked_batch_served(spark, sf_dir))
-    assert jobs == 0
+    for build in (lex_ranked_batch_served, op_sim_late_interaction_served):
+        build(spark, sf_dir)
+        jobs, _ = _jobs_and_result(spark, lambda: build(spark, sf_dir))
+        assert jobs == 0, build.__name__
 
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
