@@ -53,16 +53,15 @@ from game_data_etl_pipeline_spark.catalog import load_table, read_parquet
 from game_data_etl_pipeline_spark.llmdata.artifacts import (
     TOMB_IDS,
     TOMB_IDS_SQL,
-    TOMB_MOD,
     Postings,
     TreeFamily,
-    compact_postings,
+    ensure_compacted_tree,
     ensure_tree,
-    purge_ledger_current,
     purge_ledger_referee,
     segments_merged,
-    tomb_ids_current,
     tomb_residue,
+    upsert_segments,
+    write_segmented,
 )
 from game_data_etl_pipeline_spark.llmdata.similarity import (
     IVFPQ_PROBES,
@@ -78,7 +77,7 @@ from game_data_etl_pipeline_spark.llmdata.similarity import (
 from game_data_etl_pipeline_spark.registry import register
 
 # layout version of every ANN tree: bump on any layout change
-INDEX_VERSION = 1
+INDEX_VERSION = 2
 
 ANN = TreeFamily("SPARK_GRAFT_INDEX_DIR", "ann_index", "embeddings.parquet", INDEX_VERSION)
 
@@ -136,17 +135,23 @@ def read_ann_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(coarse, codebooks, postings) for ``sf_dir``, building the
-    artifact first if absent. The postings' cent_id comes back as a
-    PARTITION column (directory-derived int) — cast to long so joins
-    against the coarse centroid ids stay cast-free. The published tree
-    is immutable, so each part's schema is inferred once per session."""
+    artifact first if absent. The published tree is immutable, so each
+    part's schema is inferred once per session."""
     path = build_ann_index(spark, sf_dir)
     coarse = read_parquet(spark, os.path.join(path, "coarse"))
     books = read_parquet(spark, os.path.join(path, "codebooks"))
-    postings = read_parquet(spark, os.path.join(path, "postings")).select(
-        "vec_id", "codes", F.col("cent_id").cast("long").alias("cent_id")
+    return coarse, books, read_postings(spark, path)
+
+
+def read_postings(spark: SparkSession, tree: str, *extra: str) -> DataFrame:
+    """(vec_id, codes, cent_id, *extra) of the published ANN tree at
+    ``tree``, read from its ``postings/`` through
+    ``catalog.read_parquet``. cent_id comes back as a PARTITION column
+    (directory-derived int) — cast to long so joins against the coarse
+    centroid ids stay cast-free."""
+    return read_parquet(spark, os.path.join(tree, "postings")).select(
+        "vec_id", "codes", F.col("cent_id").cast("long").alias("cent_id"), *extra
     )
-    return coarse, books, postings
 
 
 def serve_with_adc_referee(
@@ -158,21 +163,16 @@ def serve_with_adc_referee(
     books: DataFrame,
     out_col: str = "adc_bitmatch_vs_main",
 ) -> tuple[DataFrame, DataFrame]:
-    """The ONE survivor-serve + ADC-bit-equality-referee body every
-    frozen-structure replay gate shares (op_sim_ivfpq_serve_compacted,
-    op_stream_ann_serve / _compacted, op_sim_lifecycle_e2e):
-    run the verbatim probe -> ADC -> shortlist -> exact-rerank chain
-    over ``emb_surv``'s candidate world from ``comp_postings``, and
-    referee every probed-cell ADC score from that store against the
-    same chain over ``yardstick_postings`` — count-equal both
-    directions, every (query_id, vec_id) joined, every score
-    IEEE-bit-equal. Returns (served, one-row audit frame named
-    ``out_col``); callers append their extra audit literals and
-    crossJoin. ``emb`` supplies the query slot (vec_id < 4), and the
-    query-slot exclusion is applied to BOTH postings frames HERE —
-    symmetrically, so a caller passing either frame filtered or
-    unfiltered gets the same referee; tombstone/survivor filters
-    compose by pre-filtering the frames."""
+    """The one survivor-serve + ADC-bit-equality-referee body of every
+    frozen-structure replay gate: run the verbatim probe -> ADC ->
+    shortlist -> exact-rerank chain over ``emb_surv``'s candidate world
+    from ``comp_postings``, and referee every probed-cell ADC score
+    from that store against the same chain over ``yardstick_postings``
+    — count-equal both directions, every (query_id, vec_id) joined,
+    every score IEEE-bit-equal. Returns (served, one-row audit frame
+    named ``out_col``). ``emb`` supplies the query slot (vec_id < 4),
+    whose exclusion is applied to BOTH postings frames here, so
+    tombstone/survivor filters compose by pre-filtering the frames."""
     from game_data_etl_pipeline_spark.llmdata.audits import bitmatch_audit
 
     comp_cands = comp_postings.filter(F.col("vec_id") >= 4)
@@ -324,48 +324,21 @@ def op_sim_ivfpq_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ensure_upsert_tree(spark: SparkSession, sf_dir: str) -> str:
-    """Build (idempotently) the upsert demo tree: base postings
-    (vec_id < floor(0.8 * max)) seeded from the main artifact, then
-    the delta encoded against the PERSISTED trained structure — no
-    Lloyd, no pq_train, O(delta) only — appended partition-aligned
-    inside the same staged tree, so a crash between the two writes
-    publishes nothing. The published tree has exactly TWO segments per
-    non-empty cell (one per write) — the segment shape
+    """Build (idempotently) the upsert tree: every corpus vector
+    encoded once (``ann_postings``) against the main build's coarse
+    centroids and codebooks, which an upsert never retrains, and
+    written in one partitioned write as
+    ``postings/seg=<s>/cent_id=<c>``. Segment 0 is the base
+    (vec_id < max * 4 div 5) and segment 1 the delta
+    (``upsert_segments``), the layout a streamed store's epochs give,
+    so each non-empty cell holds one file per segment: the shape
     op_sim_index_compact merges."""
 
     def build(staging: str) -> None:
-        main_path = build_ann_index(spark, sf_dir)
-        coarse = spark.read.parquet(os.path.join(main_path, "coarse"))
-        books = spark.read.parquet(os.path.join(main_path, "codebooks"))
+        coarse, books, _ = read_ann_index(spark, sf_dir)
         emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        split = emb.agg(
-            F.expr("max(vec_id) * 4 div 5").cast("long").alias("split")
-        ).localCheckpoint(eager=True)
-        main_postings = spark.read.parquet(os.path.join(main_path, "postings")).select(
-            "vec_id", "codes", F.col("cent_id").cast("long").alias("cent_id")
-        )
-        base = main_postings.join(F.broadcast(split)).filter(
-            F.col("vec_id") < F.col("split")
-        )
-        (
-            base.drop("split")
-            .repartition("cent_id")
-            .write.mode("overwrite")
-            .partitionBy("cent_id")
-            .parquet(os.path.join(staging, "postings"))
-        )
-        delta = (
-            emb.join(F.broadcast(split))
-            .filter(F.col("vec_id") >= F.col("split"))
-            .select("vec_id", "embedding")
-        )
-        (
-            ann_postings(delta, coarse, books)
-            .repartition("cent_id")
-            .write.mode("append")
-            .partitionBy("cent_id")
-            .parquet(os.path.join(staging, "postings"))
-        )
+        postings = ann_postings(upsert_segments(emb, "vec_id"), coarse, books, "seg")
+        write_segmented(postings, "cent_id", os.path.join(staging, "postings"))
 
     return ensure_tree(
         ANN.dir(sf_dir, "upsert"), sf_dir, "upsert_done.json", {"version": INDEX_VERSION}, build
@@ -393,67 +366,48 @@ def op_sim_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     build/serve split: when a delta batch of vectors arrives, a real
     100 TB index does NOT retrain; it encodes the delta against the
     EXISTING trained structure (coarse centroids + codebooks are
-    read-only artifacts) and appends postings — O(delta) work,
-    partition-aligned appends into the cent_id layout, zero touch of
-    the base postings. Retraining per delta would be O(corpus) and
-    would silently re-key every existing posting (cells move), i.e.
-    a full rebuild wearing an upsert's name.
+    read-only artifacts) and lands its postings as a new segment,
+    partition-aligned with the cent_id layout, without touching the
+    base segment. Retraining per delta would be O(corpus) and would
+    silently re-key every existing posting (cells move), i.e. a full
+    rebuild wearing an upsert's name.
 
-    Demo shape on the fixture: base = vec_id < floor(0.8 * max),
-    delta = the rest. The trained structure comes from the MAIN
-    persisted artifact (build_ann_index, idempotent); a scratch
-    postings tree under upsert_v{N}/ is seeded with the base
-    partition-aligned, then the delta is encoded via the PERSISTED
-    codebooks/centroids and appended (parquet append into the
-    partitionBy(cent_id) layout). Idempotent per artifact
+    Demo shape on the fixture: the upsert tree (``ensure_upsert_tree``)
+    holds the base (vec_id < floor(0.8 * max)) as segment 0 and the
+    delta as segment 1, both encoded against the PERSISTED codebooks
+    and centroids of the main artifact. Idempotent per artifact
     fingerprint: a second run audits the existing tree.
 
-    Audited on the PERSISTED post-upsert tree:
+    Audited on the PERSISTED upsert tree (n_base / n_delta count its
+    segments):
     - ``full_coverage_after_upsert``: base+delta postings cover every
       corpus vec_id exactly once;
-    - ``encode_consistent``: every appended row's (cent_id, codes)
-      is bit-identical to the build-time encode of the same vector —
-      the persisted-artifact encode path reproduces the training-time
-      path exactly (joins postings-vs-main on vec_id);
+    - ``encode_consistent``: every row's (cent_id, codes) is
+      bit-identical to the main build's encode of the same vector
+      (joins postings-vs-main on vec_id);
     - ``no_retraining``: the codebook artifact on disk is row-for-row
       unchanged after the upsert (count + per-row equi-join against
       its pre-upsert localCheckpoint copy)."""
-    main_path = build_ann_index(spark, sf_dir)
+    _, books, main_postings = read_ann_index(spark, sf_dir)
     # snapshot the codebook BEFORE the upsert runs, for no_retraining
-    books_before = spark.read.parquet(
-        os.path.join(main_path, "codebooks")
-    ).localCheckpoint(eager=True)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    split = emb.agg(
-        F.expr("max(vec_id) * 4 div 5").cast("long").alias("split")
-    ).localCheckpoint(eager=True)
+    books_before = books.localCheckpoint(eager=True)
     demo = ensure_upsert_tree(spark, sf_dir)
 
-    after = spark.read.parquet(os.path.join(demo, "postings")).select(
-        "vec_id", "codes", F.col("cent_id").cast("long").alias("cent_id")
+    after = read_postings(spark, demo, "seg")
+    cov = after.agg(
+        F.count(F.lit(1)).alias("n_total"),
+        F.countDistinct("vec_id").alias("n_distinct"),
+        F.sum(F.when(F.col("seg") == 0, 1).otherwise(0)).alias("n_base"),
+        F.sum(F.when(F.col("seg") == 1, 1).otherwise(0)).alias("n_delta"),
     )
-    main_postings = spark.read.parquet(os.path.join(main_path, "postings")).select(
-        "vec_id",
-        F.col("codes").alias("m_codes"),
-        F.col("cent_id").cast("long").alias("m_cent_id"),
-    )
-    books_after = spark.read.parquet(os.path.join(main_path, "codebooks"))
-    cov = (
-        after.join(F.broadcast(split))
-        .agg(
-            F.count(F.lit(1)).alias("n_total"),
-            F.countDistinct("vec_id").alias("n_distinct"),
-            F.sum(F.when(F.col("vec_id") < F.col("split"), 1).otherwise(0)).alias(
-                "n_base"
-            ),
-            F.sum(F.when(F.col("vec_id") >= F.col("split"), 1).otherwise(0)).alias(
-                "n_delta"
-            ),
-        )
-    )
-    n_emb = emb.agg(F.count(F.lit(1)).alias("n_emb"))
+    n_emb = load_table(spark, sf_dir, "embeddings").agg(F.count(F.lit(1)).alias("n_emb"))
     consistent = (
-        after.join(main_postings, "vec_id")
+        after.join(
+            main_postings.select(
+                "vec_id", F.col("codes").alias("m_codes"), F.col("cent_id").alias("m_cent_id")
+            ),
+            "vec_id",
+        )
         .agg(
             F.count(F.lit(1)).alias("n_joined"),
             F.sum(
@@ -466,7 +420,7 @@ def op_sim_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     book_stable = (
-        books_after.join(
+        books.join(
             F.broadcast(books_before.withColumnRenamed("ce", "ce_before")),
             ["sub_id", "code"],
         )
@@ -502,29 +456,12 @@ def op_sim_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ensure_compact_tree(spark: SparkSession, sf_dir: str) -> str:
-    """Build (idempotently) the compacted tree: the upsert demo tree's
-    2-segments-per-cell postings with the ``tomb_residue`` tombstones
-    dropped, rewritten ONE segment per cell into a fresh tree by
-    ``compact_postings`` — the input tree is never mutated, so a crash
-    mid-compaction leaves the old index serving. A tree without its
-    purge ledger is rebuilt. Shared by op_sim_index_compact (which
-    audits the rewrite) and op_sim_ivfpq_serve_compacted (which
-    SERVES from it under a value-level oracle)."""
+    """The upsert tree with the ``tomb_residue`` tombstones dropped,
+    rewritten one segment per cell (``ensure_compacted_tree``). Shared
+    by op_sim_index_compact (which audits the rewrite) and
+    op_sim_ivfpq_serve_compacted (which serves from it)."""
     demo = ensure_upsert_tree(spark, sf_dir)
-
-    def build(staging: str) -> None:
-        compact_postings(
-            spark, ANN_POSTINGS, os.path.join(demo, "postings"), os.path.join(staging, "postings")
-        )
-
-    return ensure_tree(
-        ANN.dir(sf_dir, "compact"),
-        sf_dir,
-        "compact_done.json",
-        {"version": INDEX_VERSION, "tomb_mod": TOMB_MOD},
-        build,
-        valid=(lambda p: purge_ledger_current(p, os.path.join(p, "postings")),),
-    )
+    return ensure_compacted_tree(spark, sf_dir, ANN, ANN_POSTINGS, demo, "compact")
 
 
 @register(
@@ -545,15 +482,13 @@ def op_sim_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DELETES + COMPACTION — the index-lifecycle step after
     build/upsert/stream-append: real vector stores tombstone deleted
     vectors and periodically merge small append segments (the
-    Milvus/FAISS segment-merge op_stream_index_ingest's docstring
-    gestures at; Lucene's forceMerge is the lexical twin). Input is
-    the upsert demo tree, which by construction holds TWO parquet
-    segments per non-empty cell (base write + delta append); the
-    tombstone set is the deterministic pmod(vec_id,17)==3 slice (~6%).
-    Compaction reads the postings once, drops tombstoned rows, and
-    rewrites ONE segment per cell into a fresh tree — never mutating
-    the input tree, so a crash mid-compaction leaves the old index
-    serving.
+    Milvus/FAISS segment merge; Lucene's forceMerge is the lexical
+    twin). Input is the upsert tree, which holds TWO parquet segments
+    per non-empty cell (seg=0 base, seg=1 delta); the tombstone set is
+    the deterministic pmod(vec_id,17)==3 slice (~6%). Compaction reads
+    the postings once, drops tombstoned rows, and rewrites ONE segment
+    per cell into a fresh tree — never mutating the input tree, so a
+    crash mid-compaction leaves the old index serving.
 
     Audited on the PERSISTED trees (counts hash-compare vs DuckDB):
     - ``n_before`` / ``n_tombstoned`` / ``n_after``: postings rows in
@@ -581,13 +516,9 @@ def op_sim_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = ensure_compact_tree(spark, sf_dir)
     tomb = tomb_residue("vec_id")
 
-    before = spark.read.parquet(os.path.join(demo, "postings")).select(
-        "vec_id", "codes", F.col("cent_id").cast("long").alias("cent_id")
-    )
-    after = spark.read.parquet(os.path.join(comp, "postings")).select(
-        "vec_id",
-        F.col("codes").alias("a_codes"),
-        F.col("cent_id").cast("long").alias("a_cent_id"),
+    before = read_postings(spark, demo)
+    after = read_postings(spark, comp).select(
+        "vec_id", F.col("codes").alias("a_codes"), F.col("cent_id").alias("a_cent_id")
     )
     merged = segments_merged(os.path.join(demo, "postings"), os.path.join(comp, "postings"))
     bstats = before.agg(
@@ -657,32 +588,26 @@ def op_sim_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def op_sim_ivfpq_serve_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SERVING FROM THE COMPACTED TREE — the value-level delete gate
-    for the ANN side (round-9 verdict: op_sim_index_compact's oracle
-    is counts + audit booleans where op_lex_index_delete_compact
-    achieves survivor-recomputed bit-equality; this op closes that
-    asymmetry as far as ANN semantics allow): run the full serve
-    chain (probe -> ADC -> shortlist -> exact rerank, the verbatim
-    ``ivfpq_serve_stages``) against the post-delete compacted
-    postings, under op_sim_ivfpq_serve's oracle re-derived over
+    for the ANN side, where op_sim_index_compact's oracle is counts
+    and audit booleans: the full serve chain (probe -> ADC ->
+    shortlist -> exact rerank, the verbatim ``ivfpq_serve_stages``)
+    runs against the post-delete compacted postings, under
+    op_sim_ivfpq_serve's oracle re-derived over
     ``embeddings WHERE vec_id % 17 != 3`` — per-query VALUES the
     driver hash-compares, not global counts.
 
     The trained structure (coarse centroids + codebooks) is FROZEN
     across delete/compact — deletes never retrain — so the compacted
     tree's ADC scores are exactly replayable from the ORIGINAL index:
-    ``adc_bitmatch_vs_main`` recomputes every probed-cell ADC score
-    twice, once from the compacted tree's codes and once from the
-    main build artifact's codes restricted to survivors, and asserts
-    the two score sets are BIT-IDENTICAL pair-for-pair (same count,
-    every (query_id, vec_id) joined, every adc_sqdist == — IEEE
-    equality, no tolerance). DuckDB cannot replay trained codebooks,
-    so this bit-equality referee runs in-query (the
-    q_retrieval_pipeline_served cross-path-audit discipline) while
-    the oracle hashes what SQL can replay: the per-query survivor
-    exact-neighborhood counts, plus the shared pruning/recall audits.
-    A deleted corpus member (vec 3 is tombstoned) may still arrive
-    as a QUERY — queries are external vectors; only the candidate
-    world shrinks.
+    ``adc_bitmatch_vs_main`` (``serve_with_adc_referee``) holds every
+    probed-cell ADC score from the compacted tree's codes IEEE-bit-equal
+    to the score from the main build's codes restricted to survivors.
+    DuckDB cannot replay trained codebooks, so this referee runs
+    in-query while the oracle hashes what SQL can replay: the
+    per-query survivor exact-neighborhood counts, plus the shared
+    pruning/recall audits. A deleted corpus member (vec 3 is
+    tombstoned) may still arrive as a QUERY — queries are external
+    vectors; only the candidate world shrinks.
 
     At 100 TB this is the query path the morning after a GDPR purge
     ran overnight: same frozen router, same codebooks, strictly
@@ -692,9 +617,6 @@ def op_sim_ivfpq_serve_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarse, books, main_postings = read_ann_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     tomb = tomb_residue("vec_id")
-    comp_postings = spark.read.parquet(os.path.join(comp, "postings")).select(
-        "vec_id", "codes", F.col("cent_id").cast("long").alias("cent_id")
-    )
     # the survivor world: candidates / rerank / exact-audit corpus all
     # exclude tombstoned ids; the query slot (vec_id < 4) stays intact.
     # Referee yardstick: the main build artifact restricted to
@@ -702,7 +624,7 @@ def op_sim_ivfpq_serve_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     served, audit = serve_with_adc_referee(
         emb,
         emb.filter((F.col("vec_id") < 4) | ~tomb),
-        comp_postings,
+        read_postings(spark, comp),
         main_postings.filter(~tomb),
         coarse,
         books,
@@ -711,35 +633,62 @@ def op_sim_ivfpq_serve_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ensure_ann_e2e_tree(spark: SparkSession, sf_dir: str) -> str:
-    """Build (idempotently) the COMPOSED-lifecycle end state for the
-    ANN family: one lineage walked build -> delta upsert (the
-    ensure_upsert_tree end state: full coverage, two segments per
-    cell) -> id-LIST tombstone (TOMB_IDS, the purge-request shape) ->
-    compact through the shared ``compact_postings`` into ONE segment
-    per cell. A tree purged with another list, or without its purge
-    ledger, is rebuilt; the upsert tree stays live throughout."""
+    """The COMPOSED-lifecycle end state for the ANN family: the
+    upsert tree (build -> delta upsert) purged of the id LIST TOMB_IDS
+    (the purge-request shape) and compacted one segment per cell
+    (``ensure_compacted_tree``)."""
     demo = ensure_upsert_tree(spark, sf_dir)
+    return ensure_compacted_tree(spark, sf_dir, ANN, ANN_POSTINGS, demo, "e2e", TOMB_IDS)
 
-    def build(staging: str) -> None:
-        compact_postings(
-            spark,
-            ANN_POSTINGS,
-            os.path.join(demo, "postings"),
-            os.path.join(staging, "postings"),
-            purge_ids=TOMB_IDS,
-        )
 
-    return ensure_tree(
-        ANN.dir(sf_dir, "e2e"),
-        sf_dir,
-        "e2e_done.json",
-        {"version": INDEX_VERSION, "tomb_ids": list(TOMB_IDS)},
-        build,
-        valid=(
-            lambda p: tomb_ids_current(p, "e2e_done.json"),
-            lambda p: purge_ledger_current(p, os.path.join(p, "postings")),
-        ),
+def ann_compact_serve(
+    spark: SparkSession,
+    sf_dir: str,
+    src: str,
+    comp: str,
+    yardstick: DataFrame,
+    adc_col: str,
+    *audit_cols: str,
+) -> DataFrame:
+    """The one compact-and-serve gate of the ANN family, for a tree
+    ``comp`` compacted from ``src`` under the TOMB_IDS purge (both
+    trees hold ``postings/``, ``comp`` its purge ledger at its root).
+    Serves the survivor world from ``comp`` through the verbatim
+    probe -> ADC -> shortlist -> exact-rerank chain and returns the
+    served rows crossJoined with the one-row audit, columns ``adc_col``
+    then ``audit_cols``, chosen from:
+
+    - ``adc_col``: every probed-cell ADC score from ``comp`` is
+      IEEE-bit-equal, pair-for-pair with count equality both ways, to
+      the score from the ``yardstick`` postings
+      (``serve_with_adc_referee``);
+    - ``tombstones_enforced`` and ``purge_ledger_consistent``
+      (``purge_ledger_referee``): no TOMB_IDS row is left, the
+      survivor count is ``src``'s minus the purge hits, and the ledger
+      records the TOMB_IDS digest and the counts measured on the
+      trees; a missing ledger raises;
+    - ``segments_merged``: ``comp`` holds strictly fewer parquet files
+      than ``src``."""
+    coarse, books, _ = read_ann_index(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    comp_postings = read_postings(spark, comp)
+    # the query slot (vec_id < 4) stays external; the purged ids leave
+    # the candidates, rerank and exact-audit corpus
+    survivors = (F.col("vec_id") < 4) | ~F.col("vec_id").isin(*TOMB_IDS)
+    served, adc = serve_with_adc_referee(
+        emb, emb.filter(survivors), comp_postings, yardstick, coarse, books, out_col=adc_col
     )
+    src_postings = os.path.join(src, "postings")
+    purge = purge_ledger_referee(
+        spark,
+        comp,
+        read_parquet(spark, src_postings).select("vec_id"),
+        comp_postings.select("vec_id"),
+        "vec_id",
+    )
+    merged = segments_merged(src_postings, os.path.join(comp, "postings"))
+    audit = adc.crossJoin(F.broadcast(purge)).withColumn("segments_merged", F.lit(merged))
+    return served.crossJoin(F.broadcast(audit.select(adc_col, *audit_cols)))
 
 
 @register(
@@ -784,81 +733,48 @@ def op_sim_lifecycle_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the shared ``compact_postings``, not the residue predicate the
     per-transition gates use.
 
-    Gate: the verbatim probe -> ADC -> shortlist -> exact-rerank
-    chain (``ivfpq_serve_stages``) serves from the e2e tree under
+    Gate: ``ann_compact_serve`` serves from the e2e tree under
     op_sim_ivfpq_serve's oracle re-derived over ``embeddings WHERE
     vec_id NOT IN TOMB_IDS`` — per-query VALUES the driver
-    hash-compares. Three referees ride along:
-
-    - ``adc_bitmatch_vs_fresh_encode``: every probed-cell ADC score
-      from the e2e tree is IEEE-bit-equal, pair-for-pair with count
-      equality both directions, to the score of the SAME survivor
-      RE-ENCODED FROM ITS RAW EMBEDDING through the frozen trained
-      structure (``ann_postings`` against the persisted
-      codebooks/centroids) — "end state == fresh build over net
-      survivors" stated as strongly as ANN semantics allow (a true
-      from-scratch build would retrain the router on the survivor
-      corpus; deletes must NOT retrain, so the frozen-structure
-      fresh encode IS the correct rebuild yardstick). This is
-      stronger than the per-transition gates' referee, which compares
-      codes COPIED from the same artifact; here the yardstick never
-      touches the lineage's bytes.
-    - ``tombstones_enforced`` and ``purge_ledger_consistent``
-      (``purge_ledger_referee``): zero TOMB_IDS rows remain in the e2e
-      postings and the survivor count is exactly the upsert tree's
-      count minus the purge hits; the compaction's purge ledger
-      records the session TOMB_IDS digest and the counts measured on
-      the persisted trees; a missing ledger raises.
-    - ``segments_merged``: the e2e tree holds strictly fewer parquet
-      files than the 2-segments-per-cell upsert tree.
+    hash-compares — with its referees ``tombstones_enforced``,
+    ``purge_ledger_consistent`` and ``segments_merged`` (fewer files
+    than the 2-segments-per-cell upsert tree), and
+    ``adc_bitmatch_vs_fresh_encode``: the ADC referee's yardstick is
+    the survivors RE-ENCODED FROM THEIR RAW EMBEDDINGS through the
+    frozen trained structure (``ann_postings``) — "end state == fresh
+    build over net survivors" stated as strongly as ANN semantics
+    allow (a true from-scratch build would retrain the router on the
+    survivor corpus; deletes must NOT retrain, so the frozen-structure
+    fresh encode IS the correct rebuild yardstick). The yardstick
+    never touches the lineage's bytes.
 
     At 100 TB this is the whole index lifecycle as it actually runs:
-    builds amortize, deltas append O(delta), purges arrive as id
+    builds amortize, deltas land as new segments, purges arrive as id
     lists and anti-join map-side (the list broadcasts — it is a
     request, not a corpus), the nightly merge rewrites survivors
     per-cell shuffle-free, and the morning's queries are provably
     the queries a fresh index would serve."""
     demo = ensure_upsert_tree(spark, sf_dir)
     e2e = ensure_ann_e2e_tree(spark, sf_dir)
-    main_path = build_ann_index(spark, sf_dir)
-    coarse = spark.read.parquet(os.path.join(main_path, "coarse"))
-    books = spark.read.parquet(os.path.join(main_path, "codebooks"))
+    coarse, books, _ = read_ann_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-
-    e2e_postings = spark.read.parquet(os.path.join(e2e, "postings")).select(
-        "vec_id", "codes", F.col("cent_id").cast("long").alias("cent_id")
+    fresh = ann_postings(
+        emb.filter((F.col("vec_id") >= 4) & ~F.col("vec_id").isin(*TOMB_IDS)), coarse, books
     )
-    # the net-survivor world: candidates/rerank/exact-audit exclude the
-    # purged ids; the query slot (vec_id < 4) stays external. Referee
-    # yardstick: a FRESH ENCODE of the survivors from raw embeddings
-    # through the frozen trained structure — the
-    # end-state-equals-rebuild yardstick, computed without touching
-    # the lineage's bytes — via the shared serve_with_adc_referee body.
-    not_purged = ~F.col("vec_id").isin(*TOMB_IDS)
-    surv_emb = emb.filter((F.col("vec_id") >= 4) & not_purged)
-    served, eqa = serve_with_adc_referee(
-        emb,
-        emb.filter((F.col("vec_id") < 4) | not_purged),
-        e2e_postings,
-        ann_postings(surv_emb, coarse, books),
-        coarse,
-        books,
-        out_col="adc_bitmatch_vs_fresh_encode",
-    )
-
-    enforced = purge_ledger_referee(
+    return ann_compact_serve(
         spark,
-        os.path.join(e2e, "postings"),
-        spark.read.parquet(os.path.join(demo, "postings")).select("vec_id"),
-        e2e_postings.select("vec_id"),
-        "vec_id",
+        sf_dir,
+        demo,
+        e2e,
+        fresh,
+        "adc_bitmatch_vs_fresh_encode",
+        "tombstones_enforced",
+        "purge_ledger_consistent",
+        "segments_merged",
     )
-    merged = segments_merged(os.path.join(demo, "postings"), os.path.join(e2e, "postings"))
-    audit = eqa.crossJoin(F.broadcast(enforced)).withColumn("segments_merged", F.lit(merged))
-    return served.crossJoin(F.broadcast(audit))
 
 
-# --- size-tiered segment-merge POLICY (round-15) ---------------------
+# --- size-tiered segment-merge POLICY ------------------------------
 
 # The merge policy's knob: merge the K smallest segments per pass —
 # the size-tiered idiom (Cassandra/RocksDB STCS, Lucene's
@@ -898,8 +814,7 @@ def _merge_seg_expr() -> F.Column:
 
 def _merge_bounds(emb: DataFrame) -> DataFrame:
     """The three integer segment bounds off max(vec_id) — one 1-row
-    frame, broadcast into the per-row CASE (the ensure_upsert_tree
-    split discipline)."""
+    frame, broadcast into the per-row CASE."""
     return emb.agg(
         F.expr("max(vec_id) div 2").cast("long").alias("b0"),
         F.expr("max(vec_id) * 3 div 4").cast("long").alias("b1"),
@@ -937,20 +852,14 @@ def ensure_merge_base_tree(spark: SparkSession, sf_dir: str) -> str:
     partitionBy, so file counts are the segment counts."""
 
     def build(staging: str) -> None:
-        main_path = build_ann_index(spark, sf_dir)
-        emb = load_table(spark, sf_dir, "embeddings").select("vec_id")
-        bounds = _merge_bounds(emb)
-        postings = spark.read.parquet(os.path.join(main_path, "postings")).select(
-            "vec_id", "codes", F.col("cent_id").cast("long").alias("cent_id")
-        )
-        (
+        _, _, postings = read_ann_index(spark, sf_dir)
+        bounds = _merge_bounds(load_table(spark, sf_dir, "embeddings").select("vec_id"))
+        write_segmented(
             postings.join(F.broadcast(bounds))
             .withColumn("seg", _merge_seg_expr())
-            .drop("b0", "b1", "b2")
-            .repartition("seg", "cent_id")
-            .write.mode("overwrite")
-            .partitionBy("seg", "cent_id")
-            .parquet(os.path.join(staging, "postings"))
+            .drop("b0", "b1", "b2"),
+            "cent_id",
+            os.path.join(staging, "postings"),
         )
 
     return ensure_tree(
@@ -1003,7 +912,7 @@ def ensure_merge_policy_tree(spark: SparkSession, sf_dir: str) -> str:
 
     def build(staging: str) -> None:
         src_postings = os.path.join(base, "postings")
-        src = spark.read.parquet(src_postings).select(
+        src = read_parquet(spark, src_postings).select(
             "vec_id", "codes", "cent_id", F.col("seg").cast("int").alias("seg")
         )
         seg_rows = {
@@ -1086,7 +995,7 @@ def ensure_merge_policy_tree(spark: SparkSession, sf_dir: str) -> str:
 )
 def op_sim_index_merge_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SIZE-TIERED SEGMENT-MERGE POLICY — the LSM maintenance idiom a
-    100 TB index actually runs (r14 verdict task 5): the lifecycle's
+    100 TB index actually runs: the lifecycle's
     compaction verbs (op_sim_index_compact, the e2e lineages) always
     rewrite the FULL tree; a production store (RocksDB/Cassandra STCS,
     Lucene TieredMergePolicy, Milvus segment merge) instead picks the
@@ -1139,10 +1048,10 @@ def op_sim_index_merge_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     with open(os.path.join(merged, "postings", MERGE_MANIFEST)) as f:
         man = json.load(f)
 
-    before = spark.read.parquet(os.path.join(base, "postings")).select(
+    before = read_parquet(spark, os.path.join(base, "postings")).select(
         "vec_id", "codes", "cent_id", F.col("seg").cast("int").alias("seg")
     )
-    after = spark.read.parquet(os.path.join(merged, "postings")).select(
+    after = read_parquet(spark, os.path.join(merged, "postings")).select(
         F.col("vec_id").alias("a_vec_id"),
         F.col("codes").alias("a_codes"),
         F.col("cent_id").alias("a_cent_id"),
@@ -1285,17 +1194,15 @@ def op_sim_ivfpq_serve_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged tree and observe not one changed score."""
     base = ensure_merge_base_tree(spark, sf_dir)
     merged = ensure_merge_policy_tree(spark, sf_dir)
-    main_path = build_ann_index(spark, sf_dir)
-    coarse = spark.read.parquet(os.path.join(main_path, "coarse"))
-    books = spark.read.parquet(os.path.join(main_path, "codebooks"))
+    coarse, books, _ = read_ann_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    merged_p = spark.read.parquet(os.path.join(merged, "postings")).select(
-        "vec_id", "codes", F.col("cent_id").cast("long").alias("cent_id")
-    )
-    base_p = spark.read.parquet(os.path.join(base, "postings")).select(
-        "vec_id", "codes", F.col("cent_id").cast("long").alias("cent_id")
-    )
     served, audit = serve_with_adc_referee(
-        emb, emb, merged_p, base_p, coarse, books, out_col="adc_bitmatch_vs_base"
+        emb,
+        emb,
+        read_postings(spark, merged),
+        read_postings(spark, base),
+        coarse,
+        books,
+        out_col="adc_bitmatch_vs_base",
     )
     return served.crossJoin(F.broadcast(audit))

@@ -31,7 +31,8 @@ here.
 
 The family-neutral half of a purge lives here too: the tombstone
 fixtures (the ``tomb_residue`` predicate, ``TOMB_IDS`` id list), the
-one tombstone compaction (``compact_postings``) and its purge ledger.
+one tombstone compaction (``compact_postings``), its purge ledger and
+the one builder of offline compacted trees (``ensure_compacted_tree``).
 The compaction contract:
 
 - **One transaction.** The survivors and the purge ledger are written
@@ -43,11 +44,18 @@ The compaction contract:
   the source and ``n_after`` on its own write of the survivors: no
   extra count job, and the ledger attests to exactly the rows read and
   written.
-- **Ledger location.** An ANN tree keeps it in ``<tree>/postings/``
-  (underscore-prefixed, so Spark's listing skips it), a lexical tree
-  at ``<tree>/``, next to the df/stats the lexical fold re-derives. A
-  family's fold is the only family-specific step: df/stats for the
-  lexical index, nothing for ANN (PQ codes are moved as they are).
+- **One layout.** Every compacted tree, offline or streamed, holds its
+  survivors in ``<tree>/postings`` and its purge ledger at ``<tree>``.
+  A family's fold (``Postings.fold``) is the only family-specific
+  step: the lexical index re-derives ``df/`` and ``stats/`` next to
+  the postings; ANN has none (PQ codes are moved as they are).
+- **One validity check.** A compacted tree is current when its ledger
+  records the purge it is built for: the id-list digest or the
+  residue predicate (``purge_ledger_current``).
+- **Upsert trees.** A family's upsert tree is one segmented write,
+  ``postings/seg=<s>/<part>=<v>`` (``write_segmented``): segment 0 is
+  the base and segment 1 the delta of ``upsert_segments``, the layout a
+  streamed store's epochs give.
 - **Bloom registry.** A registry tree is a pure function of its
   marker's family map (family -> slice predicate): every registry
   edit republishes the whole tree from one snapshot of the published
@@ -70,6 +78,8 @@ from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from game_data_etl_pipeline_spark.catalog import read_parquet
 
 # how long a displaced tree survives before GC may reap it: long
 # enough for any in-flight scan of the old snapshot to finish
@@ -265,9 +275,8 @@ def tomb_residue(id_col: str) -> Column:
 TOMB_IDS = (7, 23, 118, 233, 301, 404, 441, 468, 490, 497)
 TOMB_IDS_SQL = f"({', '.join(map(str, TOMB_IDS))})"
 
-# The purge ledger a compaction writes into its own output tree, in the
-# same staging transaction as the survivors. Underscore-prefixed so
-# Spark's parquet listing skips it when it sits inside a postings dir.
+# The purge ledger a compaction writes at the root of its output tree,
+# in the same staging transaction as the survivors.
 PURGE_LEDGER = "_purge_ledger.json"
 
 
@@ -286,26 +295,25 @@ def purge_ids_digest(ids) -> str:
     return hashlib.sha256(",".join(str(i) for i in sorted(int(i) for i in ids)).encode()).hexdigest()
 
 
-def write_purge_ledger(
-    dest: str,
-    *,
-    n_before: int,
-    n_after: int,
-    purge_ids=None,
-    predicate: str | None = None,
-) -> None:
-    """Write the purge ledger into ``dest``: the id list (with its
-    digest) or the predicate, and the row counts. Timestamp-free, so
-    an identical compaction writes an identical ledger."""
+def purge_record(key: str, purge_ids: Sequence[int] | None = None) -> dict:
+    """The ledger's record of one purge: the id list ``purge_ids`` with
+    its digest, or, when None, the ``tomb_residue`` predicate on
+    ``key`` with the digest of its text."""
     if purge_ids is not None:
         ids = sorted(int(i) for i in purge_ids)
-        purge = {"kind": "id_list", "ids": ids, "digest": purge_ids_digest(ids)}
-    else:
-        purge = {
-            "kind": "predicate",
-            "predicate": predicate,
-            "digest": hashlib.sha256(str(predicate).encode()).hexdigest(),
-        }
+        return {"kind": "id_list", "ids": ids, "digest": purge_ids_digest(ids)}
+    predicate = f"pmod({key}, {TOMB_MOD}) == {TOMB_RESIDUE}"
+    return {
+        "kind": "predicate",
+        "predicate": predicate,
+        "digest": hashlib.sha256(predicate.encode()).hexdigest(),
+    }
+
+
+def write_purge_ledger(dest: str, purge: dict, *, n_before: int, n_after: int) -> None:
+    """Write the purge ledger into ``dest``: the ``purge_record`` and
+    the row counts. Timestamp-free, so an identical compaction writes
+    an identical ledger."""
     with open(os.path.join(dest, PURGE_LEDGER), "w") as f:
         json.dump(
             {
@@ -321,11 +329,39 @@ def write_purge_ledger(
 
 @dataclass(frozen=True)
 class Postings:
-    """The postings layout a tombstone compaction rewrites."""
+    """The postings layout a tombstone compaction rewrites, and the
+    family's fold."""
 
     key: str  # the row id a purge names
     part: str  # partition column: one segment per value after compaction
     cols: tuple[str, ...]  # the columns kept, in order
+    # what the family derives from the compacted postings, written next
+    # to them: fold(survivor postings, tree dir)
+    fold: Callable[[DataFrame, str], None] | None = None
+
+
+def upsert_segments(rows: DataFrame, key: str) -> DataFrame:
+    """``rows`` with the int column ``seg``: 0 for the base rows
+    (``key < max(key) * 4 div 5``), 1 for the delta. The max is a
+    broadcast one-row aggregate in the plan of each write that reads
+    the result, so no job runs before the writes."""
+    split = rows.agg(F.expr(f"max({key}) * 4 div 5").alias("_split"))
+    return (
+        rows.crossJoin(F.broadcast(split))
+        .withColumn("seg", (F.col(key) >= F.col("_split")).cast("int"))
+        .drop("_split")
+    )
+
+
+def write_segmented(postings: DataFrame, part: str, dest: str) -> None:
+    """Write ``postings`` (with a ``seg`` column) as
+    ``dest/seg=<s>/<part>=<v>``, one file per (segment, partition)."""
+    (
+        postings.repartition("seg", part)
+        .write.mode("overwrite")
+        .partitionBy("seg", part)
+        .parquet(dest)
+    )
 
 
 def compact_postings(
@@ -335,36 +371,66 @@ def compact_postings(
     dest: str,
     *,
     purge_ids: Sequence[int] | None = None,
-    ledger_dir: str | None = None,
 ) -> None:
     """The one tombstone compaction: read the postings at ``src``, drop
     the rows whose ``layout.key`` is in ``purge_ids`` (a broadcast
     left-anti join; ``None`` drops the ``tomb_residue`` rows instead),
-    rewrite the survivors as one segment per ``layout.part`` value under
-    ``dest``, and write the purge ledger into ``ledger_dir`` (``dest``
-    when None). The source is never mutated; the caller stages ``dest``
-    and the ledger together."""
+    rewrite the survivors as one segment per ``layout.part`` value
+    under ``dest/postings``, write the purge ledger at ``dest`` and run
+    the family's fold into ``dest``. The source is never mutated; the
+    caller stages ``dest``."""
     obs_before, obs_after = Observation(), Observation()
-    rows = spark.read.parquet(src).select(*layout.cols).observe(obs_before, F.count(F.lit(1)).alias("n"))
+    rows = read_parquet(spark, src).select(*layout.cols).observe(obs_before, F.count(F.lit(1)).alias("n"))
     if purge_ids is None:
         survivors = rows.filter(~tomb_residue(layout.key))
     else:
         survivors = rows.join(
             F.broadcast(tombstone_ids_df(spark, layout.key, purge_ids)), layout.key, "left_anti"
         )
+    postings = os.path.join(dest, "postings")
     (
         survivors.observe(obs_after, F.count(F.lit(1)).alias("n"))
         .repartition(layout.part)
         .write.mode("overwrite")
         .partitionBy(layout.part)
-        .parquet(dest)
+        .parquet(postings)
     )
     write_purge_ledger(
-        ledger_dir or dest,
+        dest,
+        purge_record(layout.key, purge_ids),
         n_before=obs_before.get["n"],
         n_after=obs_after.get["n"],
-        purge_ids=purge_ids,
-        predicate=f"pmod({layout.key}, {TOMB_MOD}) == {TOMB_RESIDUE}",
+    )
+    if layout.fold is not None:
+        layout.fold(spark.read.parquet(postings), dest)
+
+
+def ensure_compacted_tree(
+    spark: SparkSession,
+    sf_dir: str,
+    family: TreeFamily,
+    layout: Postings,
+    src: str,
+    tag: str,
+    purge_ids: Sequence[int] | None = None,
+) -> str:
+    """The one builder of offline compacted trees (idempotent):
+    ``compact_postings`` of the tree at ``src`` (its ``postings/``)
+    into ``family``'s tree ``tag``. A tree whose ledger does not record
+    this purge (``purge_ids``, or the residue predicate when None) is
+    displaced and rebuilt; ``src`` stays live throughout."""
+    purge = purge_record(layout.key, purge_ids)
+
+    def build(staging: str) -> None:
+        compact_postings(spark, layout, os.path.join(src, "postings"), staging, purge_ids=purge_ids)
+
+    return ensure_tree(
+        family.dir(sf_dir, tag),
+        sf_dir,
+        "compact_done.json",
+        {"version": family.version},
+        build,
+        valid=(lambda p: purge_ledger_current(p, purge),),
     )
 
 
@@ -377,79 +443,62 @@ def publish_compaction(final: str, compact: Callable[[str], None]) -> None:
     with staging_tree(final) as staging:
         compact(staging)
         publish_staging(staging, final, marker=PURGE_LEDGER)
-    check_tomb_meta(final, PURGE_LEDGER)
+    check_tomb_meta(final)
 
 
-def read_purge_ledger(dest: str) -> dict:
-    """The purge ledger in ``dest``; a missing ledger raises."""
-    path = os.path.join(dest, PURGE_LEDGER)
+def read_purge_ledger(tree: str) -> dict:
+    """The purge ledger at ``tree``; a missing ledger raises."""
+    path = os.path.join(tree, PURGE_LEDGER)
     if not os.path.isfile(path):
         raise ValueError(
-            f"compacted tree {dest} has no purge ledger ({PURGE_LEDGER}) — "
+            f"compacted tree {tree} has no purge ledger ({PURGE_LEDGER}) — "
             f"the compaction's deletion evidence is missing; rebuild the tree"
         )
     with open(path) as f:
         return json.load(f)
 
 
-def purge_ledger_current(tree: str, ledger_dir: str) -> bool:
-    """Cache check for compacted trees: True iff ``ledger_dir`` holds
-    the purge ledger; otherwise ``tree`` is displaced."""
-    if os.path.isfile(os.path.join(ledger_dir, PURGE_LEDGER)):
-        return True
-    displace(tree, "ledger")
-    return False
-
-
-def check_tomb_meta(path: str, marker: str) -> None:
-    """Raise unless the purge list recorded in ``path/marker`` is the
-    session TOMB_IDS. Two marker shapes: a purge ledger (id-list kind
-    plus digest; a predicate ledger fails) or a lineage marker holding
-    the raw ``tomb_ids``."""
-    with open(os.path.join(path, marker)) as f:
-        meta = json.load(f)
-    if "purge" in meta:
-        purge = meta["purge"]
-        ok = purge.get("kind") == "id_list" and purge.get("digest") == purge_ids_digest(TOMB_IDS)
-        recorded = purge.get("ids", purge.get("predicate"))
-    else:
-        ok = list(meta.get("tomb_ids", [])) == list(TOMB_IDS)
-        recorded = meta.get("tomb_ids")
-    if not ok:
+def check_tomb_meta(tree: str, purge: dict | None = None) -> None:
+    """Raise unless the purge ledger at ``tree`` records ``purge`` (a
+    ``purge_record``; the session TOMB_IDS id list when None). A
+    missing ledger raises too."""
+    want = purge or purge_record("", TOMB_IDS)
+    got = read_purge_ledger(tree).get("purge", {})
+    if (got.get("kind"), got.get("digest")) != (want["kind"], want["digest"]):
         raise ValueError(
-            f"compacted tree {path} was compacted with tomb_ids="
-            f"{recorded} but this session's TOMB_IDS is "
-            f"{list(TOMB_IDS)} — the end state no longer matches the "
-            f"code; rebuild the lineage"
+            f"compacted tree {tree} was compacted with tomb_ids="
+            f"{got.get('ids', got.get('predicate'))} but this build purges "
+            f"{want.get('ids', want.get('predicate'))} — the end state no "
+            f"longer matches the code; rebuild the tree"
         )
 
 
-def tomb_ids_current(path: str, marker: str) -> bool:
-    """Cache check for lineage trees: True iff ``check_tomb_meta``
-    passes; otherwise ``path`` is displaced, so editing TOMB_IDS
-    rebuilds instead of serving a lineage purged with the old list."""
+def purge_ledger_current(tree: str, purge: dict) -> bool:
+    """Cache check of a compacted tree: True iff ``check_tomb_meta``
+    passes for ``purge``; otherwise ``tree`` is displaced, so a tree
+    without its ledger, or purged with another list, is rebuilt."""
     try:
-        check_tomb_meta(path, marker)
+        check_tomb_meta(tree, purge)
         return True
     except (OSError, ValueError):  # JSONDecodeError is a ValueError
-        displace(path, "tomb")
+        displace(tree, "tomb")
         return False
 
 
 def purge_ledger_referee(
-    spark: SparkSession, ledger_dir: str, before: DataFrame, after: DataFrame, id_col: str
+    spark: SparkSession, tree: str, before: DataFrame, after: DataFrame, id_col: str
 ) -> DataFrame:
     """One-row boolean frame of the id-list purge from ``before`` to
     ``after`` (the persisted trees), both measured on the trees:
 
-    - ``purge_ledger_consistent``: the ledger in ``ledger_dir`` records
+    - ``purge_ledger_consistent``: the ledger at ``tree`` records
       an id-list purge with the session TOMB_IDS digest and consistent
       arithmetic, its n_before/n_after equal the row counts of the
       trees, and its n_purged equals the TOMB_IDS hits in ``before``. A
       missing ledger raises in ``read_purge_ledger``.
     - ``tombstones_enforced``: no TOMB_IDS row is left in ``after``, and
       its count is ``before``'s minus those hits."""
-    led = read_purge_ledger(ledger_dir)
+    led = read_purge_ledger(tree)
     led_ok = (
         led["purge"].get("kind") == "id_list"
         and led["purge"].get("digest") == purge_ids_digest(TOMB_IDS)

@@ -33,8 +33,6 @@ verbatim.
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,22 +40,22 @@ from game_data_etl_pipeline_spark.catalog import load_table, read_parquet
 from game_data_etl_pipeline_spark.llmdata.artifacts import (
     TOMB_IDS,
     TOMB_IDS_SQL,
-    TOMB_MOD,
     Postings,
     TreeFamily,
-    compact_postings,
+    ensure_compacted_tree,
     ensure_tree,
-    purge_ledger_current,
     purge_ledger_referee,
     segments_merged,
-    tomb_ids_current,
+    upsert_segments,
+    write_segmented,
 )
 from game_data_etl_pipeline_spark.llmdata.text import BM25_CTES, BM25_TERMS, _terms, bm25_scored
 from game_data_etl_pipeline_spark.registry import register
 
-# v2: _bucket is pmod, total over all longs (v1's abs(xxhash64) % N left
-# Long.MIN_VALUE negative); a re-keyed layout bumps the version
-LEX_INDEX_VERSION = 2
+# layout version of every lexical tree: bump on any layout change (v2:
+# _bucket is pmod, total over all longs; v3: the upsert tree's seg=<s>
+# segments and the compacted trees' ledger at the tree root)
+LEX_INDEX_VERSION = 3
 LEX_BUCKETS = 16
 
 
@@ -68,10 +66,6 @@ def _bucket(term_col):
 LEX = TreeFamily(
     "SPARK_GRAFT_LEX_INDEX_DIR", "lex_index", "documents.parquet", LEX_INDEX_VERSION
 )
-
-# what a tombstone compaction of lexical postings rewrites (a streamed
-# store's seg and batch_id columns are dropped)
-LEX_POSTINGS = Postings("doc_id", "term_bucket", ("term", "doc_id", "dl", "tf", "term_bucket"))
 
 
 def lex_postings(docs: DataFrame, *keep: str) -> DataFrame:
@@ -93,10 +87,10 @@ def lex_postings(docs: DataFrame, *keep: str) -> DataFrame:
     )
 
 
-def _write_bucketed(frame: DataFrame, path: str, mode: str = "overwrite") -> None:
+def _write_bucketed(frame: DataFrame, path: str) -> None:
     """Write ``frame`` to ``path`` partitioned by term_bucket, one file
     per bucket."""
-    frame.repartition("term_bucket").write.mode(mode).partitionBy("term_bucket").parquet(path)
+    frame.repartition("term_bucket").write.mode("overwrite").partitionBy("term_bucket").parquet(path)
 
 
 def _df_frame(postings: DataFrame) -> DataFrame:
@@ -124,6 +118,13 @@ def write_df_stats(postings: DataFrame, dest: str, stats: DataFrame | None = Non
             .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("tot_dl"))
         )
     stats.coalesce(1).write.mode("overwrite").parquet(os.path.join(dest, "stats"))
+
+
+# what a tombstone compaction of lexical postings rewrites (a streamed
+# store's seg and batch_id columns are dropped) and re-derives
+LEX_POSTINGS = Postings(
+    "doc_id", "term_bucket", ("term", "doc_id", "dl", "tf", "term_bucket"), fold=write_df_stats
+)
 
 
 def _docs_stats(docs: DataFrame) -> DataFrame:
@@ -222,55 +223,24 @@ def bm25_from_index(
 
 
 def ensure_lex_upsert_tree(spark: SparkSession, sf_dir: str) -> str:
-    """Build (idempotently) the lexical-upsert demo tree: a BASE index
-    over doc_id < floor(0.8 * max) built exactly like build_lex_index,
-    then the UPSERT — tokenize ONLY the delta docs, append their
-    postings partition-aligned into the term_bucket layout, and
-    re-emit df/stats MERGED from the persisted base artifacts plus the
-    delta counts. Everything merged is an additive integer (tf and dl
-    are per-doc facts, df/n_docs/tot_dl are sums over disjoint doc
-    sets), so the merge is exact: the upserted index is
-    value-identical to a full rebuild, which is what lets
-    op_lex_index_upsert keep op_text_bm25's verbatim oracle.
-    df_base/stats_base stay in the tree as provenance that the merge
-    read persisted artifacts, not in-memory frames."""
+    """Build (idempotently) the lexical-upsert tree: the corpus
+    tokenized once (``lex_postings``) and written in one partitioned
+    write as ``postings/seg=<s>/term_bucket=<b>``. Segment 0 is the
+    base (doc_id < max * 4 div 5) and segment 1 the delta
+    (``upsert_segments``), the layout a streamed store's epochs give.
+    df/ and stats/ are written as ``build_lex_index`` writes them.
+
+    The tree does not fold df from a persisted base: df, n_docs and
+    tot_dl are additive integers over disjoint document sets, so the
+    values equal any such fold and a full rebuild. O(batch)
+    incremental upkeep is what the streamed stores exercise
+    (op_stream_lex_serve), deriving df the same way."""
 
     def build(staging: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
-        split = docs.agg(
-            F.expr("max(doc_id) * 4 div 5").cast("long").alias("split")
-        ).localCheckpoint(eager=True)
-        with_split = docs.join(F.broadcast(split))
-        base = with_split.filter(F.col("doc_id") < F.col("split"))
-        delta = with_split.filter(F.col("doc_id") >= F.col("split"))
-
-        # phase 1: the pre-existing BASE index (persisted artifacts)
-        base_p = lex_postings(base)
-        _write_bucketed(base_p, os.path.join(staging, "postings"))
-        _write_bucketed(_df_frame(base_p), os.path.join(staging, "df_base"))
-        _docs_stats(base).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(staging, "stats_base")
-        )
-        # phase 2, the UPSERT: O(delta) tokenize + partition-aligned
-        # posting append; df/stats re-emitted by merging the PERSISTED
-        # base artifacts (read back from disk) with the delta counts
-        delta_p = lex_postings(delta)
-        _write_bucketed(delta_p, os.path.join(staging, "postings"), mode="append")
-        merged_df = (
-            spark.read.parquet(os.path.join(staging, "df_base"))
-            .select("term", "df")
-            .unionByName(_df_frame(delta_p).select("term", "df"))
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"))
-            .withColumn("term_bucket", _bucket(F.col("term")))
-        )
-        _write_bucketed(merged_df, os.path.join(staging, "df"))
-        merged_st = (
-            spark.read.parquet(os.path.join(staging, "stats_base"))
-            .unionByName(_docs_stats(delta))
-            .agg(F.sum("n_docs").alias("n_docs"), F.sum("tot_dl").alias("tot_dl"))
-        )
-        merged_st.coalesce(1).write.mode("overwrite").parquet(os.path.join(staging, "stats"))
+        postings = lex_postings(upsert_segments(docs, "doc_id"), "seg")
+        write_segmented(postings, "term_bucket", os.path.join(staging, "postings"))
+        write_df_stats(postings, staging, stats=_docs_stats(docs))
 
     meta = {"version": LEX_INDEX_VERSION, "buckets": LEX_BUCKETS}
     return ensure_tree(LEX.dir(sf_dir, "upsert"), sf_dir, "upsert_done.json", meta, build)
@@ -289,26 +259,21 @@ def ensure_lex_upsert_tree(spark: SparkSession, sf_dir: str) -> str:
     """,
 )
 def op_lex_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTAL lexical-index maintenance — the symmetry gap with
-    the ANN side closed (op_sim_index_upsert's freshness story for the
-    inverted index): a delta batch of documents is tokenized in
-    isolation (O(delta), never re-reading base text), its postings
-    append partition-aligned into the term_bucket layout, and the
-    derived statistics re-emit as exact integer merges of the
-    PERSISTED base artifacts + the delta (df: per-term sum over
-    disjoint doc sets; stats: two-row sum). No base posting is
-    rewritten; the only non-O(delta) work is the vocabulary-sized df
-    merge — bounded by Zipf, not by the corpus.
+    """INCREMENTAL lexical-index maintenance, op_sim_index_upsert's
+    twin for the inverted index: the delta documents land as their own
+    postings segment (seg=1), partition-aligned with the term_bucket
+    layout of the base segment (seg=0), and df/stats are the exact
+    integer sums over both (``ensure_lex_upsert_tree``).
 
     The gate is the strongest available: this op SERVES BM25 from the
     post-upsert tree via the exact op_text_bm25_serve path and keeps
     op_text_bm25's oracle VERBATIM, so the driver's value hash holds
-    incremental-then-serve to bit-equality with the full corpus-scan
+    upsert-then-serve to bit-equality with the full corpus-scan
     scorer. A pytest additionally pins serve-after-upsert equal
     row-for-row to a full index rebuild (tests/test_llmdata.py).
 
     At 100 TB this is the Lucene/ES segment model: deltas land as new
-    term-sharded posting segments, df/stats merge additively, and the
+    term-sharded posting segments, df/stats sum additively, and the
     bucket layout keeps query-time pruning intact across upserts
     (served query terms resolve to the same buckets before and
     after)."""
@@ -316,9 +281,18 @@ def op_lex_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_from_index(spark, demo)
 
 
+def ensure_lex_compact_tree(spark: SparkSession, sf_dir: str) -> str:
+    """The lexical upsert tree with the ``tomb_residue`` tombstones
+    dropped, one segment per term bucket, and df/stats re-derived from
+    the survivors (``ensure_compacted_tree``)."""
+    demo = ensure_lex_upsert_tree(spark, sf_dir)
+    return ensure_compacted_tree(spark, sf_dir, LEX, LEX_POSTINGS, demo, "compact")
+
+
 @register(
     "op_lex_index_delete_compact",
     tags=("llm", "text", "index"),
+    setup=(ensure_lex_compact_tree,),
     # op_text_bm25's oracle RECOMPUTED over the surviving corpus: after
     # deletes, df / n_docs / tot_dl all shift, so every surviving score
     # changes — and the compacted index must reproduce the re-derived
@@ -352,65 +326,22 @@ def op_lex_index_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     once (partition pruning scopes per-bucket schedules), and the df
     recompute is the same pass — no extra corpus touch, document text
     never read."""
-    demo = ensure_lex_upsert_tree(spark, sf_dir)
-    comp = ensure_tree(
-        LEX.dir(sf_dir, "compact"),
-        sf_dir,
-        "compact_done.json",
-        {"version": LEX_INDEX_VERSION, "tomb_mod": TOMB_MOD},
-        lambda staging: compact_lex_postings(spark, os.path.join(demo, "postings"), staging),
-        valid=(lambda p: purge_ledger_current(p, p),),
-    )
-    return bm25_from_index(spark, comp)
-
-
-def compact_lex_postings(
-    spark: SparkSession,
-    src_postings: str,
-    dest: str,
-    purge_ids: Sequence[int] | None = None,
-) -> None:
-    """The lexical tombstone compaction: ``compact_postings`` rewrites
-    the postings at ``src_postings`` without the purged documents, one
-    segment per term bucket, into ``dest/postings`` with the purge
-    ledger at ``dest``; then the lexical fold re-derives ``dest/df``
-    and ``dest/stats`` from the persisted survivors (``write_df_stats``;
-    exact integer math, document text never read)."""
-    postings = os.path.join(dest, "postings")
-    compact_postings(spark, LEX_POSTINGS, src_postings, postings, purge_ids=purge_ids, ledger_dir=dest)
-    write_df_stats(spark.read.parquet(postings), dest)
+    return bm25_from_index(spark, ensure_lex_compact_tree(spark, sf_dir))
 
 
 def ensure_lex_e2e_tree(spark: SparkSession, sf_dir: str) -> str:
-    """Build (idempotently) the COMPOSED-lifecycle end state for the
-    lexical family: one lineage walked build -> delta upsert (the
-    ensure_lex_upsert_tree end state: merged df/stats, two posting
-    segments per bucket) -> id-LIST tombstone (TOMB_IDS, the
-    purge-request shape) -> ``compact_lex_postings`` (one segment per
-    bucket, df and corpus stats re-derived from the survivors). A tree
-    purged with another list, or without its purge ledger, is rebuilt;
-    the upsert tree stays live."""
+    """The COMPOSED-lifecycle end state for the lexical family: the
+    upsert tree (build -> delta upsert) purged of the id LIST TOMB_IDS
+    (the purge-request shape), compacted one segment per bucket, with
+    df and corpus stats re-derived from the survivors
+    (``ensure_compacted_tree``)."""
     demo = ensure_lex_upsert_tree(spark, sf_dir)
-
-    def build(staging: str) -> None:
-        compact_lex_postings(spark, os.path.join(demo, "postings"), staging, purge_ids=TOMB_IDS)
-
-    return ensure_tree(
-        LEX.dir(sf_dir, "e2e"),
-        sf_dir,
-        "e2e_done.json",
-        {"version": LEX_INDEX_VERSION, "buckets": LEX_BUCKETS, "tomb_ids": list(TOMB_IDS)},
-        build,
-        valid=(
-            lambda p: tomb_ids_current(p, "e2e_done.json"),
-            lambda p: purge_ledger_current(p, p),
-        ),
-    )
+    return ensure_compacted_tree(spark, sf_dir, LEX, LEX_POSTINGS, demo, "e2e", TOMB_IDS)
 
 
 def _e2e_survivor_oracle() -> str:
-    """op_text_bm25's oracle recomputed over the e2e lineage's NET
-    corpus (documents minus the TOMB_IDS purge list) — the id list is
+    """op_text_bm25's oracle recomputed over the NET corpus of a
+    TOMB_IDS purge (documents minus the purge list) — the id list is
     generated from the same constant the compactor anti-joins, so the
     Spark side and the oracle cannot drift."""
     return BM25_CTES.replace(
@@ -424,6 +355,28 @@ def _e2e_survivor_oracle() -> str:
     """
 
 
+def lex_compact_serve(spark: SparkSession, src: str, comp: str) -> DataFrame:
+    """The one compact-and-serve gate of the lexical family, for a tree
+    ``comp`` compacted from ``src`` under the TOMB_IDS purge (both
+    trees hold ``postings/``, ``comp`` its purge ledger, df/ and stats/
+    at its root): BM25 served from ``comp`` (``bm25_from_index``) with
+    ``purge_ledger_consistent`` (``purge_ledger_referee``: the ledger
+    records the TOMB_IDS digest and the posting counts of both trees;
+    a missing ledger raises). Raises unless ``comp`` holds strictly
+    fewer parquet files than ``src``."""
+    src_postings, comp_postings = os.path.join(src, "postings"), os.path.join(comp, "postings")
+    if not segments_merged(src_postings, comp_postings):
+        raise ValueError(f"compaction did not merge the segments of {src}")
+    audit = purge_ledger_referee(
+        spark,
+        comp,
+        read_parquet(spark, src_postings),
+        read_parquet(spark, comp_postings),
+        "doc_id",
+    ).select("purge_ledger_consistent")
+    return bm25_from_index(spark, comp).crossJoin(F.broadcast(audit))
+
+
 @register(
     "op_lex_lifecycle_e2e",
     tags=("llm", "text", "index"),
@@ -432,44 +385,29 @@ def _e2e_survivor_oracle() -> str:
 )
 def op_lex_lifecycle_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE FULL LIFECYCLE COMPOSED ON ONE LINEAGE on the lexical side:
-    build (base slice) -> delta upsert (exact integer df/stats merge)
-    -> id-LIST tombstone (TOMB_IDS, the purge-request shape,
-    anti-joined by ``compact_lex_postings`` instead of the residue
-    predicate the per-transition gates use) -> compact (one segment
-    per bucket, df and corpus stats RE-DERIVED from the survivors) ->
-    serve.
+    build (base segment) -> delta upsert (delta segment) -> id-LIST
+    tombstone (TOMB_IDS, the purge-request shape, anti-joined by
+    ``compact_postings`` instead of the residue predicate the
+    per-transition gates use) -> compact (one segment per bucket, df
+    and corpus stats RE-DERIVED from the survivors) -> serve, through
+    the family's one compact-and-serve gate (``lex_compact_serve``).
 
     Gate: serving BM25 from the lineage's end state is held to
     BIT-EQUALITY with op_text_bm25's oracle recomputed over
-    ``documents WHERE doc_id NOT IN TOMB_IDS`` — because every merged
+    ``documents WHERE doc_id NOT IN TOMB_IDS`` — because every
     statistic is an exact integer and the score is the one shared
     IEEE expression, the end state of build -> upsert -> purge ->
     compact IS the from-scratch index of the net corpus, IDF shifts
     and all, and the driver's value hash proves it per doc. A pytest
     additionally pins the end-state artifacts (postings, df, stats)
     row-for-row equal to a from-scratch build over the survivor
-    corpus (tests/test_llmdata.py). Segment hygiene is enforced
-    loudly: the compacted tree must hold strictly fewer parquet files
-    than the 2-segments-per-bucket upsert tree.
-    ``purge_ledger_consistent`` (``purge_ledger_referee``) rides
-    along: the compaction's purge ledger records the session TOMB_IDS
-    digest and the posting counts measured on the persisted upsert and
-    e2e trees; a missing ledger raises.
+    corpus (tests/test_llmdata.py).
 
     At 100 TB this is the inverted index's whole life as one provable
-    pipeline: the build amortizes, deltas land O(delta), the purge
-    list broadcasts into a map-side anti-join, the merge re-derives
-    df/stats in the same per-bucket pass that rewrites the segments,
-    and the morning's scores are the scores a fresh index would give."""
+    pipeline: the build amortizes, deltas land as new segments, the
+    purge list broadcasts into a map-side anti-join, the merge
+    re-derives df/stats in the same per-bucket pass that rewrites the
+    segments, and the morning's scores are the scores a fresh index
+    would give."""
     demo = ensure_lex_upsert_tree(spark, sf_dir)
-    e2e = ensure_lex_e2e_tree(spark, sf_dir)
-    if not segments_merged(os.path.join(demo, "postings"), os.path.join(e2e, "postings")):
-        raise ValueError(f"op_lex_lifecycle_e2e: compaction did not merge the segments of {demo}")
-    audit = purge_ledger_referee(
-        spark,
-        e2e,
-        spark.read.parquet(os.path.join(demo, "postings")),
-        spark.read.parquet(os.path.join(e2e, "postings")),
-        "doc_id",
-    ).select("purge_ledger_consistent")
-    return bm25_from_index(spark, e2e).crossJoin(F.broadcast(audit))
+    return lex_compact_serve(spark, demo, ensure_lex_e2e_tree(spark, sf_dir))

@@ -27,6 +27,11 @@ One shared session per process; every knob here is a scale decision:
   they are planned, which differs between two calls of one op. With
   the id in the class name the same stage compiles again under its new
   number, so a warm call still missed the cache.
+- console progress bar off (``spark.ui.showConsoleProgress=false``):
+  Spark reads the unset key as true, and its ``[Stage N:>`` bar, drawn
+  on stderr with carriage returns, then lands on the same line as a
+  script's stdout output when the two streams are merged (a
+  ``grep '^wrote'`` over ``scripts/dump_plans.py`` lost ops that way).
 """
 
 from __future__ import annotations
@@ -71,6 +76,7 @@ def get_spark(app_name: str = DEFAULT_APP_NAME, *, extra_conf: dict | None = Non
         # read it as long-nanos and let catalog.load_table rebuild a µs timestamp
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     active = SparkSession.getActiveSession()

@@ -48,16 +48,15 @@ from typing import Callable
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from game_data_etl_pipeline_spark.catalog import load_table, session_dir
+from game_data_etl_pipeline_spark.catalog import load_table, read_parquet, session_dir
 from game_data_etl_pipeline_spark.llmdata.artifacts import (
     TOMB_IDS,
     TOMB_IDS_SQL,
     compact_postings,
     publish_compaction,
-    purge_ledger_referee,
-    segments_merged,
 )
 from game_data_etl_pipeline_spark.llmdata.dedup import decontam_ledger_oracle
+from game_data_etl_pipeline_spark.llmdata.lex_index import _e2e_survivor_oracle
 from game_data_etl_pipeline_spark.llmdata.text import BM25_CTES
 from game_data_etl_pipeline_spark.registry import register
 from game_data_etl_pipeline_spark.streaming.engine import events_stream, run_to_memory
@@ -1147,16 +1146,11 @@ def stream_ann_store(
     retrained. Rows keep their ``batch_id`` and land in
     ``<work>/postings/seg=<epoch>/cent_id=<cell>``. Returns the
     postings path."""
-    from game_data_etl_pipeline_spark.llmdata.ann_index import ann_postings, build_ann_index
+    from game_data_etl_pipeline_spark.llmdata.ann_index import ann_postings, read_ann_index
 
-    main_path = build_ann_index(spark, sf_dir)
-    # read once and checkpointed, so each epoch ships bounded frames
-    coarse = spark.read.parquet(os.path.join(main_path, "coarse")).localCheckpoint(
-        eager=True
-    )
-    books = spark.read.parquet(os.path.join(main_path, "codebooks")).localCheckpoint(
-        eager=True
-    )
+    coarse, books, _ = read_ann_index(spark, sf_dir)
+    # checkpointed, so each epoch ships bounded frames
+    coarse, books = coarse.localCheckpoint(eager=True), books.localCheckpoint(eager=True)
 
     work = session_dir(spark, tag, sf_dir)
     store = os.path.join(work, "postings")
@@ -1196,19 +1190,16 @@ def op_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``encode_consistent`` (every streamed (cent_id, codes) equals the
     offline build's for the same vector) and ``cells_bounded``
     (0 < cells <= k)."""
-    from game_data_etl_pipeline_spark.llmdata.ann_index import build_ann_index
+    from game_data_etl_pipeline_spark.llmdata.ann_index import read_ann_index
     from game_data_etl_pipeline_spark.llmdata.cluster import K
 
-    main_path = build_ann_index(spark, sf_dir)
     store = stream_ann_store(spark, sf_dir, "idxingest", "op_stream_index_ingest")
 
     after = spark.read.parquet(store).select(
         "vec_id", "codes", F.col("cent_id").cast("long").alias("cent_id"), "batch_id"
     )
-    main_postings = spark.read.parquet(os.path.join(main_path, "postings")).select(
-        "vec_id",
-        F.col("codes").alias("m_codes"),
-        F.col("cent_id").cast("long").alias("m_cent_id"),
+    main_postings = read_ann_index(spark, sf_dir)[2].select(
+        "vec_id", F.col("codes").alias("m_codes"), F.col("cent_id").alias("m_cent_id")
     )
     n_emb = load_table(spark, sf_dir, "embeddings").agg(
         F.count(F.lit(1)).alias("n_emb")
@@ -1294,7 +1285,7 @@ def op_stream_lex_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "batch_id",
         F.col("term_bucket").cast("int").alias("term_bucket"),
     )
-    main_postings = spark.read.parquet(os.path.join(main_path, "postings")).select(
+    main_postings = read_parquet(spark, os.path.join(main_path, "postings")).select(
         "term",
         "doc_id",
         F.col("dl").alias("m_dl"),
@@ -1406,65 +1397,40 @@ def op_stream_lex_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "op_stream_lex_compact_serve",
     tags=("streaming", "llm", "text", "index"),
-    # op_lex_index_delete_compact's oracle VERBATIM — op_text_bm25
-    # recomputed over the surviving corpus (doc_id NOT IN TOMB_IDS —
-    # the id-list purge-request shape, interpolated from the same
-    # constant the Spark side broadcasts, so the two sides cannot
-    # drift): after deletes, df / n_docs / tot_dl all shift, so every
-    # surviving score changes, and the compacted STREAMED store must
-    # reproduce the re-derived scorer bit-for-bit
-    oracle=BM25_CTES.replace(
-        "FROM documents",
-        "FROM (SELECT * FROM documents"
-        f" WHERE doc_id NOT IN {TOMB_IDS_SQL}) documents",
-    )
-    + """
-        SELECT doc_id, bm25, n_terms_hit,
-               TRUE AS purge_ledger_consistent
-        FROM bm
-    """,
+    # op_lex_lifecycle_e2e's oracle: op_text_bm25 recomputed over the
+    # surviving corpus (doc_id NOT IN TOMB_IDS — the id-list
+    # purge-request shape, interpolated from the same constant the
+    # Spark side broadcasts, so the two sides cannot drift): after
+    # deletes, df / n_docs / tot_dl all shift, so every surviving score
+    # changes, and the compacted STREAMED store must reproduce the
+    # re-derived scorer bit-for-bit
+    oracle=_e2e_survivor_oracle(),
 )
 def op_stream_lex_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streamed lexical store's full lifecycle, stream-ingest ->
     delete -> compact -> serve, op_stream_ann_serve_compacted's twin:
     the documents arrive as 3 micro-batches through
-    ``stream_lex_store``; ``compact_lex_postings`` (op_lex_index_
-    delete_compact's algebra) drops the id-list purge request TOMB_IDS,
-    rewrites ONE segment per term bucket and re-derives df and the
-    corpus stats from the surviving postings, in a sibling tree
-    published with its purge ledger (``publish_compaction``, which
-    raises unless the ledger records TOMB_IDS). Strictly fewer parquet
-    files than the streamed store is asserted.
-    ``purge_ledger_consistent`` reads the ledger back
-    (``purge_ledger_referee``) and holds it to the TOMB_IDS digest and
-    the posting counts of both stores.
-
-    Gate: op_text_bm25's oracle recomputed over ``doc_id NOT IN
-    TOMB_IDS`` verbatim: serving from the compacted streamed store is
-    the full-rebuild scorer of the surviving corpus, IDF shifts and
-    all (Lucene NRT plus forceMerge as one pipeline)."""
-    from game_data_etl_pipeline_spark.llmdata.lex_index import (
-        bm25_from_index,
-        compact_lex_postings,
-    )
+    ``stream_lex_store``; ``compact_postings`` drops the id-list purge
+    request TOMB_IDS, rewrites ONE segment per term bucket and
+    re-derives df and the corpus stats from the surviving postings
+    (``LEX_POSTINGS``' fold), in a sibling tree published with its
+    purge ledger (``publish_compaction``). The lexical family's one
+    compact-and-serve gate, ``lex_compact_serve`` (shared with
+    op_lex_lifecycle_e2e), serves BM25 from it under op_text_bm25's
+    oracle recomputed over ``doc_id NOT IN TOMB_IDS``: the
+    full-rebuild scorer of the surviving corpus, IDF shifts and all
+    (Lucene NRT plus forceMerge as one pipeline)."""
+    from game_data_etl_pipeline_spark.llmdata.lex_index import LEX_POSTINGS, lex_compact_serve
 
     work = stream_lex_store(
         spark, sf_dir, "lexcompact", "op_stream_lex_compact_serve"
     )
     postings, comp = os.path.join(work, "postings"), os.path.join(work, "compacted")
     publish_compaction(
-        comp, lambda staging: compact_lex_postings(spark, postings, staging, purge_ids=TOMB_IDS)
-    )
-    if not segments_merged(postings, os.path.join(comp, "postings")):
-        raise ValueError(f"op_stream_lex_compact_serve: compaction did not merge the segments of {postings}")
-    audit = purge_ledger_referee(
-        spark,
         comp,
-        spark.read.parquet(postings),
-        spark.read.parquet(os.path.join(comp, "postings")),
-        "doc_id",
-    ).select("purge_ledger_consistent")
-    return bm25_from_index(spark, comp).crossJoin(F.broadcast(audit))
+        lambda staging: compact_postings(spark, LEX_POSTINGS, postings, staging, purge_ids=TOMB_IDS),
+    )
+    return lex_compact_serve(spark, work, comp)
 
 
 @register(
@@ -1573,64 +1539,42 @@ def op_stream_ann_serve_compacted(spark: SparkSession, sf_dir: str) -> DataFrame
     epoch); ``compact_postings`` drops the id-list purge request
     TOMB_IDS and rewrites the survivors into ONE segment per cell
     (bytes moved, never re-encoded) in a sibling tree published with
-    its purge ledger (``publish_compaction``); the probe -> ADC ->
-    shortlist -> rerank chain serves from it.
-
-    Referees, in-query because DuckDB cannot replay trained codebooks:
-    ``adc_bitmatch_vs_main`` holds every probed-cell ADC score from the
-    compacted streamed segments IEEE-bit-equal, pair-for-pair with
-    count equality both ways, to the offline build's scores restricted
-    to survivors (``serve_with_adc_referee``); ``segments_merged``
-    asserts strictly fewer parquet files than the streamed store;
-    ``purge_ledger_consistent`` reads the compaction's purge ledger
-    back (``purge_ledger_referee``) and holds it to the TOMB_IDS digest
-    and the posting counts of both stores. The oracle hash-verifies the
-    per-query survivor neighborhoods against op_sim_ivfpq_serve's
-    oracle re-derived over ``vec_id NOT IN TOMB_IDS``: freshness,
-    deletes and compaction are score-neutral."""
+    its purge ledger (``publish_compaction``). The ANN family's one
+    compact-and-serve gate, ``ann_compact_serve`` (shared with
+    op_sim_lifecycle_e2e), serves from it with its referees in-query,
+    because DuckDB cannot replay trained codebooks;
+    ``adc_bitmatch_vs_main``'s yardstick is the offline build
+    restricted to survivors. The oracle hash-verifies the per-query
+    survivor neighborhoods against op_sim_ivfpq_serve's oracle
+    re-derived over ``vec_id NOT IN TOMB_IDS``: freshness, deletes and
+    compaction are score-neutral."""
     from game_data_etl_pipeline_spark.llmdata.ann_index import (
         ANN_POSTINGS,
+        ann_compact_serve,
         read_ann_index,
-        serve_with_adc_referee,
     )
 
     store = stream_ann_store(
         spark, sf_dir, "annservecomp", "op_stream_ann_serve_compacted"
     )
-    tomb = F.col("vec_id").isin(*TOMB_IDS)
-
     # the store itself is never mutated
-    compacted_dir = os.path.join(os.path.dirname(store), "compacted")
+    work = os.path.dirname(store)
+    comp = os.path.join(work, "compacted")
     publish_compaction(
-        compacted_dir,
+        comp,
         lambda staging: compact_postings(spark, ANN_POSTINGS, store, staging, purge_ids=TOMB_IDS),
     )
-
-    coarse, books, main_postings = read_ann_index(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    comp = spark.read.parquet(compacted_dir).select(
-        "vec_id", "codes", F.col("cent_id").cast("long").alias("cent_id")
-    )
-    # survivor world: the purged ids leave the candidates; the queries
-    # (vec_id < 4, never in TOMB_IDS) stay; the yardstick is the
-    # offline build restricted to survivors
-    served, audit = serve_with_adc_referee(
-        emb,
-        emb.filter((F.col("vec_id") < 4) | ~tomb),
-        comp,
-        main_postings.filter(~tomb),
-        coarse,
-        books,
-    )
-    audit = audit.withColumn("segments_merged", F.lit(segments_merged(store, compacted_dir)))
-    paudit = purge_ledger_referee(
+    _, _, main_postings = read_ann_index(spark, sf_dir)
+    return ann_compact_serve(
         spark,
-        compacted_dir,
-        spark.read.parquet(store).select("vec_id"),
-        comp.select("vec_id"),
-        "vec_id",
-    ).select("purge_ledger_consistent")
-    return served.crossJoin(F.broadcast(audit.crossJoin(paudit)))
+        sf_dir,
+        work,
+        comp,
+        main_postings.filter(~F.col("vec_id").isin(*TOMB_IDS)),
+        "adc_bitmatch_vs_main",
+        "segments_merged",
+        "purge_ledger_consistent",
+    )
 
 
 @register(

@@ -1,12 +1,14 @@
 """The persisted-index lifecycle (llmdata/artifacts.py) is bookkeeping
 around the Spark writes: these tests pin the Spark work of a cold build,
-of the compactions and Bloom registry edits, and of a warm run of each
-streamed store op and each composed retrieval op (which serve from the
-trees), and the cache-hit rule of every op's declared setup."""
+of the upsert trees, compactions and Bloom registry edits, and of a warm
+run of each streamed store op, each composed retrieval op and each
+offline lifecycle op (which serve from the trees), and the cache-hit
+rule of every op's declared setup."""
 
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 
@@ -61,16 +63,16 @@ def test_cold_build_jobs(spark, sf_dir, tmp_path, monkeypatch, family):
 # after any earlier run.
 STREAM_JOBS = {
     "op_stream_lex_serve": 25,
-    "op_stream_index_ingest": 37,
+    "op_stream_index_ingest": 34,
     "op_stream_lex_ingest": 21,
     "op_stream_incremental_dedup": 22,
     "op_stream_incremental_fuzzy_dedup": 46,
     "op_stream_foreachbatch_upsert": 11,
-    "op_stream_ann_serve": 55,
+    "op_stream_ann_serve": 53,
     "op_stream_decontaminate": 25,
     "op_stream_bloom_upsert": 42,
-    "op_stream_lex_compact_serve": 45,
-    "op_stream_ann_serve_compacted": 67,
+    "op_stream_lex_compact_serve": 43,
+    "op_stream_ann_serve_compacted": 64,
 }
 
 
@@ -86,10 +88,11 @@ def test_streamed_op_jobs(spark, sf_dir, op):
 
 
 # Spark jobs of one warm call (construction and collect) of each
-# composed retrieval op on the sf0.001 fixture, the same on 2 and 4
-# cores; warm means the op has run once in this session, so its index
-# trees, their schemas and its term buckets are resolved.
-RETRIEVAL_JOBS = {
+# composed retrieval op and each offline index-lifecycle op on the
+# sf0.001 fixture, the same on 2 and 4 cores; warm means the op has run
+# once in this session, so its index trees, their schemas and its term
+# buckets are resolved.
+WARM_OP_JOBS = {
     "q_retrieval_pipeline": 18,
     "q_retrieval_pipeline_ann": 30,
     "q_retrieval_pipeline_served": 37,
@@ -99,29 +102,40 @@ RETRIEVAL_JOBS = {
     "q_retrieval_pipeline_batch_served8": 12,
     "q_retrieval_pipeline_batch_ann": 24,
     "q_retrieval_pipeline_batch_ann8": 24,
+    "op_sim_index_upsert": 12,
+    "op_sim_index_compact": 7,
+    "op_sim_ivfpq_serve_compacted": 27,
+    "op_sim_lifecycle_e2e": 37,
+    "op_sim_index_merge_policy": 11,
+    "op_sim_ivfpq_serve_merged": 27,
+    "op_lex_index_upsert": 4,
+    "op_lex_index_delete_compact": 4,
+    "op_lex_lifecycle_e2e": 11,
 }
 
 
-@pytest.mark.parametrize("op", sorted(RETRIEVAL_JOBS))
+@pytest.mark.parametrize("op", sorted(WARM_OP_JOBS))
 def test_retrieval_op_jobs(spark, sf_dir, op):
     for step in SPECS[op].setup:
         step(spark, sf_dir)
     run = lambda spark, sf_dir: SPECS[op].fn(spark, sf_dir).collect()  # noqa: E731
     run(spark, sf_dir)
-    assert _jobs(spark, run, sf_dir) == RETRIEVAL_JOBS[op]
+    assert _jobs(spark, run, sf_dir) == WARM_OP_JOBS[op]
 
 
-# Spark jobs of the compactions and Bloom registry edits on the sf0.001
-# fixture, the same on 2 and 4 cores: (first call, cache-hit call or
-# None). The first call builds the step's tree from input trees that
-# already exist; op_lex_index_delete_compact builds its compacted tree
-# inline and is collected, with the served query terms' buckets
-# resolved.
+# Spark jobs of the upsert trees, compactions and Bloom registry edits
+# on the sf0.001 fixture, the same on 2 and 4 cores: (first call,
+# cache-hit call or None). The first call builds the step's tree from
+# input trees that already exist: the main trees for an upsert tree
+# (which the test removes first), the upsert tree for a compaction.
+UPSERT_TREES = ("ensure_upsert_tree", "ensure_lex_upsert_tree")
 LIFECYCLE_JOBS = {
-    "ensure_compact_tree": (3, None),
+    "ensure_upsert_tree": (9, None),
+    "ensure_lex_upsert_tree": (13, None),
+    "ensure_compact_tree": (2, None),
     "ensure_ann_e2e_tree": (4, None),
-    "ensure_lex_e2e_tree": (11, None),
-    "op_lex_index_delete_compact": (17, None),
+    "ensure_lex_compact_tree": (10, None),
+    "ensure_lex_e2e_tree": (10, None),
     "ensure_bloom_registry": (26, None),
     "ensure_bloom_refresh_demo": (48, 4),
     "ensure_bloom_retire_demo": (41, 4),
@@ -158,10 +172,9 @@ def test_lifecycle_step_jobs(spark, sf_dir, lifecycle_roots, monkeypatch, step):
 
     for var, path in lifecycle_roots.items():
         monkeypatch.setenv(var, path)
-    if step == "op_lex_index_delete_compact":
-        fn = lambda spark, sf_dir: lex_index.op_lex_index_delete_compact(spark, sf_dir).collect()  # noqa: E731
-    else:
-        fn = next(getattr(m, step) for m in (ann_index, lex_index, dedup) if hasattr(m, step))
+    fn = next(getattr(m, step) for m in (ann_index, lex_index, dedup) if hasattr(m, step))
+    if step in UPSERT_TREES:
+        shutil.rmtree(fn(spark, sf_dir))
     first, hit = LIFECYCLE_JOBS[step]
     assert _jobs(spark, fn, sf_dir) == first
     if hit is not None:

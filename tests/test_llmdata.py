@@ -1502,7 +1502,7 @@ def test_purge_ledger_evidence_and_torn_write(spark, sf_dir, tmp_path, monkeypat
 
     # (b) the real build writes the evidence
     assert ai.ensure_ann_e2e_tree(spark, sf_dir) == e2e
-    led = artifacts.read_purge_ledger(_os.path.join(e2e, "postings"))
+    led = artifacts.read_purge_ledger(e2e)
     assert led["purge"]["kind"] == "id_list"
     assert led["purge"]["ids"] == sorted(ai.TOMB_IDS)
     assert led["purge"]["digest"] == artifacts.purge_ids_digest(ai.TOMB_IDS)
@@ -1514,13 +1514,13 @@ def test_purge_ledger_evidence_and_torn_write(spark, sf_dir, tmp_path, monkeypat
     assert led["n_purged"] == n_before - n_after > 0
 
     # (c) evidence removed later: loud at read, cache miss at build
-    _os.remove(_os.path.join(e2e, "postings", PURGE_LEDGER))
+    _os.remove(_os.path.join(e2e, PURGE_LEDGER))
     with pytest.raises(ValueError, match="purge ledger"):
-        artifacts.read_purge_ledger(_os.path.join(e2e, "postings"))
-    assert not ai.purge_ledger_current(e2e, _os.path.join(e2e, "postings"))
+        artifacts.read_purge_ledger(e2e)
+    assert not artifacts.purge_ledger_current(e2e, artifacts.purge_record("vec_id", ai.TOMB_IDS))
     assert not _os.path.isdir(e2e), "ledger-less tree must be displaced"
     rebuilt = ai.ensure_ann_e2e_tree(spark, sf_dir)
-    led2 = artifacts.read_purge_ledger(_os.path.join(rebuilt, "postings"))
+    led2 = artifacts.read_purge_ledger(rebuilt)
     assert led2 == led, "rebuild must reproduce the identical ledger"
 
     # the lexical compactor writes the same artifact at its tree root
@@ -1602,15 +1602,12 @@ def test_lifecycle_e2e_end_state_equals_rebuild(spark, sf_dir):
 
 
 def test_tomb_meta_handshake(tmp_path):
-    """The e2e lineage trees' purge-list handshake (the round-12
-    review's stale-artifact finding): a tree compacted with a
-    DIFFERENT id list than the session TOMB_IDS must fail
-    check_tomb_meta loudly, and the builders' tomb_ids_current must
-    treat it as a cache MISS — displacing the stale tree through the
-    trash-grace window so editing TOMB_IDS self-heals (the
-    check_bloom_meta / _geometry_current discipline applied to the
-    purge fixture)."""
-    import json as _json
+    """The compacted trees' purge-list handshake: a tree whose purge
+    ledger records a DIFFERENT id list than the session TOMB_IDS must
+    fail check_tomb_meta loudly, and the builders' validity check
+    (purge_ledger_current) must treat it as a cache MISS — displacing
+    the stale tree through the trash-grace window so editing TOMB_IDS
+    self-heals — while a current tree is kept."""
     import os as _os
 
     import pytest
@@ -1618,24 +1615,25 @@ def test_tomb_meta_handshake(tmp_path):
     from game_data_etl_pipeline_spark.llmdata.artifacts import (
         TOMB_IDS,
         check_tomb_meta,
-        tomb_ids_current,
+        purge_ledger_current,
+        purge_record,
+        write_purge_ledger,
     )
 
+    purge = purge_record("vec_id", TOMB_IDS)
     good = tmp_path / "e2e_good"
     _os.makedirs(good)
-    with open(good / "e2e_done.json", "w") as f:
-        _json.dump({"version": 1, "tomb_ids": list(TOMB_IDS)}, f)
-    check_tomb_meta(str(good), "e2e_done.json")  # must not raise
-    assert tomb_ids_current(str(good), "e2e_done.json")
+    write_purge_ledger(str(good), purge, n_before=10, n_after=8)
+    check_tomb_meta(str(good))  # must not raise
+    assert purge_ledger_current(str(good), purge)
     assert _os.path.isdir(good)  # a current tree is never displaced
 
     stale = tmp_path / "e2e_stale"
     _os.makedirs(stale)
-    with open(stale / "e2e_done.json", "w") as f:
-        _json.dump({"version": 1, "tomb_ids": [1, 2, 3]}, f)
+    write_purge_ledger(str(stale), purge_record("vec_id", [1, 2, 3]), n_before=10, n_after=8)
     with pytest.raises(ValueError, match="tomb_ids"):
-        check_tomb_meta(str(stale), "e2e_done.json")
-    assert not tomb_ids_current(str(stale), "e2e_done.json")
+        check_tomb_meta(str(stale))
+    assert not purge_ledger_current(str(stale), purge)
     assert not _os.path.isdir(stale), "stale tree must be displaced"
     displaced = [d for d in _os.listdir(tmp_path) if ".trash.tomb" in d]
     assert len(displaced) == 1

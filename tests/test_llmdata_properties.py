@@ -128,7 +128,7 @@ def test_bloom_fold_partition_invariance_property(spark, shingles, routes):
 @given(st.lists(_bloom_doc, min_size=30, max_size=60))
 @settings(max_examples=3, deadline=None, suppress_health_check=list(HealthCheck))
 def test_lex_compact_algebra_matches_rebuild_property(spark, tmp_path_factory, corpus):
-    """PROPERTY: compact_lex_postings (tombstone-drop + per-bucket
+    """PROPERTY: compact_postings over LEX_POSTINGS (tombstone-drop + per-bucket
     rewrite + df/stats re-derivation) equals an index built from
     scratch over the surviving documents, for ANY corpus — the
     algebra op_lex_index_delete_compact and op_stream_lex_compact_serve
@@ -138,11 +138,8 @@ def test_lex_compact_algebra_matches_rebuild_property(spark, tmp_path_factory, c
 
     from pyspark.sql import functions as F
 
-    from game_data_etl_pipeline_spark.llmdata.artifacts import TOMB_MOD, TOMB_RESIDUE
-    from game_data_etl_pipeline_spark.llmdata.lex_index import (
-        _bucket,
-        compact_lex_postings,
-    )
+    from game_data_etl_pipeline_spark.llmdata.artifacts import TOMB_MOD, TOMB_RESIDUE, compact_postings
+    from game_data_etl_pipeline_spark.llmdata.lex_index import LEX_POSTINGS, _bucket
     from game_data_etl_pipeline_spark.llmdata.text import _terms
 
     work = str(tmp_path_factory.mktemp("lexprop"))
@@ -158,7 +155,7 @@ def test_lex_compact_algebra_matches_rebuild_property(spark, tmp_path_factory, c
     src = _os.path.join(work, "postings")
     post.repartition("term_bucket").write.partitionBy("term_bucket").parquet(src)
     dest = _os.path.join(work, "compacted")
-    compact_lex_postings(spark, src, dest)
+    compact_postings(spark, LEX_POSTINGS, src, dest)
 
     from tests.conftest import expected_lex_index
 

@@ -62,6 +62,8 @@ def test_codegen_cache_holds_serving_working_set(spark, sf_dir):
             spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         rounds.append(codegen_compilations(spark) - n0)
     assert rounds[1:] == [0, 0, 0, 0], f"classes compiled per round: {rounds}"
+    # the console progress bar is off, so stderr stays clean of it
+    assert spark.sparkContext.getConf().get("spark.ui.showConsoleProgress") == "false"
 
 
 def test_second_load_table_runs_no_job(spark, sf_dir):

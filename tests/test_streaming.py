@@ -181,7 +181,7 @@ def test_streamed_compact_tomb_meta_handshake(spark, sf_dir):
     # consolidation: the ledger IS the handshake marker; the old
     # duplicate id-list marker must not come back
     assert not os.path.exists(os.path.join(comp, "stream_compact_done.json"))
-    check_tomb_meta(comp, PURGE_LEDGER)
+    check_tomb_meta(comp)
     surv = {
         r.doc_id
         for r in spark.read.parquet(os.path.join(comp, "postings"))
@@ -207,13 +207,13 @@ def test_streamed_compact_tomb_meta_handshake(spark, sf_dir):
     with open(os.path.join(comp, PURGE_LEDGER), "w") as f:
         _json.dump(stale, f)
     with pytest.raises(ValueError, match="tomb_ids"):
-        check_tomb_meta(comp, PURGE_LEDGER)
+        check_tomb_meta(comp)
     # so is a predicate-kind ledger (the residue unit fixture): the
     # streamed gates compact under the id-list purge-request shape
     with open(os.path.join(comp, PURGE_LEDGER), "w") as f:
         _json.dump(dict(lled, purge={"kind": "predicate", "predicate": "x"}), f)
     with pytest.raises(ValueError, match="tomb_ids"):
-        check_tomb_meta(comp, PURGE_LEDGER)
+        check_tomb_meta(comp)
     with open(os.path.join(comp, PURGE_LEDGER), "w") as f:
         _json.dump(lled, f)  # restore for later tests in the session
 
@@ -224,10 +224,10 @@ def test_streamed_compact_tomb_meta_handshake(spark, sf_dir):
     assert not os.path.exists(
         os.path.join(ann_comp, "_stream_compact_done.json")
     )
-    check_tomb_meta(ann_comp, PURGE_LEDGER)
+    check_tomb_meta(ann_comp)
     ann_surv = {
         r.vec_id
-        for r in spark.read.parquet(ann_comp)
+        for r in spark.read.parquet(os.path.join(ann_comp, "postings"))
         .select("vec_id")
         .distinct()
         .collect()
