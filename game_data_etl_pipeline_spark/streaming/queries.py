@@ -48,7 +48,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from game_data_etl_pipeline_spark.catalog import load_table, read_parquet, session_dir
+from game_data_etl_pipeline_spark.catalog import load_table, session_dir
 from game_data_etl_pipeline_spark.llmdata.artifacts import (
     TOMB_IDS,
     TOMB_IDS_SQL,
@@ -1285,7 +1285,7 @@ def op_stream_lex_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "batch_id",
         F.col("term_bucket").cast("int").alias("term_bucket"),
     )
-    main_postings = read_parquet(spark, os.path.join(main_path, "postings")).select(
+    main_postings = spark.read.parquet(os.path.join(main_path, "postings")).select(
         "term",
         "doc_id",
         F.col("dl").alias("m_dl"),
